@@ -2,6 +2,7 @@ package graft.model
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 
 /** JSON → 52-column flat order lines, as pure Catalyst column
   * operations (SURVEY.md §2.4 J1-J7) — zero UDFs, so the whole parse
@@ -25,106 +26,93 @@ object OrderParser {
 
   private def fmt(epochMs: Column): Column = timestamp_millis(epochMs)
 
-  private def vtrunc(c: Column, name: String): Column =
-    varcharLimits.get(name).map(n => substring(c, 1, n)).getOrElse(c)
-
   /** Parse a DataFrame with a JSON-string column into flat order
     * lines. Extra columns (e.g. kafka topic/offset) are dropped;
     * sourceTag lands in source_file (kafka_stream default,
-    * flink5_parse_walmart_order.py:250). */
+    * flink5_parse_walmart_order.py:250).
+    *
+    * Each message is parsed once: with an array-of-orders schema, a
+    * root object parses as a one-element array (Spark's JSON reader
+    * wraps it), and orderLine comes back as raw text. Only that line
+    * subtree is parsed again, as an array of lines — a single-struct
+    * orderLine likewise comes back as one line. */
   def parse(df: DataFrame, jsonCol: String = "value",
             sourceTag: String = "kafka_stream"): DataFrame = {
-    val v = col(jsonCol)
-    // list-or-object at the top level, for both orderLine shapes
-    val arrA = coalesce(
-      from_json(v, org.apache.spark.sql.types.ArrayType(orderSchema)),
-      array(from_json(v, orderSchema)))
-    val arrD = coalesce(
-      from_json(v, org.apache.spark.sql.types.ArrayType(orderSchemaSingleLine)),
-      array(from_json(v, orderSchemaSingleLine)))
-
     val exploded = df
-      .select(posexplode_outer(arrA).as(Seq("pos", "o")), arrD.as("od_arr"))
-      .withColumn("od", try_element_at(col("od_arr"), col("pos") + 1))
-      .drop("od_arr", "pos")
-      // skip orders without a parseable id AND no lines (malformed JSON)
+      .select(explode(from_json(col(jsonCol), ArrayType(orderSchema))).as("o"))
+      // malformed JSON explodes to nothing; a null list element is no order
       .where(col("o").isNotNull)
-      // dict-or-list orderLine normalization: prefer the array parse,
-      // fall back to wrapping the single-struct parse
-      .withColumn("lines", coalesce(
-        col("o.orderLines.orderLine"),
-        when(col("od.orderLines.orderLine").isNotNull,
-          array(col("od.orderLines.orderLine")))))
-      // reference skips orders with missing/empty orderLines (:283-290)
-      .where(col("lines").isNotNull && size(col("lines")) > 0)
-      .select(col("o"), explode(col("lines")).as("l"))
+      // missing, null or empty orderLines explode to no rows (:283-290)
+      .select(col("o"),
+        explode(from_json(col("o.orderLines.orderLine"), ArrayType(lineSchema))).as("l"))
 
     val charge = try_element_at(col("l.charges.charge"), lit(1))
     val st = try_element_at(col("l.orderLineStatuses.orderLineStatus"), lit(1))
     val tracking = st.getField("trackingInfo")
 
-    val out = exploded.select(
-      col("o.purchaseOrderId").try_cast("long").as("purchaseOrderId"),
-      col("o.customerOrderId").try_cast("long").as("customerOrderId"),
-      col("o.customerEmailId").as("customerEmailId"),
-      col("o.orderDate").as("orderDate"),
-      fmt(col("o.orderDate")).as("orderDate_formatted"),
-      col("o.shipNode.type").as("shipNode_type"),
-      col("o.shipNode.name").as("shipNode_name"),
-      col("o.shipNode.id").as("shipNode_id"),
-      lit(sourceTag).as("source_file"),
-      col("o.shippingInfo.phone").as("phone"),
-      col("o.shippingInfo.estimatedDeliveryDate").as("estimatedDeliveryDate"),
-      fmt(col("o.shippingInfo.estimatedDeliveryDate")).as("estimatedDeliveryDate_formatted"),
-      col("o.shippingInfo.estimatedShipDate").as("estimatedShipDate"),
-      fmt(col("o.shippingInfo.estimatedShipDate")).as("estimatedShipDate_formatted"),
-      col("o.shippingInfo.methodCode").as("methodCode"),
-      col("o.shippingInfo.postalAddress.name").as("recipient_name"),
-      col("o.shippingInfo.postalAddress.address1").as("address1"),
-      col("o.shippingInfo.postalAddress.address2").as("address2"),
-      col("o.shippingInfo.postalAddress.city").as("city"),
-      col("o.shippingInfo.postalAddress.state").as("state"),
-      col("o.shippingInfo.postalAddress.postalCode").as("postalCode"),
-      col("o.shippingInfo.postalAddress.country").as("country"),
-      col("o.shippingInfo.postalAddress.addressType").as("addressType"),
-      col("l.lineNumber").try_cast("int").as("lineNumber"),
-      col("l.item.sku").as("sku"),
-      col("l.item.productName").as("productName"),
-      col("l.item.condition").as("product_condition"),
-      col("l.orderLineQuantity.amount").try_cast("int").as("quantity"),
-      col("l.orderLineQuantity.unitOfMeasurement").as("unitOfMeasurement"),
-      col("l.statusDate").as("statusDate"),
-      fmt(col("l.statusDate")).as("statusDate_formatted"),
-      col("l.fulfillment.fulfillmentOption").as("fulfillmentOption"),
-      col("l.fulfillment.shipMethod").as("shipMethod"),
-      col("l.fulfillment.storeId").as("storeId"),
-      col("l.fulfillment.shippingProgramType").as("shippingProgramType"),
-      charge.getField("chargeType").as("chargeType"),
-      charge.getField("chargeName").as("chargeName"),
-      charge.getField("chargeAmount").getField("amount")
-        .try_cast("decimal(10,2)").as("chargeAmount"),
-      charge.getField("chargeAmount").getField("currency").as("currency"),
-      charge.getField("tax").getField("taxAmount").getField("amount")
-        .try_cast("decimal(10,2)").as("taxAmount"),
-      charge.getField("tax").getField("taxName").as("taxName"),
-      st.getField("status").as("orderLineStatus"),
-      st.getField("statusQuantity").getField("amount").try_cast("int").as("statusQuantity"),
-      st.getField("cancellationReason").as("cancellationReason"),
-      tracking.getField("shipDateTime").as("shipDateTime"),
-      fmt(tracking.getField("shipDateTime")).as("shipDateTime_formatted"),
+    val out = Seq(
+      "purchaseOrderId" -> col("o.purchaseOrderId").try_cast("long"),
+      "customerOrderId" -> col("o.customerOrderId").try_cast("long"),
+      "customerEmailId" -> col("o.customerEmailId"),
+      "orderDate" -> col("o.orderDate"),
+      "orderDate_formatted" -> fmt(col("o.orderDate")),
+      "shipNode_type" -> col("o.shipNode.type"),
+      "shipNode_name" -> col("o.shipNode.name"),
+      "shipNode_id" -> col("o.shipNode.id"),
+      "source_file" -> lit(sourceTag),
+      "phone" -> col("o.shippingInfo.phone"),
+      "estimatedDeliveryDate" -> col("o.shippingInfo.estimatedDeliveryDate"),
+      "estimatedDeliveryDate_formatted" -> fmt(col("o.shippingInfo.estimatedDeliveryDate")),
+      "estimatedShipDate" -> col("o.shippingInfo.estimatedShipDate"),
+      "estimatedShipDate_formatted" -> fmt(col("o.shippingInfo.estimatedShipDate")),
+      "methodCode" -> col("o.shippingInfo.methodCode"),
+      "recipient_name" -> col("o.shippingInfo.postalAddress.name"),
+      "address1" -> col("o.shippingInfo.postalAddress.address1"),
+      "address2" -> col("o.shippingInfo.postalAddress.address2"),
+      "city" -> col("o.shippingInfo.postalAddress.city"),
+      "state" -> col("o.shippingInfo.postalAddress.state"),
+      "postalCode" -> col("o.shippingInfo.postalAddress.postalCode"),
+      "country" -> col("o.shippingInfo.postalAddress.country"),
+      "addressType" -> col("o.shippingInfo.postalAddress.addressType"),
+      "lineNumber" -> col("l.lineNumber").try_cast("int"),
+      "sku" -> col("l.item.sku"),
+      "productName" -> col("l.item.productName"),
+      "product_condition" -> col("l.item.condition"),
+      "quantity" -> col("l.orderLineQuantity.amount").try_cast("int"),
+      "unitOfMeasurement" -> col("l.orderLineQuantity.unitOfMeasurement"),
+      "statusDate" -> col("l.statusDate"),
+      "statusDate_formatted" -> fmt(col("l.statusDate")),
+      "fulfillmentOption" -> col("l.fulfillment.fulfillmentOption"),
+      "shipMethod" -> col("l.fulfillment.shipMethod"),
+      "storeId" -> col("l.fulfillment.storeId"),
+      "shippingProgramType" -> col("l.fulfillment.shippingProgramType"),
+      "chargeType" -> charge.getField("chargeType"),
+      "chargeName" -> charge.getField("chargeName"),
+      "chargeAmount" -> charge.getField("chargeAmount").getField("amount")
+        .try_cast("decimal(10,2)"),
+      "currency" -> charge.getField("chargeAmount").getField("currency"),
+      "taxAmount" -> charge.getField("tax").getField("taxAmount").getField("amount")
+        .try_cast("decimal(10,2)"),
+      "taxName" -> charge.getField("tax").getField("taxName"),
+      "orderLineStatus" -> st.getField("status"),
+      "statusQuantity" -> st.getField("statusQuantity").getField("amount").try_cast("int"),
+      "cancellationReason" -> st.getField("cancellationReason"),
+      "shipDateTime" -> tracking.getField("shipDateTime"),
+      "shipDateTime_formatted" -> fmt(tracking.getField("shipDateTime")),
       // carrier-or-otherCarrier coalesce (:353)
-      coalesce(
+      "carrierName" -> coalesce(
         tracking.getField("carrierName").getField("carrier"),
-        tracking.getField("carrierName").getField("otherCarrier")).as("carrierName"),
-      tracking.getField("carrierMethodCode").as("carrierMethodCode"),
-      tracking.getField("trackingNumber").as("trackingNumber"),
-      tracking.getField("trackingURL").as("trackingURL"),
-      to_timestamp(col("o.request_time"), "yyyy-MM-dd HH:mm:ss").as("request_time"),
-      current_timestamp().as("load_time"))
+        tracking.getField("carrierName").getField("otherCarrier")),
+      "carrierMethodCode" -> tracking.getField("carrierMethodCode"),
+      "trackingNumber" -> tracking.getField("trackingNumber"),
+      "trackingURL" -> tracking.getField("trackingURL"),
+      "request_time" -> to_timestamp(col("o.request_time"), "yyyy-MM-dd HH:mm:ss"),
+      "load_time" -> current_timestamp())
 
-    // VARCHAR truncation semantics (to_string(max_length), :436-443)
-    varcharLimits.keys.foldLeft(out) { (d, c) =>
-      d.withColumn(c, vtrunc(col(c), c))
-    }.select(outputColumns.map(col): _*)
+    // VARCHAR truncation semantics (to_string(max_length), :436-443),
+    // inside the one projection
+    exploded.select(out.map { case (name, c) =>
+      varcharLimits.get(name).fold(c)(n => substring(c, 1, n)).as(name)
+    }: _*)
   }
 }

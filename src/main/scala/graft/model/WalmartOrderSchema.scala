@@ -53,7 +53,13 @@ object WalmartOrderSchema {
       f("storeId", StringType), f("pickUpDateTime", LongType),
       f("pickUpBy", StringType), f("shippingProgramType", StringType))))
 
-  private def orderSchemaWith(orderLine: DataType): StructType = s(
+  /** Order schema, parsed once per message. `orderLine` is kept as raw
+    * JSON text (a StringType field holds the text of an object or array
+    * subtree) and parsed by [[lineSchema]] in a second, line-only step,
+    * so both of its shapes — array, or the single-struct variant of
+    * flink5_parse_walmart_order.py:292-294 — need no second parse of
+    * the whole document. */
+  val orderSchema: StructType = s(
     f("purchaseOrderId", StringType),
     f("customerOrderId", StringType),
     f("customerEmailId", StringType),
@@ -69,15 +75,8 @@ object WalmartOrderSchema {
         f("name", StringType), f("address1", StringType), f("address2", StringType),
         f("city", StringType), f("state", StringType), f("postalCode", StringType),
         f("country", StringType), f("addressType", StringType))))),
-    f("orderLines", s(f("orderLine", orderLine))),
+    f("orderLines", s(f("orderLine", StringType))),
     f("shipNode", s(f("type", StringType), f("name", StringType), f("id", StringType))))
-
-  /** Order schema with orderLine as an array (the common shape). */
-  val orderSchema: StructType = orderSchemaWith(ArrayType(lineSchema))
-
-  /** Order schema with orderLine as a single struct (the dict variant,
-    * flink5_parse_walmart_order.py:292-294). */
-  val orderSchemaSingleLine: StructType = orderSchemaWith(lineSchema)
 
   /** Output column order — 52 columns, fixed
     * (flink5_process_and_sink_jdbc.py:129-142 / FIXTURES.md §2). */

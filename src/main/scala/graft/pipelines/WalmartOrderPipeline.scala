@@ -2,11 +2,11 @@ package graft.pipelines
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.model.OrderParser
 import graft.sinks.JdbcUpsertSink
-import graft.sources.Sources
+import graft.sources.{FileKafka, Sources}
 
 /** The reference's production pipeline (SURVEY.md §3.1,
   * flink6_walmart_order_pipeline.py): Kafka order JSON → parse/flatten
@@ -27,39 +27,27 @@ object WalmartOrderPipeline {
                 sink: JdbcUpsertSink, checkpointDir: String,
                 startingOffsets: String = "latest",
                 triggerMs: Long = 1000L): StreamingQuery =
-    Sources.kafkaStream(spark, topic, bootstrapServers, startingOffsets = startingOffsets)
-      .selectExpr("CAST(value AS STRING) AS value")
-      .transform(parse(_))
-      .writeStream
-      .foreachBatch(sink.asForeachBatch)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(triggerMs))
-      .start()
+    fromStream(Sources.kafkaStream(spark, topic, bootstrapServers,
+      startingOffsets = startingOffsets), sink, checkpointDir, triggerMs)
 
   /** Streaming over the file-backed Kafka harness
-    * (graft.sources.FileKafka) — identical topology to [[fromKafka]]:
-    * envelope → value string → parse → upsert, with offset seek and
-    * per-trigger admission. Swap in fromKafka unchanged once a broker
-    * and the kafka connector are present. */
+    * (graft.sources.FileKafka) — identical topology to [[fromKafka]],
+    * with offset seek and per-trigger admission. Swap in fromKafka
+    * unchanged once a broker and the kafka connector are present. */
   def fromFileKafka(spark: SparkSession, dir: String, topic: String,
                     sink: JdbcUpsertSink, checkpointDir: String,
                     startingOffsets: String = "earliest",
                     maxOffsetsPerTrigger: Option[Long] = None,
                     triggerMs: Long = 1000L): StreamingQuery =
-    graft.sources.FileKafka.stream(spark, dir, topic, startingOffsets, maxOffsetsPerTrigger)
-      .selectExpr("CAST(value AS STRING) AS value")
-      .transform(parse(_))
-      .writeStream
-      .foreachBatch(sink.asForeachBatch)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(triggerMs))
-      .start()
+    fromStream(FileKafka.stream(spark, dir, topic, startingOffsets, maxOffsetsPerTrigger),
+      sink, checkpointDir, triggerMs)
 
-  /** Streaming from any source that exposes a `value` JSON string
-    * column (tests use MemoryStream). */
+  /** The one streaming builder: any source with a `value` column — a
+    * Kafka envelope (binary value) or a JSON string frame (tests use
+    * MemoryStream) → value string → parse → upsert, checkpointed. */
   def fromStream(raw: DataFrame, sink: JdbcUpsertSink, checkpointDir: String,
                  triggerMs: Long = 1000L): StreamingQuery =
-    parse(raw)
+    parse(raw.selectExpr("CAST(value AS STRING) AS value"))
       .writeStream
       .foreachBatch(sink.asForeachBatch)
       .option("checkpointLocation", checkpointDir)
@@ -95,10 +83,8 @@ object WalmartOrderPipeline {
   /** Batch: daily order-JSON dump files (each file one order array —
     * S8, flink5_parse_walmart_order.py:18-205). Multi-file reads
     * union for free. */
-  def fromJsonFiles(spark: SparkSession, paths: Seq[String]): DataFrame = {
-    val raw = spark.read.option("wholetext", "true").text(paths: _*)
-    parse(raw.withColumnRenamed("value", "value"), sourceTag = "file")
-  }
+  def fromJsonFiles(spark: SparkSession, paths: Seq[String]): DataFrame =
+    parse(spark.read.option("wholetext", "true").text(paths: _*), sourceTag = "file")
 
   def parse(raw: DataFrame, sourceTag: String = "kafka_stream"): DataFrame =
     OrderParser.parse(raw, "value", sourceTag)

@@ -37,7 +37,15 @@ import org.apache.spark.unsafe.types.UTF8String
   *     offset-seek analogue (kafka_load_to_mysql.py:624-642)
   *   - `maxOffsetsPerTrigger` caps rows per micro-batch via streaming
   *     admission control — the loader's buffer_size analogue
-  *     (kafka_load_to_mysql.py:591-607)
+  *     (kafka_load_to_mysql.py:591-607). The cap is prorated over
+  *     partitions by their lag, with spark-sql-kafka's `rateLimit`
+  *     rule (KafkaMicroBatchStream): partition p takes
+  *     `floor(limit * lag_p / totalLag)`, or `ceil` when that share is
+  *     below 1 so no partition with a backlog starves, and never past
+  *     its end. Every partition with a backlog advances in every
+  *     batch, so a capped batch spreads over as many tasks as there
+  *     are lagging partitions; like the connector, the ceil can take a
+  *     batch past the cap by at most one record per partition.
   *   - batch reads honor `startingOffsets`/`endingOffsets`
   *
   * Production swaps format("filekafka") for format("kafka"); nothing
@@ -180,6 +188,22 @@ object FileKafka {
     }
   }
 
+  /** spark-sql-kafka's `rateLimit` over `from`/`until` offsets: each
+    * lagging partition gets its lag-proportional share of `limit`
+    * (see the object doc); partitions without a lag stay at `until`. */
+  private[sources] def rateLimit(limit: Long, from: Map[Int, Long],
+                                 until: Map[Int, Long]): Map[Int, Long] = {
+    val lags = until.map { case (p, e) => p -> (e - from.getOrElse(p, 0L)) }.filter(_._2 > 0)
+    val total = lags.values.sum.toDouble
+    until.map { case (p, e) =>
+      p -> lags.get(p).fold(e) { lag =>
+        val share = limit * (lag / total)
+        val take = (if (share < 1) math.ceil(share) else math.floor(share)).toLong
+        e - lag + math.min(take, lag) // no overflow for any limit
+      }
+    }
+  }
+
   private[sources] def offsetsToJson(topic: String, offs: Map[Int, Long]): String =
     offs.toSeq.sortBy(_._1)
       .map { case (p, o) => s""""$p":$o""" }
@@ -285,23 +309,15 @@ private[sources] class FileKafkaScan(options: CaseInsensitiveStringMap) extends 
         throw new UnsupportedOperationException(
           "latestOffset(Offset, ReadLimit) is used (SupportsAdmissionControl)")
 
-      /** Cap this micro-batch at `maxRows` total, spread over
-        * partitions in id order — the buffer_size admission analogue. */
+      /** Cap this micro-batch at `maxRows`, prorated over the lagging
+        * partitions — the buffer_size admission analogue. */
       override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-        val from = start.asInstanceOf[FileKafkaOffset].parts
         val end = availableNowTarget.getOrElse(FileKafka.latestOffsets(dir, topic))
-        val capped = limit match {
+        FileKafkaOffset(topic, limit match {
           case m: ReadMaxRows =>
-            var budget = m.maxRows()
-            end.toSeq.sortBy(_._1).map { case (p, e) =>
-              val s = from.getOrElse(p, 0L)
-              val take = math.min(e - s, budget)
-              budget -= take
-              p -> (s + take)
-            }.toMap
+            FileKafka.rateLimit(m.maxRows(), start.asInstanceOf[FileKafkaOffset].parts, end)
           case _ => end
-        }
-        FileKafkaOffset(topic, capped)
+        })
       }
 
       override def deserializeOffset(json: String): Offset =

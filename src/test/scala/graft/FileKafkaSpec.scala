@@ -75,6 +75,46 @@ class FileKafkaSpec extends SparkSpec {
     assert(sizes.count(_ > 0) >= 3)
   }
 
+  test("maxOffsetsPerTrigger is prorated over partitions by lag (spark-sql-kafka rateLimit)") {
+    val dir = newBroker()
+    Seq(0 -> 600, 1 -> 300, 2 -> 100).foreach { case (p, n) =>
+      FileKafka.produceStrings(dir, "t", p, (0 until n).map(i => s"p$p-$i"))
+    }
+    val batches = scala.collection.mutable.ArrayBuffer.empty[Map[Int, Int]]
+    val q = FileKafka.stream(spark, dir, "t", maxOffsetsPerTrigger = Some(100))
+      .writeStream
+      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+        batches += df.select("partition").collect().groupBy(_.getInt(0))
+          .map { case (p, rs) => p -> rs.length }
+        ()
+      }
+      .option("checkpointLocation", newBroker())
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination(120000)
+    q.stop()
+    assert(batches.head == Map(0 -> 60, 1 -> 30, 2 -> 10), s"got $batches")
+    assert(batches.forall(_.values.sum <= 100), s"a batch exceeded the cap: $batches")
+    assert(batches.map(_.values.sum).sum == 1000, s"got $batches")
+  }
+
+  test("a sustained backlog on p0 does not starve the other partitions") {
+    val dir = newBroker()
+    FileKafka.produceStrings(dir, "t", 0, (0 until 5000).map(i => s"a$i"))
+    FileKafka.produceStrings(dir, "t", 1, (0 until 50).map(i => s"b$i"))
+    FileKafka.produceStrings(dir, "t", 2, (0 until 50).map(i => s"c$i"))
+    var at = Map(0 -> 0L, 1 -> 0L, 2 -> 0L)
+    (1 to 10).foreach { batch =>
+      val next = graft.sources.FileKafkaProbe.nextBatchEnd(dir, "t", 100L, at)
+      val read = next.map { case (p, o) => p -> (o - at(p)) }
+      assert(read.values.sum <= 100, s"batch $batch over the cap: $read")
+      assert(read(1) > 0 && read(2) > 0, s"batch $batch starved p1/p2: $read")
+      at = next
+      // p0 keeps more than a cap's worth of backlog
+      FileKafka.produceStrings(dir, "t", 0, (0 until 100).map(i => s"a$batch-$i"))
+    }
+  }
+
   test("checkpoint resume consumes only records produced after the first run") {
     val dir = newBroker()
     val ckpt = newBroker()

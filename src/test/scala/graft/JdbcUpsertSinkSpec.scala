@@ -1,9 +1,72 @@
 package graft
 
-import java.sql.DriverManager
+import java.lang.reflect.{InvocationHandler, InvocationTargetException, Method, Proxy}
+import java.sql.{Connection, DriverManager, DriverPropertyInfo, PreparedStatement, SQLException}
+import java.util.Properties
+import java.util.concurrent.atomic.AtomicInteger
 
 import graft.sinks.JdbcUpsertSink
 import graft.sinks.JdbcUpsertSink._
+
+/** A JDBC driver for `jdbc:flaky:<rest>` URLs that opens `jdbc:<rest>`
+  * and makes the next [[FlakyDriver.failures]] `executeBatch` calls
+  * fail AFTER the inner batch ran — a connection lost before the
+  * acknowledgement, so a retry without rollback would apply the rows
+  * twice. */
+final class FlakyDriver extends java.sql.Driver {
+  import FlakyDriver._
+  override def acceptsURL(url: String): Boolean = url != null && url.startsWith(prefix)
+  override def connect(url: String, info: Properties): Connection =
+    if (!acceptsURL(url)) null
+    else proxy(classOf[Connection],
+      DriverManager.getConnection("jdbc:" + url.stripPrefix(prefix), info)) {
+        case (c, m, args) if m.getName == "prepareStatement" =>
+          proxy(classOf[PreparedStatement], call(c, m, args)) {
+            case (ps, m2, args2) if m2.getName == "executeBatch" =>
+              attempts.incrementAndGet()
+              val out = call(ps, m2, args2)
+              if (failures.getAndDecrement() > 0) throw new SQLException("connection reset")
+              out
+            case (ps, m2, args2) => call(ps, m2, args2)
+          }
+        case (c, m, args) =>
+          if (m.getName == "rollback") rollbacks.incrementAndGet()
+          call(c, m, args)
+      }
+  override def getPropertyInfo(url: String, info: Properties): Array[DriverPropertyInfo] =
+    Array.empty
+  override def getMajorVersion: Int = 1
+  override def getMinorVersion: Int = 0
+  override def jdbcCompliant(): Boolean = false
+  override def getParentLogger: java.util.logging.Logger =
+    java.util.logging.Logger.getLogger("flaky")
+}
+
+object FlakyDriver {
+  val prefix = "jdbc:flaky:"
+  val failures = new AtomicInteger()
+  val attempts = new AtomicInteger()
+  val rollbacks = new AtomicInteger()
+  private lazy val registered: Unit = DriverManager.registerDriver(new FlakyDriver)
+
+  /** Arm the next `n` batch failures and zero the counters. */
+  def arm(n: Int): Unit = {
+    registered
+    failures.set(n); attempts.set(0); rollbacks.set(0)
+  }
+
+  private def call(target: AnyRef, m: Method, args: Array[AnyRef]): AnyRef =
+    try m.invoke(target, (if (args == null) Array.empty[AnyRef] else args): _*)
+    catch { case e: InvocationTargetException => throw e.getCause }
+
+  private def proxy[T](iface: Class[T], target: AnyRef)(
+      h: PartialFunction[(AnyRef, Method, Array[AnyRef]), AnyRef]): T =
+    Proxy.newProxyInstance(getClass.getClassLoader, Array[Class[_]](iface),
+      new InvocationHandler {
+        override def invoke(p: AnyRef, m: Method, args: Array[AnyRef]): AnyRef =
+          h((target, m, args))
+      }).asInstanceOf[T]
+}
 
 class JdbcUpsertSinkSpec extends SparkSpec {
   import spark.implicits._
@@ -78,5 +141,42 @@ class JdbcUpsertSinkSpec extends SparkSpec {
     rs2.next()
     assert(rs2.getBigDecimal(1).doubleValue() == 12.34)
     c.close()
+  }
+
+  /** Append ids 1-5, two rows a batch, through [[FlakyDriver]] with
+    * `failures` armed and maxRetries = 3. */
+  private def flakyWrite(table: String, failures: Int): Unit = {
+    val c = DriverManager.getConnection(url)
+    // no key: rows applied twice by a retry without rollback would show
+    c.createStatement().execute(s"CREATE TABLE $table (id BIGINT, v VARCHAR(10))")
+    c.close()
+    FlakyDriver.arm(failures)
+    new JdbcUpsertSink(FlakyDriver.prefix + url.stripPrefix("jdbc:"), table, Append,
+      batchSize = 2, maxRetries = 3, backoffMs = 1L)
+      .write((1L to 5L).map(i => (i, s"v$i")).toDF("id", "v").coalesce(1))
+  }
+
+  private def rowsOf(table: String): Seq[(Long, String)] = {
+    val c = DriverManager.getConnection(url)
+    val rs = c.createStatement().executeQuery(s"SELECT id, v FROM $table")
+    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
+    while (rs.next()) got += ((rs.getLong(1), rs.getString(2)))
+    c.close()
+    got.sorted.toSeq
+  }
+
+  test("retry: k < maxRetries batch failures commit every row exactly once") {
+    flakyWrite("flaky_ok", failures = 2)
+    assert(rowsOf("flaky_ok") == (1L to 5L).map(i => (i, s"v$i")))
+    assert(FlakyDriver.rollbacks.get == 2 && FlakyDriver.attempts.get == 3 + 2)
+  }
+
+  test("retry: more than maxRetries batch failures fail the batch and commit nothing") {
+    val e = intercept[Exception](flakyWrite("flaky_bad", failures = 100))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("connection reset")), e)
+    // the first attempt plus maxRetries, each rolled back
+    assert(FlakyDriver.attempts.get == 4 && FlakyDriver.rollbacks.get == 4)
+    assert(rowsOf("flaky_bad").isEmpty)
   }
 }

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, from_json}
+import org.apache.spark.sql.types._
 
 import graft.model.{OrderParser, WalmartOrderSchema}
 
@@ -159,6 +161,63 @@ class OrderParserSpec extends SparkSpec {
     assert(r.getAs[java.sql.Timestamp]("orderDate_formatted").toInstant ==
       java.time.Instant.ofEpochMilli(1759276800000L))
     assert(r.getAs[Long]("orderDate") == 1759276800000L)
+  }
+
+  private def ts(epochMs: Long) = java.sql.Timestamp.from(java.time.Instant.ofEpochMilli(epochMs))
+
+  /** The 51 columns before load_time that `order(po, ...)` with
+    * `line(num, sku, status)` flattens to. */
+  private def expectedRow(po: Long, num: Int, sku: String, status: String = "Shipped"): Seq[Any] =
+    Seq(po, ("9" + po).toLong, "a@b.com", 1759276800000L, ts(1759276800000L),
+      "SellerFulfilled", "Main", "SN1", "kafka_stream", "5551234567",
+      1759800000000L, ts(1759800000000L), 1759400000000L, ts(1759400000000L), "Value",
+      "Jane Doe", "1 Main St", null, "Springfield", "CA", "90001", "USA", "RESIDENTIAL",
+      num, sku, "Café Münster 咖啡", "New", 2, "EACH", 1759300000000L, ts(1759300000000L),
+      "S2H", "VALUE", null, null,
+      "PRODUCT", "ItemPrice", new java.math.BigDecimal("19.99"), "USD",
+      new java.math.BigDecimal("1.60"), "Tax1",
+      status, 2, null, 1759300000000L, ts(1759300000000L), "UPS", "S01", "1Z999",
+      "https://t.example/1Z999",
+      // request_time "2025-10-01 05:00:00" in the session's UTC
+      ts(java.time.Instant.parse("2025-10-01T05:00:00Z").toEpochMilli))
+
+  /** Rows as 51 exact values, load_time checked to be this run's. */
+  private def exactRows(df: DataFrame): Seq[Seq[Any]] = {
+    assert(df.columns.toSeq == WalmartOrderSchema.outputColumns)
+    val before = System.currentTimeMillis()
+    val rows = df.collect().toSeq
+    rows.foreach { r =>
+      val load = r.getAs[java.sql.Timestamp]("load_time").getTime
+      assert(load >= before - 60000L && load <= System.currentTimeMillis())
+    }
+    val line = WalmartOrderSchema.outputColumns.indexOf("lineNumber")
+    rows.map(_.toSeq.dropRight(1)).sortBy(r => (r.head.asInstanceOf[Long], r(line).asInstanceOf[Int]))
+  }
+
+  test("one parse: a list of orders mixing array and single-struct orderLine") {
+    val msg = s"[${order("1101", s"[${line(1, "SKU-A")}, ${line(2, "SKU-B", "Delivered")}]")}," +
+      s" ${order("1102", line(1, "SKU-C"))}]"
+    assert(exactRows(parse(msg)) == Seq(
+      expectedRow(1101L, 1, "SKU-A"), expectedRow(1101L, 2, "SKU-B", "Delivered"),
+      expectedRow(1102L, 1, "SKU-C")))
+  }
+
+  test("one parse: orderLine [] and null yield no rows, next to an order that has lines") {
+    val empty = order("1201", "[]")
+    val nul = order("1202", "null")
+    assert(exactRows(parse(empty, nul)).isEmpty)
+    assert(exactRows(parse(s"[$empty, $nul, ${order("1203", s"[${line(1, "SKU-D")}]")}]")) ==
+      Seq(expectedRow(1203L, 1, "SKU-D")))
+  }
+
+  test("pin: a root object parses as a one-element array; a string field keeps raw JSON") {
+    // the single parse relies on both Spark JSON-reader behaviours
+    val schema = ArrayType(StructType(Seq(
+      StructField("i", IntegerType), StructField("raw", StringType))))
+    val got = Seq("""{"i": 4, "raw": {"a": [1, 2]}}""", """[{"i": 1, "raw": [{"b": 2}]}]""")
+      .toDF("value").select(from_json(col("value"), schema).as("a")).collect()
+      .map(_.getSeq[org.apache.spark.sql.Row](0).map(r => (r.getInt(0), r.getString(1))))
+    assert(got.toSeq == Seq(Seq((4, """{"a":[1,2]}""")), Seq((1, """[{"b":2}]"""))))
   }
 
   test("mixed batch: all variants together") {

@@ -32,33 +32,13 @@ object GraftSession {
       // early-submitted chain's wide stage from starving the
       // critical-path chain's next stage of task slots (FIFO offers
       // slots strictly in job-submission order). A/B: PERF §36.
-      // SPARK_GRAFT_SCHEDULER=FIFO restores the old behavior.
-      .config("spark.scheduler.mode",
-        sys.env.getOrElse("SPARK_GRAFT_SCHEDULER", "FAIR"))
+      .config("spark.scheduler.mode", "FAIR")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // AQE sort-merge -> shuffled-hash rewrite (guide §3.1): when every
-      // post-shuffle partition of the build side is measured below this
-      // threshold at runtime, the sort on both sides is replaced by a
-      // per-partition hash build. DEFAULT OFF ("0") since r22: the r21
-      // round shipped 64m on thin evidence (4-8% on q61/q47, one box),
-      // and the driver's ground-truth run then read the untouched q60
-      // staged path at 2.96 s vs 0.41-0.53 s everywhere else — all
-      // three 32-core reps slow, absent at 8 cores — with this rewrite
-      // the only r21 change reaching q60's two doc-sets shuffle joins
-      // (VERDICT r21 #1/#3). The r22 paired A/B/B/A re-measure showed
-      // NO robust win either way (q47 on 1.279/0.978 vs off 0.963/1.012;
-      // q61 on 0.417/0.375 vs off 0.386/0.423; q54 consistently faster
-      // OFF), so the honest default is off: a few-percent maybe-win on
-      // two queries does not buy a bimodal 6x tail on a heavy-array
-      // hash build. Note the gate reads COMPRESSED shuffle bytes — for
-      // text/array-heavy rows the decompressed per-task hash map can be
-      // several times the threshold, which is exactly q60's row shape.
-      // SPARK_GRAFT_SHJ_LOCALMAP=64m re-enables for A/Bs.
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "0"))
+      // maxShuffledHashJoinLocalMapThreshold (the AQE sort-merge ->
+      // shuffled-hash rewrite) stays at Spark's default, 0 = off: PERF §64
       // the driver-generated events table carries TIMESTAMP(NANOS)
       // which Spark's parquet reader only surfaces as long
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -27,13 +27,11 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * the cache is dead weight that squeezes execution memory for every
   * later spill-sensitive query, and at corpus scale a MEMORY_AND_DISK
   * persist that outlives its query is a disk-filler. The LRU bound
-  * stays as the backstop for consumers that never run an action (and
-  * for `SPARK_GRAFT_CACHE_SCOPE=session`, the A/B escape hatch that
-  * restores the old session-lifetime behavior). A caller that runs a
-  * SECOND action over the same returned plan recomputes the subtree —
-  * lazily correct, and the right default: the recompute is paid by the
-  * caller who re-executes, not (as memory pressure) by every other
-  * query on the session.
+  * stays as the backstop for consumers that never run an action. A
+  * caller that runs a SECOND action over the same returned plan
+  * recomputes the subtree — lazily correct, and the right default: the
+  * recompute is paid by the caller who re-executes, not (as memory
+  * pressure) by every other query on the session.
   *
   * NOT query-scoped: [[RelationalOps.pctStatsRegistry]] — its stats
   * frame is consumed EAGERLY (a `count()` at plan-construction time
@@ -77,17 +75,11 @@ private[graft] final class SessionCacheRegistry(
   private val listening = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession, QueryExecutionListener]())
 
-  /** `SPARK_GRAFT_CACHE_SCOPE=session` restores the pre-r22
-    * session-lifetime lifecycle (LRU/explicit release only) — the A/B
-    * instrument for attributing completion-release effects. */
-  private def scopedOff: Boolean =
-    sys.env.get("SPARK_GRAFT_CACHE_SCOPE").contains("session")
-
   /** Track `df` (already persisted by the caller) in its session's LRU
     * window, evicting+unpersisting the eldest entry beyond
     * [[maxEntries]]. Returns the number of frames evicted (0 or 1). */
   def register(df: DataFrame): Int = {
-    if (queryScoped && !scopedOff) ensureListener(df.sparkSession)
+    if (queryScoped) ensureListener(df.sparkSession)
     val q = caches.computeIfAbsent(df.sparkSession,
       _ => new java.util.ArrayDeque[Entry]())
     q.synchronized {

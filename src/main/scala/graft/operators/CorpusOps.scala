@@ -620,7 +620,7 @@ object CorpusOps {
     * Scale shape: tf is one hash-agg on (doc_id, term); df is an agg
     * over the DISTINCT (doc_id, term) stream which reuses the tf
     * FRAME — but NOT the tf computation: the r18 A/B re-run
-    * (Q56Probe, 100× corpus, post-§47 code) showed ReuseExchange does
+    * (PERF §51, 100× corpus, post-§47 code) showed ReuseExchange does
     * not dedupe the tf subtree (post-exec plan: 0 reused stages,
     * 2 document scans), so the hint-free r14 §30 canonical form paid
     * the corpus explode+agg TWICE. tf is now persisted

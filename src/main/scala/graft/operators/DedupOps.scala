@@ -191,13 +191,7 @@ object DedupOps {
         val bcastSaved = bcastKeys.map(k => k -> spark.conf.getOption(k))
         var pool: java.util.concurrent.ExecutorService = null
         try {
-          // SPARK_GRAFT_STAGE_BCAST_CAP: override ("off" disables) —
-          // the A/B instrument behind PERF §28's capped-vs-uncapped
-          // staging numbers; production default stays 1m
-          sys.env.getOrElse("SPARK_GRAFT_STAGE_BCAST_CAP", "1m") match {
-            case "off" => ()
-            case cap   => bcastKeys.foreach(spark.conf.set(_, cap))
-          }
+          bcastKeys.foreach(spark.conf.set(_, "1m"))
           // Chain inventory FIRST (as thunks), so the pool is sized to
           // run every chain concurrently: the r13 pool of
           // presets.size + 2 threads queued flags/keeper/ivf behind
@@ -486,8 +480,8 @@ object DedupOps {
         // small one: the range exchange's boundary SAMPLING re-executes
         // the whole post-shuffle segment (distinct + est join-backs), a
         // second full pass of the most expensive stage on the h8
-        // staging chain (CandBuildProbe: sorted write 154 s vs unsorted
-        // 15 s on the same warmed 100× corpus; PERF §47).
+        // staging chain (sorted write 154 s vs unsorted 15 s on the
+        // same warmed 100× corpus; PERF §47).
         staged(spark, sfDir, s"cand_h${p.numHashes}_b${p.numBands}")(
             lshCandidatesFrom(sigTable(spark, sfDir, p), p, BandGuard.default,
               sort = false))
@@ -725,16 +719,12 @@ object DedupOps {
     * write), per session — the caller-session cache-lifetime contract
     * made releasable AND bounded (VERDICT r15 #7): a long-lived session
     * cycling many DISTINCT corpora no longer accumulates one ~16 B/row
-    * band frame each until it thinks to release — beyond
-    * [[bandCacheMaxEntries]] frames the least-recently-registered is
-    * evicted and unpersisted automatically (repeat calls over the SAME
-    * corpus share one CacheManager entry and never consume a new
-    * slot). SPARK_GRAFT_BAND_CACHE_MAX overrides the window. */
-  private[graft] val bandCacheMaxEntries: Int =
-    sys.env.get("SPARK_GRAFT_BAND_CACHE_MAX")
-      .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(8)
+    * band frame each until it thinks to release — beyond 8 frames the
+    * least-recently-registered is evicted and unpersisted
+    * automatically (repeat calls over the SAME corpus share one
+    * CacheManager entry and never consume a new slot). */
   private[graft] val bandCacheRegistry =
-    new SessionCacheRegistry(bandCacheMaxEntries, queryScoped = true)
+    new SessionCacheRegistry(maxEntries = 8, queryScoped = true)
 
   /** Release every band-stream persist accumulated by library
     * `lshCandidatesOf`/`lshCandidates` calls on `spark`; returns how
@@ -1283,14 +1273,12 @@ object DedupOps {
   def prefixJaccardPairs(spark: SparkSession, sfDir: String): DataFrame = {
     val sets = docSetsTable(spark, sfDir)
     val prefix = prefixTable(spark, sfDir, prefixThreshold)
-    // default `auto`: broadcast sketch prefilter while the corpus
-    // fits the ceiling (parquet-metadata count — cheap), past it the
-    // enumeration-grain rejection via the sketches CARRIED on the
-    // prefix rows — no broadcast, no cliff (PERF §44);
-    // `carried`/`broadcast`/`pair`/`off` modes remain as A/B
-    // instruments (exact at any size on every path — the verify is
-    // the recall authority, the prefilters only drop pairs the bound
-    // proves non-qualifying)
+    // broadcast sketch prefilter while the corpus fits the ceiling
+    // (parquet-metadata count — cheap), past it the enumeration-grain
+    // rejection via the sketches CARRIED on the prefix rows — no
+    // broadcast, no cliff (PERF §44). Exact at any size on both paths:
+    // the verify is the recall authority, the prefilters only drop
+    // pairs the bound proves non-qualifying
     val cand = candidatesDispatch(prefix, sets, prefixThreshold,
       Tables.documents(spark, sfDir).count())
     verifyPrefixPairs(cand, sets, prefixThreshold)
@@ -1311,8 +1299,8 @@ object DedupOps {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val sets = setsFrom(bg)
-      // default `auto`: broadcast prefilter under the ceiling,
-      // carried enumeration-grain rejection past it (the persisted
+      // broadcast prefilter under the ceiling, carried
+      // enumeration-grain rejection past it (the persisted
       // prefix frame carries `sk`) — no cliff. The ceiling guard
       // counts docs off the PERSISTED prefix frame, not `docs`:
       // an arbitrary caller lineage must not be recomputed for a count
@@ -1338,10 +1326,10 @@ object DedupOps {
     * (PERF §44). The carry is cheap because the prefix frame is
     * doc-grain small (~(1-t)n+1 rows/doc: 2.2/doc on this corpus,
     * 0.2n/doc for book-sized docs), and consumers that don't ask for
-    * `sk` prune the column at the parquet scan (`SkPruneProbe`). The
-    * per-doc sketch aggregate is its OWN doc_id exchange
-    * (`PrefixPlanProbe`: the window's exchange is not reused — its
-    * input carries the dfs join), but a narrow one: (doc_id, int32)
+    * `sk` prune the column at the parquet scan (`BucketSketchSpec`
+    * pins this for the broadcast path). The per-doc sketch aggregate
+    * is its OWN doc_id exchange (the window's exchange is not reused
+    * — its input carries the dfs join), but a narrow one: (doc_id, int32)
     * per shingle row, ~15–20% of the window exchange's width, linear
     * in corpus bytes — and since r16 paid ONLY on the unstaged path:
     * the staged build joins the prefix rows to the doc_sets table's
@@ -1555,13 +1543,13 @@ object DedupOps {
     * evaluated INLINE in the self-join's own stage — the two sides'
     * sketches are already in the joined row, no attach join at all.
     * Same bound, same saturation bypass, and the same survivors as
-    * [[candidatesSketchFiltered]] / [[sketchPrefilterBucketed]]
-    * (`BucketSketchSpec` pins all three pair sets identical), so the
-    * pair aggregate's hash table holds ~25.6k sketch-survivors at
-    * 100× instead of 58.7M — at ANY corpus size. Cost of the carry:
-    * +128 B per PREFIX row ((1-t)n+1 rows/doc) through the self-join's
-    * two shuffles, linear in corpus docs, vs the broadcast path's
-    * O(corpus) driver-resident relation. */
+    * [[candidatesSketchFiltered]] (`BucketSketchSpec` pins the two
+    * candidate sets identical), so the pair aggregate's hash table
+    * holds ~25.6k sketch-survivors at 100× instead of 58.7M — at ANY
+    * corpus size. Cost of the carry: +128 B per PREFIX row
+    * ((1-t)n+1 rows/doc) through the self-join's two shuffles, linear
+    * in corpus docs, vs the broadcast path's O(corpus) driver-resident
+    * relation. */
   private[graft] def candidatesSketchCarried(prefix: DataFrame,
                                              t: Double): DataFrame = {
     val tL = loosened(t)
@@ -1591,57 +1579,22 @@ object DedupOps {
         col("x.sk").as("xsk"), col("y.sk").as("ysk"))
   }
 
-  /** q79 candidate-path selector: `auto` (default — the broadcast
-    * prefilter while the corpus fits [[sketchDocCeiling]], the
-    * carried enumeration-grain path past it: the quiet-box A/B at
-    * 100× measured broadcast 7.9–9.2 s vs carried 9.6–10.1 s under
-    * the ceiling, and carried 9.6–10.1 s vs pair-grain 29–36 s past
-    * it — PERF §44), `carried` (force enumeration-grain,
-    * ceiling-free), `broadcast` (r14 shape, pair-grain fallback past
-    * the ceiling), `pair` (force the pair-grain bucketed prefilter),
-    * `off` (no sketch prefilter; the verify's in-SMJ bound still
-    * applies). Env SPARK_GRAFT_Q79_SKETCH, sys-prop
-    * `graft.q79.sketch` for in-JVM A/Bs. */
-  private[graft] def q79SketchMode: String =
-    sys.env.get("SPARK_GRAFT_Q79_SKETCH")
-      .orElse(sys.props.get("graft.q79.sketch"))
-      .map(_.toLowerCase).getOrElse("auto")
-
   /** Candidate stage dispatch shared by [[prefixJaccardPairs]] and
-    * [[prefixJaccardPairsOf]]: `nDocs` is by-name — only the
-    * auto/broadcast modes need a corpus count for the ceiling check.
-    * Unknown mode strings fall back to `auto` WITH a warning (ADVICE
-    * r15: the old catch-all silently routed typos like 'carry' into
-    * the no-prefilter path, regressing q79 3× with zero signal); only
-    * the explicit `off` disables the prefilter. The auto dispatch
-    * prints its choice once per call — the observability behind the
-    * natural past-ceiling run (VERDICT r15 #4). */
+    * [[prefixJaccardPairsOf]]: the broadcast prefilter while the
+    * corpus fits [[sketchDocCeiling]], the carried enumeration-grain
+    * path past it (the quiet-box A/B at 100× measured broadcast
+    * 7.9–9.2 s vs carried 9.6–10.1 s under the ceiling, and carried
+    * 9.6–10.1 s vs pair-grain 29–36 s past it — PERF §44). The
+    * dispatch prints its choice once per call — the observability
+    * behind the natural past-ceiling run (VERDICT r15 #4). */
   private def candidatesDispatch(prefix: DataFrame, sets: DataFrame,
-      t: Double, nDocs: => Long): DataFrame = {
-    def auto(): DataFrame = {
-      val n = nDocs
-      val ceiling = sketchDocCeiling(prefix.sparkSession)
-      val carried = n > ceiling
-      System.err.println(s"[graft] q79 sketch auto: nDocs=$n ceiling=$ceiling -> " +
-        (if (carried) "carried (past ceiling, no broadcast)" else "broadcast prefilter"))
-      if (carried) candidatesSketchCarried(prefix, t)
-      else candidatesSketchFiltered(prefix, sets, t)
-    }
-    q79SketchMode match {
-      case "auto"    => auto()
-      case "carried" => candidatesSketchCarried(prefix, t)
-      case "broadcast" =>
-        if (nDocs <= sketchDocCeiling(prefix.sparkSession))
-          candidatesSketchFiltered(prefix, sets, t)
-        else sketchPrefilterBucketed(candidatesWithSizesFrom(prefix, t), sets, t)
-      case "pair" =>
-        sketchPrefilterBucketed(candidatesWithSizesFrom(prefix, t), sets, t)
-      case "off" => candidatesFrom(prefix, t)
-      case other =>
-        System.err.println(s"[graft] WARNING: unknown q79 sketch mode '$other' " +
-          "(expected auto|carried|broadcast|pair|off) — falling back to 'auto'")
-        auto()
-    }
+      t: Double, nDocs: Long): DataFrame = {
+    val ceiling = sketchDocCeiling(prefix.sparkSession)
+    val carried = nDocs > ceiling
+    System.err.println(s"[graft] q79 sketch auto: nDocs=$nDocs ceiling=$ceiling -> " +
+      (if (carried) "carried (past ceiling, no broadcast)" else "broadcast prefilter"))
+    if (carried) candidatesSketchCarried(prefix, t)
+    else candidatesSketchFiltered(prefix, sets, t)
   }
 
   /** Corpus-size ceiling for the broadcast sketch prefilter: 2M docs
@@ -1654,13 +1607,12 @@ object DedupOps {
     * 2M docs q79/verify degrade gracefully to sketch-in-SMJ instead
     * of falling off a cliff to raw intersects.
     *
-    * SPARK_GRAFT_SKETCH_MAX_DOCS (env, or `graft.sketch.maxdocs`
-    * sys-prop for in-JVM specs) overrides — `0` forces the bucketed
-    * path at any size, the A/B instrument behind PERF §38. */
+    * The `graft.sketch.maxdocs` system property overrides it, so
+    * in-JVM specs reach the past-ceiling path on a small corpus (`0`
+    * takes it at any size). */
   private[graft] val sketchMaxDocs = 2000000L
   private[graft] def sketchMaxDocsEff: Long =
-    sys.env.get("SPARK_GRAFT_SKETCH_MAX_DOCS")
-      .orElse(sys.props.get("graft.sketch.maxdocs"))
+    sys.props.get("graft.sketch.maxdocs")
       .flatMap(_.toLongOption).getOrElse(sketchMaxDocs)
 
   /** The prefilter ceiling while a `stageAll` window is open on the
@@ -1692,8 +1644,7 @@ object DedupOps {
     * saturation) bypass the filter entirely. */
   private def sketchBoundFilter(pairs: DataFrame, sets: DataFrame, t: Double,
       aCol: String, bCol: String,
-      sizeCols: Option[(String, String)],
-      hint: Boolean = true): DataFrame = {
+      sizeCols: Option[(String, String)]): DataFrame = {
     val tL = loosened(t)
     // reuse the staged doc_sets sketch column when present (written
     // once at staging time) instead of re-hashing every hs array —
@@ -1705,15 +1656,9 @@ object DedupOps {
     val skCols = col("doc_id") +: skSrc.as("__sk") +:
       (if (sizeCols.isEmpty) Seq(col("n")) else Nil)
     val sk = sets.select(skCols: _*)
-    // hint=false is the PAST-CEILING shape: no forced broadcast — the
-    // sketch side is the bucketed doc_sets projection (128 B/doc), so
-    // the attach plans a bucket-aligned SMJ in which only the pair
-    // side shuffles, at any corpus size (PERF §38)
-    def side(keyOut: String, skOut: String, nOut: Option[String]) = {
-      val proj = sk.select(col("doc_id").as(keyOut) +: col("__sk").as(skOut) +:
-        nOut.map(col("n").as(_)).toSeq: _*)
-      if (hint) broadcast(proj) else proj
-    }
+    def side(keyOut: String, skOut: String, nOut: Option[String]) =
+      broadcast(sk.select(col("doc_id").as(keyOut) +: col("__sk").as(skOut) +:
+        nOut.map(col("n").as(_)).toSeq: _*))
     val (na, nb) = sizeCols.getOrElse(("__na", "__nb"))
     val attached = pairs
       .join(side(aCol, "__ska", if (sizeCols.isEmpty) Some("__na") else None), aCol)
@@ -1733,14 +1678,6 @@ object DedupOps {
                                      t: Double): DataFrame =
     sketchBoundFilter(candWithSizes, sets, t, "doc_a", "doc_b",
       Some(("na", "nb"))).select("doc_a", "doc_b")
-
-  /** [[sketchPrefilter]] without the broadcast — the PAST-CEILING
-    * pair-grain shape: sketches attach through the bucketed doc_sets
-    * SMJ (128 B/doc), only the pair side shuffles (PERF §38). */
-  private[graft] def sketchPrefilterBucketed(candWithSizes: DataFrame,
-      sets: DataFrame, t: Double): DataFrame =
-    sketchBoundFilter(candWithSizes, sets, t, "doc_a", "doc_b",
-      Some(("na", "nb")), hint = false).select("doc_a", "doc_b")
 
   /** [[sketchPrefilter]] for candidate frames that carry only
     * (doc_a, doc_b): the set sizes ride the same broadcast rows as
@@ -1780,9 +1717,8 @@ object DedupOps {
     *      plus the rare hash-bound overshoot) touch the string
     *      arrays; the final compare is the ORACLE's compare —
     *      round(j, 6) >= t. */
-  /** Stage 1 of the verify alone (the hash upper bound) — factored
-    * out so Q79Probe can attribute verify time between the bound pass
-    * and the exact confirm. */
+  /** Stage 1 of the verify alone (the hash upper bound);
+    * [[verifyPrefixPairs]] runs the exact confirm over its survivors. */
   private[graft] def verifyHashPass(cand: DataFrame, sets: DataFrame,
                                     t: Double): DataFrame = {
     // Bucketed sketch bound INSIDE the verify SMJ (VERDICT r14 #2):

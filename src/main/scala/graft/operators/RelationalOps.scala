@@ -520,9 +520,7 @@ object RelationalOps {
     *
     * NOTE: this makes percentilesByBucketed EAGER (it runs the stats
     * job before returning), like [[graft.operators.DedupOps
-    * .prefixJaccardPairsOf]]. SPARK_GRAFT_PCT_HINT overrides for A/B
-    * attribution: `force` = always hint, `off` = never (the r14
-    * hint-free shape, no eager count). */
+    * .prefixJaccardPairsOf]]. */
   private[graft] val pctHintMaxGroups = 100000L
 
   /** Per-session LRU of percentile stats persists (ADVICE r15: the
@@ -544,17 +542,11 @@ object RelationalOps {
     require(levels == 1 || levels == 2, s"levels must be 1 or 2, got $levels")
     val vals = df.where(col(valueCol).isNotNull)
       .select(col(groupCol), col(valueCol).cast("double").as("__v"))
-    val statsRaw = vals.groupBy(groupCol).agg(count(lit(1)).as("__n"),
-      min("__v").as("__lo"), max("__v").as("__hi"))
-    val (stats, hintOn) = sys.env.get("SPARK_GRAFT_PCT_HINT") match {
-      case Some("force") => (statsRaw, true)
-      case Some("off")   => (statsRaw, false)
-      case _ =>
-        val cached = statsRaw
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        pctStatsRegistry.register(cached): Unit
-        (cached, cached.count() <= pctHintMaxGroups)
-    }
+    val stats = vals.groupBy(groupCol).agg(count(lit(1)).as("__n"),
+        min("__v").as("__lo"), max("__v").as("__hi"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    pctStatsRegistry.register(stats): Unit
+    val hintOn = stats.count() <= pctHintMaxGroups
     def maybeHint(small: DataFrame): DataFrame =
       if (hintOn) broadcast(small) else small
     val bucketed = vals.join(maybeHint(stats), groupCol)

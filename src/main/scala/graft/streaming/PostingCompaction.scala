@@ -77,7 +77,7 @@ private[graft] object PostingCompaction {
     * `spark.table(t).repartition(buckets, col)` into the bucketed
     * write — landed ~(input files / 32) × buckets and GREW ~1.32× per
     * cycle in the r17 soak (2,572 → 13,783 files while bytes grew
-    * 26%). Root cause, read off the executed plan (CompactionProbe):
+    * 26%). Root cause, read off the executed plan (PERF §49):
     * EnsureRequirements elides the user repartition because the
     * bucketed scan claims HashPartitioning(col, buckets) — and THEN
     * the DisableUnnecessaryBucketedScan preparation rule, seeing no

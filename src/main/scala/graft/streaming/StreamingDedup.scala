@@ -210,7 +210,7 @@ object StreamingDedup {
     * flat over 1,000+ batches). An oversized heap is not safer — G1
     * at 100 GiB grows multi-GB young generations whose evacuation
     * pauses landed as 40–131 s batch spikes in the r16 soak;
-    * [[graft.tools.AdmissionSoak.heapWarning]] is the startup check.
+    * [[graft.tools.AdmissionPipelineSoak.heapWarning]] is the startup check.
     *
     * @param baselineFiles the count [[stageCorpusBands]] returned */
   def compactionDial(table: String, baselineFiles: Int,

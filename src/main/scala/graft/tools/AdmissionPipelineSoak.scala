@@ -22,7 +22,7 @@ import graft.streaming.{AdmissionConfig, AdmissionPipeline, AdmissionTables}
   *     embedding (absorbed — the corpus the next batches probe).
   * Quarter membership is hash-split; filler text and flip patterns
   * vary per batch (a repeated pattern would — correctly — flag later
-  * batches as dups of earlier admissions, see SemanticGateSoak).
+  * batches as dups of earlier admissions, see [[flipSign]]).
   *
   * Per batch: the FULL [[AdmissionPipeline.processBatch]] wall
   * (probe ×3 + verdict store + absorb ×3 + dial checks + ledger),
@@ -36,6 +36,34 @@ import graft.streaming.{AdmissionConfig, AdmissionPipeline, AdmissionTables}
   */
 object AdmissionPipelineSoak {
 
+  /** Heap-sizing tripwire (VERDICT r16 #6): the r16 soak's first
+    * attempt ran at -Xmx100g and showed 40–131 s batch spikes from
+    * batch ~86 on — G1 at oversized heaps grows multi-GB young
+    * generations whose evacuation pauses land exactly like contention
+    * spikes; the identical soak at the repo-standard 16 GiB was flat
+    * (max 6.3 s over 431 batches, zero organic full GCs). PERF §48.
+    * Admission-gate latency contracts assume a BOUNDED heap: warn at
+    * startup when the JVM exceeds this documented bound. */
+  private[graft] val maxRecommendedHeapBytes: Long = 32L << 30
+
+  private[graft] def heapWarning(maxHeapBytes: Long): Option[String] =
+    if (maxHeapBytes <= maxRecommendedHeapBytes) None
+    else Some(f"max heap ${maxHeapBytes / (1L << 30)} GiB exceeds the " +
+      f"${maxRecommendedHeapBytes / (1L << 30)} GiB admission-workload bound: " +
+      "G1 young-gen evacuation pauses at oversized heaps land as " +
+      "multi-10-s batch spikes (PERF §48); run admission JVMs at ~16 GiB")
+
+  /** Deterministic per-(batch, dim) sign — two avalanche rounds, so
+    * every batch's flip pattern is independent of every other's (a
+    * small-modulus pattern family would cycle and flag later batches'
+    * novel vectors as dups of earlier admissions). */
+  private def flipSign(b: Int, d: Int): Double = {
+    var h = d * 1103515245 + b * 747796405 + 0x51ed270b
+    h = (h ^ (h >>> 15)) * 0x85ebca6b
+    h = h ^ (h >>> 13)
+    if ((h & 1) == 0) 1.0 else -1.0
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty,
       "usage: AdmissionPipelineSoak <sfDir> [nBatches] [batchSize] [filesFactor]")
@@ -43,7 +71,7 @@ object AdmissionPipelineSoak {
     val nBatches = args.lift(1).map(_.toInt).getOrElse(100)
     val batchSize = args.lift(2).map(_.toLong).getOrElse(1000L)
     val filesFactor = args.lift(3).map(_.toDouble).getOrElse(2.0)
-    AdmissionSoak.heapWarning(Runtime.getRuntime.maxMemory())
+    heapWarning(Runtime.getRuntime.maxMemory())
       .foreach(w => println(s"[psoak][warn] $w"))
     val spark = graft.GraftSession.local("admission-pipeline-soak")
 
@@ -89,7 +117,7 @@ object AdmissionPipelineSoak {
     (0 until nBatches).foreach { b =>
       val slice = corpus.where(pmod(col("doc_id"), lit(m)) === lit(b % m))
         .withColumn("__q", pmod(xxhash64(col("doc_id"), lit(b)), lit(4)))
-      val flips = Array.tabulate(64)(d => SemanticGateSoak.flipSign(b, d))
+      val flips = Array.tabulate(64)(d => flipSign(b, d))
       val filler = (lo: Int, hi: Int) => concat_ws(" ",
         expr(s"transform(sequence($lo, $hi), i -> concat('nv', doc_id, 'b$b', 'x', i))"))
       def renumber(offset: Long) = (col("doc_id") + lit(offset) + lit(b) * 1000000L)

@@ -56,4 +56,31 @@ class ApiSurfaceSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
   }
+
+  test("every SPARK_GRAFT_* env dial named under src/main is an allowlisted production knob") {
+    // one line per kept dial and why it stays; an A/B switch for a
+    // settled decision does not belong here, it belongs deleted
+    val allowed = Map(
+      "SPARK_GRAFT_CPUS" -> "local thread and shuffle-partition count: deployment sizing",
+      "SPARK_GRAFT_MASTER" -> "master URL override, e.g. local-cluster for multi-executor runs",
+      "SPARK_GRAFT_SF_DIR" -> "graft.Bench input directory: the bench driver's contract",
+      "SPARK_GRAFT_QUERIES" -> "graft.Bench query subset for table-subset scale dirs",
+      "SPARK_GRAFT_SKIP_UNSTAGED" -> "graft.Bench: skip the unstaged pass at 10x/100x",
+      "SPARK_GRAFT_WARM" -> "graft.Bench page-cache warm pass, off for cold-cache runs",
+      "SPARK_GRAFT_LOADAVG_MAX" -> "graft.Bench refuses to time a contended box above this load",
+      "SPARK_GRAFT_BAND_PERSIST" -> "dedup band-stream persist: its A/B is still open")
+    val root = new java.io.File("src/main")
+    assert(root.isDirectory, s"source tree not found at ${root.getAbsolutePath}")
+    def scalaFiles(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(scalaFiles)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val named = scalaFiles(root).flatMap { f =>
+      "SPARK_GRAFT_[A-Z0-9_]+".r
+        .findAllIn(java.nio.file.Files.readString(f.toPath)).map(_ -> f.getName)
+    }
+    val unlisted = named.filterNot { case (n, _) => allowed.contains(n) }
+    assert(unlisted.isEmpty, s"env dials outside the allowlist: ${unlisted.distinct}")
+    assert(named.map(_._1).toSet == allowed.keySet,
+      "an allowlisted dial no longer in the source must leave the allowlist")
+  }
 }

@@ -147,19 +147,17 @@ class BucketSketchSpec extends SparkSpec {
   test("carried sketch path (enumeration-grain, ceiling-free) is output-invariant") {
     // r15 PERF §44: the prefix rows carry the 128 B sketch, so the
     // bound rejects at enumeration grain with no broadcast at all —
-    // candidate set and verified pairs must be identical to every
-    // other mode, staged and unstaged.
+    // candidate set and verified pairs must be identical to the
+    // broadcast path and to the unfiltered reference, staged and
+    // unstaged.
     val dir = "/root/testdata/sf0.01"
     val t = DedupOps.prefixThreshold
-    def q79mode(m: String) = {
-      sys.props("graft.q79.sketch") = m
-      try graft.operators.DedupOps.prefixJaccardPairs(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      finally sys.props.remove("graft.q79.sketch"): Unit
-    }
+    def pairSet(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    def q79() = pairSet(DedupOps.prefixJaccardPairs(spark, dir))
     val stageDir =
       java.nio.file.Files.createTempDirectory("graft_sketch_carried").toString
-    try DedupOps.withStagingRoot(Some(stageDir)) {
+    val plain = try DedupOps.withStagingRoot(Some(stageDir)) {
       val prefix = DedupOps.prefixTable(spark, dir, t)
       assert(prefix.columns.contains("sk"),
         "staged prefix table must carry the sketch column")
@@ -173,24 +171,56 @@ class BucketSketchSpec extends SparkSpec {
         "carried enumeration filter must keep the broadcast path's candidate set")
       assert(carried.size < all.size,
         s"carried filter must reject something: ${carried.size} of ${all.size}")
-      val base = q79mode("off")
-      assert(base.nonEmpty)
-      assert(q79mode("carried") == base, "carried mode pair set must match")
-      assert(q79mode("broadcast") == base, "broadcast mode pair set must match")
-      assert(q79mode("pair") == base, "pair mode pair set must match")
+      // the reference: every prefix candidate verified, no sketch bound
+      val plain = pairSet(DedupOps.verifyPrefixPairs(
+        DedupOps.candidatesFrom(prefix, t), sets, t))
+      assert(plain.nonEmpty)
+      assert(q79() == plain, "default (broadcast) path pair set must match")
+      // ceiling 0: the dispatch takes the carried branch
+      sys.props("graft.sketch.maxdocs") = "0"
+      try assert(q79() == plain, "past-ceiling (carried) path pair set must match")
+      finally sys.props.remove("graft.sketch.maxdocs"): Unit
+      plain
     } finally spark.catalog.clearCache()
     // unstaged: the persisted prefix frame carries sk too — with the
-    // ceiling forced to 0, the default `auto` dispatch takes the
-    // carried path (no broadcast anywhere in the plan)
+    // ceiling forced to 0 the dispatch takes the carried path (no
+    // broadcast anywhere in the plan)
     sys.props("graft.sketch.maxdocs") = "0"
     try DedupOps.withStagingRoot(None) {
       val docs = graft.Tables.documents(spark, dir)
-      val viaLib = DedupOps.prefixJaccardPairsOf(docs, t).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(viaLib.nonEmpty && viaLib == q79mode("off"),
+      val viaLib = pairSet(DedupOps.prefixJaccardPairsOf(docs, t))
+      assert(viaLib.nonEmpty && viaLib == plain,
         "unstaged carried path must match the unfiltered pair set")
     } finally sys.props.remove("graft.sketch.maxdocs"): Unit
     spark.catalog.clearCache()
+  }
+
+  test("broadcast prefilter plan prunes the carried sk column from the prefix scan") {
+    // PERF §44: only the carried path reads the prefix rows' `sk`; on
+    // the broadcast path the sketches come from doc_sets, so the
+    // staged prefix table's parquet scan must not read the column
+    val dir = "/root/testdata/sf0.01"
+    val t = DedupOps.prefixThreshold
+    val stageDir =
+      java.nio.file.Files.createTempDirectory("graft_sketch_prune").toString
+    try DedupOps.withStagingRoot(Some(stageDir)) {
+      val prefix = DedupOps.prefixTable(spark, dir, t)
+      val sets = DedupOps.docSetsTable(spark, dir)
+      def prefixScanColumns(df: org.apache.spark.sql.DataFrame) =
+        df.queryExecution.sparkPlan.collect {
+          case s: org.apache.spark.sql.execution.FileSourceScanExec
+              if s.relation.location.rootPaths.exists(_.toString.contains("prefix_t")) =>
+            s.requiredSchema.fieldNames.toSeq
+        }
+      val bcast = prefixScanColumns(DedupOps.candidatesSketchFiltered(prefix, sets, t))
+      assert(bcast.nonEmpty, "broadcast plan must scan the staged prefix table")
+      assert(bcast.forall(!_.contains("sk")),
+        s"broadcast plan's prefix scans must not read sk: $bcast")
+      // the carried plan is the one consumer that does read it
+      val carried = prefixScanColumns(DedupOps.candidatesSketchCarried(prefix, t))
+      assert(carried.nonEmpty && carried.forall(_.contains("sk")),
+        s"carried plan's prefix scans must read sk: $carried")
+    } finally spark.catalog.clearCache()
   }
 
   test("LSH verify prefilter (t=0.5) is output-invariant") {

@@ -308,7 +308,7 @@ class StreamingDedupSpec extends SparkSpec {
   }
 
   test("admission heap guard warns only above the documented bound (VERDICT r16 #6)") {
-    import graft.tools.AdmissionSoak.{heapWarning, maxRecommendedHeapBytes}
+    import graft.tools.AdmissionPipelineSoak.{heapWarning, maxRecommendedHeapBytes}
     assert(heapWarning(16L << 30).isEmpty, "repo-standard 16 GiB is the flat profile")
     assert(heapWarning(maxRecommendedHeapBytes).isEmpty, "bound itself is inclusive")
     val w = heapWarning(100L << 30)

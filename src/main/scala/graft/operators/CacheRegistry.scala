@@ -23,7 +23,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * [[QueryExecutionListener]] installed once per session. The frames
   * these registries track are derived intermediates referenced ≥2
   * times inside ONE consuming plan (q54's vocab freq, q65's stage
-  * minima, q24's band stream, …): after that plan's action finishes,
+  * minima, the LSH band stream, …): after that plan's action finishes,
   * the cache is dead weight that squeezes execution memory for every
   * later spill-sensitive query, and at corpus scale a MEMORY_AND_DISK
   * persist that outlives its query is a disk-filler. The LRU bound

@@ -430,19 +430,13 @@ object CorpusOps {
     def compute = spanHashed(spark, sfDir).groupBy("sh")
       .agg(countDistinct("doc_id").as("df"))
       .where(col("df") >= 2).select("sh")
-    Staging.root match {
-      case None => compute
-      case _    => Staging.readThrough(spark, sfDir, "span_cand")(compute)
-    }
+    Staging.readThrough(spark, sfDir, "span_cand")(compute)
   }
 
   private[graft] def spanDocsTable(spark: SparkSession, sfDir: String): DataFrame = {
     def compute = spanHashed(spark, sfDir)
       .join(spanCandTable(spark, sfDir), "sh").select("doc_id").distinct()
-    Staging.root match {
-      case None => compute
-      case _    => Staging.readThrough(spark, sfDir, "span_docs")(compute)
-    }
+    Staging.readThrough(spark, sfDir, "span_docs")(compute)
   }
 
   def repeatedSpans(spark: SparkSession, sfDir: String): DataFrame = {
@@ -514,27 +508,16 @@ object CorpusOps {
     val candHashes = spanCandTable(spark, sfDir)
     val hitDocs = spanDocsTable(spark, sfDir)
     // same native window-string generator as q80 (PERF §50); the
-    // posexplode position is the 0-based window index, as before
-    // `wins` is referenced TWICE — the string-exact re-check (repSpans)
-    // and the flagged join-back — and Spark does not share the subtree:
-    // the r21 plan audit counted the affected-doc posexplode + span_hash
-    // + candidate join executing once per reference (two document scans,
-    // operators (1)-(14) and (17)-(30) in the before plan). Affected
-    // docs are the rare tail by construction, so the frame is small —
-    // persist it (MEMORY_AND_DISK, LRU-registered like q56's tf frame)
-    // and both consumers read one explode pass.
-    val wins0 = docs.join(hitDocs, "doc_id")
+    // posexplode position is the 0-based window index, as before.
+    // `wins` feeds both the re-check and the join-back and runs once
+    // per reference: its persist measured a wash (PERF §68, §70).
+    val wins = docs.join(hitDocs, "doc_id")
       .select(col("doc_id"), posexplode(
         graft.functions.SpanStrings.span_strings(col("text"), spanLen)))
       .select(col("doc_id"), (col("pos") + 1).cast("long").as("i"),
         col("col").as("span"))
       .withColumn("sh", graft.functions.SpanHashes.span_hash(col("span")))
       .join(candHashes, "sh")
-    // same lifecycle as the DedupOps band persist (ADVICE r21): env
-    // kill-switch, staging-chain skip, write-completion cleanup inside
-    // staged writes, else the query-scoped LRU — one definition in
-    // Staging.scopedPersist
-    val wins = Staging.scopedPersist(wins0, spanWinsCacheRegistry)
     val repSpans = wins.groupBy("span")
       .agg(countDistinct("doc_id").as("ndocs"))
       .where(col("ndocs") >= 2).select("span")
@@ -658,16 +641,6 @@ object CorpusOps {
       .select("doc_id", "term", "tf", "df", "score_ppm", "rank")
       .orderBy("doc_id", "rank")
   }
-
-  /** Bounded LRU for [[dedupSpanRanges]]'s flagged-window persist
-    * (same discipline as the tf registry below). */
-  private[graft] val spanWinsCacheRegistry =
-    new SessionCacheRegistry(2, queryScoped = true)
-
-  /** Release this session's persisted q81 span-window frames; returns
-    * the count. */
-  def releaseSpanWinsCache(spark: SparkSession): Int =
-    spanWinsCacheRegistry.release(spark)
 
   /** Bounded LRU for [[rareTokenFilter]]'s vocab-frequency persist
     * (same discipline as the tf registry below). */
@@ -910,10 +883,7 @@ object CorpusOps {
           coalesce(col("f_q"), lit(false)).as("f_q"),
           coalesce(col("f_dc"), lit(false)).as("f_dc"))
     }
-    Staging.root match {
-      case None => compute
-      case _    => Staging.readThrough(spark, sfDir, "stage_flags")(compute)
-    }
+    Staging.readThrough(spark, sfDir, "stage_flags")(compute)
   }
 
   def curationFunnel(spark: SparkSession, sfDir: String): DataFrame = {

@@ -71,8 +71,8 @@ object DedupOps {
   // Cache-lifetime contract for the persist() FALLBACK sites (active
   // mainly when staging is off — sigTable, sharedShingles,
   // simhashPairs, and the `*Of` library entries over arbitrary frames.
-  // The STAGED-build persists — the banding suspect census, the band
-  // stream, stage_flags' q51/q48 flag frames in CorpusOps — are no
+  // The STAGED-build persists — the banding suspect census, the LSH
+  // band stream, stage_flags' q51/q48 flag frames in CorpusOps — are no
   // longer leak sites: each registers a write-completion cleanup via
   // Staging.registerComputeCleanup and is unpersisted the moment the
   // parquet promote that consumed it finishes): each remaining persist
@@ -92,7 +92,9 @@ object DedupOps {
   // an EXPLICIT lifecycle (r15, ADVICE r14): consumed by a staged
   // write → auto-unpersisted via Staging's write-completion hook;
   // taken by a library call → tracked per session and releasable with
-  // [[releaseBandCache]].
+  // [[releaseBandCache]]. simhashPairsFrom's band stream and
+  // CorpusOps.dedupSpanRanges' flagged-window frame recompute per
+  // reference instead: their persists measured a wash (PERF §68, §70).
 
   /** Run `body` with an explicit staging root (`Some(dir)`) or staging
     * disabled (`None`), scoped to the current thread — concurrent
@@ -667,9 +669,6 @@ object DedupOps {
     // gated on CHAIN membership (thread-local), not on "a stageAll is
     // in flight on this session", so a concurrent library caller's
     // returned plan keeps the persist it will want after staging ends.
-    // SPARK_GRAFT_BAND_PERSIST: A/B instrument behind PERF §35 —
-    // "off" disables the persist everywhere, "force" enables it even
-    // on stageAll chain threads.
     // Lifecycle (ADVICE r14 / r15 #7): inside a staged write the
     // persist is consumed exactly once by the parquet write, so it
     // unpersists via the write-completion hook; a pure library call
@@ -681,11 +680,16 @@ object DedupOps {
       // "guard off" means BOTH caps are off (ADVICE r21): a partial
       // guard (finite maxBucket only) still runs the bucket-cap window
       // once per self-join side — exactly the expensive subtree the
-      // persist exists for. Lifecycle (env gate, staging-chain skip,
-      // write-cleanup vs query-scoped registry): Staging.scopedPersist.
-      if (g.maxGroupAllPairs == Int.MaxValue && g.maxBucket == Int.MaxValue)
-        capped
-      else Staging.scopedPersist(capped, bandCacheRegistry)
+      // persist exists for.
+      if ((g.maxGroupAllPairs == Int.MaxValue && g.maxBucket == Int.MaxValue) ||
+          Staging.inStagingChain) capped
+      else {
+        val persisted =
+          capped.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        if (!Staging.registerComputeCleanup(() => persisted.unpersist(false)))
+          bandCacheRegistry.register(persisted): Unit
+        persisted
+      }
     }
     val cand = bands.as("x").join(bands.as("y"),
         col("x.bk") === col("y.bk") && col("x.doc_id") < col("y.doc_id"))
@@ -715,11 +719,13 @@ object DedupOps {
     }
   }
 
-  /** Band-stream persists taken by LIBRARY calls (outside any staged
-    * write), per session — the caller-session cache-lifetime contract
-    * made releasable AND bounded (VERDICT r15 #7): a long-lived session
-    * cycling many DISTINCT corpora no longer accumulates one ~16 B/row
-    * band frame each until it thinks to release — beyond 8 frames the
+  /** LSH band-stream persists taken by LIBRARY `lshCandidatesFrom`
+    * calls (a finite guard cap, outside any staged write, off stageAll
+    * chain threads), per session — the only frames this registry
+    * holds. The caller-session cache-lifetime contract made releasable
+    * AND bounded (VERDICT r15 #7): a long-lived session cycling many
+    * DISTINCT corpora no longer accumulates one ~16 B/row band frame
+    * each until it thinks to release — beyond 8 frames the
     * least-recently-registered is evicted and unpersisted
     * automatically (repeat calls over the SAME corpus share one
     * CacheManager entry and never consume a new slot). */
@@ -848,12 +854,8 @@ object DedupOps {
     * stage for no information gain. */
   private def verifiedTable(spark: SparkSession, sfDir: String,
                             p: MinHashParams): DataFrame =
-    stagingRoot match {
-      case None => computeJaccardVerify(spark, sfDir, p)
-      case _ =>
-        staged(spark, sfDir, s"verified_h${p.numHashes}_b${p.numBands}")(
-          computeJaccardVerify(spark, sfDir, p))
-    }
+    staged(spark, sfDir, s"verified_h${p.numHashes}_b${p.numBands}")(
+      computeJaccardVerify(spark, sfDir, p))
 
   def jaccardVerify(spark: SparkSession, sfDir: String, p: MinHashParams): DataFrame =
     verifiedTable(spark, sfDir, p).orderBy("doc_a", "doc_b")
@@ -889,10 +891,7 @@ object DedupOps {
       .withColumn("keeper", min(col("doc_id")).over(
         org.apache.spark.sql.expressions.Window.partitionBy(md5(col("text")))))
       .select("doc_id", "keeper")
-    stagingRoot match {
-      case None => compute
-      case _    => staged(spark, sfDir, "keeper")(compute)
-    }
+    staged(spark, sfDir, "keeper")(compute)
   }
 
   /** End-to-end dedup keep-list: drop exact duplicates (keep the
@@ -1130,13 +1129,9 @@ object DedupOps {
     * to the LSH candidate table — the df aggregate + per-doc anchor
     * window is computed once per corpus, and the census query reads a
     * bounded pair list. */
-  private[graft] def containCandTable(spark: SparkSession, sfDir: String): DataFrame = {
-    def compute = containmentCandidates(sharedShingles(spark, sfDir))
-    stagingRoot match {
-      case None => compute
-      case _    => staged(spark, sfDir, "contain_cand")(compute)
-    }
-  }
+  private[graft] def containCandTable(spark: SparkSession, sfDir: String): DataFrame =
+    staged(spark, sfDir, "contain_cand")(
+      containmentCandidates(sharedShingles(spark, sfDir)))
 
   private def containmentCandidates(bg: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1417,12 +1412,8 @@ object DedupOps {
       setsFrom(sharedShingles(spark, sfDir).select("doc_id", "s", "h"))
         .withColumn("sk",
           graft.functions.BucketSketch.bucket_count_sketch(col("hs")))
-    stagingRoot match {
-      case None => compute
-      case _ =>
-        Staging.bucketedReadThrough(spark, sfDir, "doc_sets",
-          buckets = 64, bucketCol = "doc_id")(compute)
-    }
+    Staging.bucketedReadThrough(spark, sfDir, "doc_sets",
+      buckets = 64, bucketCol = "doc_id")(compute)
   }
 
   /** Per-doc set table: sorted 32-bit-hash array (`hs` as array<int> —
@@ -1929,11 +1920,7 @@ object DedupOps {
 
   /** Simhash table, staged (or recomputed when staging is off). */
   private def simhashTable(spark: SparkSession, sfDir: String): DataFrame =
-    stagingRoot match {
-      case None => simhashOf(Tables.documents(spark, sfDir))
-      case _ => staged(spark, sfDir, "simhash")(
-        simhashOf(Tables.documents(spark, sfDir)))
-    }
+    staged(spark, sfDir, "simhash")(simhashOf(Tables.documents(spark, sfDir)))
 
   def simhash(spark: SparkSession, sfDir: String): DataFrame =
     simhashTable(spark, sfDir).orderBy("doc_id")
@@ -2012,31 +1999,8 @@ object DedupOps {
     val bands0 = bandSh.select(col("doc_id"), col("simhash"), explode(array(bandCols: _*)).as("bk"))
     // guard stage 2: per-bucket membership cap
     SkewGuard.maybeLogOverflow(bands0, "bk", g.maxBucket, g.logOverflow, "simhashPairs")
-    // The capped band stream feeds BOTH sides of the self-join, and
-    // stage reuse does not fire across a self-join's sides (PERF §30)
-    // — without materialization the whole subtree above this point
-    // (the identical-simhash guard window, the 4-way band explode, and
-    // the bucket-cap window) executes once per side: the r21 before-
-    // plan shows two full Scan→Window→Generate→WindowGroupLimit chains,
-    // operators (1)-(13) and (16)-(28), plus a third guard window for
-    // the star branch. Same persist + lifecycle as lshCandidatesFrom
-    // (registerComputeCleanup inside a staged write, else the bounded
-    // band-cache LRU), and the same gates: skip when the guard is off
-    // (plain explode is cheaper to recompute than to cache), when
-    // SPARK_GRAFT_BAND_PERSIST=off, or on a stageAll chain thread
-    // (PERF §35 — the fill job serializes a chain segment other
-    // chains' work no longer hides).
-    val bands = {
-      val capped = SkewGuard.capBuckets(bands0, "bk", "doc_id", g.maxBucket)
-      // "guard off" means BOTH caps are off (ADVICE r21): a partial
-      // guard (finite maxBucket only) still runs the bucket-cap window
-      // once per self-join side — exactly the expensive subtree the
-      // persist exists for. Lifecycle (env gate, staging-chain skip,
-      // write-cleanup vs query-scoped registry): Staging.scopedPersist.
-      if (g.maxGroupAllPairs == Int.MaxValue && g.maxBucket == Int.MaxValue)
-        capped
-      else Staging.scopedPersist(capped, bandCacheRegistry)
-    }
+    // not persisted, as `tagged`: a wash at 100×, slower on perfbench dedup (PERF §68, §70)
+    val bands = SkewGuard.capBuckets(bands0, "bk", "doc_id", g.maxBucket)
     bands.as("x").join(bands.as("y"),
         col("x.bk") === col("y.bk") && col("x.doc_id") < col("y.doc_id"))
       .select(

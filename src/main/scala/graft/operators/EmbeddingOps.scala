@@ -348,11 +348,8 @@ object EmbeddingOps {
   private def stagedAssignment(spark: SparkSession, sfDir: String,
                                cents: Seq[(Int, Array[Double])],
                                k: Int, iters: Int): DataFrame =
-    Staging.root match {
-      case None => ivfAssign(spark, sfDir, cents)
-      case _ => Staging.readThrough(spark, sfDir, s"ivf_assign_k${k}_i$iters")(
-        ivfAssign(spark, sfDir, cents))
-    }
+    Staging.readThrough(spark, sfDir, s"ivf_assign_k${k}_i$iters")(
+      ivfAssign(spark, sfDir, cents))
 
   /** Force-materialize the IVF model tables AND the quantized corpus
     * for `sfDir`; returns the staged paths (Nil when staging is off).
@@ -400,11 +397,8 @@ object EmbeddingOps {
 
   private[graft] def quantizedVectors(spark: SparkSession, sfDir: String): DataFrame = {
     val cents = stagedCentroids(spark, sfDir, numCentroids, kmeansIters)
-    Staging.root match {
-      case None => quantizedVectorsFresh(spark, sfDir, cents)
-      case _ => Staging.readThrough(spark, sfDir, "emb_q8")(
-        quantizedVectorsFresh(spark, sfDir, cents))
-    }
+    Staging.readThrough(spark, sfDir, "emb_q8")(
+      quantizedVectorsFresh(spark, sfDir, cents))
   }
 
   /** q83: bucketed ANN over the QUANTIZED corpus — q27's plan shape

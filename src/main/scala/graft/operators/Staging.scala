@@ -129,11 +129,13 @@ private[graft] object Staging {
   /** Cleanup actions registered DURING a staged write's `compute`
     * (plan construction + execution happen inside the write call on
     * this thread) — run once the write finishes, success or failure.
-    * The consumer is the band-stream persist (DedupOps): a cold
-    * query-time read-through build takes the persist, the parquet
-    * write consumes it exactly once, and without this hook the blocks
-    * stayed pinned for the session with zero future readers (ADVICE
-    * r14). A stack, not a single slot: staged computes nest (a
+    * The consumers are the persists a staged build takes for its own
+    * write: the LSH band stream and the banding suspect census
+    * (DedupOps), and stage_flags' q51/q48 flag frames (CorpusOps). A
+    * cold query-time read-through build takes the persist, the
+    * parquet write consumes it exactly once, and without this hook the
+    * blocks stayed pinned for the session with zero future readers
+    * (ADVICE r14). A stack, not a single slot: staged computes nest (a
     * verified-table build reads sig/cand tables through), and an
     * inner write must not fire an outer registration. */
   private val computeCleanups =
@@ -145,26 +147,6 @@ private[graft] object Staging {
   def registerComputeCleanup(f: () => Unit): Boolean = {
     val buf = computeCleanups.get()
     if (buf == null) false else { buf += f; true }
-  }
-
-  /** Persist `df` with the shared dedup-guard persist lifecycle (one
-    * definition for the band-stream, simhash-band and q81-wins sites —
-    * the r22 review found the dance copy-pasted three times):
-    * `SPARK_GRAFT_BAND_PERSIST=off` disables outright; on a stageAll
-    * chain thread the persist is skipped unless `force` (PERF §35 —
-    * the fill job serializes a chain segment other chains' work no
-    * longer hides); inside a staged write the frame is released by the
-    * write-completion hook; a pure library call tracks it in
-    * `registry` (query-scoped completion release + LRU backstop). */
-  def scopedPersist(df: DataFrame, registry: SessionCacheRegistry): DataFrame = {
-    val env = sys.env.get("SPARK_GRAFT_BAND_PERSIST")
-    if (env.contains("off") || (inStagingChain && !env.contains("force"))) df
-    else {
-      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      if (!registerComputeCleanup(() => p.unpersist(false)))
-        registry.register(p): Unit
-      p
-    }
   }
 
   private def withComputeCleanups[T](body: => T): T = {

@@ -9,9 +9,11 @@ import org.apache.spark.sql.SparkSession
   * open/footer cost, not data volume, is the creep mechanism. Each
   * append adds ~one file per touched bucket, so file count grows
   * linearly in batches absorbed and a production gate must compact on
-  * a FILE-COUNT trigger, not a size one. This is that dial, shared by
-  * [[StreamingDedup.compactAt]] (band postings, bucketed on `cbk`) and
-  * [[StreamingSpanGate.compactAt]] (span postings, bucketed on `csh`).
+  * a FILE-COUNT trigger, not a size one. [[CompactionDial]] is that
+  * trigger, one per posting table: [[StreamingDedup.compactionDial]]
+  * (band postings, bucketed on `cbk`), [[StreamingSpanGate.compactionDial]]
+  * (span postings, bucketed on `csh`) and
+  * [[StreamingSemanticGate.compactionDial]].
   *
   * The rewrite preserves the bucketed layout (one bucketBy/sortBy pass
   * over the table — the same shape as the original staging write, cost
@@ -131,36 +133,6 @@ private[graft] object PostingCompaction {
     spark.sql(s"ALTER TABLE $table RENAME TO $old"): Unit
     spark.sql(s"ALTER TABLE $side RENAME TO $table"): Unit
     spark.sql(s"DROP TABLE $old"): Unit
-  }
-
-  /** Rewrite `table` (bucketed on `bucketCol` into `buckets`) when its
-    * file count exceeds `filesFactor` × `baselineFiles` — the staged
-    * table's own file count, captured at stage time. Returns whether a
-    * compaction ran.
-    *
-    * GEOMETRY NOTE (PERF §48/§49): with the pinned-bucketed-scan
-    * rewrite the landing is ≤ `buckets` files — far BELOW any staged
-    * baseline (the staged write runs at the session's task width, ~32
-    * tasks × buckets files) — so a factor over the staged count gives
-    * generous headroom. The r16/r17 soaks' inflated landings (~3,200,
-    * then 2,572→13,783 files) were the DEFECTIVE rewrite's geometry
-    * (repartition elided + bucketed scan reverted, PERF §49), not an
-    * inherent floor. Long-running admission loops should still use
-    * [[CompactionDial]], which re-keys off measured landings and
-    * refuses pathological ones; this stateless form remains for
-    * one-shot callers that compact at most once. */
-  def compactAt(spark: SparkSession, table: String, baselineFiles: Int,
-                filesFactor: Double, buckets: Int,
-                bucketCol: String): Boolean = {
-    require(baselineFiles > 0, s"baselineFiles must be > 0, got $baselineFiles")
-    require(filesFactor >= 1.0, s"filesFactor must be >= 1.0, got $filesFactor")
-    recoverIfNeeded(spark, table): Unit
-    val files = fileCount(spark, table)
-    if (files <= filesFactor * baselineFiles) false
-    else {
-      rewrite(spark, table, buckets, bucketCol)
-      true
-    }
   }
 }
 

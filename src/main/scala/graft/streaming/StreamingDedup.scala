@@ -129,7 +129,7 @@ object StreamingDedup {
     * matter, stage a second table bucketed on corpus_id instead and
     * split the probe into two bucket-aligned joins. */
   /** Returns the staged table's data-file count — the BASELINE for the
-    * file-count compaction trigger ([[compactAt]]). */
+    * file-count compaction trigger ([[compactionDial]]). */
   def stageCorpusBands(spark: SparkSession, corpusSig: DataFrame,
                        table: String, buckets: Int = 64,
                        p: MinHashParams = DedupOps.defaultParams): Int = {
@@ -177,33 +177,23 @@ object StreamingDedup {
   def postingFileCount(spark: SparkSession, table: String): Int =
     PostingCompaction.fileCount(spark, table)
 
-  /** File-count-triggered compaction dial for an ABSORBING admission
-    * gate (VERDICT r15 #6, PERF §41): appends of admitted batches grow
-    * the posting table by ~one file per touched bucket per batch, and
-    * the soak measured probe latency creeping +35% over 100 batches
-    * from exactly that (files 2,048 → 5,248; bytes only +14%). Call
-    * after each absorb: when the table's file count exceeds
-    * `filesFactor` × `baselineFiles` (the count [[stageCorpusBands]]
-    * returned), the table is rewritten once — bucketed layout and name
-    * preserved — and probe latency returns to its staged baseline.
-    * Returns whether a compaction ran. */
-  def compactAt(spark: SparkSession, table: String, baselineFiles: Int,
-                filesFactor: Double = 4.0, buckets: Int = 64): Boolean =
-    PostingCompaction.compactAt(spark, table, baselineFiles, filesFactor,
-      buckets, "cbk")
-
-  /** FLOOR-KEYED compaction dial for a band posting table — the form
-    * a long-running admission loop should hold (VERDICT r16 #1,
-    * r17 #1). The stateless [[compactAt]] keys its threshold off the
-    * STAGED file count forever; the [[CompactionDial]] re-keys off
-    * the measured post-compaction landing after every firing (so the
-    * factor means what it says against the table's actual compacted
-    * self even if that ever drifts above the baseline) and REJECTS a
-    * landing above half the firing threshold — the r17 soak's
-    * ratchet, where a defective rewrite's inflated landings were
-    * adopted as successive floors. With the fixed rewrite a landing
-    * is ≤ buckets files (one writer per bucket, zero exchange). See
-    * PERF §48/§49.
+  /** File-count-triggered compaction dial for a band posting table
+    * that ABSORBS admitted batches (VERDICT r15 #6, PERF §41): appends
+    * grow the posting table by ~one file per touched bucket per batch,
+    * and the soak measured probe latency creeping +35% over 100
+    * batches from exactly that (files 2,048 → 5,248; bytes only +14%).
+    * Call `maybeCompact` after each absorb: when the file count
+    * crosses the threshold the table is rewritten once — bucketed
+    * layout and name preserved — and probe latency returns to its
+    * staged baseline. FLOOR-KEYED (VERDICT r16 #1, r17 #1): the
+    * [[CompactionDial]] starts from the staged file count and re-keys
+    * off the measured post-compaction landing after every firing (so
+    * the factor means what it says against the table's actual
+    * compacted self even if that ever drifts above the baseline) and
+    * REJECTS an ineffective landing — the r17 soak's ratchet, where a
+    * defective rewrite's inflated landings were adopted as successive
+    * floors. With the fixed rewrite a landing is ≤ buckets files (one
+    * writer per bucket, zero exchange). See PERF §48/§49.
     *
     * Heap sizing note for admission workloads (PERF §48): run the
     * admission JVM at a BOUNDED heap (the repo-standard 16 GiB stays

@@ -81,19 +81,12 @@ object StreamingSpanGate {
       .bucketBy(buckets, "csh").sortBy("csh")
       .format("parquet").saveAsTable(table)
 
-  /** File-count compaction dial for a span posting table that absorbs
-    * admitted documents' spans over time — same trigger and rewrite as
-    * [[StreamingDedup.compactAt]] (PERF §41's creep mechanism is
-    * per-file cost, shared by every bucketed posting layout). Returns
-    * whether a compaction ran. */
-  def compactAt(spark: SparkSession, table: String, baselineFiles: Int,
-                filesFactor: Double = 4.0, buckets: Int = 64): Boolean =
-    PostingCompaction.compactAt(spark, table, baselineFiles, filesFactor,
-      buckets, "csh")
-
-  /** Floor-keyed dial for a span posting table — same geometry fix as
-    * [[StreamingDedup.compactionDial]] (VERDICT r16 #1, PERF §48/§49):
-    * after every compaction the threshold re-keys off the measured
+  /** Floor-keyed compaction dial for a span posting table that absorbs
+    * admitted documents' spans over time — same trigger, rewrite and
+    * geometry fix as [[StreamingDedup.compactionDial]] (PERF §41's
+    * creep mechanism is per-file cost, shared by every bucketed
+    * posting layout; VERDICT r16 #1, PERF §48/§49): after every
+    * compaction the threshold re-keys off the measured
     * post-compaction file count instead of the staged baseline. */
   def compactionDial(table: String, baselineFiles: Int,
                      filesFactor: Double = 2.0,

@@ -67,8 +67,7 @@ class ApiSurfaceSpec extends SparkSpec {
       "SPARK_GRAFT_QUERIES" -> "graft.Bench query subset for table-subset scale dirs",
       "SPARK_GRAFT_SKIP_UNSTAGED" -> "graft.Bench: skip the unstaged pass at 10x/100x",
       "SPARK_GRAFT_WARM" -> "graft.Bench page-cache warm pass, off for cold-cache runs",
-      "SPARK_GRAFT_LOADAVG_MAX" -> "graft.Bench refuses to time a contended box above this load",
-      "SPARK_GRAFT_BAND_PERSIST" -> "dedup band-stream persist: its A/B is still open")
+      "SPARK_GRAFT_LOADAVG_MAX" -> "graft.Bench refuses to time a contended box above this load")
     val root = new java.io.File("src/main")
     assert(root.isDirectory, s"source tree not found at ${root.getAbsolutePath}")
     def scalaFiles(f: java.io.File): Seq[java.io.File] =

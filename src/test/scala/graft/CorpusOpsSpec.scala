@@ -418,45 +418,18 @@ class CorpusOpsSpec extends SparkSpec {
     }
   }
 
-  test("r21: q81 flagged-window frame is persisted once and registry-released") {
-    // The r21 optimization: `wins` (affected-doc posexplode + span hash
-    // + candidate join) is consumed by both the string-exact re-check
-    // and the flagged join-back; it persists behind the bounded LRU.
-    // Pin the plan reads the cache and the release hook frees exactly
-    // the one frame (the leak bound).
-    CorpusOps.releaseSpanWinsCache(spark): Unit // clean slate
-    spark.catalog.clearCache()
-    val df = CorpusOps.dedupSpanRanges(spark, sf)
-    assert(CorpusOps.spanWinsCacheRegistry.size(spark) == 1,
-      "the q81 wins persist must be registered before any action")
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("InMemoryTableScan"),
-      s"q81 should read the persisted flagged-window frame:\n$plan")
-    df.collect()
-    // r22: the registry is query-scoped — the consuming action's
-    // completion listener releases the frame, no explicit call needed
-    assert(awaitTrue(CorpusOps.spanWinsCacheRegistry.size(spark) == 0),
-      "the q81 wins persist must auto-release when its query completes")
-    spark.catalog.clearCache()
-  }
-
   test("r22: q81 degrades gracefully when candidate spans hit EVERY document (skew premise)") {
-    // VERDICT r21 #8: the wins persist was justified by "affected docs
-    // are the rare tail"; a boilerplate-heavy corpus voids that premise
-    // (every doc shares the repeated span, so hitDocs == corpus and the
-    // persisted frame is every window of every doc). Pin that the
-    // operator still computes the exact disjoint ranges there, and that
-    // the corpus-scale persist — MEMORY_AND_DISK, so it spills rather
-    // than OOMs — is auto-released the moment the consuming action
-    // completes (r22 lifecycle): worst-case exposure is one query's
-    // lifetime, never the session's.
+    // VERDICT r21 #8: a boilerplate-heavy corpus voids the "affected
+    // docs are the rare tail" premise (every doc shares the repeated
+    // span, so hitDocs == corpus and the flagged-window frame is every
+    // window of every doc). Pin that the operator still computes the
+    // exact disjoint ranges there.
     val dir = java.nio.file.Files.createTempDirectory("graft_q81_skew")
     val nDocs = 40L
     (1L to nDocs).map(i => (i, (1 to 9).map(t => s"tok$t").mkString(" ")))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(dir.resolve("documents.parquet").toString)
     DedupOps.withStagingRoot(None) {
-      CorpusOps.releaseSpanWinsCache(spark): Unit
       val out = CorpusOps.dedupSpanRanges(spark, dir.toString)
       val rows = out.collect()
       assert(rows.length == nDocs, "every document must be affected and reported")
@@ -466,8 +439,6 @@ class CorpusOpsSpec extends SparkSpec {
         assert((r.getLong(1), r.getLong(2), r.getLong(3)) == ((1L, 9L, 2L)),
           s"unexpected range row: $r")
       }
-      assert(awaitTrue(CorpusOps.spanWinsCacheRegistry.size(spark) == 0),
-        "the corpus-scale wins persist must release at query completion")
     }
   }
 

@@ -244,15 +244,16 @@ class StreamingDedupSpec extends SparkSpec {
       assert(before.nonEmpty, "fixture must produce matches")
       // injected threshold just below the current growth -> fires
       val factor = math.max(1.0, grown.toDouble / baseline * 0.9)
-      assert(StreamingDedup.compactAt(spark, table, baseline, factor, buckets = 8),
-        s"dial must fire at $grown files vs baseline $baseline, factor $factor")
+      val first = StreamingDedup.compactionDial(table, baseline, factor, buckets = 8)
+      assert(first.maybeCompact(spark),
+        s"dial must fire at $grown files vs threshold ${first.threshold}")
       // LANDING BOUND (VERDICT r17 #1): the pinned-bucketed-scan
       // rewrite writes one file per bucket — the r17 defect (landing
       // ∝ input file count via the elided repartition + reverted
       // bucketed scan) landed ~0.25 × input here and grew per cycle
-      val landedStateless = StreamingDedup.postingFileCount(spark, table)
-      assert(landedStateless <= 8,
-        s"rewrite must land at <= buckets files, got $landedStateless")
+      val landedFirst = StreamingDedup.postingFileCount(spark, table)
+      assert(landedFirst <= 8,
+        s"rewrite must land at <= buckets files, got $landedFirst")
       // the swap leaves no side/old tables behind
       assert(!spark.catalog.tableExists(s"${table}__compacting") &&
         !spark.catalog.tableExists(s"${table}__old"),
@@ -271,7 +272,8 @@ class StreamingDedupSpec extends SparkSpec {
           s"corpus side exchanged after compaction:\n$plan")
       } finally spark.conf.set(key, prev)
       // below threshold now -> no-op
-      assert(!StreamingDedup.compactAt(spark, table, baseline, 1000.0, buckets = 8))
+      assert(!StreamingDedup.compactionDial(table, baseline, 1000.0, buckets = 8)
+        .maybeCompact(spark))
       // FLOOR-KEYED dial end-to-end on the same table (VERDICT r16 #1):
       // regrow it, fire through maybeCompact, observe the re-key to the
       // measured landing, and the very next check is a no-op

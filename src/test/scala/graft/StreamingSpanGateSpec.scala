@@ -88,12 +88,19 @@ class StreamingSpanGateSpec extends SparkSpec {
         .as[(Long, Int, Long)].collect().toSet
       val before = verdicts()
       val factor = math.max(1.0, grown.toDouble / baseline * 0.9)
-      assert(StreamingSpanGate.compactAt(spark, table, baseline, factor, buckets = 8))
+      val dial = StreamingSpanGate.compactionDial(table, baseline, factor, buckets = 8)
+      assert(dial.maybeCompact(spark),
+        s"dial must fire at $grown files vs threshold ${dial.threshold}")
       val landed = graft.streaming.StreamingDedup.postingFileCount(spark, table)
       // landing bound (VERDICT r17 #1): one file per bucket
       assert(landed <= 8, s"rewrite must land at <= buckets files, got $landed")
       assert(verdicts() == before, "compaction must preserve gate verdicts")
-      assert(!StreamingSpanGate.compactAt(spark, table, baseline, 1000.0, buckets = 8))
+      // the swap leaves no side/old tables behind
+      assert(!spark.catalog.tableExists(s"${table}__compacting") &&
+        !spark.catalog.tableExists(s"${table}__old"),
+        "rewrite must clean up its swap tables")
+      assert(!StreamingSpanGate.compactionDial(table, baseline, 1000.0, buckets = 8)
+        .maybeCompact(spark))
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $table")
       spark.sql(s"DROP TABLE IF EXISTS ${table}__compacting")

@@ -290,7 +290,7 @@ object DedupOps {
               // the stagingSessions marker — doing that while chains
               // still run would hand the surviving chains uncapped
               // broadcast plans (the exact OOM class the cap exists
-              // for) and flip the staging-gated behaviors mid-flight.
+              // for) and admit a second stageAll on top of them.
               // So: cancel every chain's job group, then WAIT for the
               // pool to drain before the finally runs. The wait is
               // bounded: a chain blocked on a dir lock whose builder
@@ -754,14 +754,17 @@ object DedupOps {
     balancedSum((0 until p.numHashes)
       .map(i => s"CASE WHEN sa.mh$i = sb.mh$i THEN 1 ELSE 0 END"))
 
-  private def duckBandsCte(p: MinHashParams): String = {
-    val bands = (0 until p.numBands).map { b =>
+  /** One band-key SELECT per band over the `sig` CTE, UNION ALL-ed. */
+  private def duckBandUnion(p: MinHashParams): String =
+    (0 until p.numBands).map { b =>
       val mhs = (b * p.rowsPerBand until (b + 1) * p.rowsPerBand)
         .map(i => s", '_', mh$i").mkString
       s"SELECT doc_id, concat($b$mhs) AS bk FROM sig"
     }.mkString(" UNION ALL ")
+
+  private def duckBandsCte(p: MinHashParams): String = {
     val matches = matchesExpr(p)
-    s""",bands AS ($bands),
+    s""",bands AS (${duckBandUnion(p)}),
        |cand AS (
        |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
        |  FROM bands x JOIN bands y ON x.bk = y.bk AND x.doc_id < y.doc_id),
@@ -810,40 +813,6 @@ object DedupOps {
   private def jaccardCol: Column =
     round(col("i") * lit(1.0) / (col("na") + col("nb") - col("i")), 6)
 
-  /** LSH-candidate exact verify, via the same two-stage hash-bound
-    * shape as q79 ([[verifyPrefixPairs]]): the exploded
-    * candidates x shingles overlap join it replaces re-shuffled the
-    * full shingle table per verified-table build — the dominant
-    * staging chain at every measured scale. Output is unchanged
-    * (exact rounded Jaccard, zero false negatives by the collision-
-    * slack bound). */
-  /** Candidate-count floor for prefiltering the LSH verify: building
-    * the broadcast sketch table costs ~1.5 s at 100× (a pass over
-    * doc_sets), so it only pays when the candidate flood is large
-    * enough that pruning its exchange saves more (PERF §33: the 8/4
-    * preset's 2.46M est-candidates → 29k, verify 7.6 → 6.1 s; the
-    * 128/16 preset's 72k candidates would be a net loss). */
-  private[graft] val verifySketchMinCand = 500000L
-
-  private def computeJaccardVerify(spark: SparkSession, sfDir: String,
-                                   p: MinHashParams): DataFrame = {
-    val cand = lshCandidates(spark, sfDir, p).select("doc_a", "doc_b")
-    val sets = docSetsTable(spark, sfDir)
-    // The density gate is STAGED-path only: there the candidate table
-    // is materialized parquet so the count is metadata-cheap, and the
-    // verified-table build is where the flood hurts. The unstaged
-    // path stays fully lazy (an eager count would re-run or pin the
-    // whole banding build) and skips the prefilter — per-call sketch
-    // builds don't amortize for one-shot library use anyway.
-    val pruned = stagingRoot match {
-      case Some(_) if cand.count() >= verifySketchMinCand &&
-          Tables.documents(spark, sfDir).count() <= sketchDocCeiling(spark) =>
-        sketchPrefilterBare(cand, sets, jaccardThreshold)
-      case _ => cand
-    }
-    verifyPrefixPairs(pruned, sets, jaccardThreshold)
-  }
-
   /** Verified near-dup pair table, staged like the candidate table:
     * the exact-Jaccard verify join is the last expensive dedup stage,
     * and three downstream consumers (the verify query itself, the
@@ -851,11 +820,18 @@ object DedupOps {
     * the verified pair list is THE dedup artifact a pipeline
     * materializes once and serves everywhere; recomputing the
     * candidates x shingles join per consumer triples the heaviest
-    * stage for no information gain. */
+    * stage for no information gain.
+    *
+    * The verify is the same two-stage hash-bound shape as q79
+    * ([[verifyPrefixPairs]]), whose in-SMJ sketch bound is the only
+    * prefilter: no candidate count, no broadcast (PERF §71). Output is
+    * exact rounded Jaccard, zero false negatives by the collision-
+    * slack bound. */
   private def verifiedTable(spark: SparkSession, sfDir: String,
                             p: MinHashParams): DataFrame =
     staged(spark, sfDir, s"verified_h${p.numHashes}_b${p.numBands}")(
-      computeJaccardVerify(spark, sfDir, p))
+      verifyPrefixPairs(lshCandidates(spark, sfDir, p).select("doc_a", "doc_b"),
+        docSetsTable(spark, sfDir), jaccardThreshold))
 
   def jaccardVerify(spark: SparkSession, sfDir: String, p: MinHashParams): DataFrame =
     verifiedTable(spark, sfDir, p).orderBy("doc_a", "doc_b")
@@ -1392,22 +1368,23 @@ object DedupOps {
 
   /** Doc-level shingle-set table (`doc_sets`): one row per doc with
     * the sorted distinct-shingle array + its size. The verify stage
-    * joins it twice per pass (doc_a / doc_b side) from THREE consumers
-    * (q79 prefix pairs, q60 containment, q61 incremental admission);
-    * staged BUCKETED ON doc_id (r11, PERF.md §13) so every verify
-    * attach is a sort-merge join that reads the set arrays
-    * bucket-aligned in place — only the candidate-pair side shuffles.
-    * Without the bucketing the arrays themselves were the shuffle
-    * (~25 GB across the verify consumers at 100×). */
+    * joins it twice per pass (doc_a / doc_b side) from FOUR consumers
+    * (the LSH verify of q22/q44, q79 prefix pairs, q60 containment,
+    * q61 incremental admission); staged BUCKETED ON doc_id (r11,
+    * PERF.md §13) so every verify attach is a sort-merge join that
+    * reads the set arrays bucket-aligned in place — only the
+    * candidate-pair side shuffles. Without the bucketing the arrays
+    * themselves were the shuffle (~25 GB across the verify consumers
+    * at 100×). */
   private[graft] def docSetsTable(spark: SparkSession, sfDir: String): DataFrame = {
     // The STAGED table also carries the 64-bucket count sketch (`sk`,
     // 128 B/doc — computed once at staging time, column-pruned away
-    // from consumers that don't ask for it): this is the bucketed
-    // sketch path past the broadcast ceiling (VERDICT r14 #2). The
+    // from consumers that don't ask for it; VERDICT r14 #2). The
     // verify's bucket-aligned SMJ reads it in place alongside the
     // hash arrays, so the sketch bound prunes pairs pre-intersect
-    // with ZERO extra exchange at ANY corpus size — where the
-    // broadcast prefilter has the explicit sketchMaxDocs cliff.
+    // with ZERO extra exchange at ANY corpus size; it is the LSH
+    // verify's only sketch bound, and q79's broadcast prefilter and
+    // staged prefix table read the same column.
     val compute =
       setsFrom(sharedShingles(spark, sfDir).select("doc_id", "s", "h"))
         .withColumn("sk",
@@ -1469,19 +1446,15 @@ object DedupOps {
     * bucketing only for corpora whose shingle buckets mix widely
     * different lengths AND whose enumeration dominates the profile. */
   private[graft] def candidatesFrom(prefix: DataFrame, t: Double): DataFrame =
-    candidatesWithSizesFrom(prefix, t).select("doc_a", "doc_b")
-
-  /** [[candidatesFrom]] variant that also carries the two docs' set
-    * sizes (aligned to the doc_a/doc_b ordering) — the sketch
-    * prefilter's bound needs them without touching the set table. */
-  private[graft] def candidatesWithSizesFrom(prefix: DataFrame,
-                                             t: Double): DataFrame =
     aggregateEnumerated(enumeratedCollisions(prefix, t), t)
 
   /** The candidate stage's ENUMERATION alone: one row per h60 prefix
     * collision that survives the rank and length-ratio bounds — the
     * 392M→143M funnel of PERF §27 — flattened to named columns so
-    * row-grain filters can run before [[aggregateEnumerated]]. */
+    * row-grain filters can run before [[aggregateEnumerated]]. Both
+    * sides' carried sketches ride along as `xsk`/`ysk`; consumers that
+    * never reference them get them pruned from the prefix scan
+    * (`BucketSketchSpec` pins this). */
   private def enumeratedCollisions(prefix: DataFrame, t: Double): DataFrame = {
     val tL = loosened(t)
     val larger = col("x.n") > col("y.n") ||
@@ -1493,11 +1466,13 @@ object DedupOps {
       .where(col("x.n") <= col("y.n") / tL)
       .select(col("x.doc_id").as("xa"), col("y.doc_id").as("ya"),
         col("x.n").as("nx"), col("y.n").as("ny"),
-        col("x.rk").as("xrk"), col("y.rk").as("yrk"))
+        col("x.rk").as("xrk"), col("y.rk").as("yrk"),
+        col("x.sk").as("xsk"), col("y.sk").as("ysk"))
   }
 
-  /** Collision rows → candidate pairs: per-pair collision count plus
-    * the aggregated position bound (PPJoin's suffix bound). */
+  /** Collision rows → candidate pairs (doc_a < doc_b): per-pair
+    * collision count plus the aggregated position bound (PPJoin's
+    * suffix bound). */
   private def aggregateEnumerated(e: DataFrame, t: Double): DataFrame = {
     val tL = loosened(t)
     e.groupBy("xa", "ya", "nx", "ny")
@@ -1506,27 +1481,53 @@ object DedupOps {
       .where(col("k") + least(col("nx") - col("ra"), col("ny") - col("rb")) >=
              lit(tL / (1 + tL)) * (col("nx") + col("ny")))
       .select(least(col("xa"), col("ya")).as("doc_a"),
-              greatest(col("xa"), col("ya")).as("doc_b"),
-              when(col("xa") <= col("ya"), col("nx")).otherwise(col("ny")).as("na"),
-              when(col("xa") <= col("ya"), col("ny")).otherwise(col("nx")).as("nb"))
+              greatest(col("xa"), col("ya")).as("doc_b"))
   }
 
-  /** [[candidatesWithSizesFrom]] with the sketch bound applied to the
+  /** Keeps the rows whose sketch bound can still reach `t` — the ONE
+    * bound behind the broadcast, carried and in-SMJ rejections
+    * (PERF §29/§31/§44): Σ min(bucket counts) of the two sides'
+    * sketches (`skA`, `skB`) provably upper-bounds the true
+    * shared-shingle count (see BucketSketch scaladoc), so filtering
+    * ub/(na+nb-ub) < loosened(t) can only drop pairs the exact verify
+    * would drop. Docs with ≥ 65,535 shingles (count saturation)
+    * bypass the filter entirely. */
+  private def withinSketchBound(rows: DataFrame, skA: String, skB: String,
+      na: String, nb: String, t: Double): DataFrame =
+    rows
+      .withColumn("__ub",
+        graft.functions.BucketSketch.bucket_min_sum(col(skA), col(skB)))
+      .where(col(na) >= 65535 || col(nb) >= 65535 ||
+             col("__ub") * lit(1.0) / (col(na) + col(nb) - col("__ub")) >= loosened(t))
+      .drop("__ub")
+
+  /** A set table's per-doc sketch: the staged doc_sets `sk` column when
+    * present (written once at staging time, a 128 B/doc column scan),
+    * else computed from the `hs` array in the scan stage. */
+  private def setSketch(sets: DataFrame): Column =
+    if (sets.columns.contains("sk")) col("sk")
+    else graft.functions.BucketSketch.bucket_count_sketch(col("hs"))
+
+  /** [[candidatesFrom]] with the sketch bound applied to the
     * ENUMERATION rows, before the pair aggregate (PERF §31). The
     * bound depends only on the two doc identities, so every collision
     * row of a pair shares the verdict — dropping them pre-aggregate
     * drops whole pairs, never partial rows, and only pairs the exact
-    * verify would reject (same bound as [[sketchPrefilter]]). The two
-    * sketch attaches are broadcast hash joins that stay inside the
-    * enumeration's codegen stage: the pair aggregate's hash table
-    * then holds only sketch-surviving pairs (~25.6k at 100×) instead
-    * of 58.7M. */
+    * verify would reject. The two sketch attaches are broadcast hash
+    * joins from the set table (the prefix rows' own `sk` is dropped
+    * and pruned from the scan), so they stay inside the enumeration's
+    * codegen stage: the pair aggregate's hash table then holds only
+    * sketch-surviving pairs (~25.6k at 100×) instead of 58.7M. */
   private[graft] def candidatesSketchFiltered(prefix: DataFrame,
-      sets: DataFrame, t: Double): DataFrame =
-    aggregateEnumerated(
-      sketchBoundFilter(enumeratedCollisions(prefix, t), sets, t,
-        "xa", "ya", Some(("nx", "ny"))),
-      t).select("doc_a", "doc_b")
+      sets: DataFrame, t: Double): DataFrame = {
+    val sk = sets.select(col("doc_id"), setSketch(sets).as("__sk"))
+    def side(key: String, skOut: String) =
+      broadcast(sk.select(col("doc_id").as(key), col("__sk").as(skOut)))
+    val e = enumeratedCollisions(prefix, t).drop("xsk", "ysk")
+      .join(side("xa", "xsk"), "xa")
+      .join(side("ya", "ysk"), "ya")
+    aggregateEnumerated(withinSketchBound(e, "xsk", "ysk", "nx", "ny", t), t)
+  }
 
   /** Enumeration-grain sketch rejection with NO broadcast and NO
     * corpus-size ceiling (r15, PERF §44): the 128 B sketches ride the
@@ -1542,33 +1543,9 @@ object DedupOps {
     * in corpus docs, vs the broadcast path's O(corpus) driver-resident
     * relation. */
   private[graft] def candidatesSketchCarried(prefix: DataFrame,
-                                             t: Double): DataFrame = {
-    val tL = loosened(t)
-    val e = enumeratedCollisionsSk(prefix, t)
-      .withColumn("__ub",
-        graft.functions.BucketSketch.bucket_min_sum(col("xsk"), col("ysk")))
-      .where(col("nx") >= 65535 || col("ny") >= 65535 ||
-             col("__ub") * lit(1.0) / (col("nx") + col("ny") - col("__ub")) >= tL)
-      .drop("xsk", "ysk", "__ub")
-    aggregateEnumerated(e, t).select("doc_a", "doc_b")
-  }
-
-  /** [[enumeratedCollisions]] keeping both sides' carried sketch
-    * columns (prefix frames without `sk` cannot take this path). */
-  private def enumeratedCollisionsSk(prefix: DataFrame, t: Double): DataFrame = {
-    val tL = loosened(t)
-    val larger = col("x.n") > col("y.n") ||
-      (col("x.n") === col("y.n") && col("x.doc_id") > col("y.doc_id"))
-    prefix.as("x").join(prefix.as("y"),
-        col("x.h60") === col("y.h60") && larger &&
-        col("y.rk") <=
-          col("y.n") - ceil(lit(2 * tL / (1 + tL)) * col("y.n")) + 1)
-      .where(col("x.n") <= col("y.n") / tL)
-      .select(col("x.doc_id").as("xa"), col("y.doc_id").as("ya"),
-        col("x.n").as("nx"), col("y.n").as("ny"),
-        col("x.rk").as("xrk"), col("y.rk").as("yrk"),
-        col("x.sk").as("xsk"), col("y.sk").as("ysk"))
-  }
+                                             t: Double): DataFrame =
+    aggregateEnumerated(
+      withinSketchBound(enumeratedCollisions(prefix, t), "xsk", "ysk", "nx", "ny", t), t)
 
   /** Candidate stage dispatch shared by [[prefixJaccardPairs]] and
     * [[prefixJaccardPairsOf]]: the broadcast prefilter while the
@@ -1580,7 +1557,7 @@ object DedupOps {
     * behind the natural past-ceiling run (VERDICT r15 #4). */
   private def candidatesDispatch(prefix: DataFrame, sets: DataFrame,
       t: Double, nDocs: Long): DataFrame = {
-    val ceiling = sketchDocCeiling(prefix.sparkSession)
+    val ceiling = sketchDocCeiling
     val carried = nDocs > ceiling
     System.err.println(s"[graft] q79 sketch auto: nDocs=$nDocs ceiling=$ceiling -> " +
       (if (carried) "carried (past ceiling, no broadcast)" else "broadcast prefilter"))
@@ -1588,98 +1565,52 @@ object DedupOps {
     else candidatesSketchFiltered(prefix, sets, t)
   }
 
-  /** Corpus-size ceiling for the broadcast sketch prefilter: 2M docs
+  /** Corpus-size ceiling for q79's broadcast sketch prefilter: 2M docs
     * × (128 B sketch + row overhead) ≈ 400 MB in-heap per broadcast
     * relation — inside a 16 GiB (and the validated 8 GiB) driver.
-    * Beyond it the BROADCAST prefilter is skipped (exactness never
-    * depends on it) and the bound still applies in the verify's
-    * bucket-aligned SMJ via the doc_sets `sk` column
-    * ([[verifyHashPass]]) — the bucketed path has no ceiling, so past
-    * 2M docs q79/verify degrade gracefully to sketch-in-SMJ instead
-    * of falling off a cliff to raw intersects.
+    * Beyond it [[candidatesDispatch]] takes the carried
+    * enumeration-grain path instead, which has no ceiling, and the
+    * verify's in-SMJ bound ([[verifyHashPass]]) applies at any size.
+    * The ceiling is the same inside and outside a `stageAll` window:
+    * no staging chain builds a broadcast sketch relation.
     *
     * The `graft.sketch.maxdocs` system property overrides it, so
     * in-JVM specs reach the past-ceiling path on a small corpus (`0`
     * takes it at any size). */
   private[graft] val sketchMaxDocs = 2000000L
-  private[graft] def sketchMaxDocsEff: Long =
+  private[graft] def sketchDocCeiling: Long =
     sys.props.get("graft.sketch.maxdocs")
       .flatMap(_.toLongOption).getOrElse(sketchMaxDocs)
 
-  /** The prefilter ceiling while a `stageAll` window is open on the
-    * session: the sketch attaches are EXPLICIT broadcast hints (the
-    * relation is deliberately above the session threshold), so the
-    * staging window's 1 MiB cap does not govern them — and during
-    * staging up to two verify chains build prefilters concurrently
-    * with every other chain's sort/agg buffers alive. A quarter of
-    * the query-time ceiling keeps the staging-window worst case at
-    * the scale the 8 GiB artifact validated (500k docs); past it the
-    * chains fall back to the plain verify, which staging amortizes
-    * anyway. */
-  private[graft] def sketchDocCeiling(spark: SparkSession): Long =
-    if (stagingSessions.contains(spark)) sketchMaxDocsEff / 4 else sketchMaxDocsEff
-
-  /** The ONE sketch-bound filter behind all three prefilter entry
-    * points (PERF §29/§31/§33): attach both pair sides' broadcast
-    * sketches by (`aCol`, `bCol`), compute the bucket-min-sum upper
-    * bound, and keep rows whose bound can still reach the threshold.
-    * `sizeCols` names the per-side set-size columns when the input
-    * rows already carry them; when absent the sizes ride the same
-    * broadcast rows as the sketches. All non-temp input columns pass
-    * through untouched.
+  /** Stage 1 of the verify alone (the hash upper bound);
+    * [[verifyPrefixPairs]] runs the exact confirm over its survivors.
     *
-    * Exact recall: Σ min(bucket counts) provably upper-bounds the
-    * true shared-shingle count (see BucketSketch scaladoc), so
-    * filtering ub/(na+nb-ub) < loosened(t) can only drop pairs the
-    * exact verify would drop. Docs with ≥ 65,535 shingles (count
-    * saturation) bypass the filter entirely. */
-  private def sketchBoundFilter(pairs: DataFrame, sets: DataFrame, t: Double,
-      aCol: String, bCol: String,
-      sizeCols: Option[(String, String)]): DataFrame = {
+    * The bucketed sketch bound runs INSIDE the verify SMJ first
+    * (VERDICT r14 #2): the per-doc sketches ride the same
+    * bucket-aligned attach as the hash arrays ([[setSketch]] — never
+    * an extra exchange), and the 64-min-ops bound filter sits BELOW
+    * the `iu` projection in the plan, so a sketch-rejected pair never
+    * pays the O(na+nb) sorted-intersect. It is the only sketch bound
+    * the LSH verify (q22/q44) applies, and the one q79 keeps at any
+    * corpus size: the flood pays 128 B compares instead of array
+    * intersects. */
+  private[graft] def verifyHashPass(cand: DataFrame, sets: DataFrame,
+                                    t: Double): DataFrame = {
+    val skc = setSketch(sets)
     val tL = loosened(t)
-    // reuse the staged doc_sets sketch column when present (written
-    // once at staging time) instead of re-hashing every hs array —
-    // the ~1.5 s broadcast-table build at 100× becomes a 128 B/doc
-    // column scan
-    val skSrc =
-      if (sets.columns.contains("sk")) col("sk")
-      else graft.functions.BucketSketch.bucket_count_sketch(col("hs"))
-    val skCols = col("doc_id") +: skSrc.as("__sk") +:
-      (if (sizeCols.isEmpty) Seq(col("n")) else Nil)
-    val sk = sets.select(skCols: _*)
-    def side(keyOut: String, skOut: String, nOut: Option[String]) =
-      broadcast(sk.select(col("doc_id").as(keyOut) +: col("__sk").as(skOut) +:
-        nOut.map(col("n").as(_)).toSeq: _*))
-    val (na, nb) = sizeCols.getOrElse(("__na", "__nb"))
-    val attached = pairs
-      .join(side(aCol, "__ska", if (sizeCols.isEmpty) Some("__na") else None), aCol)
-      .join(side(bCol, "__skb", if (sizeCols.isEmpty) Some("__nb") else None), bCol)
-      .withColumn("__ub",
-        graft.functions.BucketSketch.bucket_min_sum(col("__ska"), col("__skb")))
-      .where(col(na) >= 65535 || col(nb) >= 65535 ||
-             col("__ub") * lit(1.0) / (col(na) + col(nb) - col("__ub")) >= tL)
-    attached.drop(
-      Seq("__ska", "__skb", "__ub") ++ (if (sizeCols.isEmpty) Seq(na, nb) else Nil): _*)
-  }
-
-  /** Verify PREFILTER over aggregated candidate pairs carrying their
-    * set sizes (PERF §29): zero-exchange bound rejection before the
-    * SMJ verify. */
-  private[graft] def sketchPrefilter(candWithSizes: DataFrame, sets: DataFrame,
-                                     t: Double): DataFrame =
-    sketchBoundFilter(candWithSizes, sets, t, "doc_a", "doc_b",
-      Some(("na", "nb"))).select("doc_a", "doc_b")
-
-  /** [[sketchPrefilter]] for candidate frames that carry only
-    * (doc_a, doc_b): the set sizes ride the same broadcast rows as
-    * the sketches, so the filter still runs in the candidate-emitting
-    * stage with zero exchange. Used by the LSH verify (PERF §33) —
-    * its 8/4 preset floods ~2.5M est-candidates at 100× of which ~1%
-    * survive the exact verify. */
-  private[graft] def sketchPrefilterBare(cand: DataFrame, sets: DataFrame,
-                                         t: Double): DataFrame =
-    sketchBoundFilter(cand, sets, t, "doc_a", "doc_b", None)
+    val attached = cand
+      .join(sets.select(col("doc_id").as("doc_a"), col("hs").as("ha"),
+        col("n").as("na"), col("nh").as("nha"), skc.as("__ska")), "doc_a")
+      .join(sets.select(col("doc_id").as("doc_b"), col("hs").as("hb"),
+        col("n").as("nb"), col("nh").as("nhb"), skc.as("__skb")), "doc_b")
+    withinSketchBound(attached, "__ska", "__skb", "na", "nb", t)
+      .withColumn("iu",
+        graft.functions.SortedIntersectCount
+          .sorted_intersect_count(col("ha"), col("hb")) +
+        least(col("na") - col("nha"), col("nb") - col("nhb")))
+      .where(col("iu") * lit(1.0) / (col("na") + col("nb") - col("iu")) >= tL)
       .select("doc_a", "doc_b")
+  }
 
   /** Exact verify by per-doc shingle SETS (docs are rows, not
     * explosions): joins against the doc-level set table beat
@@ -1688,15 +1619,15 @@ object DedupOps {
     * the exploded overlapStats join.
     *
     * Two stages, both with zero false negatives:
-    *   1. HASH upper bound — distinct-intersect the sorted 32-bit
-    *      hash arrays (int compares, no string hashing). The hash is
-    *      a function of the shingle, so every shared shingle lands in
-    *      the hash intersection; the only way i_hash undercounts
-    *      i_true is a WITHIN-DOC collision, and each such collision
-    *      also shrinks the doc's distinct-hash count, so
-    *      i_true <= i_hash + min(na - nha, nb - nhb) — a provable
-    *      upper bound for ANY hash function (slack exactly 0 on a
-    *      collision-free corpus; `VerifyBoundSpec` pins the bound
+    *   1. HASH upper bound ([[verifyHashPass]]) — distinct-intersect
+    *      the sorted 32-bit hash arrays (int compares, no string
+    *      hashing). The hash is a function of the shingle, so every
+    *      shared shingle lands in the hash intersection; the only way
+    *      i_hash undercounts i_true is a WITHIN-DOC collision, and
+    *      each such collision also shrinks the doc's distinct-hash
+    *      count, so i_true <= i_hash + min(na - nha, nb - nhb) — a
+    *      provable upper bound for ANY hash function (slack exactly 0
+    *      on a collision-free corpus; `VerifyBoundSpec` pins the bound
     *      under forced within-doc, cross-doc, and constant-hash
     *      collisions against brute force).
     *      Filtering that bound against t (loosened by the rounding
@@ -1708,42 +1639,6 @@ object DedupOps {
     *      plus the rare hash-bound overshoot) touch the string
     *      arrays; the final compare is the ORACLE's compare —
     *      round(j, 6) >= t. */
-  /** Stage 1 of the verify alone (the hash upper bound);
-    * [[verifyPrefixPairs]] runs the exact confirm over its survivors. */
-  private[graft] def verifyHashPass(cand: DataFrame, sets: DataFrame,
-                                    t: Double): DataFrame = {
-    // Bucketed sketch bound INSIDE the verify SMJ (VERDICT r14 #2):
-    // the per-doc sketches ride the same bucket-aligned attach as the
-    // hash arrays (`sk` is a doc_sets column when staged, computed in
-    // the scan stage otherwise — never an extra exchange), and the
-    // 64-min-ops bound filter sits BELOW the `iu` projection in the
-    // plan, so a sketch-rejected pair never pays the O(na+nb)
-    // sorted-intersect. Exact recall by the same Σ min(bucket counts)
-    // ≥ shared-shingles argument as [[sketchBoundFilter]], with the
-    // same ≥65535 saturation bypass. This is what survives past the
-    // broadcast prefilter's sketchMaxDocs ceiling: at ANY corpus size
-    // the flood pays 128 B compares instead of array intersects.
-    val skc =
-      if (sets.columns.contains("sk")) col("sk")
-      else graft.functions.BucketSketch.bucket_count_sketch(col("hs"))
-    val tL = loosened(t)
-    cand
-      .join(sets.select(col("doc_id").as("doc_a"), col("hs").as("ha"),
-        col("n").as("na"), col("nh").as("nha"), skc.as("__ska")), "doc_a")
-      .join(sets.select(col("doc_id").as("doc_b"), col("hs").as("hb"),
-        col("n").as("nb"), col("nh").as("nhb"), skc.as("__skb")), "doc_b")
-      .withColumn("__ub",
-        graft.functions.BucketSketch.bucket_min_sum(col("__ska"), col("__skb")))
-      .where(col("na") >= 65535 || col("nb") >= 65535 ||
-             col("__ub") * lit(1.0) / (col("na") + col("nb") - col("__ub")) >= tL)
-      .withColumn("iu",
-        graft.functions.SortedIntersectCount
-          .sorted_intersect_count(col("ha"), col("hb")) +
-        least(col("na") - col("nha"), col("nb") - col("nhb")))
-      .where(col("iu") * lit(1.0) / (col("na") + col("nb") - col("iu")) >= tL)
-      .select("doc_a", "doc_b")
-  }
-
   private[graft] def verifyPrefixPairs(cand: DataFrame, sets: DataFrame,
                                 t: Double): DataFrame = {
     val hashPass = verifyHashPass(cand, sets, t)
@@ -1836,13 +1731,8 @@ object DedupOps {
 
   val incrementalDedupSql: String = {
     val p = defaultParams
-    val bands = (0 until p.numBands).map { b =>
-      val mhs = (b * p.rowsPerBand until (b + 1) * p.rowsPerBand)
-        .map(i => s", '_', mh$i").mkString
-      s"SELECT doc_id, concat($b$mhs) AS bk FROM sig"
-    }.mkString(" UNION ALL ")
     s"""${duckSigCte(p)},
-       |bands AS ($bands),
+       |bands AS (${duckBandUnion(p)}),
        |cand AS (
        |  SELECT DISTINCT x.doc_id AS new_id, y.doc_id AS old_id
        |  FROM bands x JOIN bands y ON x.bk = y.bk
@@ -1888,12 +1778,11 @@ object DedupOps {
   // ------------------------------------------------------------- simhash
 
   /** SimHash: 60-bit signature; bit j is the sign of the sum over
-    * shingles of ±1 depending on bit j of the shingle hash. Computed
-    * as 60 conditional-sum aggregates — no row explosion, single
-    * shuffle on doc_id. */
-  /** Aggregate-form simhash (explode → 60 ±1 bit-sum aggs) — retained
-    * as the bit-parity REFERENCE for [[simhashOf]] (the production
-    * path) and its spec; not on any hot path. */
+    * shingles of ±1 depending on bit j of the shingle hash. This is
+    * the aggregate form (explode → 60 ±1 bit-sum aggregates, one
+    * shuffle on doc_id), retained as the bit-parity REFERENCE for
+    * [[simhashOf]] (the production path) and its spec; no production
+    * path calls it. */
   private[graft] def simhashFrom(sh: DataFrame): DataFrame = {
     val bitSums = (0 until 60).map { j =>
       // branch-free ±1: (bit*2 - 1); ~25% faster than a CASE per bit
@@ -1925,20 +1814,26 @@ object DedupOps {
   def simhash(spark: SparkSession, sfDir: String): DataFrame =
     simhashTable(spark, sfDir).orderBy("doc_id")
 
-  val simhashSql: String = {
+  /** Oracle simhash, shared by [[simhashSql]] and [[simhashPairsSql]]:
+    * the `bg`/`hh`/`bits` CTEs (60 ±1 bit-sums per doc over the 60-bit
+    * shingle hash) and the signature expression over `bits`. */
+  private val duckSimhashBits: String = {
     val bitSums = (0 until 60).map { j =>
       s"sum(CASE WHEN (h >> $j) & 1 = 1 THEN 1 ELSE -1 END) AS s$j"
     }.mkString(", ")
-    val simExpr = (0 until 60)
-      .map(j => s"(CASE WHEN s$j > 0 THEN CAST(${1L << j} AS BIGINT) ELSE 0 END)")
-      .mkString(" + ")
     s"""WITH bg AS (
        |  SELECT doc_id, unnest($duckBigrams) AS s FROM documents),
        |hh AS (
        |  SELECT doc_id, ('0x' || substr(md5(s), 1, 15))::BIGINT AS h FROM bg),
-       |bits AS (SELECT doc_id, $bitSums FROM hh GROUP BY doc_id)
-       |SELECT doc_id, $simExpr AS simhash FROM bits ORDER BY doc_id""".stripMargin
+       |bits AS (SELECT doc_id, $bitSums FROM hh GROUP BY doc_id)""".stripMargin
   }
+  private val duckSimExpr: String = (0 until 60)
+    .map(j => s"(CASE WHEN s$j > 0 THEN CAST(${1L << j} AS BIGINT) ELSE 0 END)")
+    .mkString(" + ")
+
+  val simhashSql: String =
+    s"""$duckSimhashBits
+       |SELECT doc_id, $duckSimExpr AS simhash FROM bits ORDER BY doc_id""".stripMargin
 
   /** SimHash near-dup pairs: 4 bands of 15 bits block the join;
     * pairs in the same band bucket are checked by Hamming distance.
@@ -1960,8 +1855,7 @@ object DedupOps {
     * explicit skew guard; no read-through staging. */
   def simhashPairsOf(docs: DataFrame, g: BandGuard = BandGuard.default): DataFrame =
     simhashPairsFrom(
-      simhashFrom(shinglesOf(docs))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+      simhashOf(docs).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
       g)
 
   private def simhashPairsFrom(sh: DataFrame, g: BandGuard): DataFrame = {
@@ -2013,21 +1907,11 @@ object DedupOps {
   }
 
   val simhashPairsSql: String = {
-    val bitSums = (0 until 60).map { j =>
-      s"sum(CASE WHEN (h >> $j) & 1 = 1 THEN 1 ELSE -1 END) AS s$j"
-    }.mkString(", ")
-    val simExpr = (0 until 60)
-      .map(j => s"(CASE WHEN s$j > 0 THEN CAST(${1L << j} AS BIGINT) ELSE 0 END)")
-      .mkString(" + ")
     val bands = (0 until 4).map { b =>
       s"SELECT doc_id, simhash, concat($b, '_', (simhash >> ${15 * b}) & 32767) AS bk FROM sh"
     }.mkString(" UNION ALL ")
-    s"""WITH bg AS (
-       |  SELECT doc_id, unnest($duckBigrams) AS s FROM documents),
-       |hh AS (
-       |  SELECT doc_id, ('0x' || substr(md5(s), 1, 15))::BIGINT AS h FROM bg),
-       |bits AS (SELECT doc_id, $bitSums FROM hh GROUP BY doc_id),
-       |sh AS (SELECT doc_id, $simExpr AS simhash FROM bits),
+    s"""$duckSimhashBits,
+       |sh AS (SELECT doc_id, $duckSimExpr AS simhash FROM bits),
        |bands AS ($bands)
        |SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b,
        |  bit_count(xor(x.simhash, y.simhash)) AS hamming

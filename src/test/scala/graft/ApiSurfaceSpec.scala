@@ -10,6 +10,16 @@ import graft.streaming.StreamOps
 class ApiSurfaceSpec extends SparkSpec {
   import spark.implicits._
 
+  /** (file name, text) of every Scala source under src/main. */
+  private def mainSources: Seq[(String, String)] = {
+    val root = new java.io.File("src/main")
+    assert(root.isDirectory, s"source tree not found at ${root.getAbsolutePath}")
+    def scalaFiles(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(scalaFiles)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    scalaFiles(root).map(f => f.getName -> java.nio.file.Files.readString(f.toPath))
+  }
+
   test("tumbleSql generates runnable SQL with window start/end") {
     Tables.events(spark, sf).createOrReplaceTempView("events_v")
     val sql = StreamOps.tumbleSql("events_v", "ts", "1 hour",
@@ -68,18 +78,30 @@ class ApiSurfaceSpec extends SparkSpec {
       "SPARK_GRAFT_SKIP_UNSTAGED" -> "graft.Bench: skip the unstaged pass at 10x/100x",
       "SPARK_GRAFT_WARM" -> "graft.Bench page-cache warm pass, off for cold-cache runs",
       "SPARK_GRAFT_LOADAVG_MAX" -> "graft.Bench refuses to time a contended box above this load")
-    val root = new java.io.File("src/main")
-    assert(root.isDirectory, s"source tree not found at ${root.getAbsolutePath}")
-    def scalaFiles(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(scalaFiles)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    val named = scalaFiles(root).flatMap { f =>
-      "SPARK_GRAFT_[A-Z0-9_]+".r
-        .findAllIn(java.nio.file.Files.readString(f.toPath)).map(_ -> f.getName)
+    val named = mainSources.flatMap { case (file, text) =>
+      "SPARK_GRAFT_[A-Z0-9_]+".r.findAllIn(text).map(_ -> file)
     }
     val unlisted = named.filterNot { case (n, _) => allowed.contains(n) }
     assert(unlisted.isEmpty, s"env dials outside the allowlist: ${unlisted.distinct}")
     assert(named.map(_._1).toSet == allowed.keySet,
       "an allowlisted dial no longer in the source must leave the allowlist")
+  }
+
+  test("every graft.* system property read under src/main is an allowlisted knob") {
+    // same rule as the env dials: one line per kept property and why
+    val allowed = Map(
+      "graft.stage.dir" -> "staging root (or off): where stageAll writes and staged queries read",
+      "graft.sketch.maxdocs" -> "q79 broadcast-sketch ceiling override so specs reach the carried path")
+    // every read spelling: sys.props(k), sys.props.get/getOrElse/
+    // contains(k), System.getProperty(k[, default])
+    val read =
+      """(?:sys\.props(?:\.get|\.getOrElse|\.contains)?|System\.getProperty)\(\s*"(graft\.[^"]+)"""".r
+    val named = mainSources.flatMap { case (file, text) =>
+      read.findAllMatchIn(text).map(m => m.group(1) -> file)
+    }
+    val unlisted = named.filterNot { case (n, _) => allowed.contains(n) }
+    assert(unlisted.isEmpty, s"system properties outside the allowlist: ${unlisted.distinct}")
+    assert(named.map(_._1).toSet == allowed.keySet,
+      "an allowlisted property no longer read in the source must leave the allowlist")
   }
 }

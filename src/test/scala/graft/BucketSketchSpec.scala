@@ -71,32 +71,23 @@ class BucketSketchSpec extends SparkSpec {
     DedupOps.withStagingRoot(None) {
       val prefix = DedupOps.prefixTable(spark, dir, t)
       val sets = DedupOps.docSetsTable(spark, dir)
-      val candS = DedupOps.candidatesWithSizesFrom(prefix, t)
-        .localCheckpoint(true)
-      val nCand = candS.count()
-      val nPre = DedupOps.sketchPrefilter(candS, sets, t).count()
-      assert(nPre < nCand,
-        s"prefilter must reject something: $nPre of $nCand kept")
+      def candSet(c: org.apache.spark.sql.DataFrame) =
+        c.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       def pairs(cand: org.apache.spark.sql.DataFrame) =
         DedupOps.verifyPrefixPairs(cand, sets, t).collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val plain = pairs(candS.select("doc_a", "doc_b"))
-      val filtered = pairs(DedupOps.sketchPrefilter(candS, sets, t))
+      // the shipped path applies the bound at enumeration-row grain,
+      // before the pair aggregate: it keeps a strict subset of the
+      // unfiltered candidates and verifies to the same pair set
+      val all = DedupOps.candidatesFrom(prefix, t)
+      val filtered = DedupOps.candidatesSketchFiltered(prefix, sets, t)
+      val (allCand, kept) = (candSet(all), candSet(filtered))
+      assert(kept.subsetOf(allCand) && kept.size < allCand.size,
+        s"prefilter must keep a strict subset: ${kept.size} of ${allCand.size}")
+      val plain = pairs(all)
       assert(plain.nonEmpty, "expected verified pairs at sf0.01")
-      assert(filtered == plain,
+      assert(pairs(filtered) == plain,
         "prefilter must not change the verified pair set")
-      // the shipped path applies the same bound BEFORE the pair
-      // aggregate (enumeration-row grain) — must also be invariant,
-      // and its candidate set must equal the post-aggregate filter's
-      val preAgg = DedupOps.candidatesSketchFiltered(prefix, sets, t)
-      val candPost = DedupOps.sketchPrefilter(candS, sets, t).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val candPre = preAgg.collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(candPre == candPost,
-        "pre-aggregate sketch filter must keep the same candidate set")
-      assert(pairs(preAgg) == plain,
-        "pre-aggregate filter must not change the verified pair set")
     }
     spark.catalog.clearCache()
   }
@@ -216,30 +207,15 @@ class BucketSketchSpec extends SparkSpec {
       assert(bcast.nonEmpty, "broadcast plan must scan the staged prefix table")
       assert(bcast.forall(!_.contains("sk")),
         s"broadcast plan's prefix scans must not read sk: $bcast")
+      // the unfiltered enumeration carries xsk/ysk too; with no
+      // consumer referencing them they must be pruned from the scan
+      val plain = prefixScanColumns(DedupOps.candidatesFrom(prefix, t))
+      assert(plain.nonEmpty && plain.forall(!_.contains("sk")),
+        s"unfiltered candidate plan's prefix scans must not read sk: $plain")
       // the carried plan is the one consumer that does read it
       val carried = prefixScanColumns(DedupOps.candidatesSketchCarried(prefix, t))
       assert(carried.nonEmpty && carried.forall(_.contains("sk")),
         s"carried plan's prefix scans must read sk: $carried")
     } finally spark.catalog.clearCache()
-  }
-
-  test("LSH verify prefilter (t=0.5) is output-invariant") {
-    val dir = "/root/testdata/sf0.01"
-    DedupOps.withStagingRoot(None) {
-      val cand = DedupOps.lshCandidates(spark, dir).select("doc_a", "doc_b")
-        .localCheckpoint(true)
-      val sets = DedupOps.docSetsTable(spark, dir)
-      val t = DedupOps.jaccardThreshold
-      def out(c: org.apache.spark.sql.DataFrame) =
-        DedupOps.verifyPrefixPairs(c, sets, t).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val plain = out(cand)
-      val pruned = DedupOps.sketchPrefilterBare(cand, sets, t)
-      assert(pruned.count() < cand.count(),
-        "bare prefilter must reject something at t=0.5")
-      assert(plain.nonEmpty && out(pruned) == plain,
-        "bare prefilter must not change the LSH-verified pair set")
-    }
-    spark.catalog.clearCache()
   }
 }

@@ -15,19 +15,14 @@ package graft
   * shingle/signature subtrees through parquet staging tables
   * (DedupOps.stageSignatures). The bench materializes them into a
   * FRESH directory inside the run, timed as the `stage_dedup` entry —
-  * so the headline total pays the full cost honestly — and ALSO runs
-  * the staging-dependent queries with staging disabled
-  * (`unstaged_queries` field) so staged-vs-unstaged deltas stay
-  * attributable round over round. Both passes scope the staging root
-  * through DedupOps.withStagingRoot (thread-local), not the global
-  * sys-prop.
+  * so the headline total pays the full cost honestly. The staging
+  * root is scoped through DedupOps.withStagingRoot (thread-local), not
+  * the global sys-prop.
   */
 object Bench {
-  // the queries that read the staged dedup tables — including the
-  // heaviest consumers (scale-preset verify, clusters, containment,
-  // source overlap) so the staged-vs-unstaged attribution covers the
-  // cases where staging matters most
-  private val stagedNames =
+  // the queries that read the staged dedup tables: a run selecting
+  // none of them skips stageAll
+  private[graft] val stagedNames =
     Seq("q20_minhash_signatures", "q21_lsh_candidates", "q22_jaccard_verify",
       "q23_simhash", "q24_simhash_pairs", "q32_dedup_keep_list",
       "q44_jaccard_scale", "q47_dedup_clusters", "q60_containment",
@@ -111,7 +106,7 @@ object Bench {
   private[graft] def load5Warning(startLine: String): Option[String] = {
     val l5 = load5(startLine)
     loadavgMax.collect { case max if !l5.isNaN && l5 > max && l5 <= 2 * max =>
-      f"loadavg5_start $l5%.2f > $max%.2f: 5-min tail elevated; prefer a quieter same-code history run"
+      f"loadavg5_start $l5%.2f > $max%.2f: 5-min tail elevated; re-run on a quieter box before comparing"
     }
   }
 
@@ -124,13 +119,13 @@ object Bench {
     * and carried a 2.3× inflated total (stage_dedup 28.8 s vs 5.0 s
     * same-code quiet). A recently-vacated box also holds a COLD page
     * cache for this run's inputs (the warm pass covers that half; this
-    * warning covers the attribution half): the warn entry makes the
-    * run lose the BenchPointer unwarned-first rule to any genuinely
-    * quiet same-code sibling. */
+    * warning covers the attribution half): the warn entry marks the
+    * artifact as read on a settling box, so its walls are not compared
+    * against a quiet run's without a re-run. */
   private[graft] def load15Warning(startLine: String): Option[String] = {
     val l15 = load15(startLine)
     loadavgMax.collect { case max if !l15.isNaN && l15 > max =>
-      f"loadavg15_start $l15%.2f > $max%.2f: box was busy within the last 15 min (likely evicted page cache / decaying tail); prefer a quieter same-code history run"
+      f"loadavg15_start $l15%.2f > $max%.2f: box was busy within the last 15 min (likely evicted page cache / decaying tail); re-run on a quieter box before comparing"
     }
   }
 
@@ -186,7 +181,7 @@ object Bench {
   /** Page-cache warm pass (VERDICT r18 #2): sequentially read the
     * input parquet under `sfDir` driver-side so the timed reps measure
     * the queries, not whichever prior job last owned the page cache.
-    * The r18 driver artifact ran minutes after a 100× history run had
+    * The r18 driver artifact ran minutes after a 100× run had
     * evicted sf0.1 from cache and read 2.3× the same-code quiet total;
     * the load gates can't see a COLD cache (the box is idle by then).
     * Largest files first so the byte cap (default 8 GiB — covers the
@@ -344,21 +339,8 @@ object Bench {
     val (calibStart, calibStartRuns) = calibrate(spark)
     val calibMid = scala.collection.mutable.ArrayBuffer[Double]()
 
-    // pass 1: staging OFF — the persist()-fallback baseline for the
-    // dedup pipeline queries. SPARK_GRAFT_SKIP_UNSTAGED=1 skips it:
-    // the pass exists to attribute staged-vs-unstaged deltas at the
-    // driver's sf0.1, and at 100× it would re-pay every unstaged
-    // dedup subtree 3× for a number nobody compares.
-    val skipUnstaged = sys.env.get("SPARK_GRAFT_SKIP_UNSTAGED").contains("1")
-    val unstaged = if (skipUnstaged) Seq.empty else
-      graft.operators.DedupOps.withStagingRoot(None) {
-        stagedNames.filter(selected).map { name =>
-          name -> measure(s"unstaged_$name")(SparkEntry.queries(name)(spark, sfDir).count())
-        }
-      }
-
-    // pass 2: staging ON into a fresh dir; materialization is its own
-    // timed entry (single-shot: the staging tables are write-once, a
+    // staging ON into a fresh dir; materialization is its own timed
+    // entry (single-shot: the staging tables are write-once, a
     // repeat would measure a no-op), then every query runs
     val stageDir = java.nio.file.Files.createTempDirectory("graft_bench_stage").toString
     val anyStaged = stagedNames.exists(selected)
@@ -424,16 +406,13 @@ object Bench {
     // (+73 s at 100×), and a tripwire hit means the inputs aren't the
     // baseline's. Same loud-failure doctrine as the r12 events.ts gate.
     val valid = artifactValid(nFailed, errors)
-    def line(fmt: Double => String, extra: String): String =
-      s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"n_failed":$nFailed,"valid":$valid,"queries":${toJson(results, fmt)}$extra,$guardJson,"errors":$errJson,"sf":"$sfDir"}"""
-    // full-precision artifact (incl. the unstaged attribution pass) on
-    // disk; the round artifact captures only the last ~2000 chars of
-    // stdout, which truncated the r7/r8 full-name line mid-JSON
-    // ("parsed": null) — so the LAST printed line abbreviates query
-    // names to their qNN prefix (~13 bytes/entry: the complete
-    // 80-query line is ~1.3 kB, inside the capture bound with slack)
-    // and points at the full artifact
-    // per-query rep spread goes in the FULL artifact only — ~40 bytes
+    // full-precision artifact on disk; the round artifact captures only
+    // the last ~2000 chars of stdout, which truncated the r7/r8
+    // full-name line mid-JSON ("parsed": null) — so the LAST printed
+    // line abbreviates query names to their qNN prefix (~13
+    // bytes/entry: the complete 80-query line is ~1.3 kB, inside the
+    // capture bound with slack) and points at the full artifact.
+    // Per-query rep spread goes in the FULL artifact only — ~40 bytes
     // per query would push the compact stdout line past the round
     // artifact's ~2000-char capture bound
     val spreadJson = spreads.toSeq
@@ -441,45 +420,13 @@ object Bench {
       .mkString("{", ",", "}")
     val chainsJson = toJson(
       stageChains.toSeq.sortBy(-_._2), v => f4(v))
-    val full = line(_.toString,
-      s""","unstaged_queries":${toJson(unstaged, _.toString)},"query_spread":$spreadJson,"stage_chains":$chainsJson""")
+    val full =
+      s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"n_failed":$nFailed,"valid":$valid,"queries":${toJson(results, _.toString)},"query_spread":$spreadJson,"stage_chains":$chainsJson,$guardJson,"errors":$errJson,"sf":"$sfDir"}"""
     val out = java.nio.file.Paths.get("bench", "bench_full_latest.json")
     try {
       java.nio.file.Files.createDirectories(out.getParent)
       java.nio.file.Files.write(out,
         (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      // per-run history (VERDICT r14 #4): bench_full_latest.json is a
-      // POINTER that each refresh overwrites — the §36-window 162.5 s
-      // run's per-query record was lost exactly that way, leaving the
-      // r14 drift claims uncheckable. Every run also appends an
-      // immutable copy keyed by wall-clock run id + sf tag; nothing
-      // ever overwrites it (CREATE_NEW throws on collision rather than
-      // clobbering — and a second-granularity collision retries with a
-      // unique suffix instead of riding the shared IOException catch
-      // into a silently-lost record, ADVICE r15).
-      val runId = java.time.format.DateTimeFormatter
-        .ofPattern("yyyyMMdd'T'HHmmss").withZone(java.time.ZoneOffset.UTC)
-        .format(java.time.Instant.now())
-      // a SPARK_GRAFT_QUERIES-filtered run's "total" covers only the
-      // selected queries — tagging it like a full run would let it
-      // compete in BenchPointer's newest-N window against full-suite
-      // totals (two q67-only probes nearly did exactly that to the
-      // r19 100× pointer); the -partial suffix keeps it out of every
-      // exact-suffix tag match while still appending to history
-      val sfTag = sfDir.replaceAll(".*/", "").replaceAll("[^A-Za-z0-9._-]", "_") +
-        (if (only.isDefined) "-partial" else "")
-      val histDir = out.getParent.resolve("history")
-      java.nio.file.Files.createDirectories(histDir)
-      val bytes = (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      try java.nio.file.Files.write(
-        histDir.resolve(s"bench_${runId}_$sfTag.json"), bytes,
-        java.nio.file.StandardOpenOption.CREATE_NEW)
-      catch { case _: java.nio.file.FileAlreadyExistsException =>
-        java.nio.file.Files.write(
-          histDir.resolve(s"bench_${runId}_$sfTag-" +
-            java.util.UUID.randomUUID().toString.take(8) + ".json"),
-          bytes, java.nio.file.StandardOpenOption.CREATE_NEW)
-      }
     } catch { case _: java.io.IOException => () } // read-only cwd: line still prints
     def short(name: String): String =
       if (name.matches("q\\d+_.*")) name.takeWhile(_ != '_') else name

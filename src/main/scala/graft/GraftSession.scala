@@ -62,11 +62,12 @@ object GraftSession {
     *
     * Thresholds default to Spark's production values (256 MiB skew
     * threshold / 64 MiB advisory target — tuned for executor-memory-
-    * sized partitions); pass scaled values for small-SF probes, as
-    * SkewProbe does. Apply to sessions whose workload joins
-    * possibly-hot keys and aggregates on them; the force flag is
-    * deliberately NOT the session default because uniform workloads
-    * pay the extra agg exchange for nothing.
+    * sized partitions); pass scaled values for small-SF runs
+    * (`SkewAuditSpec` pins the veto and the forced split at 1m/512k).
+    * Apply to sessions whose workload joins possibly-hot keys and
+    * aggregates on them; the force flag is deliberately NOT the
+    * session default because uniform workloads pay the extra agg
+    * exchange for nothing.
     *
     * Firing contract at the PRODUCTION defaults, measured (PERF §53,
     * 100× Zipf corpus): the split engages exactly when one key's

@@ -18,12 +18,14 @@ import graft.operators.EmbeddingOps
   * The 100 TB layout mirrors [[StreamingDedup.stageCorpusBands]]:
   *
   *   - ONE-TIME corpus staging ([[stageCorpusVectors]]): every corpus
-  *     vector is int8-quantized (`graft.functions.VecQ8`; measured at
-  *     dim 64 on parquet the staged table is 3.4× smaller at rest
-  *     than the float corpus even carrying ids+norms+buckets —
-  *     parquet dictionary-encodes the 255-value codes, random floats
-  *     don't compress — and the in-memory/shuffle form is 4× narrower
-  *     per component; SemanticGateProbe is the measurement), its
+  *     vector is int8-quantized (`graft.functions.VecQ8`; at dim 64
+  *     on parquet the staged table is smaller at rest than the float
+  *     corpus even carrying ids+norms+buckets — parquet
+  *     dictionary-encodes the 255-value codes, random floats don't
+  *     compress — 3.4× on a 20k-vector corpus (PERF §57) and 2.14× on
+  *     sf0.001's 500, which `StreamingSemanticGateSpec` pins at
+  *     ≥ 1.5×; the in-memory/shuffle form is 4× narrower per
+  *     component), its
   *     quantized norm precomputed, its sign-LSH bucket id
   *     assigned (same planes as q26/q27), and the table written
   *     BUCKETED AND SORTED on the bucket id.
@@ -122,8 +124,8 @@ object StreamingSemanticGate {
                          planeSets: Int = 1): Int = {
     corpusRows(corpus, idCol, vecCol, planes, planeSets)
       // one writer per bucket: without this the bucketed write runs at
-      // the source's task width and lands ~tasks × buckets files (the
-      // probe measured 764 tiny files for a 20k-vector corpus, and
+      // the source's task width and lands ~tasks × buckets files (PERF
+      // §57 measured 764 tiny files for a 20k-vector corpus, and
       // per-file open cost dominated every probe batch). The source
       // here is a fresh computation — not an already-bucketed scan —
       // so EnsureRequirements keeps this exchange (the PERF §49

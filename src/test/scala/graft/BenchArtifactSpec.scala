@@ -98,7 +98,7 @@ class BenchArtifactSpec extends AnyFunSuite {
     assert(Bench.contentionError(line).isEmpty)
     assert(Bench.load5Error(line).isEmpty && Bench.load5Warning(line).isEmpty)
     assert(Bench.load15Warning(line).isDefined,
-      "the 15-min tail must warn so BenchPointer prefers a clean sibling")
+      "the 15-min tail must warn so the artifact marks its settling box")
   }
 
   test("quiet 15-min average does not warn; tier never blocks the wait loop") {
@@ -127,180 +127,5 @@ class BenchArtifactSpec extends AnyFunSuite {
     // a missing dir is a no-op, never fatal
     val (_, none) = Bench.warmPageCache(dir.resolve("absent").toString)
     assert(none == 0L)
-  }
-
-  // ---- pointer refresh picks the quietest valid run (VERDICT r15 #3) ----
-
-  test("BenchPointer ranks by calib then load5 and skips invalid runs") {
-    import graft.tools.BenchPointer
-    def art(valid: Boolean, cs: Double, ce: Double, l5: Double, total: Double,
-            warnings: String = "{}") =
-      s"""{"metric":"total","value":$total,"valid":$valid,""" +
-        s""""calib_start_sec":$cs,"calib_end_sec":$ce,""" +
-        s""""warnings":$warnings,""" +
-        s""""loadavg_boot":"1.00 $l5 1.00 1/1 1"}"""
-    val dir = java.nio.file.Files.createTempDirectory("ptr")
-    def run(name: String, json: String) = {
-      val p = dir.resolve(name)
-      java.nio.file.Files.write(p, json.getBytes("UTF-8"))
-      BenchPointer.parse(p, json).get
-    }
-    val noisy = run("bench_20260814T0001_x.json", art(valid = true, 0.30, 0.45, 5.9, 190.0))
-    val quiet = run("bench_20260814T0002_x.json", art(valid = true, 0.09, 0.08, 0.6, 178.0))
-    val invalid = run("bench_20260814T0003_x.json", art(valid = false, 0.05, 0.05, 0.3, 160.0))
-    assert(BenchPointer.pick(Seq(noisy, quiet, invalid)).get.name == quiet.name)
-    assert(BenchPointer.pick(Seq(invalid)).isEmpty)
-    // calib tie -> lower boot load5 wins
-    val tieA = run("bench_20260814T0004_x.json", art(valid = true, 0.10, 0.10, 3.0, 180.0))
-    val tieB = run("bench_20260814T0005_x.json", art(valid = true, 0.10, 0.10, 0.5, 181.0))
-    assert(BenchPointer.pick(Seq(tieA, tieB)).get.name == tieB.name)
-    // a gate-warned run loses to ANY clean run, even on a better calib
-    // (the r16 10x refresh trap: warned 97.3 s beat clean 82.1 s on a
-    // 0.03 calib edge)
-    val warned = run("bench_20260814T0006_x.json",
-      art(valid = true, 0.05, 0.05, 8.0, 170.0,
-        warnings = """{"load5":"loadavg5_start 7.97 > 4.00"}"""))
-    val clean = run("bench_20260814T0007_x.json", art(valid = true, 0.12, 0.12, 0.8, 182.0))
-    assert(warned.warned.contains(true) && clean.warned.contains(false))
-    assert(BenchPointer.pick(Seq(warned, clean)).get.name == clean.name)
-  }
-
-  test("BenchPointer: missing warnings field is UNKNOWN — after clean, before warned (ADVICE r16)") {
-    import graft.tools.BenchPointer
-    // pre-2026-08-14 artifact shape: no warnings key at all
-    val legacy = """{"metric":"total","value":170.0,"valid":true,""" +
-      """"calib_start_sec":0.05,"calib_end_sec":0.05,""" +
-      """"loadavg_boot":"1.00 0.50 1.00 1/1 1"}"""
-    assert(BenchPointer.warnedOf(legacy).isEmpty)
-    assert(BenchPointer.warnedOf("""x "warnings":{} y""").contains(false))
-    assert(BenchPointer.warnedOf("""x "warnings":{"k":"v"} y""").contains(true))
-    // a warning VALUE containing the empty-map literal must not flip
-    // the classification (the old stripped-substring hole)
-    assert(BenchPointer.warnedOf(
-      """"warnings":{"k":"artifact had \"warnings\":{} missing"}""").contains(true))
-    assert(BenchPointer.warnRank(Some(false)) < BenchPointer.warnRank(None))
-    assert(BenchPointer.warnRank(None) < BenchPointer.warnRank(Some(true)))
-    // legacy run beats a warned run but loses to a clean one, even on calib
-    val dir = java.nio.file.Files.createTempDirectory("ptr2")
-    def run(name: String, json: String) = {
-      val p = dir.resolve(name)
-      java.nio.file.Files.write(p, json.getBytes("UTF-8"))
-      BenchPointer.parse(p, json).get
-    }
-    val legacyRun = run("bench_20260813T0001_x.json", legacy)
-    val cleanRun = run("bench_20260814T0002_x.json",
-      """{"value":182.0,"valid":true,"calib_start_sec":0.20,"calib_end_sec":0.20,""" +
-        """"warnings":{},"loadavg_boot":"1.00 0.80 1.00 1/1 1"}""")
-    val warnedRun = run("bench_20260814T0003_x.json",
-      """{"value":160.0,"valid":true,"calib_start_sec":0.01,"calib_end_sec":0.01,""" +
-        """"warnings":{"load5":"x"},"loadavg_boot":"1.00 8.00 1.00 1/1 1"}""")
-    assert(BenchPointer.pick(Seq(legacyRun, warnedRun)).get.name == legacyRun.name)
-    assert(BenchPointer.pick(Seq(legacyRun, cleanRun)).get.name == cleanRun.name)
-  }
-
-  test("BenchPointer demotes a per-query outlier vs sibling medians (VERDICT r19 #2)") {
-    import graft.tools.BenchPointer
-    // the r19 run-4 shape: the quietest-probes run of the window reads
-    // q60_containment at 19.1 s with a TIGHT rep spread while three
-    // same-code siblings read 2.1-2.9 s — warnings/calib/load can't
-    // see it (that run's probes were the cleanest), only the
-    // cross-run per-query compare can
-    def art(cs: Double, q60: Double, q01: Double) =
-      s"""{"metric":"total","value":200.0,"valid":true,""" +
-        s""""queries":{"q01_pricing_summary":$q01,"q60_containment":$q60,"stage_dedup":60.0},""" +
-        s""""unstaged_queries":{"q60_containment":99.9},""" +
-        s""""calib_start_sec":$cs,"calib_end_sec":$cs,"warnings":{},""" +
-        s""""loadavg_boot":"1.00 0.50 1.00 1/1 1"}"""
-    val dir = java.nio.file.Files.createTempDirectory("ptr4")
-    def run(name: String, json: String) = {
-      val p = dir.resolve(name)
-      java.nio.file.Files.write(p, json.getBytes("UTF-8"))
-      BenchPointer.parse(p, json).get
-    }
-    val sib1 = run("bench_20260815T0001_x.json", art(cs = 0.20, q60 = 2.11, q01 = 0.68))
-    val sib2 = run("bench_20260815T0002_x.json", art(cs = 0.22, q60 = 2.88, q01 = 0.70))
-    val sib3 = run("bench_20260815T0003_x.json", art(cs = 0.21, q60 = 2.34, q01 = 0.66))
-    val outlier = run("bench_20260815T0004_x.json", art(cs = 0.05, q60 = 19.12, q01 = 3.06))
-    // the unstaged_queries map must not leak into the per-query parse
-    assert(!sib1.queries.contains("unstaged_queries") && sib1.queries("q60_containment") == 2.11)
-    val all = Seq(sib1, sib2, sib3, outlier)
-    val o = BenchPointer.outlierOf(outlier, all)
-    assert(o.exists(_._1 == "q60_containment"),
-      s"q60 at 8.6x the sibling median must flag as the worst offender: $o")
-    assert(BenchPointer.outlierOf(sib1, all).isEmpty,
-      "an in-band run must not flag")
-    // despite the best calib of the window, the outlier run loses;
-    // the clean siblings then rank by calib as before (sib1 at 0.20)
-    assert(BenchPointer.pick(all).get.name == sib1.name,
-      "outlier demotion must outrank the calib tier")
-    // sub-ratio and sub-floor deltas never demote: 0.1 s-class jitter
-    val jitterA = run("bench_20260815T0005_x.json",
-      """{"value":1.0,"valid":true,"queries":{"q05_sort_limit":0.35},""" +
-        """"calib_start_sec":0.2,"calib_end_sec":0.2,"warnings":{},""" +
-        """"loadavg_boot":"1.00 0.50 1.00 1/1 1"}""")
-    val jitterSibs = Seq(
-      run("bench_20260815T0006_x.json",
-        """{"value":1.0,"valid":true,"queries":{"q05_sort_limit":0.10},""" +
-          """"calib_start_sec":0.2,"calib_end_sec":0.2,"warnings":{},""" +
-          """"loadavg_boot":"1.00 0.50 1.00 1/1 1"}"""),
-      run("bench_20260815T0007_x.json",
-        """{"value":1.0,"valid":true,"queries":{"q05_sort_limit":0.11},""" +
-          """"calib_start_sec":0.2,"calib_end_sec":0.2,"warnings":{},""" +
-          """"loadavg_boot":"1.00 0.50 1.00 1/1 1"}"""))
-    assert(BenchPointer.outlierOf(jitterA, jitterA +: jitterSibs).isEmpty,
-      "3.5x on a 0.1 s query is under the absolute floor — not an outlier")
-    // one sibling is an anecdote: no demotion without >= 2 carriers
-    assert(BenchPointer.outlierOf(outlier, Seq(outlier, sib1)).isEmpty)
-    // legacy artifact without a queries map neither flags nor crashes
-    val legacy = run("bench_20260815T0008_x.json",
-      """{"value":1.0,"valid":true,"calib_start_sec":0.2,"calib_end_sec":0.2,""" +
-        """"warnings":{},"loadavg_boot":"1.00 0.50 1.00 1/1 1"}""")
-    assert(legacy.queries.isEmpty && BenchPointer.outlierOf(legacy, all).isEmpty)
-  }
-
-  test("BenchPointer stamps its source history file into the pointer (VERDICT r16 #2)") {
-    import graft.tools.BenchPointer
-    val hist = """{"metric":"total","value":82.1,"valid":true,"warnings":{}}"""
-    val ptr = BenchPointer.pointerJson(hist, "bench_20260815T0824_scale10.json", 4)
-    assert(ptr.startsWith(
-      """{"pointer_source":{"source_history_file":"bench_20260815T0824_scale10.json","""))
-    assert(ptr.contains(""""rule":"""") && ptr.contains(""""window":4"""))
-    // the artifact body is preserved byte-for-byte after the stamp
-    assert(ptr.endsWith(hist.drop(1)))
-    // and the stamped pointer still parses as a valid run record
-    val p = java.nio.file.Files.createTempDirectory("ptr3")
-      .resolve("bench_x_scale10.json")
-    val full = """{"metric":"total","value":82.1,"valid":true,""" +
-      """"calib_start_sec":0.1,"calib_end_sec":0.1,"warnings":{}}"""
-    java.nio.file.Files.write(p,
-      BenchPointer.pointerJson(full, "bench_src_x.json", 4).getBytes("UTF-8"))
-    val parsed = BenchPointer.parse(p, new String(
-      java.nio.file.Files.readAllBytes(p), "UTF-8"))
-    assert(parsed.exists(r => r.valid && r.totalSec == 82.1))
-    // a filename that could break the spliced JSON is refused, not
-    // escaped (ADVICE r17): only bench_<ts>_<tag>.json shapes stamp
-    intercept[IllegalArgumentException] {
-      BenchPointer.pointerJson(hist, """bench_"quote"_x.json""", 4)
-    }
-    intercept[IllegalArgumentException] {
-      BenchPointer.pointerJson(hist, "src.json", 4)
-    }
-  }
-
-  test("BenchPointer tag match is exact-suffix, not substring") {
-    import graft.tools.BenchPointer.matchesTag
-    assert(matchesTag("bench_20260815T073949_scale10.json", "scale10"))
-    // the r16 trap: scale10 must NOT match a scale100 history file
-    assert(!matchesTag("bench_20260815T075445_scale100.json", "scale10"))
-    assert(matchesTag("bench_20260815T075445_scale100.json", "scale100"))
-    assert(!matchesTag("bench_20260815T055621_sf0.1.json", "sf0"))
-    assert(matchesTag("bench_20260815T055621_sf0.1.json", "sf0.1"))
-    assert(!matchesTag("notbench_20260815_scale10.json", "scale10"))
-    // a SPARK_GRAFT_QUERIES-filtered run (history-tagged -partial by
-    // Bench) must never enter a full-suite pointer window: its
-    // "total" covers only the selected queries (two q67-only probes
-    // nearly won the r19 100x pointer with a 6.8 s "total")
-    assert(!matchesTag("bench_20260815T204640_scale100-partial.json", "scale100"))
-    assert(matchesTag("bench_20260815T204640_scale100-partial.json", "scale100-partial"))
   }
 }

@@ -3,6 +3,7 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.functions.sum
 
 /** Warehouse-tail skew audit (verdict r12/r13 stretch): the three
   * lineitem-heavy joins (q67 shipping priority, q68 local supplier
@@ -23,14 +24,15 @@ class SkewAuditSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true")
   }
 
-  test("AQE skew-join split FIRES on an adversarially skewed join (r15)") {
-    // VERDICT r14 #6: the conf assertion above says the defense is
-    // armed; this proves the mechanism actually cuts in on skewed
-    // data. One key owns 90% of the left side; thresholds are scaled
-    // to the test data size (the production 256 MiB default is the
-    // same mechanism at executor-memory scale); broadcast is disabled
-    // so the join is a genuine two-sided shuffle SMJ.
+  /** One key owns 90% of the left side; thresholds are scaled to the
+    * test data size (the production 256 MiB default is the same
+    * mechanism at executor-memory scale); broadcast is disabled so the
+    * join is a genuine two-sided shuffle SMJ. Every conf the body or
+    * `skewHardened` sets is restored afterwards. */
+  private def withSkewedJoin[T](body: org.apache.spark.sql.DataFrame => T): T = {
     val saved = Seq(
+      "spark.sql.adaptive.skewJoin.enabled",
+      "spark.sql.adaptive.forceOptimizeSkewedJoin",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes",
       "spark.sql.autoBroadcastJoinThreshold",
@@ -45,16 +47,42 @@ class SkewAuditSpec extends SparkSpec {
       val left = spark.range(0, 400000).selectExpr(
         "case when id % 10 < 9 then 1 else id end as k", "id as v")
       val right = spark.range(0, 50000).selectExpr("id as k", "id as w")
-      val joined = left.join(right, "k")
+      body(left.join(right, "k"))
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
+  test("AQE skew-join split FIRES on an adversarially skewed join (r15)") {
+    // VERDICT r14 #6: the conf assertion above says the defense is
+    // armed; this proves the mechanism actually cuts in on skewed data
+    withSkewedJoin { joined =>
       // execute THIS dataset's queryExecution (count() would build and
       // run a separate one, leaving this adaptive plan un-finalized)
       assert(joined.collect().length > 0)
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("skew=true"),
         s"expected AQE skew-join split in the adaptive plan; got:\n${plan.take(2000)}")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
+  test("an aggregation on the join key vetoes the split; skewHardened forces it (PERF §40)") {
+    // the q67 shape: join on a hot key, then group by that key. The
+    // agg reuses the join's hash partitioning, so a split would add an
+    // exchange and AQE declines at default conf; skewHardened's
+    // forceOptimizeSkewedJoin pays that exchange and splits
+    withSkewedJoin { joined =>
+      def splitFired(): Boolean = {
+        // summing v keeps the unique per-row values in the shuffle: a
+        // k-only shuffle of the constant hot key compresses below 1m
+        val agg = joined.groupBy("k").agg(sum("v"))
+        assert(agg.collect().length > 0)
+        agg.queryExecution.executedPlan.toString.contains("skew=true")
+      }
+      assert(!splitFired(), "the join-key aggregation must veto the split at default conf")
+      GraftSession.skewHardened(spark, "1m", "512k"): Unit
+      assert(splitFired(), "skewHardened must force the split under the join-key aggregation")
     }
   }
 

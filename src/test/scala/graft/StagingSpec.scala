@@ -120,10 +120,20 @@ class StagingSpec extends SparkSpec {
     val p128 = DedupOps.scaleParams
     // concurrent DAG into a fresh root
     val rootA = Files.createTempDirectory("graft_stage_all").toString
-    val candA = DedupOps.withStagingRoot(Some(rootA)) {
+    val (candA, interpreted) = DedupOps.withStagingRoot(Some(rootA)) {
       DedupOps.stageAll(spark, sf)
-      DedupOps.lshCandidates(spark, sf).collect().toSeq
+      // the staged consumer queries run without an interpreted
+      // (CodegenFallback) expression anywhere in their executed plans:
+      // collect() runs THIS dataset's plan, so AQE's final stages are
+      // the ones walked
+      val hits = Bench.stagedNames.map { name =>
+        val df = SparkEntry.queries(name)(spark, sf)
+        df.collect(): Unit
+        name -> CodegenFallbacks.fallbackHits(df.queryExecution.executedPlan)
+      }.filter(_._2.nonEmpty)
+      (DedupOps.lshCandidates(spark, sf).collect().toSeq, hits)
     }
+    assert(interpreted.isEmpty, s"interpreted expressions in staged queries: $interpreted")
     val expectTables = Seq(
       "shingles", "simhash",
       s"sig_h${p8.numHashes}", s"cand_h${p8.numHashes}_b${p8.numBands}",

@@ -836,16 +836,35 @@ object DedupOps {
   def jaccardVerify(spark: SparkSession, sfDir: String, p: MinHashParams): DataFrame =
     verifiedTable(spark, sfDir, p).orderBy("doc_a", "doc_b")
 
+  /** Oracle CTEs every verified-pair query shares (q22, q32, q47,
+    * q62): per-doc bigram counts `sizes` and each LSH candidate's
+    * bigram overlap `inter`, over the `bg`/`vcand` CTEs. */
+  private def duckInterCte: String =
+    """sizes AS (SELECT doc_id, count(*) AS n FROM bg GROUP BY doc_id),
+      |inter AS (
+      |  SELECT c.doc_a, c.doc_b, count(*) AS i
+      |  FROM vcand c
+      |  JOIN bg x ON x.doc_id = c.doc_a
+      |  JOIN bg y ON y.doc_id = c.doc_b AND y.s = x.s
+      |  GROUP BY c.doc_a, c.doc_b)""".stripMargin
+
+  /** Oracle edge CTEs of q47 and q62, over [[duckInterCte]]: verified
+    * near pairs and exact-duplicate `(keeper, doc)` pairs. */
+  private def duckPairCtes: String =
+    s"""near_pairs AS (
+       |  SELECT doc_a, doc_b
+       |  FROM inter JOIN sizes sa ON sa.doc_id = doc_a JOIN sizes sb ON sb.doc_id = doc_b
+       |  WHERE round(i * 1.0 / (sa.n + sb.n - i), 6) >= $jaccardThreshold),
+       |exact_pairs AS (
+       |  SELECT keeper AS doc_a, doc_id AS doc_b FROM (
+       |    SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(text)) AS keeper
+       |    FROM documents) t
+       |  WHERE doc_id <> keeper)""".stripMargin
+
   def jaccardVerifySqlFor(p: MinHashParams): String =
     s"""${duckSigCte(p)}
        |${duckBandsCte(p)},
-       |sizes AS (SELECT doc_id, count(*) AS n FROM bg GROUP BY doc_id),
-       |inter AS (
-       |  SELECT c.doc_a, c.doc_b, count(*) AS i
-       |  FROM vcand c
-       |  JOIN bg x ON x.doc_id = c.doc_a
-       |  JOIN bg y ON y.doc_id = c.doc_b AND y.s = x.s
-       |  GROUP BY c.doc_a, c.doc_b)
+       |$duckInterCte
        |SELECT doc_a, doc_b, round(i * 1.0 / (sa.n + sb.n - i), 6) AS jaccard
        |FROM inter JOIN sizes sa ON sa.doc_id = doc_a JOIN sizes sb ON sb.doc_id = doc_b
        |WHERE round(i * 1.0 / (sa.n + sb.n - i), 6) >= $jaccardThreshold
@@ -870,6 +889,11 @@ object DedupOps {
     staged(spark, sfDir, "keeper")(compute)
   }
 
+  /** Exact-duplicate edges `(doc_id, keeper)`: every doc that is not
+    * its identical-text group's survivor, with that survivor. */
+  private def exactDupEdges(spark: SparkSession, sfDir: String): DataFrame =
+    keeperTable(spark, sfDir).where(col("doc_id") =!= col("keeper"))
+
   /** End-to-end dedup keep-list: drop exact duplicates (keep the
     * minimum doc_id per identical text) and near-duplicates (for each
     * LSH-verified pair, keep the smaller id). The typical final stage
@@ -880,9 +904,7 @@ object DedupOps {
     // the keeper window is referenced exactly once even with staging
     // off (where keeperTable recomputes per reference)
     val docs = Tables.documents(spark, sfDir).select("doc_id")
-    val exactDrop = keeperTable(spark, sfDir)
-      .where(col("doc_id") =!= col("keeper"))
-      .select("doc_id")
+    val exactDrop = exactDupEdges(spark, sfDir).select("doc_id")
     val nearDrop = jaccardVerify(spark, sfDir).select(col("doc_b").as("doc_id"))
     docs.join(exactDrop.union(nearDrop).distinct(), Seq("doc_id"), "left_anti")
       .select("doc_id")
@@ -892,13 +914,7 @@ object DedupOps {
   val dedupKeepListSql: String =
     s"""${duckSigCte(defaultParams)}
        |${duckBandsCte(defaultParams)},
-       |sizes AS (SELECT doc_id, count(*) AS n FROM bg GROUP BY doc_id),
-       |inter AS (
-       |  SELECT c.doc_a, c.doc_b, count(*) AS i
-       |  FROM vcand c
-       |  JOIN bg x ON x.doc_id = c.doc_a
-       |  JOIN bg y ON y.doc_id = c.doc_b AND y.s = x.s
-       |  GROUP BY c.doc_a, c.doc_b),
+       |$duckInterCte,
        |near_drop AS (
        |  SELECT doc_b AS doc_id
        |  FROM inter JOIN sizes sa ON sa.doc_id = doc_a JOIN sizes sb ON sb.doc_id = doc_b
@@ -925,8 +941,7 @@ object DedupOps {
     * sizes come from one window over cluster_id. */
   def dedupClusters(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir).select("doc_id")
-    val exactPairs = keeperTable(spark, sfDir)
-      .where(col("doc_id") =!= col("keeper"))
+    val exactPairs = exactDupEdges(spark, sfDir)
       .select(col("keeper").as("src"), col("doc_id").as("dst"))
     val nearPairs = jaccardVerify(spark, sfDir)
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
@@ -959,22 +974,8 @@ object DedupOps {
   val dedupClustersSql: String =
     s"""${duckSigCte(defaultParams).replaceFirst("WITH ", "WITH RECURSIVE ")}
        |${duckBandsCte(defaultParams)},
-       |sizes AS (SELECT doc_id, count(*) AS n FROM bg GROUP BY doc_id),
-       |inter AS (
-       |  SELECT c.doc_a, c.doc_b, count(*) AS i
-       |  FROM vcand c
-       |  JOIN bg x ON x.doc_id = c.doc_a
-       |  JOIN bg y ON y.doc_id = c.doc_b AND y.s = x.s
-       |  GROUP BY c.doc_a, c.doc_b),
-       |near_pairs AS (
-       |  SELECT doc_a, doc_b
-       |  FROM inter JOIN sizes sa ON sa.doc_id = doc_a JOIN sizes sb ON sb.doc_id = doc_b
-       |  WHERE round(i * 1.0 / (sa.n + sb.n - i), 6) >= $jaccardThreshold),
-       |exact_pairs AS (
-       |  SELECT keeper AS doc_a, doc_id AS doc_b FROM (
-       |    SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(text)) AS keeper
-       |    FROM documents) t
-       |  WHERE doc_id <> keeper),
+       |$duckInterCte,
+       |$duckPairCtes,
        |edges AS (
        |  SELECT doc_a AS src, doc_b AS dst FROM near_pairs
        |  UNION SELECT doc_a, doc_b FROM exact_pairs
@@ -1008,8 +1009,7 @@ object DedupOps {
     // by stageAll); the previous inline window re-shuffled the full
     // text column per q62 run even though q32/q47/q63 already read the
     // staged table (r21 audit)
-    val exactPairs = keeperTable(spark, sfDir)
-      .where(col("doc_id") =!= col("keeper"))
+    val exactPairs = exactDupEdges(spark, sfDir)
       .select(col("keeper").as("doc_a"), col("doc_id").as("doc_b"))
     val pairs = jaccardVerify(spark, sfDir).select("doc_a", "doc_b")
       .unionByName(exactPairs).distinct()
@@ -1026,22 +1026,8 @@ object DedupOps {
   val sourceOverlapMatrixSql: String =
     s"""${duckSigCte(defaultParams)}
        |${duckBandsCte(defaultParams)},
-       |sizes AS (SELECT doc_id, count(*) AS n FROM bg GROUP BY doc_id),
-       |inter AS (
-       |  SELECT c.doc_a, c.doc_b, count(*) AS i
-       |  FROM vcand c
-       |  JOIN bg x ON x.doc_id = c.doc_a
-       |  JOIN bg y ON y.doc_id = c.doc_b AND y.s = x.s
-       |  GROUP BY c.doc_a, c.doc_b),
-       |near_pairs AS (
-       |  SELECT doc_a, doc_b
-       |  FROM inter JOIN sizes sa ON sa.doc_id = doc_a JOIN sizes sb ON sb.doc_id = doc_b
-       |  WHERE round(i * 1.0 / (sa.n + sb.n - i), 6) >= $jaccardThreshold),
-       |exact_pairs AS (
-       |  SELECT keeper AS doc_a, doc_id AS doc_b FROM (
-       |    SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(text)) AS keeper
-       |    FROM documents) t
-       |  WHERE doc_id <> keeper),
+       |$duckInterCte,
+       |$duckPairCtes,
        |pairs AS (
        |  SELECT doc_a, doc_b FROM near_pairs
        |  UNION SELECT doc_a, doc_b FROM exact_pairs)

@@ -189,8 +189,8 @@ private[graft] object Staging {
     * the (small) probe side shuffles, per consumer, forever. This is
     * the layout PERF.md §13 names for the dedup verify-attach joins:
     * at 100× the doc_sets arrays are ~GBs of shuffle per verify
-    * consumer without it, zero with it. Same pattern as
-    * `StreamingDedup.stageCorpusBands` (StreamingDedup.scala:130).
+    * consumer without it, zero with it. Same pattern as the admission
+    * posting tables (`streaming.PostingCompaction.write`).
     *
     * Bucket metadata lives in the catalog, not the files, so a NEW
     * session that finds the files already staged re-registers them

@@ -1,32 +1,56 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
-/** File-count-triggered compaction for the absorbing posting tables
-  * (VERDICT r15 #6, PERF §41): the 100-batch admission soak measured
-  * probe latency creeping +35% as appends grew the bucketed posting
-  * table 2,048 → 5,248 files while bytes grew only 14% — per-file
-  * open/footer cost, not data volume, is the creep mechanism. Each
-  * append adds ~one file per touched bucket, so file count grows
+/** The bucketed posting-table layout and its file-count-triggered
+  * compaction, shared by the three absorbing admission gates: band
+  * postings ([[StreamingDedup]], keyed on `cbk`), span postings
+  * ([[StreamingSpanGate]], `csh`) and quantized vectors
+  * ([[StreamingSemanticGate]], `cbkt`). Every stage, absorb and
+  * compaction rewrite goes through [[write]], so the layout is decided
+  * once.
+  *
+  * Compaction (VERDICT r15 #6, PERF §41): the 100-batch admission soak
+  * measured probe latency creeping +35% as appends grew the bucketed
+  * posting table 2,048 → 5,248 files while bytes grew only 14% —
+  * per-file open/footer cost, not data volume, is the creep mechanism.
+  * Each append adds ~one file per touched bucket, so file count grows
   * linearly in batches absorbed and a production gate must compact on
   * a FILE-COUNT trigger, not a size one. [[CompactionDial]] is that
-  * trigger, one per posting table: [[StreamingDedup.compactionDial]]
-  * (band postings, bucketed on `cbk`), [[StreamingSpanGate.compactionDial]]
-  * (span postings, bucketed on `csh`) and
-  * [[StreamingSemanticGate.compactionDial]].
+  * trigger, one per posting table.
   *
-  * The rewrite preserves the bucketed layout (one bucketBy/sortBy pass
-  * over the table — the same shape as the original staging write, cost
-  * amortized over the ~N batches between triggers), lands at
-  * ≤ `buckets` files (see [[rewrite]]'s landing-geometry note), swaps
-  * in via rename-out/rename-in (NOT atomic — no catalog offers a
-  * two-table atomic swap; every crash window leaves a recoverable
-  * table and [[recoverIfNeeded]] performs that recovery on the next
-  * entry, see [[rewrite]]) and keeps the caller's table NAME stable,
-  * so a long-running admission loop never re-resolves anything. */
+  * The rewrite preserves the bucketed layout (one [[write]] pass over
+  * the table, cost amortized over the ~N batches between triggers),
+  * lands at ≤ `buckets` files (see [[rewrite]]'s landing-geometry
+  * note), swaps in via rename-out/rename-in (NOT atomic — no catalog
+  * offers a two-table atomic swap; every crash window leaves a
+  * recoverable table and [[recoverIfNeeded]] performs that recovery on
+  * the next entry, see [[rewrite]]) and keeps the caller's table NAME
+  * stable, so a long-running admission loop never re-resolves
+  * anything. */
 private[graft] object PostingCompaction {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** Write posting `rows` to `table` in the one posting layout: ONE
+    * WRITER PER BUCKET (`repartition(buckets, key)`), then bucketed and
+    * sorted on `keyCol`, parquet. `mode` is "overwrite" for a stage or
+    * a compaction and "append" for an absorb.
+    *
+    * Without the repartition the bucketed write runs at the source's
+    * task width and lands ~tasks × buckets files (PERF §57 measured
+    * 764 tiny files for a 20k-vector corpus, and per-file open cost
+    * dominated every probe batch); with it a write lands ≤ `buckets`
+    * files. Over a fresh computation EnsureRequirements keeps the
+    * exchange; over a pinned bucketed scan of the same layout it
+    * elides it (the [[rewrite]] case, PERF §49). */
+  def write(rows: DataFrame, table: String, keyCol: String, buckets: Int,
+            mode: String): Unit =
+    rows.repartition(buckets, col(keyCol))
+      .write.mode(mode)
+      .bucketBy(buckets, keyCol).sortBy(keyCol)
+      .format("parquet").saveAsTable(table)
 
   private def location(spark: SparkSession, table: String): java.io.File = {
     val uri = spark.sessionState.catalog
@@ -91,8 +115,9 @@ private[graft] object PostingCompaction {
     * per bucket. Probe A/B at 8 buckets / 8,552 input files: old form
     * 2,106 files in 8.4 s; pinned scan 8 files in 3.9 s; a path-based
     * read that keeps the repartition also lands 8 but pays the
-    * shuffle (5.6 s). The repartition stays as a belt-and-braces
-    * bound (it self-elides against the pinned bucketed scan).
+    * shuffle (5.6 s). [[write]]'s repartition stays as a
+    * belt-and-braces bound (it self-elides against the pinned bucketed
+    * scan).
     *
     * SWAP (VERDICT r17 #2, recovery hardened per VERDICT r18 #1):
     * there is no atomic two-table swap in the catalog, so the
@@ -124,11 +149,7 @@ private[graft] object PostingCompaction {
     val autoKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
     val prevAuto = spark.conf.get(autoKey)
     spark.conf.set(autoKey, "false")
-    try spark.table(table)
-      .repartition(buckets, org.apache.spark.sql.functions.col(bucketCol))
-      .write.mode("overwrite")
-      .bucketBy(buckets, bucketCol).sortBy(bucketCol)
-      .format("parquet").saveAsTable(side)
+    try write(spark.table(table), side, bucketCol, buckets, "overwrite")
     finally spark.conf.set(autoKey, prevAuto)
     spark.sql(s"ALTER TABLE $table RENAME TO $old"): Unit
     spark.sql(s"ALTER TABLE $side RENAME TO $table"): Unit
@@ -157,11 +178,23 @@ private[graft] object PostingCompaction {
   * provably not shrinking the table, so re-firing a full-table
   * rewrite on every batch is a compaction storm, not a remedy.
   *
+  * Call [[maybeCompact]] after each absorb. The same dial serves every
+  * posting table; only the key column differs (`cbk`, `csh`, `cbkt` —
+  * each gate's `postingKey`). Run the admission JVM at a BOUNDED heap
+  * (PERF §48: 16 GiB stays flat over 1,000+ batches, while G1 at
+  * 100 GiB grew multi-GB young generations whose evacuation pauses
+  * landed as 40–131 s batch spikes in the r16 soak;
+  * [[graft.tools.AdmissionPipelineSoak.heapWarning]] is the startup
+  * check).
+  *
   * Not thread-safe — one admission loop owns one dial, the same way
-  * it owns the table. */
-final class CompactionDial private[streaming] (
-    val table: String, stagedBaseline: Int, val filesFactor: Double,
-    buckets: Int, bucketCol: String) {
+  * it owns the table.
+  *
+  * @param keyCol         the column the table is bucketed and sorted on
+  * @param stagedBaseline the file count the table's stage call returned */
+final class CompactionDial(
+    val table: String, keyCol: String, stagedBaseline: Int,
+    val filesFactor: Double = 2.0, buckets: Int = 64) {
   require(stagedBaseline > 0, s"stagedBaseline must be > 0, got $stagedBaseline")
   require(filesFactor >= 1.0, s"filesFactor must be >= 1.0, got $filesFactor")
 
@@ -285,7 +318,7 @@ final class CompactionDial private[streaming] (
     val files = PostingCompaction.fileCount(spark, table)
     if (!shouldFire(files)) false
     else {
-      PostingCompaction.rewrite(spark, table, buckets, bucketCol)
+      PostingCompaction.rewrite(spark, table, buckets, keyCol)
       rekey(PostingCompaction.fileCount(spark, table), files)
       true
     }

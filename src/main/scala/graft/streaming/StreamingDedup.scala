@@ -25,7 +25,9 @@ import graft.operators.{DedupOps, MinHashParams}
   * own shingles (no corpus access); the static corpus bands join
   * against each micro-batch. The 100 TB layout is
   * [[stageCorpusBands]]: the band posting list bucketed+sorted on the
-  * band key once, so every micro-batch probe
+  * band key once in the shared posting layout
+  * ([[PostingCompaction.write]]; [[absorbPostings]] appends the same
+  * rows the same way), so every micro-batch probe
   * ([[nearDupMatchesBucketed]]) shuffles only the batch side and the
   * corpus joins in place off its buckets.
   */
@@ -79,15 +81,8 @@ object StreamingDedup {
     *                  staged table from `DedupOps.minhashSignatures`
     */
   def nearDupMatches(stream: DataFrame, corpusSig: DataFrame,
-                     p: MinHashParams = DedupOps.defaultParams): DataFrame = {
-    val corpusBands = DedupOps.bandKeysOf(corpusSig, p)
-      .withColumnRenamed("doc_id", "corpus_id")
-      .withColumnRenamed("bk", "cbk")
-    val corpusArr = corpusSig.select(col("doc_id").as("corpus_id"),
-      array((0 until p.numHashes).map(i => col(s"mh$i")): _*).as("__csig"))
-    matchesAgainst(stream,
-      corpusBands.join(corpusArr, "corpus_id"), p)
-  }
+                     p: MinHashParams = DedupOps.defaultParams): DataFrame =
+    matchesAgainst(stream, postingRows(sigArray(corpusSig, p), p), p)
 
   /** The estimated-agreement count between the stream's `__sig` and
     * the corpus row's `__csig` — the native one-pass codegen form
@@ -112,14 +107,30 @@ object StreamingDedup {
       .select("new_id", "corpus_id", "est_jaccard")
       .dropDuplicates("new_id", "corpus_id")
 
+  /** The band posting table's key column. */
+  val postingKey = "cbk"
+
+  /** A `(doc_id, mh0..mhN)` signature table as `(corpus_id, __sig)`. */
+  private def sigArray(sig: DataFrame, p: MinHashParams): DataFrame =
+    sig.select(col("doc_id").as("corpus_id"),
+      array((0 until p.numHashes).map(i => col(s"mh$i")): _*).as("__sig"))
+
+  /** Band posting rows `(cbk, corpus_id, __csig)` of a
+    * `(corpus_id, __sig)` frame — what [[stageCorpusBands]] and
+    * [[absorbPostings]] both write. */
+  private def postingRows(sigs: DataFrame, p: MinHashParams): DataFrame =
+    sigs.withColumn(postingKey, explode(expr(DedupOps.bandArrayExpr(p))))
+      .select(col(postingKey), col("corpus_id"), col("__sig").as("__csig"))
+
   /** ONE-TIME corpus-side layout for continuous admission: the band
-    * posting list `(cbk, corpus_id, __csig)` written as a parquet
-    * table BUCKETED AND SORTED on the band key. Every subsequent
-    * micro-batch probe ([[nearDupMatchesBucketed]]) then plans a
-    * sort-merge join in which the corpus side is read bucket-aligned
-    * straight off its files — Spark shuffles and sorts ONLY the
-    * micro-batch side, into `buckets` partitions; the 100 TB corpus
-    * is never exchanged again, per batch or ever.
+    * posting list `(cbk, corpus_id, __csig)` written in the
+    * [[PostingCompaction.write]] layout, BUCKETED AND SORTED on the
+    * band key. Every subsequent micro-batch probe
+    * ([[nearDupMatchesBucketed]]) then plans a sort-merge join in which
+    * the corpus side is read bucket-aligned straight off its files —
+    * Spark shuffles and sorts ONLY the micro-batch side, into `buckets`
+    * partitions; the 100 TB corpus is never exchanged again, per batch
+    * or ever.
     *
     * The signature array is DENORMALIZED into the posting list
     * (numBands copies per doc) so a probe is a single join — no
@@ -127,19 +138,15 @@ object StreamingDedup {
     * 8-hash preset that is 4 copies of a 64-byte array; for the
     * 128/16 production preset, where 16 copies of 1 KiB start to
     * matter, stage a second table bucketed on corpus_id instead and
-    * split the probe into two bucket-aligned joins. */
-  /** Returns the staged table's data-file count — the BASELINE for the
-    * file-count compaction trigger ([[compactionDial]]). */
+    * split the probe into two bucket-aligned joins.
+    *
+    * Returns the staged table's data-file count — the BASELINE for
+    * the table's [[CompactionDial]]. */
   def stageCorpusBands(spark: SparkSession, corpusSig: DataFrame,
                        table: String, buckets: Int = 64,
                        p: MinHashParams = DedupOps.defaultParams): Int = {
-    corpusSig.select(col("doc_id").as("corpus_id"),
-        array((0 until p.numHashes).map(i => col(s"mh$i")): _*).as("__sig"))
-      .withColumn("cbk", explode(expr(DedupOps.bandArrayExpr(p))))
-      .select(col("cbk"), col("corpus_id"), col("__sig").as("__csig"))
-      .write.mode("overwrite")
-      .bucketBy(buckets, "cbk").sortBy("cbk")
-      .format("parquet").saveAsTable(table)
+    PostingCompaction.write(postingRows(sigArray(corpusSig, p), p),
+      table, postingKey, buckets, "overwrite")
     PostingCompaction.fileCount(spark, table)
   }
 
@@ -151,60 +158,23 @@ object StreamingDedup {
                              p: MinHashParams = DedupOps.defaultParams): DataFrame =
     matchesAgainst(stream, spark.table(table), p)
 
-  /** ABSORB admitted documents into the bucketed band posting table
-    * (the admission-loop append the soak inlined until r20): narrow
-    * one-pass signatures → band postings → append, repartitioned to
-    * ONE WRITER PER TOUCHED BUCKET (≤ `buckets` files per absorb — the
-    * §57 geometry; an unrepartitioned append lands tasks × buckets).
-    * At-least-once replay duplicates a corpus_id's postings; that is
+  /** ABSORB admitted documents into the bucketed band posting table:
+    * the narrow one-pass signatures of [[withSignature]] → the same
+    * band postings [[stageCorpusBands]] writes → append, one writer
+    * per touched bucket (≤ `buckets` files per absorb). At-least-once
+    * replay duplicates a corpus_id's postings; that is
     * match-invisible (every probe ends in a pair-level
     * dropDuplicates) and storage-bounded by the next compaction
     * rewrite's pass over the table. */
   def absorbPostings(spark: SparkSession, admitted: DataFrame, table: String,
                      buckets: Int = 64,
                      p: MinHashParams = DedupOps.defaultParams): Unit =
-    graft.operators.DedupOps.minhashSignaturesOf(admitted)
-      .select(col("doc_id").as("corpus_id"),
-        array((0 until p.numHashes).map(i => col(s"mh$i")): _*).as("__sig"))
-      .withColumn("cbk", explode(expr(DedupOps.bandArrayExpr(p))))
-      .select(col("cbk"), col("corpus_id"), col("__sig").as("__csig"))
-      .repartition(buckets, col("cbk"))
-      .write.mode("append")
-      .bucketBy(buckets, "cbk").sortBy("cbk")
-      .format("parquet").saveAsTable(table)
+    PostingCompaction.write(
+      postingRows(withSignature(admitted, p)
+        .select(col("doc_id").as("corpus_id"), col("__sig")), p),
+      table, postingKey, buckets, "append")
 
   /** Posting-table data-file count (the compaction trigger input). */
   def postingFileCount(spark: SparkSession, table: String): Int =
     PostingCompaction.fileCount(spark, table)
-
-  /** File-count-triggered compaction dial for a band posting table
-    * that ABSORBS admitted batches (VERDICT r15 #6, PERF §41): appends
-    * grow the posting table by ~one file per touched bucket per batch,
-    * and the soak measured probe latency creeping +35% over 100
-    * batches from exactly that (files 2,048 → 5,248; bytes only +14%).
-    * Call `maybeCompact` after each absorb: when the file count
-    * crosses the threshold the table is rewritten once — bucketed
-    * layout and name preserved — and probe latency returns to its
-    * staged baseline. FLOOR-KEYED (VERDICT r16 #1, r17 #1): the
-    * [[CompactionDial]] starts from the staged file count and re-keys
-    * off the measured post-compaction landing after every firing (so
-    * the factor means what it says against the table's actual
-    * compacted self even if that ever drifts above the baseline) and
-    * REJECTS an ineffective landing — the r17 soak's ratchet, where a
-    * defective rewrite's inflated landings were adopted as successive
-    * floors. With the fixed rewrite a landing is ≤ buckets files (one
-    * writer per bucket, zero exchange). See PERF §48/§49.
-    *
-    * Heap sizing note for admission workloads (PERF §48): run the
-    * admission JVM at a BOUNDED heap (the repo-standard 16 GiB stays
-    * flat over 1,000+ batches). An oversized heap is not safer — G1
-    * at 100 GiB grows multi-GB young generations whose evacuation
-    * pauses landed as 40–131 s batch spikes in the r16 soak;
-    * [[graft.tools.AdmissionPipelineSoak.heapWarning]] is the startup check.
-    *
-    * @param baselineFiles the count [[stageCorpusBands]] returned */
-  def compactionDial(table: String, baselineFiles: Int,
-                     filesFactor: Double = 2.0,
-                     buckets: Int = 64): CompactionDial =
-    new CompactionDial(table, baselineFiles, filesFactor, buckets, "cbk")
 }

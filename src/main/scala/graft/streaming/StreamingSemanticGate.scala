@@ -15,7 +15,9 @@ import graft.operators.EmbeddingOps
   * batch `EmbeddingOps.semanticDecontaminate`, q53 — this is its
   * continuous form).
   *
-  * The 100 TB layout mirrors [[StreamingDedup.stageCorpusBands]]:
+  * The 100 TB layout is the shared posting layout
+  * ([[PostingCompaction.write]], also behind [[StreamingDedup]] and
+  * [[StreamingSpanGate]]):
   *
   *   - ONE-TIME corpus staging ([[stageCorpusVectors]]): every corpus
   *     vector is int8-quantized (`graft.functions.VecQ8`; at dim 64
@@ -28,7 +30,8 @@ import graft.operators.EmbeddingOps
   *     component), its
   *     quantized norm precomputed, its sign-LSH bucket id
   *     assigned (same planes as q26/q27), and the table written
-  *     BUCKETED AND SORTED on the bucket id.
+  *     BUCKETED AND SORTED on the bucket id; [[absorb]] appends the
+  *     same rows in the same layout.
   *   - PER MICRO-BATCH probe ([[semanticMatches]]): the batch side
   *     quantizes, norms and buckets itself in one narrow codegen map
   *     (vec_q8 + dot_product + the plane sums — no lambda, no
@@ -94,16 +97,21 @@ object StreamingSemanticGate {
       .where(col("__qn") > 0)
   }
 
+  /** The vector posting table's key column. */
+  val postingKey = "cbkt"
+
   /** Corpus-side layout rows: `(cbkt, corpus_id, __cq, __cqn)`, one
-    * row per (vector, plane set). */
+    * row per (vector, plane set) — what [[stageCorpusVectors]] and
+    * [[absorb]] both write. */
   private def corpusRows(src: DataFrame, idCol: String, vecCol: String,
                          planes: Int, planeSets: Int): DataFrame =
     withQuantized(src.select(col(idCol), col(vecCol)), vecCol, planes, planeSets)
-      .select(explode(col("__bkts")).as("cbkt"), col(idCol).as("corpus_id"),
+      .select(explode(col("__bkts")).as(postingKey), col(idCol).as("corpus_id"),
         col("__q").as("__cq"), col("__qn").as("__cqn"))
 
-  /** ONE-TIME corpus-side layout: `(cbkt, corpus_id, __cq, __cqn)`
-    * bucketed+sorted on the composite sign-LSH bucket key, one row
+  /** ONE-TIME corpus-side layout: `(cbkt, corpus_id, __cq, __cqn)` in
+    * the [[PostingCompaction.write]] layout, bucketed+sorted on the
+    * composite sign-LSH bucket key, one row
     * per (vector, plane set) — `planeSets` × corpus rows total, the
     * linear space cost of the recall dial. The codes column `__cq`
     * is stored as the RAW int array (values in [-127, 127] —
@@ -112,8 +120,7 @@ object StreamingSemanticGate {
     * is realized AT REST and on every probe read; the probe casts the
     * read codes to array<double> in codegen (exact — see VecQ8's
     * integer-dot note). Returns the staged data file count — the
-    * baseline for a [[CompactionDial]] if the gate absorbs admitted
-    * vectors the [[StreamingDedup]] way.
+    * baseline for the table's [[CompactionDial]].
     *
     * @param corpus frame with `idCol` and `vecCol` (array<float> or
     *               array<double>) */
@@ -122,18 +129,8 @@ object StreamingSemanticGate {
                          idCol: String = "vec_id", vecCol: String = "embedding",
                          planes: Int = EmbeddingOps.numPlanes,
                          planeSets: Int = 1): Int = {
-    corpusRows(corpus, idCol, vecCol, planes, planeSets)
-      // one writer per bucket: without this the bucketed write runs at
-      // the source's task width and lands ~tasks × buckets files (PERF
-      // §57 measured 764 tiny files for a 20k-vector corpus, and
-      // per-file open cost dominated every probe batch). The source
-      // here is a fresh computation — not an already-bucketed scan —
-      // so EnsureRequirements keeps this exchange (the PERF §49
-      // elision needs the scan to CLAIM the partitioning).
-      .repartition(buckets, col("cbkt"))
-      .write.mode("overwrite")
-      .bucketBy(buckets, "cbkt").sortBy("cbkt")
-      .format("parquet").saveAsTable(table)
+    PostingCompaction.write(corpusRows(corpus, idCol, vecCol, planes, planeSets),
+      table, postingKey, buckets, "overwrite")
     PostingCompaction.fileCount(spark, table)
   }
 
@@ -167,53 +164,21 @@ object StreamingSemanticGate {
   /** ABSORB admitted vectors into the staged corpus (the
     * [[StreamingDedup]] absorbing-gate pattern at the embedding
     * level): quantize+bucket the admitted frame the staging way and
-    * APPEND it — bucketBy keeps the layout, so the very next
+    * APPEND it — the shared layout keeps the buckets, so the very next
     * [[semanticMatches]] probe sees the new vectors without any
-    * restage, still corpus-exchange-free. The append repartitions on
-    * the bucket key first (one writer per touched bucket, ≤ `buckets`
-    * files per absorb instead of tasks × buckets — the §57 geometry).
+    * restage, still corpus-exchange-free. The write is the only
+    * action: counting the absorbed vectors would cost a persist and a
+    * Spark job per micro-batch. A caller that wants the count diffs
+    * the table's row count, `planeSets` rows per vector.
     *
-    * Returns the number of VECTORS absorbed (not rows — a vector
-    * lands `planeSets` times) when `countAbsorbed`; a high-frequency
-    * admission loop that ignores the count passes false and saves a
-    * Spark job per micro-batch — the write is then the only action,
-    * no persist, and the return is -1 (VERDICT r19 #7).
-    *
-    * File growth is ~buckets files per absorb: long-running loops
-    * hold a [[compactionDial]] and call `maybeCompact` after each
+    * File growth is ≤ `buckets` files per absorb: long-running loops
+    * hold a [[CompactionDial]] and call `maybeCompact` after each
     * absorb, exactly like the band-posting gate. */
   def absorb(spark: SparkSession, admitted: DataFrame, table: String,
              buckets: Int = 64,
              idCol: String = "vec_id", vecCol: String = "embedding",
              planes: Int = EmbeddingOps.numPlanes,
-             planeSets: Int = 1,
-             countAbsorbed: Boolean = true): Long = {
-    val rows = corpusRows(admitted, idCol, vecCol, planes, planeSets)
-      .repartition(buckets, col("cbkt"))
-    def write(df: DataFrame): Unit =
-      df.write.mode("append")
-        .bucketBy(buckets, "cbkt").sortBy("cbkt")
-        .format("parquet").saveAsTable(table)
-    if (!countAbsorbed) { write(rows); -1L }
-    else {
-      val persisted =
-        rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val n = persisted.count() / planeSets // one quantize pass, shared with the write
-        write(persisted)
-        n
-      } finally { persisted.unpersist(): Unit }
-    }
-  }
-
-  /** Floor-keyed compaction dial for the quantized-vector corpus
-    * table — [[graft.streaming.CompactionDial]] on the `cbkt` bucket
-    * column, same guards (pre-count-keyed effectiveness check,
-    * disarm-after-storm, crash recovery on entry).
-    *
-    * @param baselineFiles the count [[stageCorpusVectors]] returned */
-  def compactionDial(table: String, baselineFiles: Int,
-                     filesFactor: Double = 2.0,
-                     buckets: Int = 64): CompactionDial =
-    new CompactionDial(table, baselineFiles, filesFactor, buckets, "cbkt")
+             planeSets: Int = 1): Unit =
+    PostingCompaction.write(corpusRows(admitted, idCol, vecCol, planes, planeSets),
+      table, postingKey, buckets, "append")
 }

@@ -15,9 +15,11 @@ import graft.functions.SpanHashes
   *     spans the corpus already has adds no new signal (Lee et al.'s
   *     substring-duplication argument at span granularity).
   *
-  * Scale shape mirrors [[StreamingDedup]]'s bucketed posting layout:
-  * the corpus's distinct span hashes are written ONCE, bucketed and
-  * sorted on the hash ([[stageCorpusSpans]]); each micro-batch emits
+  * Scale shape is the shared posting layout ([[PostingCompaction.write]],
+  * also behind [[StreamingDedup]] and [[StreamingSemanticGate]]): the
+  * corpus's distinct span hashes are written ONCE, bucketed and sorted
+  * on the hash ([[stageCorpusSpans]], and [[absorbSpans]] appends in
+  * the same layout); each micro-batch emits
   * its own span hashes NARROWLY (the native one-pass
   * [[graft.functions.SpanHashes]] expression — no shuffle, no window
   * state, legal in any streaming projection), shuffles only itself
@@ -44,19 +46,27 @@ object StreamingSpanGate {
     docs.withColumn("__shs", SpanHashes.span_hashes(col("text"), k))
       .withColumn("n_spans", size(col("__shs")))
 
+  /** The span posting table's key column. */
+  val postingKey = "csh"
+
+  /** DISTINCT span hashes of `docs` as posting rows `(csh)` — what
+    * [[stageCorpusSpans]] and [[absorbSpans]] both write. */
+  private def postingRows(docs: DataFrame, k: Int): DataFrame =
+    docs.select(explode(SpanHashes.span_hashes(col("text"), k)).as(postingKey))
+      .distinct()
+
   /** ONE-TIME corpus layout: DISTINCT span hashes of the corpus (or of
-    * an eval suite, for decontamination), bucketed+sorted on the hash.
+    * an eval suite, for decontamination) in the
+    * [[PostingCompaction.write]] layout, bucketed+sorted on the hash.
     * The posting row is 8 bytes — at 10^11 corpus spans the table is
     * sub-TB and every probe joins it in place, bucket-aligned, with
-    * zero corpus-side exchange per micro-batch. */
+    * zero corpus-side exchange per micro-batch. Returns the staged
+    * data-file count, the table's [[CompactionDial]] baseline. */
   def stageCorpusSpans(spark: SparkSession, corpus: DataFrame,
                        table: String, buckets: Int = 64,
                        k: Int = defaultSpanLen): Int = {
-    corpus.select(explode(SpanHashes.span_hashes(col("text"), k)).as("csh"))
-      .distinct()
-      .write.mode("overwrite")
-      .bucketBy(buckets, "csh").sortBy("csh")
-      .format("parquet").saveAsTable(table)
+    PostingCompaction.write(postingRows(corpus, k), table, postingKey,
+      buckets, "overwrite")
     PostingCompaction.fileCount(spark, table)
   }
 
@@ -73,25 +83,9 @@ object StreamingSpanGate {
     * bucket. */
   def absorbSpans(spark: SparkSession, admitted: DataFrame, table: String,
                   buckets: Int = 64, k: Int = defaultSpanLen): Unit =
-    admitted.select(explode(SpanHashes.span_hashes(col("text"), k)).as("csh"))
-      .distinct()
-      .join(spark.table(table), Seq("csh"), "left_anti")
-      .repartition(buckets, col("csh"))
-      .write.mode("append")
-      .bucketBy(buckets, "csh").sortBy("csh")
-      .format("parquet").saveAsTable(table)
-
-  /** Floor-keyed compaction dial for a span posting table that absorbs
-    * admitted documents' spans over time — same trigger, rewrite and
-    * geometry fix as [[StreamingDedup.compactionDial]] (PERF §41's
-    * creep mechanism is per-file cost, shared by every bucketed
-    * posting layout; VERDICT r16 #1, PERF §48/§49): after every
-    * compaction the threshold re-keys off the measured
-    * post-compaction file count instead of the staged baseline. */
-  def compactionDial(table: String, baselineFiles: Int,
-                     filesFactor: Double = 2.0,
-                     buckets: Int = 64): CompactionDial =
-    new CompactionDial(table, baselineFiles, filesFactor, buckets, "csh")
+    PostingCompaction.write(
+      postingRows(admitted, k).join(spark.table(table), Seq(postingKey), "left_anti"),
+      table, postingKey, buckets, "append")
 
   /** Span gate: for each document, count how many of its `n_spans`
     * k-token windows hash-match a corpus span (`matched_spans` counts

@@ -11,8 +11,11 @@ class ApiSurfaceSpec extends SparkSpec {
   import spark.implicits._
 
   /** (file name, text) of every Scala source under src/main. */
-  private def mainSources: Seq[(String, String)] = {
-    val root = new java.io.File("src/main")
+  private def mainSources: Seq[(String, String)] = sourcesUnder("src/main")
+
+  /** (file name, text) of every Scala source under `dir`. */
+  private def sourcesUnder(dir: String): Seq[(String, String)] = {
+    val root = new java.io.File(dir)
     assert(root.isDirectory, s"source tree not found at ${root.getAbsolutePath}")
     def scalaFiles(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(scalaFiles)
@@ -130,5 +133,29 @@ class ApiSurfaceSpec extends SparkSpec {
     assert(unlisted.isEmpty, s"system properties outside the allowlist: ${unlisted.distinct}")
     assert(named.map(_._1).toSet == allowed.keySet,
       "an allowlisted property no longer read in the source must leave the allowlist")
+  }
+
+  test("the admission posting-table layout is written in one place") {
+    // stage, absorb and compaction all go through
+    // PostingCompaction.write; a second bucketBy under streaming is a
+    // copy of the layout that can drift from it
+    val writes = sourcesUnder("src/main/scala/graft/streaming").flatMap { case (file, text) =>
+      "bucketBy\\(".r.findAllIn(text).map(_ => file)
+    }
+    assert(writes == Seq("PostingCompaction.scala"),
+      s"bucketBy( under graft/streaming, expected once in PostingCompaction: $writes")
+  }
+
+  test("perfbench's staged query list matches graft.Bench.stagedNames") {
+    // perfbench keeps its own copy of the list; a query added to or
+    // dropped from one of them silently misses the other
+    val f = java.nio.file.Paths.get("perfbench/src/main/scala/perfbench/Queries.scala")
+    assert(java.nio.file.Files.exists(f), s"not found: ${f.toAbsolutePath}")
+    val text = java.nio.file.Files.readString(f)
+    val decl = """val staged: Seq\[String\] = Seq\(([^)]*)\)""".r
+    val listed = decl.findFirstMatchIn(text).map(m =>
+      "\"([^\"]+)\"".r.findAllMatchIn(m.group(1)).map(_.group(1)).toSeq)
+    assert(listed.contains(Bench.stagedNames),
+      s"perfbench staged list $listed differs from Bench.stagedNames ${Bench.stagedNames}")
   }
 }

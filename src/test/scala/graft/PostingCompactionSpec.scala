@@ -1,6 +1,8 @@
 package graft
 
-import graft.streaming.{PostingCompaction, StreamingDedup}
+import graft.operators.DedupOps
+import graft.streaming.{CompactionDial, PostingCompaction, StreamingDedup,
+  StreamingSemanticGate, StreamingSpanGate}
 
 /** Crash-window recovery for the posting-table compaction swap
   * (VERDICT r18 #1 / ADVICE r18 high): the rename-out/rename-in swap
@@ -88,7 +90,7 @@ class PostingCompactionSpec extends SparkSpec {
       crashMidSwap(t)
       // the admission loop's own next tick: must recover, then apply
       // the normal threshold logic (here: over threshold -> compacts)
-      val dial = StreamingDedup.compactionDial(t, math.max(1, baseline / 2),
+      val dial = new CompactionDial(t, StreamingDedup.postingKey, math.max(1, baseline / 2),
         filesFactor = 1.0, buckets = 4)
       dial.maybeCompact(spark): Unit
       assert(contents(t) == expected,
@@ -102,6 +104,37 @@ class PostingCompactionSpec extends SparkSpec {
     dropAll(t)
     intercept[IllegalArgumentException] {
       PostingCompaction.rewrite(spark, t, buckets = 4, bucketCol = "cbk")
+    }
+  }
+
+  test("each posting table stages at <= buckets files from a multi-partition source") {
+    // a corpus arriving in several partitions is the production shape;
+    // a bucketed write without one writer per bucket lands up to
+    // tasks x buckets files. AQE coalescing is off so the span stage's
+    // distinct keeps its shuffle width, as it does at corpus scale, and
+    // 6 buckets is not a multiple of the session's 4 shuffle
+    // partitions, so the distinct's hash partitions do not line up
+    // with the buckets (a multiple would hide the defect: each task
+    // would then hold whole buckets)
+    val buckets = 6
+    val docs = Tables.documents(spark, sf).select("doc_id", "text").repartition(4)
+    val vecs = Tables.embeddings(spark, sf).repartition(4)
+    val tables = Seq("pc_stage_bands", "pc_stage_spans", "pc_stage_vectors")
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try {
+      val staged = Seq(
+        StreamingDedup.stageCorpusBands(spark, DedupOps.minhashSignaturesOf(docs),
+          tables(0), buckets),
+        StreamingSpanGate.stageCorpusSpans(spark, docs, tables(1), buckets),
+        StreamingSemanticGate.stageCorpusVectors(spark, vecs, tables(2), buckets))
+      val files = tables.zip(staged)
+      assert(files.forall { case (_, n) => n > 0 && n <= buckets },
+        s"staged part files per table, each must be in [1, $buckets]: $files")
+    } finally {
+      spark.conf.set(key, prev)
+      tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.operators.DedupOps
-import graft.streaming.StreamingDedup
+import graft.streaming.{CompactionDial, StreamingDedup}
 
 class StreamingDedupSpec extends SparkSpec {
   import spark.implicits._
@@ -52,7 +52,7 @@ class StreamingDedupSpec extends SparkSpec {
   test("floor-keyed dial re-keys its threshold off the measured post-compaction floor (VERDICT r16 #1)") {
     // injected counts replaying the r16 soak's geometry (PERF §48):
     // staged baseline 2,048 files, post-compaction floor ~3,200
-    val dial = StreamingDedup.compactionDial("t", 2048, filesFactor = 4.0)
+    val dial = new CompactionDial("t", StreamingDedup.postingKey, 2048, filesFactor = 4.0)
     assert(dial.currentFloor == 2048 && dial.threshold == 8192.0)
     assert(!dial.shouldFire(8192) && dial.shouldFire(8193))
     // fired at 8,193 files, landed 3,200: a 2.6× shrink, adopted
@@ -77,7 +77,7 @@ class StreamingDedupSpec extends SparkSpec {
     // count and the staged baseline: the floor stays put, the
     // rejection is counted, and the dial keeps firing at the
     // unratcheted cadence until the disarm bound.
-    val dial = StreamingDedup.compactionDial("t", 2048, filesFactor = 2.0)
+    val dial = new CompactionDial("t", StreamingDedup.postingKey, 2048, filesFactor = 2.0)
     assert(dial.threshold == 4096.0 && dial.rejectedLandings == 0)
     dial.rekey(2572, preCompactionFiles = 4115)
     assert(dial.currentFloor == 2048,
@@ -115,7 +115,7 @@ class StreamingDedupSpec extends SparkSpec {
     // every-check full-table rewrite storm. Judged against the
     // pre-compaction count with the staged baseline as an absolute
     // floor, the same landing is adopted.
-    val dial = StreamingDedup.compactionDial("t", 2048, filesFactor = 1.6)
+    val dial = new CompactionDial("t", StreamingDedup.postingKey, 2048, filesFactor = 1.6)
     assert(dial.threshold == 2048 * 1.6)
     // fired just above threshold (3,300 files), landed at the staged
     // baseline: compact by definition, whatever the shrink ratio
@@ -244,7 +244,8 @@ class StreamingDedupSpec extends SparkSpec {
       assert(before.nonEmpty, "fixture must produce matches")
       // injected threshold just below the current growth -> fires
       val factor = math.max(1.0, grown.toDouble / baseline * 0.9)
-      val first = StreamingDedup.compactionDial(table, baseline, factor, buckets = 8)
+      val first = new CompactionDial(table, StreamingDedup.postingKey, baseline, factor,
+        buckets = 8)
       assert(first.maybeCompact(spark),
         s"dial must fire at $grown files vs threshold ${first.threshold}")
       // LANDING BOUND (VERDICT r17 #1): the pinned-bucketed-scan
@@ -272,7 +273,7 @@ class StreamingDedupSpec extends SparkSpec {
           s"corpus side exchanged after compaction:\n$plan")
       } finally spark.conf.set(key, prev)
       // below threshold now -> no-op
-      assert(!StreamingDedup.compactionDial(table, baseline, 1000.0, buckets = 8)
+      assert(!new CompactionDial(table, StreamingDedup.postingKey, baseline, 1000.0, buckets = 8)
         .maybeCompact(spark))
       // FLOOR-KEYED dial end-to-end on the same table (VERDICT r16 #1):
       // regrow it, fire through maybeCompact, observe the re-key to the
@@ -290,7 +291,7 @@ class StreamingDedupSpec extends SparkSpec {
       }
       val regrown = StreamingDedup.postingFileCount(spark, table)
       val beforeDial = pairs() // appends 3-4 may add legitimate matches
-      val dial = StreamingDedup.compactionDial(table, baseline,
+      val dial = new CompactionDial(table, StreamingDedup.postingKey, baseline,
         math.max(1.0, regrown.toDouble / baseline * 0.9), buckets = 8)
       assert(dial.currentFloor == baseline, "dial starts keyed to the staged baseline")
       assert(dial.maybeCompact(spark), "dial must fire on the regrown table")

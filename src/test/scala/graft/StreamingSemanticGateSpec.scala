@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.operators.EmbeddingOps
-import graft.streaming.StreamingSemanticGate
+import graft.streaming.{CompactionDial, StreamingSemanticGate}
 
 class StreamingSemanticGateSpec extends SparkSpec {
   import spark.implicits._
@@ -120,9 +120,12 @@ class StreamingSemanticGateSpec extends SparkSpec {
         "twin of an unabsorbed vector must not match")
       // absorb vectors 0-9; the SAME probe now flags the twin against
       // the absorbed copy — the absorbing property
-      val absorbed = StreamingSemanticGate.absorb(
+      val rowsBefore = spark.table(table).count()
+      StreamingSemanticGate.absorb(
         spark, emb.where(col("vec_id") < 10), table, buckets)
-      assert(absorbed == 10L, s"expected 10 vectors absorbed, got $absorbed")
+      val absorbedRows = spark.table(table).count() - rowsBefore
+      // one posting row per (vector, plane set): 10 vectors × 1 set
+      assert(absorbedRows == 10L, s"expected 10 vectors absorbed, got $absorbedRows rows")
       assert(probeTwin(of = 7L, asId = 500002L).contains(7L),
         "twin of an absorbed vector must match it")
       // growth + floor-keyed compaction through the shared dial. The
@@ -131,7 +134,7 @@ class StreamingSemanticGateSpec extends SparkSpec {
       // so a second absorb pushes past floor + buckets first
       val grown1 = graft.streaming.StreamingDedup.postingFileCount(spark, table)
       assert(grown1 > staged, "absorb must append files")
-      val dial = StreamingSemanticGate.compactionDial(table, staged,
+      val dial = new CompactionDial(table, StreamingSemanticGate.postingKey, staged,
         filesFactor = 1.0, buckets)
       assert(!dial.shouldFire(staged + buckets),
         "a single absorb's worst-case landing must never trip the dial (storm guard)")
@@ -216,22 +219,18 @@ class StreamingSemanticGateSpec extends SparkSpec {
       "the second plane set must recover at least one nprobe=1 miss")
   }
 
-  test("absorb with countAbsorbed=false skips the count job, returns -1, stays probe-visible") {
+  test("absorbed vectors stay probe-visible without a restage") {
     val emb = Tables.embeddings(spark, sf)
     StreamingSemanticGate.stageCorpusVectors(
       spark, emb.where(col("vec_id") >= 10), table, buckets)
     try {
-      val jobsBefore = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
-      val r = StreamingSemanticGate.absorb(
-        spark, emb.where(col("vec_id") < 10), table, buckets,
-        countAbsorbed = false)
-      assert(r == -1L, "uncounted absorb must return the -1 sentinel")
+      StreamingSemanticGate.absorb(
+        spark, emb.where(col("vec_id") < 10), table, buckets)
       val twin = emb.where(col("vec_id") === 7)
         .select(lit(600001L).as("vec_id"), col("embedding"))
       assert(StreamingSemanticGate.semanticMatches(twin, spark, table, minCos = 0.8)
         .select("corpus_id").as[Long].collect().toSet.contains(7L),
-        "uncounted absorb must still land the vectors")
-      val _ = jobsBefore // job-count deltas are scheduler-dependent; visibility is the contract
+        "absorb must land the vectors")
     } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 

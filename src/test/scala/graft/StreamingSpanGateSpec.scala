@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.streaming.StreamingSpanGate
+import graft.streaming.{CompactionDial, StreamingSpanGate}
 
 class StreamingSpanGateSpec extends SparkSpec {
   import spark.implicits._
@@ -88,7 +88,8 @@ class StreamingSpanGateSpec extends SparkSpec {
         .as[(Long, Int, Long)].collect().toSet
       val before = verdicts()
       val factor = math.max(1.0, grown.toDouble / baseline * 0.9)
-      val dial = StreamingSpanGate.compactionDial(table, baseline, factor, buckets = 8)
+      val dial = new CompactionDial(table, StreamingSpanGate.postingKey, baseline, factor,
+        buckets = 8)
       assert(dial.maybeCompact(spark),
         s"dial must fire at $grown files vs threshold ${dial.threshold}")
       val landed = graft.streaming.StreamingDedup.postingFileCount(spark, table)
@@ -99,7 +100,7 @@ class StreamingSpanGateSpec extends SparkSpec {
       assert(!spark.catalog.tableExists(s"${table}__compacting") &&
         !spark.catalog.tableExists(s"${table}__old"),
         "rewrite must clean up its swap tables")
-      assert(!StreamingSpanGate.compactionDial(table, baseline, 1000.0, buckets = 8)
+      assert(!new CompactionDial(table, StreamingSpanGate.postingKey, baseline, 1000.0, buckets = 8)
         .maybeCompact(spark))
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $table")

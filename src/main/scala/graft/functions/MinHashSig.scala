@@ -28,14 +28,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * which is the shape that survives a 1000-executor 100 TB corpus
   * (zero exchange, linear in corpus bytes).
   *
-  * Documents with fewer than 2 tokens have no shingles and return an
-  * EMPTY array (callers filter `size(sig) > 0`), matching their
-  * absence from the aggregate form's groupBy output.
+  * Documents with fewer than 2 tokens have no shingles and return
+  * NULL, like a NULL text: unsignable is one null test for callers
+  * (`isnotnull`), matching their absence from the aggregate form's
+  * groupBy output.
   */
 case class MinHashSig(child: Expression, numHashes: Int)
     extends UnaryExpression {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = true
 
   override def checkInputDataTypes()
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
@@ -52,7 +54,8 @@ case class MinHashSig(child: Expression, numHashes: Int)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c => {
-      s"${ev.value} = graft.functions.MinHashSig.signature($c, $numHashes);"
+      s"""${ev.value} = graft.functions.MinHashSig.signature($c, $numHashes);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin
     })
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSig =
@@ -71,13 +74,11 @@ object MinHashSig {
       (Array.tabulate(m)(coeffA), Array.tabulate(m)(coeffB))
     })
 
-  private val empty = new GenericArrayData(Array.empty[Long])
-
   def signature(text: UTF8String, n: Int): ArrayData = {
     // tokenization contract: Spark's split(text, ' ') with limit -1
     // (all empty tokens kept) — identical to ShingleHashes
     val toks = text.toString.split(" ", -1)
-    if (toks.length < 2) return empty
+    if (toks.length < 2) return null
     val (a, b) = coeffs(n)
     val sig = new Array[Long](n)
     java.util.Arrays.fill(sig, Long.MaxValue)

@@ -380,9 +380,9 @@ object DedupOps {
 
   // ------------------------------------------------------------ signatures
 
-  /** Aggregate-form signatures (explode → numHashes min() aggs) —
-    * retained as the bit-parity REFERENCE for [[signaturesOf]] (the
-    * production path) and its spec; not on any hot path. */
+  /** Aggregate-form `(doc_id, mh0..mhN)` signatures (explode →
+    * numHashes min() aggs) — the bit-parity REFERENCE the specs check
+    * [[withSignatureAll]]'s array against; not on any hot path. */
   private[graft] def signaturesFrom(sh: DataFrame, p: MinHashParams): DataFrame = {
     val aggs = (0 until p.numHashes).map { i =>
       min(expr(s"(${coeffA(i)} * h + ${coeffB(i)}) % $P")).as(s"mh$i")
@@ -390,46 +390,49 @@ object DedupOps {
     sh.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
   }
 
-  /** One-pass narrow signatures via the native
-    * [[graft.functions.MinHashSig]] expression: the whole signature is
-    * computed inside the documents scan — no shingle explode, no
-    * (numHashes+1)-column hash aggregate, no exchange. Bit-identical
-    * to [[signaturesFrom]] (spec-pinned); docs with < 2 tokens have no
-    * shingles and are absent, matching the groupBy form. */
-  private[graft] def signaturesOf(docs: DataFrame, p: MinHashParams): DataFrame = {
-    val unpacked = col("doc_id") +:
-      (0 until p.numHashes).map(i => col("__sig").getItem(i).as(s"mh$i"))
-    docs
-      .select(col("doc_id"),
-        graft.functions.MinHashSig.minhash_sig(col("text"), p.numHashes).as("__sig"))
-      .where(size(col("__sig")) > 0)
-      .select(unpacked: _*)
-  }
+  /** THE minhash signature producer: attach `__sig` (array<bigint>) to
+    * a frame with a `text` column — every staged, library and
+    * streaming signature comes from here, in this form. One narrow
+    * native pass ([[graft.functions.MinHashSig]]): no explode, no
+    * aggregate, no exchange, legal in any streaming projection;
+    * bit-identical to [[signaturesFrom]]. Docs under two tokens and
+    * NULL texts carry a NULL `__sig`: they cannot near-duplicate
+    * anything (both spec-pinned). */
+  def withSignatureAll(docs: DataFrame, p: MinHashParams = defaultParams): DataFrame =
+    docs.withColumn("__sig", graft.functions.MinHashSig.minhash_sig(col("text"), p.numHashes))
 
-  /** Signature table, staged (or persist()ed when staging is off).
-    * (Tried doc_id-bucketed staging like `doc_sets` for the est-attach
-    * joins in r12: isolated stage times held but the CONCURRENT
-    * stageAll wall went 86 → 97 s — the per-chain saveAsTable catalog
-    * commands and extra repartition serialize against the other seven
-    * chains. Plain parquet staging wins at full concurrency.) */
+  /** `(doc_id, __sig)` of the signable docs of a `(doc_id, text)` frame
+    * — the library entry for corpora not staged under a testdata dir. */
+  def minhashSignaturesOf(docs: DataFrame, p: MinHashParams = defaultParams): DataFrame =
+    withSignatureAll(docs, p).where(col("__sig").isNotNull).select("doc_id", "__sig")
+
+  /** `(doc_id, __sig)` signature table, staged (or persist()ed when
+    * staging is off). (Tried doc_id-bucketed staging like `doc_sets`
+    * for the est-attach joins in r12: isolated stage times held but
+    * the CONCURRENT stageAll wall went 86 → 97 s — the per-chain
+    * saveAsTable catalog commands and extra repartition serialize
+    * against the other seven chains. Plain parquet staging wins at
+    * full concurrency.) */
   private def sigTable(spark: SparkSession, sfDir: String, p: MinHashParams): DataFrame =
     stagingRoot match {
       case None =>
-        signaturesOf(Tables.documents(spark, sfDir), p)
+        minhashSignaturesOf(Tables.documents(spark, sfDir), p)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       case _ =>
         staged(spark, sfDir, s"sig_h${p.numHashes}")(
-          signaturesOf(Tables.documents(spark, sfDir), p))
+          minhashSignaturesOf(Tables.documents(spark, sfDir), p))
     }
 
   /** MinHash signatures: mh_i = min over shingles of (a_i*h + b_i) % P.
-    * One narrow pass over the documents scan (native MinHashSig
-    * expression) — zero exchange. */
+    * One narrow pass over the documents scan — zero exchange. The one
+    * spread of `__sig` into `(doc_id, mh0..mhN)`: the q20/q42 output. */
   def minhashSignatures(spark: SparkSession, sfDir: String): DataFrame =
     minhashSignatures(spark, sfDir, defaultParams)
 
   def minhashSignatures(spark: SparkSession, sfDir: String, p: MinHashParams): DataFrame =
-    sigTable(spark, sfDir, p).orderBy("doc_id")
+    sigTable(spark, sfDir, p)
+      .select(col("doc_id") +: (0 until p.numHashes).map(i => col("__sig")(i).as(s"mh$i")): _*)
+      .orderBy("doc_id")
 
   // shared oracle CTE prefix: documents -> distinct shingle hashes -> signatures
   private val duckToks = "string_split(text, ' ')"
@@ -490,12 +493,6 @@ object DedupOps {
           .orderBy("doc_a", "doc_b")
     }
 
-  /** MinHash signatures over an arbitrary `(doc_id, text)` frame — the
-    * library entry for corpora not staged under a testdata dir. */
-  def minhashSignaturesOf(docs: DataFrame,
-                          p: MinHashParams = defaultParams): DataFrame =
-    signaturesOf(docs, p)
-
   /** LSH candidates over an arbitrary `(doc_id, text)` frame — the
     * library entry for corpora not staged under a testdata dir; no
     * read-through staging, explicit skew guard. */
@@ -503,7 +500,7 @@ object DedupOps {
                       p: MinHashParams = defaultParams,
                       g: BandGuard = BandGuard.default): DataFrame =
     lshCandidatesFrom(
-      signaturesOf(docs, p)
+      minhashSignaturesOf(docs, p)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
       p, g)
 
@@ -526,16 +523,14 @@ object DedupOps {
       s"concat('${b}_', concat_ws('_', $elems))"
     }.mkString("array(", ", ", ")")
 
-  /** (doc_id, bk) band-key stream of a signature frame (mh0..mhN cols). */
+  /** (doc_id, bk) band-key stream of a `(doc_id, __sig)` signature frame. */
   private[graft] def bandKeysOf(sig: DataFrame, p: MinHashParams): DataFrame =
-    sig.select(col("doc_id"),
-        array((0 until p.numHashes).map(i => col(s"mh$i")): _*).as("__sig"))
-      .select(col("doc_id"), explode(expr(bandArrayExpr(p))).as("bk"))
+    sig.select(col("doc_id"), explode(expr(bandArrayExpr(p))).as("bk"))
 
   private[graft] def lshCandidatesFrom(sig: DataFrame, p: MinHashParams, g: BandGuard,
                                        sort: Boolean = true): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // The signature travels as ONE array column from here on: banding,
+    // The signature arrives as ONE array column (`__sig`): banding,
     // the guard key, and the match count then run as small codegen loops
     // instead of p.numHashes unrolled expressions (at 128 hashes the
     // unrolled form dominated staging time), and the guard's shuffle key
@@ -543,8 +538,7 @@ object DedupOps {
     // fingerprint-collapse scheme as the embedding near-dup guard:
     // exactness via compare-to-representative, collisions degrade to
     // un-collapsed rows that the bucket cap still bounds.
-    val arr = sig.select(col("doc_id"),
-      array((0 until p.numHashes).map(i => col(s"mh$i")): _*).as("__sig"))
+    val arr = sig.select("doc_id", "__sig")
     // --- guard stage 1: exact-duplicate collapse before banding -----------
     // Docs sharing a full signature are (estimated-)identical; a group of
     // g identical docs would otherwise contribute g²/2 pairs through EVERY

@@ -370,29 +370,42 @@ object EmbeddingOps {
 
   // --------------------------------------- quantized corpus (batch ANN)
 
+  /** The int8 quantizer with its zero-norm guard, shared by q82, the
+    * staged `emb_q8` table (q83/q84) and the streaming semantic gate:
+    * adds `${prefix}q` (raw VecQ8 codes, array<int> — the at-rest
+    * form), `${prefix}qd` (the same codes as array<double> for the
+    * codegen dot — exact, see q82) and `${prefix}qn` (the quantized
+    * norm), and drops rows whose quantized norm is 0. A zero, empty or
+    * null vector has no direction: its cosine is 0/0 = NaN, which
+    * Spark's DESC sort ranks ABOVE every real score while DuckDB ranks
+    * it differently ([[duckQuantCte]] mirrors the guard, ADVICE r19).
+    * Per-row codegen over the vector — zero shuffle, legal in any
+    * streaming projection. */
+  private[graft] def quantized(df: DataFrame, v: Column, prefix: String = ""): DataFrame = {
+    val (q, qd, qn) = (s"${prefix}q", s"${prefix}qd", s"${prefix}qn")
+    df.withColumn(q, graft.functions.VecQuant.vec_q8(v))
+      .withColumn(qd, col(q).cast("array<double>"))
+      .withColumn(qn, sqrt(dotC(col(qd), col(qd))))
+      .where(col(qn) > 0)
+  }
+
   /** The int8 corpus at rest for BATCH ANN (VERDICT r19 #5): q82
     * proved the quantized arithmetic; this is the staged table that
     * lets the bucketed/IVF probes (q83/q84) read the ~4× narrower
     * codes instead of the float vectors. One NARROW pass over the
-    * corpus computes everything a probe needs — int8 codes
-    * (graft.functions.VecQ8), quantized norm, the legacy sign-LSH
+    * corpus computes everything a probe needs — int8 codes and
+    * quantized norm ([[quantized]]), the legacy sign-LSH
     * bucket (same planes/arithmetic as q26, as a per-row expression —
     * no join, no shuffle), and the IVF nearest-centroid id (the
     * trained float model folded in as codegen literals) — so the
     * float vector column is dropped at the door and never travels
-    * again. Zero-norm vectors are excluded at stage time (no
-    * direction ⇒ NaN cosine; same guard as q82/the streaming gate).
+    * again. Zero-norm vectors are excluded at stage time.
     * Read-through via [[Staging]]; staging off → recomputed per call
     * (the oracle path). */
   private def quantizedVectorsFresh(spark: SparkSession, sfDir: String,
                                     cents: Seq[(Int, Array[Double])]): DataFrame =
-    vectors(spark, sfDir)
-      .withColumn("cent_id", nearestCentroid(cents))
-      .withColumn("q", graft.functions.VecQuant.vec_q8(col("v")))
-      .withColumn("qd0", col("q").cast("array<double>"))
-      .withColumn("qn", sqrt(dotC(col("qd0"), col("qd0"))))
+    quantized(vectors(spark, sfDir).withColumn("cent_id", nearestCentroid(cents)), col("v"))
       .withColumn("bucket", signBucket(col("v")))
-      .where(col("qn") > 0)
       .select("vec_id", "q", "qn", "bucket", "cent_id")
 
   private[graft] def quantizedVectors(spark: SparkSession, sfDir: String): DataFrame = {
@@ -429,8 +442,8 @@ object EmbeddingOps {
 
   /** DuckDB CTEs defining `qq(vec_id, qd, qn)`: the quantized corpus
     * with zero-norm vectors excluded — the oracle twin of
-    * [[quantizedVectorsFresh]]'s code/norm columns (same VecQ8
-    * half-up arithmetic as the q82 oracle). Expects `e(vec_id, v)`. */
+    * [[quantized]] (same VecQ8 half-up arithmetic), shared by the
+    * q82–q85 oracles. Expects `e(vec_id, v)`. */
   private val duckQuantCte: String =
     s"""qm AS (SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) AS mx FROM e),
        |qz AS (SELECT vec_id,
@@ -548,9 +561,12 @@ object EmbeddingOps {
       // inferred size()>0 predicate drags the 16 plane dots in too —
       // the first cut of this query paid the per-row arithmetic ~3×
       // (1.37 s vs 0.24 for q83 at sf0.1, plan-verified). dot(v,v)>0
-      // ⟺ quantized qn>0: any nonzero element makes mx>0 and the
-      // max-abs element quantizes to ±127; NaN poisons both sides'
-      // predicates to false identically.
+      // ⟺ quantized qn>0 on this float-derived corpus: any nonzero
+      // element makes mx>0 and the max-abs element quantizes to ±127;
+      // NaN poisons both sides' predicates to false identically.
+      // (Hence not [[quantized]]: its guard runs after the quantize,
+      // and the two differ for array<double> inputs whose squares
+      // underflow to 0 while the quantized norm stays 127.)
       .where(dotC(col("v"), col("v")) > 0)
       .withColumn("qd",
         graft.functions.VecQuant.vec_q8(col("v")).cast("array<double>"))
@@ -919,17 +935,7 @@ object EmbeddingOps {
     * query — the expression is the staging kernel. */
   def quantizedCosineTopK(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val vs = vectors(spark, sfDir)
-      .withColumn("qd",
-        graft.functions.VecQuant.vec_q8(col("v")).cast("array<double>"))
-      .withColumn("qn", sqrt(dotC(col("qd"), col("qd"))))
-      // a zero-norm (all-zero) vector has no direction: its cosine is
-      // 0/0 = NaN, which Spark's DESC sort ranks ABOVE every real
-      // score while DuckDB ranks it differently — the same guard the
-      // streaming gate applies (StreamingSemanticGate.withQuantized),
-      // mirrored in the oracle SQL (ADVICE r19)
-      .where(col("qn") > 0)
-      .select("vec_id", "qd", "qn")
+    val vs = quantized(vectors(spark, sfDir), col("v")).select("vec_id", "qd", "qn")
     val qs = vs.where(col("vec_id") < numQueries)
       .select(col("vec_id").as("query_id"), col("qd").as("qqd"), col("qn").as("qqn"))
     val sims = vs.crossJoin(broadcast(qs))
@@ -945,18 +951,11 @@ object EmbeddingOps {
 
   val quantizedCosineTopKSql: String =
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |m AS (SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) AS mx FROM e),
-       |qz AS (SELECT vec_id,
-       |  CASE WHEN mx = 0 THEN list_transform(v, x -> CASE WHEN x IS NULL THEN NULL ELSE 0 END)
-       |       ELSE list_transform(v, x -> CAST(floor(x / mx * 127.0 + 0.5) AS INT)) END AS q
-       |  FROM m),
-       |n0 AS (SELECT vec_id, CAST(q AS DOUBLE[]) AS qd,
-       |  sqrt(list_dot_product(CAST(q AS DOUBLE[]), CAST(q AS DOUBLE[]))) AS qn FROM qz),
-       |n AS (SELECT vec_id, qd, qn FROM n0 WHERE qn > 0),
-       |qs AS (SELECT vec_id AS query_id, qd AS qqd, qn AS qqn FROM n WHERE vec_id < $numQueries),
-       |sims AS (SELECT qs.query_id, n.vec_id,
-       |  round(list_dot_product(qs.qqd, n.qd) / (qs.qqn * n.qn), 6) AS cos_q8
-       |  FROM n CROSS JOIN qs WHERE n.vec_id <> qs.query_id),
+       |$duckQuantCte,
+       |qs AS (SELECT vec_id AS query_id, qd AS qqd, qn AS qqn FROM qq WHERE vec_id < $numQueries),
+       |sims AS (SELECT qs.query_id, qq.vec_id,
+       |  round(list_dot_product(qs.qqd, qq.qd) / (qs.qqn * qq.qn), 6) AS cos_q8
+       |  FROM qq CROSS JOIN qs WHERE qq.vec_id <> qs.query_id),
        |ranked AS (SELECT query_id, vec_id, cos_q8,
        |  ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos_q8 DESC, vec_id) AS rank
        |  FROM sims)

@@ -22,7 +22,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 private[graft] object Staging {
 
   /** Bump when any staged-table semantics change. */
-  private val stageVersion = "v5" // r15: doc_sets AND prefix_t* carry the sketch column
+  // v6: sig_h* tables are (doc_id, __sig array<bigint>), no longer
+  // (doc_id, mh0..mhN) — a v5 root must never be read as the new form
+  private val stageVersion = "v6"
 
   private val overrideRoot =
     new scala.util.DynamicVariable[Option[Option[String]]](None)

@@ -104,7 +104,7 @@ object AdmissionPipeline {
                   corpusVecs: DataFrame, t: AdmissionTables,
                   cfg: AdmissionConfig = AdmissionConfig()): AdmissionDials = {
     val bBands = StreamingDedup.stageCorpusBands(spark,
-      DedupOps.minhashSignaturesOf(corpusDocs), t.bands, cfg.buckets, cfg.p)
+      DedupOps.minhashSignaturesOf(corpusDocs, cfg.p), t.bands, cfg.buckets, cfg.p)
     val bSpans = StreamingSpanGate.stageCorpusSpans(spark, corpusDocs,
       t.spans, cfg.buckets, cfg.spanLen)
     val bVecs = StreamingSemanticGate.stageCorpusVectors(spark, corpusVecs,

@@ -78,7 +78,8 @@ object StreamingCuration {
   /** Fold the corpus's LSH band keys into a Bloom filter (one
     * driver-side pass over the static signature table). `fpp` trades
     * filter size against how many novel docs take the expensive
-    * verify path — never against correctness. */
+    * verify path — never against correctness. `corpusSig` is a
+    * `(doc_id, __sig)` frame, e.g. `DedupOps.minhashSignaturesOf`. */
   def corpusBandBloom(corpusSig: DataFrame,
                       p: MinHashParams = DedupOps.defaultParams,
                       fpp: Double = 0.01): BloomFilter = {
@@ -104,7 +105,7 @@ object StreamingCuration {
     }
     // withSignatureAll: an unsignable doc (under two tokens) must
     // surface as reject_quality (too_short covers it), not vanish
-    val sigged = StreamingDedup.withSignatureAll(withQuality(stream), p)
+    val sigged = DedupOps.withSignatureAll(withQuality(stream), p)
       .withColumn("__bks",
         when(col("__sig").isNotNull, expr(DedupOps.bandArrayExpr(p))))
     sigged

@@ -11,15 +11,15 @@ import graft.operators.{DedupOps, MinHashParams}
   * pipelines that admit documents continuously instead of in daily
   * batches.
   *
-  * The enabler is a NARROW minhash signature: the batch path computes
-  * signatures by explode + groupBy (one shuffle), which a streaming
-  * projection cannot do without watermark-managed state. Folding the
-  * min over each document's shingle array per row (`array_min` over a
-  * `transform`) computes the identical signature with ZERO shuffle —
-  * legal in any streaming projection and bit-identical to the staged
-  * signature table (spec-pinned). The stream then explodes its band
-  * keys and stream-static joins the corpus band table: per micro-batch
-  * Spark plans a plain join against the static side.
+  * The enabler is a NARROW minhash signature: the explode + groupBy
+  * reference form needs a shuffle, which a streaming projection
+  * cannot do without watermark-managed state. The native one-pass
+  * expression behind `DedupOps.withSignatureAll` folds the mins per
+  * row with ZERO shuffle — legal in any streaming projection, and the
+  * very producer of the staged signature tables. The stream then
+  * explodes its band keys and stream-static joins the corpus band
+  * table: per micro-batch Spark plans a plain join against the static
+  * side.
   *
   * Scale shape: per-row signature math is codegen over the document's
   * own shingles (no corpus access); the static corpus bands join
@@ -33,40 +33,14 @@ import graft.operators.{DedupOps, MinHashParams}
   */
 object StreamingDedup {
 
-  /** Attach `__sig` (narrow, shuffle-free minhash signature as
-    * array<bigint>) to a frame with a `text` column; rows without a
-    * bigram (docs under two tokens) carry a NULL `__sig`. The
-    * signature IS the batch path's native one-pass expression
-    * ([[graft.functions.MinHashSig]] — the same codegen loop behind
-    * the staged signature tables), so batch/stream parity holds by
-    * construction for every signable row. (An earlier form recomputed
-    * the mins as `numHashes` `array_min(transform(__hs, ...))`
-    * expressions over the shingle-hash array; those are
-    * HigherOrderFunctions — CodegenFallback, interpreted per stream
-    * row on the admission gate's per-batch hot path. PERF §47.)
-    *
-    * One INTENTIONAL divergence from the pre-§47 form (ADVICE r16):
-    * a NULL `text` now yields a NULL `__sig` (MinHashSig is
-    * null-propagating, and `size(null) > 0` is never true), so
-    * [[withSignature]] drops the row with the other unsignables; the
-    * old case-when over the shingle-hash array produced an array of
-    * `numHashes` NULL elements and let the row flow on with a garbage
-    * signature. Dropping is the contract — a null document cannot
-    * near-duplicate anything — and curation rejects null text
-    * upstream anyway; the batch/stream parity spec pins a null-text
-    * row to this behavior. */
-  def withSignatureAll(docs: DataFrame,
-                       p: MinHashParams = DedupOps.defaultParams): DataFrame =
-    docs.withColumn("__sig0",
-        graft.functions.MinHashSig.minhash_sig(col("text"), p.numHashes))
-      .withColumn("__sig", when(size(col("__sig0")) > 0, col("__sig0")))
-      .drop("__sig0")
-
-  /** [[withSignatureAll]] with the unsignable rows dropped — they
-    * cannot near-duplicate anything. */
+  /** [[DedupOps.withSignatureAll]] — the engine's one signature
+    * producer, so batch/stream parity holds by construction — with
+    * the unsignable rows (under two tokens, or NULL text) dropped:
+    * they cannot near-duplicate anything. The stream's other columns
+    * ride along. */
   def withSignature(docs: DataFrame,
                     p: MinHashParams = DedupOps.defaultParams): DataFrame =
-    withSignatureAll(docs, p).where(col("__sig").isNotNull)
+    DedupOps.withSignatureAll(docs, p).where(col("__sig").isNotNull)
 
   /** Stream-static near-dup matches: for each streaming document that
     * shares an LSH band with a corpus document and whose signature
@@ -77,12 +51,12 @@ object StreamingDedup {
     * doc_ids are unbounded. On a batch frame it is a plain distinct.
     *
     * @param stream    streaming (or batch) frame with `doc_id` and `text`
-    * @param corpusSig STATIC signature table (doc_id, mh0..mhN) — the
-    *                  staged table from `DedupOps.minhashSignatures`
+    * @param corpusSig STATIC `(doc_id, __sig)` signature table — e.g.
+    *                  `DedupOps.minhashSignaturesOf` over the corpus
     */
   def nearDupMatches(stream: DataFrame, corpusSig: DataFrame,
                      p: MinHashParams = DedupOps.defaultParams): DataFrame =
-    matchesAgainst(stream, postingRows(sigArray(corpusSig, p), p), p)
+    matchesAgainst(stream, postingRows(corpusSig, p), p)
 
   /** The estimated-agreement count between the stream's `__sig` and
     * the corpus row's `__csig` — the native one-pass codegen form
@@ -110,17 +84,12 @@ object StreamingDedup {
   /** The band posting table's key column. */
   val postingKey = "cbk"
 
-  /** A `(doc_id, mh0..mhN)` signature table as `(corpus_id, __sig)`. */
-  private def sigArray(sig: DataFrame, p: MinHashParams): DataFrame =
-    sig.select(col("doc_id").as("corpus_id"),
-      array((0 until p.numHashes).map(i => col(s"mh$i")): _*).as("__sig"))
-
   /** Band posting rows `(cbk, corpus_id, __csig)` of a
-    * `(corpus_id, __sig)` frame — what [[stageCorpusBands]] and
+    * `(doc_id, __sig)` signature frame — what [[stageCorpusBands]] and
     * [[absorbPostings]] both write. */
   private def postingRows(sigs: DataFrame, p: MinHashParams): DataFrame =
-    sigs.withColumn(postingKey, explode(expr(DedupOps.bandArrayExpr(p))))
-      .select(col(postingKey), col("corpus_id"), col("__sig").as("__csig"))
+    sigs.select(explode(expr(DedupOps.bandArrayExpr(p))).as(postingKey),
+      col("doc_id").as("corpus_id"), col("__sig").as("__csig"))
 
   /** ONE-TIME corpus-side layout for continuous admission: the band
     * posting list `(cbk, corpus_id, __csig)` written in the
@@ -140,12 +109,14 @@ object StreamingDedup {
     * matter, stage a second table bucketed on corpus_id instead and
     * split the probe into two bucket-aligned joins.
     *
-    * Returns the staged table's data-file count — the BASELINE for
-    * the table's [[CompactionDial]]. */
+    * `corpusSig` is a `(doc_id, __sig)` signature frame —
+    * `DedupOps.minhashSignaturesOf` over the corpus, the same form
+    * [[absorbPostings]] derives per batch. Returns the staged table's
+    * data-file count — the BASELINE for the table's [[CompactionDial]]. */
   def stageCorpusBands(spark: SparkSession, corpusSig: DataFrame,
                        table: String, buckets: Int = 64,
                        p: MinHashParams = DedupOps.defaultParams): Int = {
-    PostingCompaction.write(postingRows(sigArray(corpusSig, p), p),
+    PostingCompaction.write(postingRows(corpusSig, p),
       table, postingKey, buckets, "overwrite")
     PostingCompaction.fileCount(spark, table)
   }
@@ -159,7 +130,8 @@ object StreamingDedup {
     matchesAgainst(stream, spark.table(table), p)
 
   /** ABSORB admitted documents into the bucketed band posting table:
-    * the narrow one-pass signatures of [[withSignature]] → the same
+    * `DedupOps.minhashSignaturesOf` (the frame [[stageCorpusBands]]
+    * takes) → the same
     * band postings [[stageCorpusBands]] writes → append, one writer
     * per touched bucket (≤ `buckets` files per absorb). At-least-once
     * replay duplicates a corpus_id's postings; that is
@@ -169,9 +141,7 @@ object StreamingDedup {
   def absorbPostings(spark: SparkSession, admitted: DataFrame, table: String,
                      buckets: Int = 64,
                      p: MinHashParams = DedupOps.defaultParams): Unit =
-    PostingCompaction.write(
-      postingRows(withSignature(admitted, p)
-        .select(col("doc_id").as("corpus_id"), col("__sig")), p),
+    PostingCompaction.write(postingRows(DedupOps.minhashSignaturesOf(admitted, p), p),
       table, postingKey, buckets, "append")
 
   /** Posting-table data-file count (the compaction trigger input). */

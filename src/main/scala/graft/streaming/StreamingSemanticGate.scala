@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.DotProduct.dot_product
-import graft.functions.VecQuant.vec_q8
 import graft.operators.EmbeddingOps
 
 /** EMBEDDING-level near-duplicate admission for a document stream —
@@ -75,26 +74,20 @@ import graft.operators.EmbeddingOps
   * only matters once). */
 object StreamingSemanticGate {
 
-  /** Quantized columns for one side: `__q` (raw int8 codes —
-    * array<int>, the at-rest form), `__qd` (the same codes as
-    * array<double> for the codegen dot — exact, see q82), `__qn`
-    * (quantized norm), `__bkts` (the `planeSets` composite sign-LSH
-    * bucket keys, one per plane set). All per-row codegen over the
-    * vector — legal in any streaming projection, zero shuffle. */
+  /** Quantized columns for one side: `__q`, `__qd`, `__qn` from
+    * `EmbeddingOps.quantized` (int8 codes, the codes as array<double>,
+    * quantized norm — zero-norm vectors dropped: no direction, so no
+    * semantic neighbor), plus `__bkts` (the `planeSets` composite
+    * sign-LSH bucket keys, one per plane set). All per-row codegen over
+    * the vector — legal in any streaming projection, zero shuffle. */
   private def withQuantized(df: DataFrame, vecCol: String,
                             planes: Int, planeSets: Int): DataFrame = {
     require(planeSets >= 1 && planeSets <= (1 << (30 - planes)),
       s"planeSets must be in [1, 2^(30-planes)], got $planeSets at $planes planes")
     val v = col(vecCol).cast("array<double>")
-    df.withColumn("__q", vec_q8(v))
-      .withColumn("__qd", col("__q").cast("array<double>"))
-      .withColumn("__qn", sqrt(dot_product(col("__qd"), col("__qd"))))
+    EmbeddingOps.quantized(df, v, "__")
       .withColumn("__bkts", array((0 until planeSets).map(s =>
         lit(s * (1 << planes)) + EmbeddingOps.signBucket(v, planes, s)): _*))
-      // a zero/empty/null vector has no direction: it cannot be a
-      // semantic neighbor of anything, and its quantized norm of 0
-      // would put a division by zero into the cosine
-      .where(col("__qn") > 0)
   }
 
   /** The vector posting table's key column. */

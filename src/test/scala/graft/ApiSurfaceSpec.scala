@@ -146,6 +146,27 @@ class ApiSurfaceSpec extends SparkSpec {
       s"bucketBy( under graft/streaming, expected once in PostingCompaction: $writes")
   }
 
+  test("the minhash signature has one producer and is spread into mh columns once") {
+    // every signature is DedupOps.withSignatureAll's __sig array; a
+    // second minhash_sig( call or a col(s"mh$i") pack brings back a
+    // parallel format and its pack/unpack round trips
+    val functions = sourcesUnder("src/main/scala/graft/functions").map(_._1).toSet
+    val producers = mainSources.filterNot(f => functions(f._1)).flatMap {
+      case (file, text) => "minhash_sig\\(".r.findAllIn(text).map(_ => file)
+    }
+    assert(producers == Seq("DedupOps.scala"),
+      s"minhash_sig( outside graft/functions, expected once in DedupOps: $producers")
+    val packs = mainSources.flatMap { case (file, text) =>
+      "col\\(s\"mh\\$".r.findAllIn(text).map(_ => file)
+    }
+    assert(packs.isEmpty, s"col(s\"mh$$...) packs under src/main: $packs")
+    val spread = mainSources.flatMap { case (file, text) =>
+      "\\.as\\(s\"mh\\$".r.findAllIn(text).map(_ => file)
+    }
+    assert(spread == Seq("DedupOps.scala", "DedupOps.scala"),
+      s"mh column names under src/main, expected the minhashSignatures spread and the signaturesFrom reference: $spread")
+  }
+
   test("perfbench's staged query list matches graft.Bench.stagedNames") {
     // perfbench keeps its own copy of the list; a query added to or
     // dropped from one of them silently misses the other

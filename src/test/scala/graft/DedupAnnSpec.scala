@@ -28,8 +28,11 @@ class DedupAnnSpec extends SparkSpec {
     val docs = Tables.documents(spark, "/root/testdata/sf0.01")
       .select("doc_id", "text")
     for (p <- Seq(DedupOps.defaultParams, DedupOps.scaleParams)) {
-      val narrow = DedupOps.signaturesOf(docs, p)
-        .orderBy("doc_id").collect().map(_.toSeq)
+      // the production (doc_id, __sig array) against the reference's
+      // (doc_id, mh0..mhN) columns, element by element
+      val narrow = DedupOps.minhashSignaturesOf(docs, p)
+        .orderBy("doc_id").collect()
+        .map(r => r.getLong(0) +: r.getSeq[Long](1))
       val agg = DedupOps.signaturesFrom(DedupOps.shinglesOf(docs), p)
         .orderBy("doc_id").collect().map(_.toSeq)
       assert(narrow.length == agg.length && narrow.sameElements(agg),
@@ -39,14 +42,14 @@ class DedupAnnSpec extends SparkSpec {
     import spark.implicits._
     val edge = Seq((1L, ""), (2L, "one"), (3L, "two words"), (4L, "a a a"))
       .toDF("doc_id", "text")
-    val n = DedupOps.signaturesOf(edge, DedupOps.defaultParams)
+    val n = DedupOps.minhashSignaturesOf(edge, DedupOps.defaultParams)
       .select("doc_id").as[Long].collect().sorted
     assert(n.toSeq == Seq(3L, 4L))
   }
 
   test("one-pass signature plan is a narrow map: no Exchange, no Aggregate") {
     val docs = Tables.documents(spark, sf).select("doc_id", "text")
-    val plan = DedupOps.signaturesOf(docs, DedupOps.scaleParams)
+    val plan = DedupOps.minhashSignaturesOf(docs, DedupOps.scaleParams)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange") && !plan.contains("Aggregate"),
       s"signatures must never leave the documents scan's partition:\n$plan")

@@ -155,6 +155,31 @@ class StagingSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
+  test("staged signature tables hold one array<bigint> column; q20/q42 spread it into mh0..mhN") {
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    import graft.operators.DedupOps
+    val root = Files.createTempDirectory("graft_sig_format").toString
+    DedupOps.withStagingRoot(Some(root)) {
+      DedupOps.stageAll(spark, sf, ivf = false)
+      for ((p, q) <- Seq(DedupOps.defaultParams -> "q20_minhash_signatures",
+                         DedupOps.scaleParams -> "q42_minhash_scale")) {
+        val fields = spark.read
+          .parquet(Staging.tableDir(root, sf, s"sig_h${p.numHashes}")).schema.fields
+        assert(fields.map(_.name).toSeq == Seq("doc_id", "__sig") &&
+          fields(1).dataType.isInstanceOf[ArrayType] &&
+          fields(1).dataType.asInstanceOf[ArrayType].elementType == LongType,
+          s"sig_h${p.numHashes} must stage (doc_id, array<bigint>), got ${fields.toSeq}")
+        val out = SparkEntry.queries(q)(spark, sf)
+        assert(out.columns.toSeq == "doc_id" +: (0 until p.numHashes).map(i => s"mh$i"),
+          s"$q columns: ${out.columns.toSeq}")
+        val ref = DedupOps.signaturesFrom(
+          DedupOps.shinglesOf(Tables.documents(spark, sf)), p).orderBy("doc_id")
+        assert(out.collect().toSeq == ref.collect().toSeq,
+          s"$q must equal the aggregate reference")
+      }
+    }
+  }
+
   test("stageAll restores broadcast thresholds when staging FAILS (ADVICE r13)") {
     import graft.operators.DedupOps
     val keys = Seq("spark.sql.autoBroadcastJoinThreshold",

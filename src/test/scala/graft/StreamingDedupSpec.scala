@@ -10,19 +10,20 @@ class StreamingDedupSpec extends SparkSpec {
   import spark.implicits._
 
   test("narrow per-row signature is bit-identical to the batch signature table") {
+    // batch and stream share one producer, so the independent side is
+    // the explode→groupBy reference, for both presets
     val docs = Tables.documents(spark, sf).select("doc_id", "text")
-    val narrow = StreamingDedup.withSignature(docs)
-      .select(col("doc_id"), col("__sig"))
-      .as[(Long, Seq[Long])].collect().toMap
-    val batch = DedupOps.minhashSignaturesOf(docs)
-    val p = DedupOps.defaultParams
-    val wide = batch.select(col("doc_id"),
-        array((0 until p.numHashes).map(i => col(s"mh$i")): _*))
-      .as[(Long, Seq[Long])].collect().toMap
-    assert(narrow.keySet == wide.keySet,
-      "narrow path must keep exactly the docs the batch path signs")
-    narrow.foreach { case (d, sig) =>
-      assert(sig == wide(d), s"doc $d narrow signature diverges from batch")
+    for (p <- Seq(DedupOps.defaultParams, DedupOps.scaleParams)) {
+      val narrow = StreamingDedup.withSignature(docs, p)
+        .select(col("doc_id"), col("__sig"))
+        .as[(Long, Seq[Long])].collect().toMap
+      val wide = DedupOps.signaturesFrom(DedupOps.shinglesOf(docs), p).collect()
+        .map(r => r.getLong(0) -> (1 to p.numHashes).map(r.getLong)).toMap
+      assert(narrow.keySet == wide.keySet,
+        "narrow path must keep exactly the docs the batch path signs")
+      narrow.foreach { case (d, sig) =>
+        assert(sig == wide(d), s"doc $d narrow signature diverges from batch at h${p.numHashes}")
+      }
     }
   }
 
@@ -41,7 +42,7 @@ class StreamingDedupSpec extends SparkSpec {
     // a null document cannot near-duplicate anything
     val rows = Seq((1L, null: String), (2L, "two tokens here"))
       .toDF("doc_id", "text")
-    val all = StreamingDedup.withSignatureAll(rows)
+    val all = DedupOps.withSignatureAll(rows)
     assert(all.where(col("doc_id") === 1L).select("__sig")
       .collect()(0).isNullAt(0), "null text must carry a null __sig")
     assert(StreamingDedup.withSignature(rows)
@@ -228,8 +229,7 @@ class StreamingDedupSpec extends SparkSpec {
         val extraSig = DedupOps.minhashSignaturesOf(
           docs.where(expr(s"doc_id % 10 = $i"))
             .select((col("doc_id") + lit(1000000L * i)).as("doc_id"), col("text")))
-        extraSig.select(col("doc_id").as("corpus_id"),
-            array((0 until p.numHashes).map(j => col(s"mh$j")): _*).as("__sig"))
+        extraSig.withColumnRenamed("doc_id", "corpus_id")
           .withColumn("cbk", explode(expr(DedupOps.bandArrayExpr(p))))
           .select(col("cbk"), col("corpus_id"), col("__sig").as("__csig"))
           .write.mode("append").bucketBy(8, "cbk").sortBy("cbk")
@@ -282,8 +282,7 @@ class StreamingDedupSpec extends SparkSpec {
         val extraSig = DedupOps.minhashSignaturesOf(
           docs.where(expr(s"doc_id % 10 = $i"))
             .select((col("doc_id") + lit(1000000L * i)).as("doc_id"), col("text")))
-        extraSig.select(col("doc_id").as("corpus_id"),
-            array((0 until p.numHashes).map(j => col(s"mh$j")): _*).as("__sig"))
+        extraSig.withColumnRenamed("doc_id", "corpus_id")
           .withColumn("cbk", explode(expr(DedupOps.bandArrayExpr(p))))
           .select(col("cbk"), col("corpus_id"), col("__sig").as("__csig"))
           .write.mode("append").bucketBy(8, "cbk").sortBy("cbk")

@@ -70,31 +70,31 @@ object DedupOps {
   //
   // Cache-lifetime contract for the persist() FALLBACK sites (active
   // mainly when staging is off — sigTable, sharedShingles,
-  // simhashPairs, and the `*Of` library entries over arbitrary frames.
-  // The STAGED-build persists — the banding suspect census, the LSH
-  // band stream, stage_flags' q51/q48 flag frames in CorpusOps — are no
-  // longer leak sites: each registers a write-completion cleanup via
-  // Staging.registerComputeCleanup and is unpersisted the moment the
-  // parquet promote that consumed it finishes): each remaining persist
-  // backs multiple references to the same subtree INSIDE the returned
-  // lazy plan, so the function cannot unpersist before returning (the
-  // q79 `finally unpersist` pattern at prefixJaccardPairsOf applies
-  // only because that function consumes the persist itself via
-  // localCheckpoint). Ownership therefore sits with the CALLER's
-  // session: Spark's CacheManager keys entries by logical plan, so
-  // repeated calls over the same corpus reuse one entry (no growth),
-  // and `spark.catalog.clearCache()` — which Bench issues after every
-  // measurement — or session stop releases them. Long-lived drivers
-  // cycling many DISTINCT unstaged corpora should either enable
-  // staging or clearCache() between corpora.
+  // simhashPairs, and the `*Of` library entries over arbitrary frames):
+  // each backs multiple references to the same subtree INSIDE the
+  // returned lazy plan, so the function cannot unpersist before
+  // returning (the q79 `finally unpersist` pattern at
+  // prefixJaccardPairsOf applies only because that function consumes
+  // the persist itself via localCheckpoint). Ownership therefore sits
+  // with the CALLER's session: Spark's CacheManager keys entries by
+  // logical plan, so repeated calls over the same corpus reuse one
+  // entry (no growth), and `spark.catalog.clearCache()` — which Bench
+  // issues after every measurement — or session stop releases them.
+  // Long-lived drivers cycling many DISTINCT unstaged corpora should
+  // either enable staging or clearCache() between corpora.
   //
-  // The band-stream persist in lshCandidatesFrom is the one site with
-  // an EXPLICIT lifecycle (r15, ADVICE r14): consumed by a staged
-  // write → auto-unpersisted via Staging's write-completion hook;
-  // taken by a library call → tracked per session and releasable with
-  // [[releaseBandCache]]. simhashPairsFrom's band stream and
-  // CorpusOps.dedupSpanRanges' flagged-window frame recompute per
-  // reference instead: their persists measured a wash (PERF §68, §70).
+  // Sites with an EXPLICIT lifecycle instead: the band guard's suspect
+  // census (SkewGuard.guardedBands, all three band self-joins) and the
+  // LSH band stream in lshCandidatesFrom. Consumed by a staged write,
+  // each unpersists via Staging.registerComputeCleanup the moment the
+  // parquet promote finishes (as do stage_flags' chain-only q51/q48
+  // flag frames in CorpusOps); taken by a library call, each lands in
+  // a query-scoped SessionCacheRegistry and dies with the query that
+  // consumes it (the band stream is also releasable via
+  // [[releaseBandCache]]).
+  // simhashPairsFrom's band stream and CorpusOps.dedupSpanRanges'
+  // flagged-window frame recompute per reference instead: their
+  // persists measured a wash (PERF §68, §70).
 
   /** Run `body` with an explicit staging root (`Some(dir)`) or staging
     * disabled (`None`), scoped to the current thread — concurrent
@@ -401,10 +401,18 @@ object DedupOps {
   def withSignatureAll(docs: DataFrame, p: MinHashParams = defaultParams): DataFrame =
     docs.withColumn("__sig", graft.functions.MinHashSig.minhash_sig(col("text"), p.numHashes))
 
+  /** The docs [[graft.functions.MinHashSig]] signs: its `split(" ", -1)`
+    * yields two tokens exactly when the text holds a ' ', and it returns
+    * NULL for every other text (NULL included). Filter on this BEFORE
+    * signing: a filter on `isnotnull(__sig)` is pushed below the
+    * projection with the alias substituted, so `minhash_sig` ran twice
+    * per doc, once in the filter and once in the projection. */
+  private[graft] val signable: Column = col("text").contains(" ")
+
   /** `(doc_id, __sig)` of the signable docs of a `(doc_id, text)` frame
     * — the library entry for corpora not staged under a testdata dir. */
   def minhashSignaturesOf(docs: DataFrame, p: MinHashParams = defaultParams): DataFrame =
-    withSignatureAll(docs, p).where(col("__sig").isNotNull).select("doc_id", "__sig")
+    withSignatureAll(docs.where(signable), p).select("doc_id", "__sig")
 
   /** `(doc_id, __sig)` signature table, staged (or persist()ed when
     * staging is off). (Tried doc_id-bucketed staging like `doc_sets`
@@ -529,85 +537,11 @@ object DedupOps {
 
   private[graft] def lshCandidatesFrom(sig: DataFrame, p: MinHashParams, g: BandGuard,
                                        sort: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // The signature arrives as ONE array column (`__sig`): banding,
-    // the guard key, and the match count then run as small codegen loops
+    // The signature arrives as ONE array column (`__sig`): banding, the
+    // guard fingerprint and the match count run as small codegen loops
     // instead of p.numHashes unrolled expressions (at 128 hashes the
-    // unrolled form dominated staging time), and the guard's shuffle key
-    // is an 8-byte fingerprint instead of a 128-column row — same
-    // fingerprint-collapse scheme as the embedding near-dup guard:
-    // exactness via compare-to-representative, collisions degrade to
-    // un-collapsed rows that the bucket cap still bounds.
+    // unrolled form dominated staging time).
     val arr = sig.select("doc_id", "__sig")
-    // --- guard stage 1: exact-duplicate collapse before banding -----------
-    // Docs sharing a full signature are (estimated-)identical; a group of
-    // g identical docs would otherwise contribute g²/2 pairs through EVERY
-    // band bucket it lands in. Groups above the threshold band only their
-    // representative and emit a linear (rep, member) star instead.
-    val (bandSig, starPairs) =
-      if (g.maxGroupAllPairs == Int.MaxValue)
-        (arr, arr.limit(0).select(
-          col("doc_id").as("doc_a"), col("doc_id").as("doc_b"),
-          lit(1.0).as("est_jaccard")))
-      else {
-        // Two-pass collapse (PERF §32). Pass 1 censuses group sizes on
-        // the 8-byte FINGERPRINT stream alone — the old single-window
-        // form pushed every full signature array through the group
-        // exchange (500 MB at h128/100×, over half the banding wall)
-        // to discover that almost no group is oversized. Only members
-        // of fp-groups larger than the threshold proceed to pass 2.
-        val wfp = Window.partitionBy("__fp")
-        val suspectIds = arr
-          .select(col("doc_id"), xxhash64(col("__sig")).as("__fp"))
-          .withColumn("__fsz", count(lit(1)).over(wfp))
-          .where(col("__fsz") > g.maxGroupAllPairs)
-          .select("doc_id", "__fp")
-          // Referenced by the anti-join branch of BOTH self-join sides
-          // plus the star emission, and stage reuse does not fire
-          // across those references — without materialization the
-          // corpus-wide fingerprint window runs once PER reference.
-          // The output is tiny (only members of oversized groups,
-          // usually none), so this is safe inside a stageAll window
-          // where the full band-stream persist is not (PERF §35).
-          // persist, not localCheckpoint: the frame is small but its
-          // lineage is the full census — keep it recomputable on
-          // block loss.
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // Inside a staged write the census is consumed only by that
-        // write — release it when the write completes (r15 cleanup
-        // hook; previously a documented header leak). Outside one the
-        // persist backs the returned lazy plan and stays caller-owned.
-        Staging.registerComputeCleanup(() => suspectIds.unpersist(false)): Unit
-        // Eager fill ONLY on a stageAll chain thread, where the chain
-        // is about to materialize everything anyway; library/unstaged
-        // callers — including ones that run CONCURRENTLY with a
-        // stageAll on the same session — keep the documented
-        // lazy-construction contract (the persist still dedupes the
-        // references — block locks serialize per-partition computes
-        // when the consuming job runs).
-        if (Staging.inStagingChain) suspectIds.count(): Unit
-        // Pass 2: the EXACT group logic of the original form, on the
-        // suspect subset only. The suspect id list is joined hint-free
-        // (AQE broadcasts it while small; a pathological all-dups
-        // corpus degrades to a shuffle join — the pre-§32 cost — and
-        // never loses exactness). fp collisions only pull extra docs
-        // into pass 2, where the array compare clears them.
-        val suspects = arr.join(suspectIds, "doc_id")
-          .withColumn("__gmin", min(col("doc_id")).over(wfp))
-          .withColumn("__repv", min_by(col("__sig"), col("doc_id")).over(wfp))
-          .withColumn("__gsz",
-            sum(when(col("__sig") === col("__repv"), 1L).otherwise(0L)).over(wfp))
-          .withColumn("__dup",
-            col("__sig") === col("__repv") && col("__gsz") > g.maxGroupAllPairs)
-        (arr.join(suspectIds.select("doc_id"), Seq("doc_id"), "left_anti")
-           .unionByName(suspects
-             .where(!col("__dup") || col("doc_id") === col("__gmin"))
-             .select("doc_id", "__sig")),
-         suspects
-           .where(col("__dup") && col("doc_id") =!= col("__gmin"))
-           .select(col("__gmin").as("doc_a"), col("doc_id").as("doc_b"),
-             lit(1.0).as("est_jaccard")))
-      }
     // Band key for the SELF-JOIN: an 8-byte xxhash64 of (band index,
     // band slice), not the "b_mh.._mh" string — at h128/b16 the 8M-row
     // band stream's ~160-byte concat strings were the dominant staging
@@ -639,52 +573,37 @@ object DedupOps {
         s"xxhash64($b, $elems)"
       }.mkString("array(", ", ", ")")
     }
-    val bands0 = bandSig.select(col("doc_id"), explode(expr(bandHashExpr)).as("bk"))
-    // --- guard stage 2: per-bucket membership cap --------------------------
-    SkewGuard.maybeLogOverflow(bands0, "bk", g.maxBucket, g.logOverflow, "lshCandidates")
+    // The band stream carries (doc_id, bk) only: `__sig` never rides
+    // through the cap window or the persist; the est stage re-attaches it.
+    val (capped, star) = SkewGuard.guardedBands(
+      arr, "doc_id", "__sig", expr(bandHashExpr), Nil, g, "lshCandidates")
     // The capped band stream feeds BOTH sides of the self-join, and
     // stage reuse does not fire across a self-join's sides (the PERF
-    // §30 observation) — so without materialization everything above
-    // this point executes twice: the collapse's fingerprint windows,
-    // the explode, and the bucket-cap window. Materialize it once when
-    // the collapse is active (the expensive-subtree case; the plain
-    // explode is cheaper to recompute than to cache). 16 B/row ×
-    // numBands rows/doc ≈ 130 MB at h128/100×, distributed across
-    // executors at cluster scale; persist — NOT localCheckpoint — so
-    // lineage survives block loss. Caller-session cache-lifetime
-    // contract as documented at the top of this file.
+    // §30 observation) — so without materialization the collapse, the
+    // explode and the bucket-cap window execute twice. Materialize it
+    // once while a guard cap is finite (a partial guard still runs the
+    // cap window per side); the plain explode is cheaper to recompute
+    // than to cache. 16 B/row × numBands rows/doc ≈ 130 MB at h128/100×;
+    // persist — NOT localCheckpoint — so lineage survives block loss.
     //
     // NOT on a stageAll chain thread (PERF §35): the measured win is
     // the un-contended library call (h8 banding 25 → 15 s, h128
     // 9.5 → 4 s at 100×); under the staging DAG's all-at-once
     // concurrency the same persist measured level-to-worse (the fill
     // job serializes a chain segment other chains' work no longer
-    // hides), so the staging chains keep the recompute shape there —
-    // gated on CHAIN membership (thread-local), not on "a stageAll is
-    // in flight on this session", so a concurrent library caller's
-    // returned plan keeps the persist it will want after staging ends.
-    // Lifecycle (ADVICE r14 / r15 #7): inside a staged write the
-    // persist is consumed exactly once by the parquet write, so it
-    // unpersists via the write-completion hook; a pure library call
-    // registers it in the session's band-cache registry instead —
-    // same caller-session contract as before, but now releasable via
-    // [[releaseBandCache]] for long-lived sessions.
-    val bands = {
-      val capped = SkewGuard.capBuckets(bands0, "bk", "doc_id", g.maxBucket)
-      // "guard off" means BOTH caps are off (ADVICE r21): a partial
-      // guard (finite maxBucket only) still runs the bucket-cap window
-      // once per self-join side — exactly the expensive subtree the
-      // persist exists for.
-      if ((g.maxGroupAllPairs == Int.MaxValue && g.maxBucket == Int.MaxValue) ||
-          Staging.inStagingChain) capped
+    // hides). Gated on CHAIN membership (thread-local), so a concurrent
+    // library caller's plan keeps the persist. Lifecycle: inside a
+    // staged write it unpersists when the write completes; a library
+    // call registers it in the query-scoped [[bandCacheRegistry]].
+    val finiteCap = g.maxBucket != Int.MaxValue || g.maxGroupAllPairs != Int.MaxValue
+    val bands =
+      if (Staging.inStagingChain || !finiteCap) capped
       else {
-        val persisted =
-          capped.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val persisted = capped.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         if (!Staging.registerComputeCleanup(() => persisted.unpersist(false)))
           bandCacheRegistry.register(persisted): Unit
         persisted
       }
-    }
     val cand = bands.as("x").join(bands.as("y"),
         col("x.bk") === col("y.bk") && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
@@ -707,7 +626,8 @@ object DedupOps {
       .withColumn("est_jaccard", col("__m").cast("double") / p.numHashes)
       .where(col("est_jaccard") >= estThreshold)
       .select("doc_a", "doc_b", "est_jaccard")
-      .unionByName(starPairs) match {
+      .unionByName(star.select(col("rep").as("doc_a"), col("member").as("doc_b"),
+        lit(1.0).as("est_jaccard"))) match {
       case out if sort => out.orderBy("doc_a", "doc_b")
       case out         => out
     }
@@ -1839,42 +1759,14 @@ object DedupOps {
       g)
 
   private def simhashPairsFrom(sh: DataFrame, g: BandGuard): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // guard stage 1: identical-simhash collapse (Hamming 0 by definition)
-    val (bandSh, starPairs) =
-      if (g.maxGroupAllPairs == Int.MaxValue)
-        (sh, sh.limit(0).select(
-          col("doc_id").as("doc_a"), col("doc_id").as("doc_b"),
-          lit(0).as("hamming")))
-      else {
-        val wg = Window.partitionBy("simhash")
-        // `tagged` feeds the banded side AND the star branch (the guard
-        // window runs once per consumer). Persisting it was TRIED in
-        // r22 and reverted: at 100× the extra cache layer measured
-        // q24 3.21 s vs 2.47 s without it (cache fill serializes what
-        // parallel recompute overlaps — the same §35 mechanism at
-        // query time), and at sf0.1 the delta is inside box noise.
-        // The star branch's rows are by definition the rare tail, so
-        // the recompute is one narrow window pass.
-        val tagged = sh
-          .withColumn("__gmin", min(col("doc_id")).over(wg))
-          .withColumn("__gsz", count(lit(1)).over(wg))
-        (tagged
-           .where(col("__gsz") <= g.maxGroupAllPairs || col("doc_id") === col("__gmin"))
-           .select("doc_id", "simhash"),
-         tagged
-           .where(col("__gsz") > g.maxGroupAllPairs && col("doc_id") =!= col("__gmin"))
-           .select(col("__gmin").as("doc_a"), col("doc_id").as("doc_b"),
-             lit(0).as("hamming")))
-      }
-    val bandCols = (0 until 4).map { b =>
+    // identical simhashes collapse to a hamming-0 star
+    val bandKeys = array((0 until 4).map { b =>
       concat_ws("_", lit(b), expr(s"shiftright(simhash, ${15 * b}) & 32767"))
-    }
-    val bands0 = bandSh.select(col("doc_id"), col("simhash"), explode(array(bandCols: _*)).as("bk"))
-    // guard stage 2: per-bucket membership cap
-    SkewGuard.maybeLogOverflow(bands0, "bk", g.maxBucket, g.logOverflow, "simhashPairs")
-    // not persisted, as `tagged`: a wash at 100×, slower on perfbench dedup (PERF §68, §70)
-    val bands = SkewGuard.capBuckets(bands0, "bk", "doc_id", g.maxBucket)
+    }: _*)
+    // the band stream is not persisted: a wash at 100×, slower on
+    // perfbench dedup (PERF §68, §70)
+    val (bands, star) = SkewGuard.guardedBands(
+      sh, "doc_id", "simhash", bandKeys, Seq("simhash"), g, "simhashPairs")
     bands.as("x").join(bands.as("y"),
         col("x.bk") === col("y.bk") && col("x.doc_id") < col("y.doc_id"))
       .select(
@@ -1882,7 +1774,8 @@ object DedupOps {
         expr("bit_count(x.simhash ^ y.simhash)").as("hamming"))
       .distinct()
       .where(col("hamming") <= hammingThreshold)
-      .unionByName(starPairs)
+      .unionByName(star.select(col("rep").as("doc_a"), col("member").as("doc_b"),
+        lit(0).as("hamming")))
       .orderBy("doc_a", "doc_b")
   }
 

@@ -1,10 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
-/** Guard rails for LSH band self-joins.
+/** Guard rails for the LSH band self-joins — the minhash candidates
+  * (`DedupOps.lshCandidatesFrom`: q21/q22/q43/q44 and the staged
+  * `cand_h*` tables), the simhash pairs (`DedupOps.simhashPairsOf`,
+  * q24) and the embedding near-dup pairs (`EmbeddingOps.nearDupPairsOf`,
+  * q28). All three take both stages from [[SkewGuard.guardedBands]].
   *
   * A band self-join is never O(n²) *across* buckets, but a single
   * degenerate bucket — thousands of identical or near-identical docs
@@ -43,8 +48,88 @@ object BandGuard {
   val off: BandGuard = BandGuard(Int.MaxValue, Int.MaxValue)
 }
 
+/** The one implementation of the [[BandGuard]] contract, shared by the
+  * three band self-joins named there. */
 object SkewGuard {
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** Suspect-census persists [[guardedBands]] takes outside a staged
+    * write, per session: released when the query that consumes them
+    * completes, at most 8 alive as the backstop for plans never run. */
+  private[graft] val suspectCacheRegistry =
+    new SessionCacheRegistry(maxEntries = 8, queryScoped = true)
+
+  /** Both guard stages for one banded self-join over `rows` (one row
+    * per `idCol`, `sigCol` the signature whose equality means "exact
+    * duplicate"). Returns `(bands, star)`:
+    *   - `bands`: `(idCol, carry…, bk)`, one row per element of the
+    *     `bandKeys` array of every row left after the collapse, capped
+    *     at `g.maxBucket` members per `bk`;
+    *   - `star`: `(rep, member)` for every collapsed group member.
+    *
+    * The collapse runs in two passes (PERF §32). Pass 1 censuses group
+    * sizes on the 8-byte `xxhash64(sigCol)` fingerprint alone, so the
+    * full signature never rides through the census exchange; only the
+    * members of fingerprint groups larger than `g.maxGroupAllPairs`
+    * are suspects. Pass 2 compares each suspect's signature to its
+    * fingerprint group's representative (the lowest id): exact for any
+    * signature type, since a fingerprint collision only sends extra
+    * rows into pass 2, where the compare clears them. The caller adds
+    * its own pair score, threshold and star literal, and decides
+    * whether the returned band frame is worth a persist. */
+  def guardedBands(rows: DataFrame, idCol: String, sigCol: String, bandKeys: Column,
+                   carry: Seq[String], g: BandGuard, what: String): (DataFrame, DataFrame) = {
+    val (banded, star) =
+      if (g.maxGroupAllPairs == Int.MaxValue)
+        (rows, rows.limit(0).select(col(idCol).as("rep"), col(idCol).as("member")))
+      else collapse(rows, idCol, sigCol, g.maxGroupAllPairs)
+    val bands = banded.select((col(idCol) +: carry.map(col)) :+ explode(bandKeys).as("bk"): _*)
+    maybeLogOverflow(bands, "bk", g.maxBucket, g.logOverflow, what)
+    (capBuckets(bands, "bk", idCol, g.maxBucket), star)
+  }
+
+  private def collapse(rows: DataFrame, idCol: String, sigCol: String,
+                       maxGroup: Int): (DataFrame, DataFrame) = {
+    val wfp = Window.partitionBy("__fp")
+    val suspectIds = rows
+      .select(col(idCol), xxhash64(col(sigCol)).as("__fp"))
+      .withColumn("__fsz", count(lit(1)).over(wfp))
+      .where(col("__fsz") > maxGroup)
+      .select(idCol, "__fp")
+      // Referenced by the anti-join, the suspect join and the star, and
+      // stage reuse does not fire across those references: without
+      // materialization the corpus-wide census runs once PER reference.
+      // The output is tiny (only members of oversized groups, usually
+      // none), so this is safe inside a stageAll window where a full
+      // band-stream persist is not (PERF §35). persist, not
+      // localCheckpoint: keep the census lineage on block loss.
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // Eager fill ONLY on a stageAll chain thread, which is about to
+    // materialize everything anyway; library callers keep the lazy
+    // contract. Filled before it is registered, so this count's own
+    // completion cannot release it from the query-scoped registry.
+    if (Staging.inStagingChain) suspectIds.count(): Unit
+    // Inside a staged write the census dies with the write; outside one
+    // it dies with the first query that consumes the returned plan.
+    if (!Staging.registerComputeCleanup(() => suspectIds.unpersist(false)))
+      suspectCacheRegistry.register(suspectIds): Unit
+    // The suspect id list is joined hint-free: AQE broadcasts it while
+    // small; an all-duplicates corpus degrades to a shuffle join and
+    // never loses exactness.
+    val sig = col(sigCol)
+    val suspects = rows.join(suspectIds, idCol)
+      .withColumn("__gmin", min(col(idCol)).over(wfp))
+      .withColumn("__repv", min_by(sig, col(idCol)).over(wfp))
+      .withColumn("__gsz", sum(when(sig === col("__repv"), 1L).otherwise(0L)).over(wfp))
+      .withColumn("__dup", sig === col("__repv") && col("__gsz") > maxGroup)
+    (rows.join(suspectIds.select(idCol), Seq(idCol), "left_anti")
+       .unionByName(suspects
+         .where(!col("__dup") || col(idCol) === col("__gmin"))
+         .select(rows.columns.map(col).toSeq: _*)),
+     suspects
+       .where(col("__dup") && col(idCol) =!= col("__gmin"))
+       .select(col("__gmin").as("rep"), col(idCol).as("member")))
+  }
 
   /** Keep at most `cap` members per bucket, lowest `idCol` first. The
     * row_number window shuffles on the bucket key — the same key the

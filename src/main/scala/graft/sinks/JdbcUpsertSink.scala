@@ -17,9 +17,10 @@ import org.apache.spark.sql.types._
   * `batchSize` rows, linear retry with backoff per batch
   * (unified_mysql.py:135-157 pattern).
   *
-  * Idempotence: REPLACE / ON DUPLICATE / MERGE keyed on the PK makes
-  * microbatch replays effectively exactly-once (ST5) — same trick as
-  * the reference's REPLACE INTO.
+  * Four modes: MySQL `Replace` and `OnDuplicate`, the portable
+  * two-statement `UpdateInsert`, and plain `Append`. Idempotence: an
+  * upsert keyed on the PK makes microbatch replays effectively
+  * exactly-once (ST5) — same trick as the reference's REPLACE INTO.
   *
   * For streaming use: `writeStream.foreachBatch { (df, id) =>
   * sink.write(df) }`.
@@ -31,9 +32,6 @@ object JdbcUpsertSink {
   case object Replace extends Mode
   /** MySQL `INSERT ... ON DUPLICATE KEY UPDATE`. */
   case object OnDuplicate extends Mode
-  /** ANSI `MERGE INTO` (Postgres 15+/Oracle/SQL Server; engines that
-    * accept a derived-table source). */
-  case class Merge(keyCols: Seq[String]) extends Mode
   /** Portable upsert: batched UPDATE by key, then INSERT the rows the
     * update missed (works on any JDBC engine, e.g. Derby, whose MERGE
     * rejects derived-table sources). */
@@ -47,7 +45,7 @@ object JdbcUpsertSink {
     * the UPDATE half; the INSERT half is `buildSql(table, cols, Append)`
     * (the sink's write loop pairs them). It requires at least one
     * non-key column, since `UPDATE t SET <nothing>` is not SQL —
-    * all-key rows need `Append`/`Replace`/`Merge` instead. */
+    * all-key rows need `Append`/`Replace` instead. */
   def buildSql(table: String, cols: Seq[String], mode: Mode): String = {
     val colList = cols.mkString(", ")
     val qs = cols.map(_ => "?").mkString(", ")
@@ -57,8 +55,6 @@ object JdbcUpsertSink {
       case OnDuplicate =>
         val updates = cols.map(c => s"$c = VALUES($c)").mkString(", ")
         s"INSERT INTO $table ($colList) VALUES ($qs) ON DUPLICATE KEY UPDATE $updates"
-      case Merge(keys) =>
-        mergeSql(table, cols.map(_ -> "?"), keys)
       case UpdateInsert(keys) =>
         updateSql(table, cols, keys) // the INSERT half comes from Append
       case Append =>
@@ -69,45 +65,10 @@ object JdbcUpsertSink {
   private[sinks] def updateSql(table: String, cols: Seq[String], keys: Seq[String]): String = {
     require(cols.exists(c => !keys.contains(c)),
       s"UpdateInsert mode needs at least one non-key column to SET " +
-        s"(all of ${cols.mkString(", ")} are keys); use Append or Merge")
+        s"(all of ${cols.mkString(", ")} are keys); use Append or Replace")
     val sets = cols.filterNot(keys.contains).map(c => s"$c = ?").mkString(", ")
     val cond = keys.map(k => s"$k = ?").mkString(" AND ")
     s"UPDATE $table SET $sets WHERE $cond"
-  }
-
-  private def mergeSql(table: String, colsWithParam: Seq[(String, String)],
-                       keys: Seq[String]): String = {
-    val cols = colsWithParam.map(_._1)
-    val plainCols = cols.mkString(", ")
-    val srcCols = colsWithParam.map { case (c, p) => s"$p AS $c" }.mkString(", ")
-    val onCond = keys.map(k => s"t.$k = s.$k").mkString(" AND ")
-    val setList = cols.filterNot(keys.contains).map(c => s"t.$c = s.$c").mkString(", ")
-    val insVals = cols.map(c => s"s.$c").mkString(", ")
-    s"MERGE INTO $table t USING (SELECT $srcCols FROM SYSIBM.SYSDUMMY1) s " +
-      s"ON $onCond WHEN MATCHED THEN UPDATE SET $setList " +
-      s"WHEN NOT MATCHED THEN INSERT ($plainCols) VALUES ($insVals)"
-  }
-
-  /** ANSI SQL type for a typed MERGE parameter cast — engines like
-    * Derby reject untyped ? in a source SELECT. */
-  private def sqlType(dt: DataType): String = dt match {
-    case LongType => "BIGINT"
-    case IntegerType => "INT"
-    case DoubleType => "DOUBLE"
-    case FloatType => "REAL"
-    case BooleanType => "BOOLEAN"
-    case d: DecimalType => s"DECIMAL(${d.precision},${d.scale})"
-    case TimestampType | TimestampNTZType => "TIMESTAMP"
-    case DateType => "DATE"
-    case _ => "VARCHAR(4000)"
-  }
-
-  /** Schema-aware DML: Merge mode gets typed CAST(? AS type) params. */
-  def buildSqlTyped(table: String, schema: StructType, mode: Mode): String = mode match {
-    case Merge(keys) =>
-      val typed = schema.fields.toSeq.map(f => f.name -> s"CAST(? AS ${sqlType(f.dataType)})")
-      mergeSql(table, typed, keys)
-    case m => buildSql(table, schema.fieldNames.toSeq, m)
   }
 
   private def bindValue(ps: PreparedStatement, j: Int, row: Row, i: Int,
@@ -200,7 +161,7 @@ class JdbcUpsertSink(
                   // SUCCESS_NO_INFO (e.g. MySQL rewriteBatchedStatements)
                   // and misroute rows to INSERT. UpdateInsert is the
                   // portability mode — the batched fast paths are
-                  // Replace/OnDuplicate/Merge.
+                  // Replace/OnDuplicate.
                   val missed = batch.filter { r =>
                     bindCols(upd, r, schema, updOrder)
                     upd.executeUpdate() == 0
@@ -210,7 +171,7 @@ class JdbcUpsertSink(
                 } finally { upd.close(); ins.close() }
               }
             case _ =>
-              val sql = buildSqlTyped(table, schema, m)
+              val sql = buildSql(table, allCols, m)
               (batch, c) => {
                 val ps = c.prepareStatement(sql)
                 try {

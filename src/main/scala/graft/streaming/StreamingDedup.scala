@@ -40,7 +40,7 @@ object StreamingDedup {
     * ride along. */
   def withSignature(docs: DataFrame,
                     p: MinHashParams = DedupOps.defaultParams): DataFrame =
-    DedupOps.withSignatureAll(docs, p).where(col("__sig").isNotNull)
+    DedupOps.withSignatureAll(docs.where(DedupOps.signable), p)
 
   /** Stream-static near-dup matches: for each streaming document that
     * shares an LSH band with a corpus document and whose signature

@@ -146,6 +146,23 @@ class ApiSurfaceSpec extends SparkSpec {
       s"bucketBy( under graft/streaming, expected once in PostingCompaction: $writes")
   }
 
+  test("the LSH band guard is written once, in SkewGuard") {
+    // the minhash, simhash and embedding self-joins all take their
+    // collapse and bucket cap from SkewGuard.guardedBands; a capBuckets(
+    // or min_by( elsewhere, or a second guard-off branch, is a copy of
+    // the guard that can drift from it
+    val guardCalls = mainSources.flatMap { case (file, text) =>
+      "capBuckets\\(|min_by\\(".r.findAllIn(text).map(_ => file)
+    }
+    assert(guardCalls.nonEmpty && guardCalls.forall(_ == "SkewGuard.scala"),
+      s"capBuckets( / min_by( under src/main, expected only in SkewGuard: $guardCalls")
+    val offBranches = mainSources.flatMap { case (file, text) =>
+      "maxGroupAllPairs == Int\\.MaxValue".r.findAllIn(text).map(_ => file)
+    }
+    assert(offBranches == Seq("SkewGuard.scala"),
+      s"guard-off collapse branches under src/main, expected one in SkewGuard: $offBranches")
+  }
+
   test("the minhash signature has one producer and is spread into mh columns once") {
     // every signature is DedupOps.withSignatureAll's __sig array; a
     // second minhash_sig( call or a col(s"mh$i") pack brings back a

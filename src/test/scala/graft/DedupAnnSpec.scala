@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.Row
+
 import graft.operators.{DedupOps, EmbeddingOps, MinHashParams}
 
 /** Round-2 production shaping of the dedup/ANN stack: parameterized
@@ -322,36 +324,59 @@ class DedupAnnSpec extends SparkSpec {
 
   import graft.operators.BandGuard
 
-  test("guard: 1.2k identical docs collapse to a linear star, not 720k pairs") {
+  /** The three band self-joins behind the one guard, each as (name,
+    * (id, text) rows + guard → (a, b, score) pairs, the score of an
+    * exact duplicate). The embedding operator sees one seeded random
+    * vector per distinct text, so equal texts are identical vectors. */
+  private def guardedOps: Seq[(String, (Seq[(Long, String)], BandGuard) => Array[Row], Any)] = {
     import spark.implicits._
+    def vec(text: String): Array[Double] = {
+      val r = new scala.util.Random(text.hashCode)
+      Array.fill(EmbeddingOps.dim)(r.nextGaussian())
+    }
+    Seq(
+      ("lshCandidatesOf", (rows, g) =>
+        DedupOps.lshCandidatesOf(rows.toDF("doc_id", "text"), DedupOps.defaultParams, g)
+          .collect(), 1.0),
+      ("simhashPairsOf", (rows, g) =>
+        DedupOps.simhashPairsOf(rows.toDF("doc_id", "text"), g).collect(), 0),
+      ("nearDupPairsOf", (rows, g) =>
+        EmbeddingOps.nearDupPairsOf(
+          rows.map { case (i, t) => (i, vec(t)) }.toDF("vec_id", "embedding"), g)
+          .collect(), 1.0))
+  }
+
+  test("guard: 1.2k identical docs collapse to a linear star, not 720k pairs") {
     val boiler = "the quick brown fox jumps over the lazy dog again and again"
-    val docs = ((0L until 1200L).map(i => (i, boiler)) ++
+    val rows = (0L until 1200L).map(i => (i, boiler)) ++
       Seq((2000L, "completely different text one alpha beta gamma"),
-          (2001L, "another unrelated document delta epsilon zeta eta")))
-      .toDF("doc_id", "text")
-    val pairs = DedupOps.lshCandidatesOf(docs, DedupOps.defaultParams,
-      BandGuard(maxBucket = 256, maxGroupAllPairs = 64, logOverflow = true))
-      .collect()
-    // unguarded would be ~1200*1199/2 = 719,400 pairs; the star is 1,199
-    assert(pairs.length < 1500, s"pair explosion not bounded: ${pairs.length}")
-    val star = pairs.filter(r => r.getAs[Long]("doc_a") == 0L)
-    assert(star.length == 1199, s"expected 1199 star pairs, got ${star.length}")
-    assert(star.forall(_.getAs[Double]("est_jaccard") == 1.0))
+          (2001L, "another unrelated document delta epsilon zeta eta"))
+    val g = BandGuard(maxBucket = 256, maxGroupAllPairs = 64, logOverflow = true)
+    guardedOps.foreach { case (name, pairsOf, exact) =>
+      val pairs = pairsOf(rows, g)
+      // unguarded would be ~1200*1199/2 = 719,400 pairs; the star is 1,199
+      assert(pairs.length < 1500, s"$name: pair explosion not bounded: ${pairs.length}")
+      val star = pairs.filter(_.getLong(0) == 0L)
+      assert(star.length == 1199, s"$name: expected 1199 star pairs, got ${star.length}")
+      assert(star.forall(_.get(2) == exact), s"$name: star pairs must score $exact")
+    }
+    spark.catalog.clearCache()
   }
 
   test("guard: small identical groups keep exact all-pairs output") {
-    import spark.implicits._
     // group A (100 docs) exceeds maxGroupAllPairs=64 -> star; group B (10) stays all-pairs
-    val docs = ((0L until 100L).map(i => (i, "boilerplate header text shared by many pages")) ++
-      (200L until 210L).map(i => (i, "footer legal text repeated ten times exactly")))
-      .toDF("doc_id", "text")
-    val pairs = DedupOps.lshCandidatesOf(docs, DedupOps.defaultParams, BandGuard.default)
-      .collect()
-    val aStar = pairs.filter(r => r.getAs[Long]("doc_a") == 0L && r.getAs[Long]("doc_b") < 100L)
-    assert(aStar.length == 99, s"group A should star-expand: ${aStar.length}")
-    val bPairs = pairs.filter(r => r.getAs[Long]("doc_a") >= 200L)
-    assert(bPairs.length == 45, s"group B (10 docs) should keep all 45 pairs: ${bPairs.length}")
-    assert(bPairs.forall(_.getAs[Double]("est_jaccard") == 1.0))
+    val rows = (0L until 100L).map(i => (i, "boilerplate header text shared by many pages")) ++
+      (200L until 210L).map(i => (i, "footer legal text repeated ten times exactly"))
+    guardedOps.foreach { case (name, pairsOf, exact) =>
+      val pairs = pairsOf(rows, BandGuard.default)
+      val aStar = pairs.filter(r => r.getLong(0) == 0L && r.getLong(1) < 100L)
+      assert(aStar.length == 99, s"$name: group A should star-expand: ${aStar.length}")
+      val bPairs = pairs.filter(_.getLong(0) >= 200L)
+      assert(bPairs.length == 45,
+        s"$name: group B (10 docs) should keep all 45 pairs: ${bPairs.length}")
+      assert(bPairs.forall(_.get(2) == exact), s"$name: group B pairs must score $exact")
+    }
+    spark.catalog.clearCache()
   }
 
   test("guard: simhash identical docs collapse to hamming-0 star") {
@@ -425,6 +450,38 @@ class DedupAnnSpec extends SparkSpec {
     assert(DedupOps.bandCacheRegistry.size(spark) == 0,
       "guarded simhash pairs must not register a band-cache entry")
     spark.catalog.clearCache()
+  }
+
+  test("the guard's suspect census dies with its query: q24, q28 and library LSH cache nothing") {
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    Seq("q24_simhash_pairs", "q28_embed_neardup").foreach { q =>
+      SparkEntry.queries(q)(spark, sf).collect()
+      assert(awaitTrue(cache.isEmpty), s"$q left a cached plan behind")
+    }
+    val docs = Tables.documents(spark, sf).select("doc_id", "text")
+    DedupOps.lshCandidatesOf(docs).collect()
+    // the signature persist is the caller's (the documented contract):
+    // once the caller drops it, the band stream and the census must be gone
+    DedupOps.minhashSignaturesOf(docs).unpersist(true)
+    assert(awaitTrue(cache.isEmpty), "lshCandidatesOf left a cached plan behind")
+  }
+
+  test("signable is exactly the docs minhash_sig signs, and each is signed once") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
+    val texts = Seq[String](null, "", "one", " lead", "trail ", "two words").toDF("text")
+    val signed = graft.functions.MinHashSig.minhash_sig(col("text"), 8).isNotNull
+    val rows = texts.select(col("text"), coalesce(DedupOps.signable, lit(false)), signed)
+      .collect()
+    rows.foreach(r => assert(r.getBoolean(1) == r.getBoolean(2),
+      s"signable disagrees with minhash_sig on ${Option(r.getString(0))}"))
+    assert(rows.count(_.getBoolean(2)) == 3) // " lead", "trail ", "two words"
+    val plan = DedupOps.minhashSignaturesOf(Tables.documents(spark, sf))
+      .queryExecution.optimizedPlan.toString
+    assert("minhash_sig\\(".r.findAllIn(plan).length == 1,
+      s"minhash_sig must run once per document:\n$plan")
   }
 
   test("staged candidate read plan is a pure scan — no join, no window") {

@@ -82,14 +82,6 @@ class JdbcUpsertSinkSpec extends SparkSpec {
       "ON DUPLICATE KEY UPDATE a = VALUES(a), b = VALUES(b)")
   }
 
-  test("MERGE sql keys on the PK and updates non-keys") {
-    val sql = buildSql("t", Seq("id", "v"), Merge(Seq("id")))
-    assert(sql.contains("MERGE INTO t t USING"))
-    assert(sql.contains("ON t.id = s.id"))
-    assert(sql.contains("WHEN MATCHED THEN UPDATE SET t.v = s.v"))
-    assert(sql.contains("WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id, s.v)"))
-  }
-
   private val url = "jdbc:derby:memory:graftsink;create=true"
 
   test("derby integration: append, upsert idempotence, batch flush") {

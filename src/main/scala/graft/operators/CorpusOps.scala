@@ -311,9 +311,7 @@ object CorpusOps {
     // itself stays deliberately un-materialized (q57 doctrine:
     // recompute narrow CPU, never widen a shuffle/cache with the
     // token stream).
-    val freq = tok.groupBy("t").agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    rareFreqCacheRegistry.register(freq): Unit
+    val freq = CacheRegistry.scoped(tok.groupBy("t").agg(count(lit(1)).as("c")))
     val tot = freq.agg(sum("c").as("total"), count(lit(1)).as("vocab"))
     val common = freq.crossJoin(broadcast(tot))
       .where(col("c") * col("vocab") * 2 >= col("total")).select("t")
@@ -607,7 +605,7 @@ object CorpusOps {
     * not dedupe the tf subtree (post-exec plan: 0 reused stages,
     * 2 document scans), so the hint-free r14 §30 canonical form paid
     * the corpus explode+agg TWICE. tf is now persisted
-    * (MEMORY_AND_DISK, LRU-registered like the band cache) — one
+    * (MEMORY_AND_DISK, query-scoped like the band cache) — one
     * corpus scan, measured 5.4 → 4.5 s at 100×. The df table (one row
     * per vocabulary term — Heaps' law: sublinear in corpus size)
     * joins back hint-free, broadcast while it fits. Top-k is a
@@ -622,11 +620,9 @@ object CorpusOps {
     * 1000× skew; PERF §51. */
   def tfidfKeywords(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val tf = Tables.documents(spark, sfDir)
+    val tf = CacheRegistry.scoped(Tables.documents(spark, sfDir)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    tfidfTfCacheRegistry.register(tf): Unit
+      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val w = Window.partitionBy("doc_id")
       .orderBy(col("score_ppm").desc, col("term").asc)
@@ -641,26 +637,6 @@ object CorpusOps {
       .select("doc_id", "term", "tf", "df", "score_ppm", "rank")
       .orderBy("doc_id", "rank")
   }
-
-  /** Bounded LRU for [[rareTokenFilter]]'s vocab-frequency persist
-    * (same discipline as the tf registry below). */
-  private[graft] val rareFreqCacheRegistry =
-    new SessionCacheRegistry(2, queryScoped = true)
-
-  /** Release this session's persisted q54 freq frames; returns count. */
-  def releaseRareFreqCache(spark: SparkSession): Int =
-    rareFreqCacheRegistry.release(spark)
-
-  /** LRU-bounded registry for [[tfidfKeywords]]'s persisted tf frame
-    * (same discipline as DedupOps' band cache): repeated calls
-    * re-register the same logical frame (no growth); long-lived
-    * sessions can release explicitly. */
-  private[graft] val tfidfTfCacheRegistry =
-    new SessionCacheRegistry(2, queryScoped = true)
-
-  /** Release this session's persisted q56 tf frames; returns count. */
-  def releaseTfidfCache(spark: SparkSession): Int =
-    tfidfTfCacheRegistry.release(spark)
 
   val tfidfKeywordsSql: String =
     s"""WITH tf AS (
@@ -854,23 +830,17 @@ object CorpusOps {
       // verify build to overlap, so it keeps the original single-job
       // lazy shape (no extra blocking job, no pinned caches).
       val staging = Staging.inStagingChain
+      // the chain-thread persists are consumed only by the stage_flags
+      // write, so they die with it
       def eager(df: DataFrame): DataFrame =
-        if (staging)
-          df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else df
+        if (staging) CacheRegistry.scoped(df) else df
       val q = eager(qualityFilter(spark, sfDir).where(col("pass") === 1)
         .select("doc_id").withColumn("f_q", lit(true)))
       val dc = eager(decontaminate(spark, sfDir).where(col("contaminated") === 0)
         .select("doc_id").withColumn("f_dc", lit(true)))
-      if (staging) {
+      if (staging)
         q.select(lit(1L).as("one")).unionAll(dc.select(lit(1L).as("one")))
           .count(): Unit
-        // chain-thread persists are consumed only by the stage_flags
-        // write — release them when it completes (r15 cleanup hook;
-        // previously a documented header leak in DedupOps)
-        Staging.registerComputeCleanup(() => q.unpersist(false)): Unit
-        Staging.registerComputeCleanup(() => dc.unpersist(false)): Unit
-      }
       val keeper = DedupOps.keeperTable(spark, sfDir)
       keeper
         .join(DedupOps.dedupKeepList(spark, sfDir).select("doc_id")

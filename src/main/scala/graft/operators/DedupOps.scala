@@ -38,9 +38,8 @@ final case class MinHashParams(numHashes: Int = 8, numBands: Int = 4) {
   * plain scan with column pruning — exactly what a 100 TB pipeline
   * does between dedup stages). Controlled by system property
   * `graft.stage.dir`: unset → `$java.io.tmpdir/graft-stage`; a path →
-  * that root; `off` → no staging, falling back to `persist()` for
-  * within-query sharing (loops issuing many such queries should then
-  * `spark.catalog.clearCache()` between them, as graft.Verify does).
+  * that root; `off` → no staging, falling back to a query-scoped
+  * persist ([[CacheRegistry.scoped]]) for within-query sharing.
   */
 object DedupOps {
   // minhash parameters: defaults 8 hashes, 4 bands x 2 rows
@@ -68,31 +67,11 @@ object DedupOps {
   // shared read-through mechanics (incl. the source-content
   // fingerprint in the staging key) live in graft.operators.Staging
   //
-  // Cache-lifetime contract for the persist() FALLBACK sites (active
-  // mainly when staging is off — sigTable, sharedShingles,
-  // simhashPairs, and the `*Of` library entries over arbitrary frames):
-  // each backs multiple references to the same subtree INSIDE the
-  // returned lazy plan, so the function cannot unpersist before
-  // returning (the q79 `finally unpersist` pattern at
-  // prefixJaccardPairsOf applies only because that function consumes
-  // the persist itself via localCheckpoint). Ownership therefore sits
-  // with the CALLER's session: Spark's CacheManager keys entries by
-  // logical plan, so repeated calls over the same corpus reuse one
-  // entry (no growth), and `spark.catalog.clearCache()` — which Bench
-  // issues after every measurement — or session stop releases them.
-  // Long-lived drivers cycling many DISTINCT unstaged corpora should
-  // either enable staging or clearCache() between corpora.
-  //
-  // Sites with an EXPLICIT lifecycle instead: the band guard's suspect
-  // census (SkewGuard.guardedBands, all three band self-joins) and the
-  // LSH band stream in lshCandidatesFrom. Consumed by a staged write,
-  // each unpersists via Staging.registerComputeCleanup the moment the
-  // parquet promote finishes (as do stage_flags' chain-only q51/q48
-  // flag frames in CorpusOps); taken by a library call, each lands in
-  // a query-scoped SessionCacheRegistry and dies with the query that
-  // consumes it (the band stream is also releasable via
-  // [[releaseBandCache]]).
-  // simhashPairsFrom's band stream and CorpusOps.dedupSpanRanges'
+  // Every persist below but prefixJaccardPairsOf's (a try/finally: its
+  // consumers all run before it returns) goes through
+  // CacheRegistry.scoped: inside a staged write the frame dies with the
+  // write, otherwise with the first query that consumes the returned
+  // plan. simhashPairsFrom's band stream and CorpusOps.dedupSpanRanges'
   // flagged-window frame recompute per reference instead: their
   // persists measured a wash (PERF §68, §70).
 
@@ -414,18 +393,16 @@ object DedupOps {
   def minhashSignaturesOf(docs: DataFrame, p: MinHashParams = defaultParams): DataFrame =
     withSignatureAll(docs.where(signable), p).select("doc_id", "__sig")
 
-  /** `(doc_id, __sig)` signature table, staged (or persist()ed when
-    * staging is off). (Tried doc_id-bucketed staging like `doc_sets`
-    * for the est-attach joins in r12: isolated stage times held but
-    * the CONCURRENT stageAll wall went 86 → 97 s — the per-chain
+  /** `(doc_id, __sig)` signature table, staged (or a query-scoped
+    * persist when staging is off). (Tried doc_id-bucketed staging like
+    * `doc_sets` for the est-attach joins in r12: isolated stage times
+    * held but the CONCURRENT stageAll wall went 86 → 97 s — the per-chain
     * saveAsTable catalog commands and extra repartition serialize
     * against the other seven chains. Plain parquet staging wins at
     * full concurrency.) */
   private def sigTable(spark: SparkSession, sfDir: String, p: MinHashParams): DataFrame =
     stagingRoot match {
-      case None =>
-        minhashSignaturesOf(Tables.documents(spark, sfDir), p)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      case None => CacheRegistry.scoped(minhashSignaturesOf(Tables.documents(spark, sfDir), p))
       case _ =>
         staged(spark, sfDir, s"sig_h${p.numHashes}")(
           minhashSignaturesOf(Tables.documents(spark, sfDir), p))
@@ -507,10 +484,7 @@ object DedupOps {
   def lshCandidatesOf(docs: DataFrame,
                       p: MinHashParams = defaultParams,
                       g: BandGuard = BandGuard.default): DataFrame =
-    lshCandidatesFrom(
-      minhashSignaturesOf(docs, p)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      p, g)
+    lshCandidatesFrom(CacheRegistry.scoped(minhashSignaturesOf(docs, p)), p, g)
 
   /** SQL expr producing the band-key array from the `__sig` array
     * column: band b's key is "b_mh.._mh" over its rowsPerBand slice.
@@ -592,18 +566,11 @@ object DedupOps {
     // concurrency the same persist measured level-to-worse (the fill
     // job serializes a chain segment other chains' work no longer
     // hides). Gated on CHAIN membership (thread-local), so a concurrent
-    // library caller's plan keeps the persist. Lifecycle: inside a
-    // staged write it unpersists when the write completes; a library
-    // call registers it in the query-scoped [[bandCacheRegistry]].
+    // library caller's plan keeps the persist.
     val finiteCap = g.maxBucket != Int.MaxValue || g.maxGroupAllPairs != Int.MaxValue
     val bands =
       if (Staging.inStagingChain || !finiteCap) capped
-      else {
-        val persisted = capped.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        if (!Staging.registerComputeCleanup(() => persisted.unpersist(false)))
-          bandCacheRegistry.register(persisted): Unit
-        persisted
-      }
+      else CacheRegistry.scoped(capped)
     val cand = bands.as("x").join(bands.as("y"),
         col("x.bk") === col("y.bk") && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
@@ -632,28 +599,6 @@ object DedupOps {
       case out         => out
     }
   }
-
-  /** LSH band-stream persists taken by LIBRARY `lshCandidatesFrom`
-    * calls (a finite guard cap, outside any staged write, off stageAll
-    * chain threads), per session — the only frames this registry
-    * holds. The caller-session cache-lifetime contract made releasable
-    * AND bounded (VERDICT r15 #7): a long-lived session cycling many
-    * DISTINCT corpora no longer accumulates one ~16 B/row band frame
-    * each until it thinks to release — beyond 8 frames the
-    * least-recently-registered is evicted and unpersisted
-    * automatically (repeat calls over the SAME corpus share one
-    * CacheManager entry and never consume a new slot). */
-  private[graft] val bandCacheRegistry =
-    new SessionCacheRegistry(maxEntries = 8, queryScoped = true)
-
-  /** Release every band-stream persist accumulated by library
-    * `lshCandidatesOf`/`lshCandidates` calls on `spark`; returns how
-    * many frames were unpersisted. Still useful for callers that know
-    * their corpus lifecycle (the LRU only bounds the steady state).
-    * Safe while queries over those frames still run — unpersist is
-    * lazy-safe, the plan recomputes. */
-  def releaseBandCache(spark: SparkSession): Int =
-    bandCacheRegistry.release(spark)
 
   /** Sum as a balanced parenthesis tree: a flat left-nested `+` chain
     * of 128 terms exceeds DuckDB's binder recursion limit (128). */
@@ -708,13 +653,12 @@ object DedupOps {
     jaccardVerify(spark, sfDir, defaultParams)
 
   /** Shingle frame shared across several scans in one query: the
-    * staged table when staging is on, a persist()ed compute otherwise.
+    * staged table when staging is on, a query-scoped persist otherwise.
     * Also the entry point for other corpus operators (decontamination)
     * that reuse the same staged shingles. */
   private[graft] def sharedShingles(spark: SparkSession, sfDir: String): DataFrame =
     stagingRoot match {
-      case None => computeShingles(spark, sfDir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      case None => CacheRegistry.scoped(computeShingles(spark, sfDir))
       case _ => shingleTable(spark, sfDir)
     }
 
@@ -993,8 +937,7 @@ object DedupOps {
   /** Containment pairs over an arbitrary `(doc_id, text)` frame — the
     * library entry for corpora not staged under a testdata dir. */
   def containmentPairsOf(docs: DataFrame): DataFrame =
-    containmentFrom(shinglesOf(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    containmentFrom(CacheRegistry.scoped(shinglesOf(docs)))
 
   private def containmentFrom(bg: DataFrame): DataFrame =
     containmentVerify(containmentCandidates(bg), setsFrom(bg))
@@ -1253,10 +1196,8 @@ object DedupOps {
   private[graft] def prefixTable(spark: SparkSession, sfDir: String,
                           t: Double): DataFrame = {
     stagingRoot match {
-      case None =>
-        prefixFrom(
-          sharedShingles(spark, sfDir).select("doc_id", "s", "h", "h60"), t)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      case None => CacheRegistry.scoped(prefixFrom(
+          sharedShingles(spark, sfDir).select("doc_id", "s", "h", "h60"), t))
       case _ =>
         staged(spark, sfDir, s"prefix_t${math.round(t * 1000)}") {
           prefixBare(
@@ -1744,8 +1685,7 @@ object DedupOps {
       // uses (VERDICT r13 #3 — the aggregate form is a spec-parity
       // reference only); persisted because the band/star split below
       // consumes the signature frame more than once
-      case None => simhashOf(Tables.documents(spark, sfDir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      case None => CacheRegistry.scoped(simhashOf(Tables.documents(spark, sfDir)))
       case _ => simhashTable(spark, sfDir)
     }
     simhashPairsFrom(sh, BandGuard.default)
@@ -1754,9 +1694,7 @@ object DedupOps {
   /** SimHash pairs over an arbitrary `(doc_id, text)` frame with an
     * explicit skew guard; no read-through staging. */
   def simhashPairsOf(docs: DataFrame, g: BandGuard = BandGuard.default): DataFrame =
-    simhashPairsFrom(
-      simhashOf(docs).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      g)
+    simhashPairsFrom(CacheRegistry.scoped(simhashOf(docs)), g)
 
   private def simhashPairsFrom(sh: DataFrame, g: BandGuard): DataFrame = {
     // identical simhashes collapse to a hamming-0 star

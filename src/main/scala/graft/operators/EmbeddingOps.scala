@@ -179,21 +179,6 @@ object EmbeddingOps {
        |$duckBucketCte
        |SELECT vec_id, bucket FROM bk ORDER BY vec_id""".stripMargin
 
-  /** Query-scoped LRU for the q27/q28 bucketed-vector persists: the
-    * `vb` frame (every vector + its bucket — corpus-scale) feeds both
-    * the query side and the search side of one ANN plan. Before r22 it
-    * was persisted with NO registry at all — each call pinned a
-    * corpus-scale MEMORY_AND_DISK frame for the session's lifetime
-    * (VERDICT r21 #2's "q28's vb" leak). Now it releases when the
-    * consuming action completes, LRU as backstop. */
-  private[graft] val annVbCacheRegistry =
-    new SessionCacheRegistry(2, queryScoped = true)
-
-  /** Release this session's persisted ANN bucketed-vector frames;
-    * returns the count. */
-  def releaseAnnVbCache(spark: SparkSession): Int =
-    annVbCacheRegistry.release(spark)
-
   /** ANN via LSH buckets: top-3 cosine neighbors per query, searching
     * only the query's bucket — the IVF-style scale path. */
   def annBucketed(spark: SparkSession, sfDir: String): DataFrame = {
@@ -204,9 +189,9 @@ object EmbeddingOps {
     // against lshBucketsFrom(vs): the join form executed the vectors
     // subtree twice and paid a join/exchange purely to re-attach a
     // value derivable per row (r21 plan audit; guide §2.4)
-    val vb = vs.withColumn("bucket", signBucket(col("v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    annVbCacheRegistry.register(vb): Unit
+    // every vector + its bucket (corpus-scale) feeds both the query
+    // side and the search side: persisted for this query only
+    val vb = CacheRegistry.scoped(vs.withColumn("bucket", signBucket(col("v"))))
     val qs = vb.where(col("vec_id") < numQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
         col("nrm").as("qn"), col("bucket").as("qbucket"))
@@ -314,12 +299,17 @@ object EmbeddingOps {
   def kmeansCentroids(spark: SparkSession, sfDir: String,
                       k: Int = numCentroids,
                       iters: Int = kmeansIters): Seq[(Int, Array[Double])] = {
+    // every collect runs in here, so the persist is released in a
+    // finally (query-scoped, the seed collect would release it and each
+    // Lloyd iteration would recompute the vectors)
     val vs = vectors(spark, sfDir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var cents = seedCentroids(vs, k)
-    for (_ <- 1 to iters)
-      cents = updateCentroids(vs.withColumn("cent_id", nearestCentroid(cents)))
-    cents
+    try {
+      var cents = seedCentroids(vs, k)
+      for (_ <- 1 to iters)
+        cents = updateCentroids(vs.withColumn("cent_id", nearestCentroid(cents)))
+      cents
+    } finally { vs.unpersist(false): Unit }
   }
 
   // ------------------------------------------------------- IVF model staging
@@ -751,8 +741,7 @@ object EmbeddingOps {
     val (capped, star) = SkewGuard.guardedBands(
       vs, "vec_id", "v", array(signBucket(col("v"))), Seq("v", "nrm"), g, "nearDupPairs")
     // the capped stream (every vector + its bucket) feeds both join sides
-    val vb = capped.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    annVbCacheRegistry.register(vb): Unit
+    val vb = CacheRegistry.scoped(capped)
     val a = vb.select(col("vec_id").as("vec_a"), col("v").as("va"),
       col("nrm").as("na"), col("bk").as("ba"))
     val b = vb.select(col("vec_id").as("vec_b"), col("v").as("vb"),

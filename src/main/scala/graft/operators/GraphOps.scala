@@ -79,21 +79,27 @@ object GraphOps {
     // extra column rides the existing groupBy exchange).
     var converged = false
     var iter = 0
-    while (!converged && iter < maxIter) {
-      val prop = labels.join(und, labels("id") === und("src"))
-        .select(und("dst").as("id"), labels("lbl").as("lbl"),
-          // null of lbl's exact type, so unionByName coerces nothing
-          when(lit(false), labels("lbl")).as("old"))
-      val next = prop
-        .unionByName(labels.select(col("id"), col("lbl"), col("lbl").as("old")))
-        .groupBy("id").agg(min("lbl").as("lbl"), min("old").as("old"))
-        .localCheckpoint(false)
-      val changed = next.where(col("lbl") < col("old")).count()
-      labels = next.select("id", "lbl")
-      converged = changed == 0L
-      iter += 1
+    // every round job runs in here over checkpoints: und and the
+    // query-scoped frames under `edges` have no reader after the rounds
+    try {
+      while (!converged && iter < maxIter) {
+        val prop = labels.join(und, labels("id") === und("src"))
+          .select(und("dst").as("id"), labels("lbl").as("lbl"),
+            // null of lbl's exact type, so unionByName coerces nothing
+            when(lit(false), labels("lbl")).as("old"))
+        val next = prop
+          .unionByName(labels.select(col("id"), col("lbl"), col("lbl").as("old")))
+          .groupBy("id").agg(min("lbl").as("lbl"), min("old").as("old"))
+          .localCheckpoint(false)
+        val changed = next.where(col("lbl") < col("old")).count()
+        labels = next.select("id", "lbl")
+        converged = changed == 0L
+        iter += 1
+      }
+    } finally {
+      und.unpersist(): Unit
+      CacheRegistry.consumed(edges)
     }
-    und.unpersist()
     if (!converged)
       throw new ConvergenceException(
         s"connectedComponents did not converge within $maxIter rounds " +
@@ -152,6 +158,8 @@ object GraphOps {
     // anti-join — and the extra edge scan they imply — from the
     // RETURNED plan, which downstream consumers may execute many times
     val hasSelfLoops = !raw.where(col("src") === col("dst")).isEmpty
+    // that job materialized raw: nothing reads `edges` after it
+    CacheRegistry.consumed(edges)
     lazy val selfIds = raw.where(col("src") === col("dst"))
       .select(col("src").as("id")).distinct()
     def withSelfLoopSingletons(res: DataFrame): DataFrame =

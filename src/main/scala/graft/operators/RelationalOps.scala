@@ -509,32 +509,18 @@ object RelationalOps {
     * (≤ [[pctHintMaxGroups]]). A million-group caller still degrades
     * to shuffle joins instead of a driver OOM, and the persist also
     * stops the five stats subplan occurrences recomputing the
-    * aggregate. The persist's lifetime is NOT automatic (ADVICE r15:
-    * CacheManager holds a strong reference to the cached plan, so
-    * ContextCleaner never reclaims it when the handle goes
-    * unreachable) — each stats frame is tracked in a bounded
-    * per-session LRU ([[SessionCacheRegistry]]): repeated calls over
-    * the same input share one entry, distinct inputs beyond the window
-    * evict-and-unpersist the eldest, and
-    * [[releasePercentileCache]] frees them all eagerly.
+    * aggregate. The stats frame is the one frame a caller reads
+    * EAGERLY before its query runs, so it is taken with
+    * [[CacheRegistry.filled]]: the gate count fills it and it is
+    * registered after that count, so the count cannot release it and
+    * the query that consumes the returned plan does (query-scoped, like
+    * every other engine persist). q75's executed plan reads all five
+    * stats references through `InMemoryTableScan`.
     *
     * NOTE: this makes percentilesByBucketed EAGER (it runs the stats
     * job before returning), like [[graft.operators.DedupOps
     * .prefixJaccardPairsOf]]. */
   private[graft] val pctHintMaxGroups = 100000L
-
-  /** Per-session LRU of percentile stats persists (ADVICE r15: the
-    * leak class [[SessionCacheRegistry]] exists for — every call over
-    * a DISTINCT input takes one group-cardinality MEMORY_AND_DISK
-    * frame that CacheManager pins until released). */
-  private[graft] val pctStatsRegistry = new SessionCacheRegistry(8)
-
-  /** Unpersist every percentile stats frame cached by
-    * [[percentilesByBucketed]] calls on `spark`; returns the count.
-    * The LRU bounds the steady state regardless — this is the eager
-    * release for callers that know they are done. */
-  def releasePercentileCache(spark: org.apache.spark.sql.SparkSession): Int =
-    pctStatsRegistry.release(spark)
 
   def percentilesByBucketed(df: DataFrame, groupCol: String, valueCol: String,
                             qs: Seq[Double], buckets: Int = 4096,
@@ -542,11 +528,9 @@ object RelationalOps {
     require(levels == 1 || levels == 2, s"levels must be 1 or 2, got $levels")
     val vals = df.where(col(valueCol).isNotNull)
       .select(col(groupCol), col(valueCol).cast("double").as("__v"))
-    val stats = vals.groupBy(groupCol).agg(count(lit(1)).as("__n"),
-        min("__v").as("__lo"), max("__v").as("__hi"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pctStatsRegistry.register(stats): Unit
-    val hintOn = stats.count() <= pctHintMaxGroups
+    val (stats, groups) = CacheRegistry.filled(vals.groupBy(groupCol)
+      .agg(count(lit(1)).as("__n"), min("__v").as("__lo"), max("__v").as("__hi")))
+    val hintOn = groups <= pctHintMaxGroups
     def maybeHint(small: DataFrame): DataFrame =
       if (hintOn) broadcast(small) else small
     val bucketed = vals.join(maybeHint(stats), groupCol)

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Guard rails for the LSH band self-joins — the minhash candidates
   * (`DedupOps.lshCandidatesFrom`: q21/q22/q43/q44 and the staged
@@ -53,12 +52,6 @@ object BandGuard {
 object SkewGuard {
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Suspect-census persists [[guardedBands]] takes outside a staged
-    * write, per session: released when the query that consumes them
-    * completes, at most 8 alive as the backstop for plans never run. */
-  private[graft] val suspectCacheRegistry =
-    new SessionCacheRegistry(maxEntries = 8, queryScoped = true)
-
   /** Both guard stages for one banded self-join over `rows` (one row
     * per `idCol`, `sigCol` the signature whose equality means "exact
     * duplicate"). Returns `(bands, star)`:
@@ -91,28 +84,27 @@ object SkewGuard {
   private def collapse(rows: DataFrame, idCol: String, sigCol: String,
                        maxGroup: Int): (DataFrame, DataFrame) = {
     val wfp = Window.partitionBy("__fp")
-    val suspectIds = rows
+    val census = rows
       .select(col(idCol), xxhash64(col(sigCol)).as("__fp"))
       .withColumn("__fsz", count(lit(1)).over(wfp))
       .where(col("__fsz") > maxGroup)
       .select(idCol, "__fp")
-      // Referenced by the anti-join, the suspect join and the star, and
-      // stage reuse does not fire across those references: without
-      // materialization the corpus-wide census runs once PER reference.
-      // The output is tiny (only members of oversized groups, usually
-      // none), so this is safe inside a stageAll window where a full
-      // band-stream persist is not (PERF §35). persist, not
-      // localCheckpoint: keep the census lineage on block loss.
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // Eager fill ONLY on a stageAll chain thread, which is about to
-    // materialize everything anyway; library callers keep the lazy
-    // contract. Filled before it is registered, so this count's own
-    // completion cannot release it from the query-scoped registry.
-    if (Staging.inStagingChain) suspectIds.count(): Unit
-    // Inside a staged write the census dies with the write; outside one
-    // it dies with the first query that consumes the returned plan.
-    if (!Staging.registerComputeCleanup(() => suspectIds.unpersist(false)))
-      suspectCacheRegistry.register(suspectIds): Unit
+    // Referenced by the anti-join, the suspect join and the star, and
+    // stage reuse does not fire across those references: without
+    // materialization the corpus-wide census runs once PER reference.
+    // The output is tiny (only members of oversized groups, usually
+    // none), so this is safe inside a stageAll window where a full
+    // band-stream persist is not (PERF §35). persist, not
+    // localCheckpoint: keep the census lineage on block loss. Inside a
+    // staged write the census dies with the write; outside one, with
+    // the first query that consumes the returned plan. Filled eagerly
+    // ONLY on a stageAll chain thread, which is about to materialize
+    // everything anyway; library callers keep the lazy contract. The
+    // fill registers after its count, and the registry's exact
+    // stale-event guard keeps that count from releasing the census.
+    val suspectIds =
+      if (Staging.inStagingChain) CacheRegistry.filled(census)._1
+      else CacheRegistry.scoped(census)
     // The suspect id list is joined hint-free: AQE broadcasts it while
     // small; an all-duplicates corpus degrades to a shuffle join and
     // never loses exactness.

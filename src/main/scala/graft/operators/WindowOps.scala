@@ -169,21 +169,17 @@ object WindowOps {
     * subtrees — unpersisted, the r21 plan audit counted SIX event
     * scans per run (each stage's whole chain re-executed per
     * reference). Both frames are per-user minima (one narrow row per
-    * surviving user), so they persist (MEMORY_AND_DISK, LRU-registered
+    * surviving user), so they persist (MEMORY_AND_DISK, query-scoped
     * like q56's tf frame) and the plan pays three pushed-filter event
     * scans — one per stage — and each aggregate once. */
   def eventFunnel(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir).select("user_id", "event_type", "ts")
     def first(tpe: String): DataFrame = ev.where(col("event_type") === tpe)
       .groupBy("user_id").agg(min("ts").as(s"t_$tpe"))
-    val v = first("view")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    funnelCacheRegistry.register(v): Unit
-    val c = ev.where(col("event_type") === "click")
+    val v = CacheRegistry.scoped(first("view"))
+    val c = CacheRegistry.scoped(ev.where(col("event_type") === "click")
       .join(v, "user_id").where(col("ts") > col("t_view"))
-      .groupBy("user_id").agg(min("ts").as("t_click"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    funnelCacheRegistry.register(c): Unit
+      .groupBy("user_id").agg(min("ts").as("t_click")))
     val p = ev.where(col("event_type") === "purchase")
       .join(c, "user_id").where(col("ts") > col("t_click"))
       .groupBy("user_id").agg(min("ts").as("t_purchase"))
@@ -238,12 +234,10 @@ object WindowOps {
     val ev = Tables.events(spark, sfDir)
     // cohort is referenced twice (sizes + the activity join) and the
     // subtree re-executed per reference (r21 plan audit: 3 event
-    // scans); one narrow per-user row → persist, LRU-registered
-    val cohort = ev.where(col("event_type") === "signup")
+    // scans); one narrow per-user row → query-scoped persist
+    val cohort = CacheRegistry.scoped(ev.where(col("event_type") === "signup")
       .groupBy("user_id").agg(min("ts").as("t0"))
-      .withColumn("cohort_week", date_trunc("week", col("t0"))).drop("t0")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    funnelCacheRegistry.register(cohort): Unit
+      .withColumn("cohort_week", date_trunc("week", col("t0"))).drop("t0"))
     val sizes = cohort.groupBy("cohort_week").agg(count(lit(1)).as("cohort_size"))
     val activity = ev.select(col("user_id"),
         date_trunc("week", col("ts")).as("act_week")).distinct()
@@ -258,18 +252,6 @@ object WindowOps {
       .select("cohort_week", "week_offset", "n_active", "cohort_size", "retention_pm")
       .orderBy("cohort_week", "week_offset")
   }
-
-  /** Bounded LRU for the q65/q66 per-user stage persists (same
-    * discipline as CorpusOps' tf registry): repeated calls over the
-    * same corpus share one entry; distinct corpora beyond the window
-    * evict-and-unpersist the eldest. */
-  private[graft] val funnelCacheRegistry =
-    new SessionCacheRegistry(4, queryScoped = true)
-
-  /** Release this session's persisted funnel/cohort frames; returns
-    * the count. */
-  def releaseFunnelCache(spark: SparkSession): Int =
-    funnelCacheRegistry.release(spark)
 
   val cohortRetentionSql: String =
     """WITH cohort AS (

@@ -184,6 +184,28 @@ class ApiSurfaceSpec extends SparkSpec {
       s"mh column names under src/main, expected the minhashSignatures spread and the signaturesFrom reference: $spread")
   }
 
+  test("every engine persist goes through CacheRegistry or a same-function try/finally") {
+    // CacheRegistry.scoped gives a persist its owner (the staged write
+    // or the consuming query); any other .persist( under src/main must
+    // be released by the function that takes it
+    val allowed = Map(
+      "CacheRegistry.scala" -> (2, "scoped and filled: the one lifecycle"),
+      "Sinks.scala" -> (1, "withDeadLetter: try/finally around the two sink passes"),
+      "GraphOps.scala" -> (1, "connectedComponents: try/finally around the round jobs"),
+      "DedupOps.scala" -> (1, "prefixJaccardPairsOf: try/finally, the candidates are checkpointed inside"),
+      "EmbeddingOps.scala" -> (1, "kmeansCentroids: try/finally around the Lloyd iterations"),
+      "AdmissionPipelineSoak.scala" -> (1, "CLI main: the corpus frame lives for the whole process"))
+    val persists = mainSources.flatMap { case (file, text) =>
+      "\\.persist\\(".r.findAllIn(text).map(_ => file)
+    }.groupBy(identity).map { case (f, hits) => f -> hits.size }
+    assert(persists == allowed.map { case (f, (n, _)) => f -> n },
+      s".persist( per file under src/main, expected ${allowed.map { case (f, (n, _)) => f -> n }}: $persists")
+    val retired = mainSources.flatMap { case (file, text) =>
+      "SessionCacheRegistry|release\\w*Cache".r.findAllIn(text).map(m => s"$file: $m")
+    }
+    assert(retired.isEmpty, s"a second cache registry or release function under src/main: $retired")
+  }
+
   test("perfbench's staged query list matches graft.Bench.stagedNames") {
     // perfbench keeps its own copy of the list; a query added to or
     // dropped from one of them silently misses the other

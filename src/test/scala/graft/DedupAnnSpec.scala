@@ -439,16 +439,20 @@ class DedupAnnSpec extends SparkSpec {
     // measured a wash at 100× and slower on the perfbench dedup
     // workload (PERF §68, §70). Pin that neither the guard-off nor the
     // guarded path takes a band-cache slot; the LSH band persist in
-    // lshCandidatesFrom is the registry's only user.
-    DedupOps.releaseBandCache(spark): Unit // clean slate
+    // lshCandidatesFrom is the only band stream persisted.
+    import graft.operators.CacheRegistry
+    CacheRegistry.release(spark): Unit // clean slate
     spark.catalog.clearCache()
     val docs = Tables.documents(spark, sf).select("doc_id", "text")
-    DedupOps.simhashPairsOf(docs, BandGuard.off).collect()
-    assert(awaitTrue(DedupOps.bandCacheRegistry.size(spark) == 0),
-      "guard-off simhash pairs must not register a band-cache entry")
+    val off = DedupOps.simhashPairsOf(docs, BandGuard.off)
+    assert(CacheRegistry.size(spark) == 1,
+      "guard-off simhash pairs must persist only the signature frame")
+    off.collect(): Unit
+    assert(awaitTrue(CacheRegistry.size(spark) == 0))
     DedupOps.simhashPairsOf(docs, BandGuard.default)
-    assert(DedupOps.bandCacheRegistry.size(spark) == 0,
-      "guarded simhash pairs must not register a band-cache entry")
+    assert(CacheRegistry.size(spark) == 2,
+      "guarded simhash pairs must persist only the signature frame and the census")
+    CacheRegistry.release(spark): Unit
     spark.catalog.clearCache()
   }
 
@@ -462,9 +466,6 @@ class DedupAnnSpec extends SparkSpec {
     }
     val docs = Tables.documents(spark, sf).select("doc_id", "text")
     DedupOps.lshCandidatesOf(docs).collect()
-    // the signature persist is the caller's (the documented contract):
-    // once the caller drops it, the band stream and the census must be gone
-    DedupOps.minhashSignaturesOf(docs).unpersist(true)
     assert(awaitTrue(cache.isEmpty), "lshCandidatesOf left a cached plan behind")
   }
 

@@ -12,9 +12,22 @@ class QueriesSpec extends SparkSpec {
   }
 
   test("every declared query runs and returns rows") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val df = fn(spark, sf)
-      assert(df.count() > 0, s"$name returned no rows")
+    // ...and leaves nothing cached once its action has completed, both
+    // when the shared tables are staged (cold, into a fresh root) and
+    // when every query recomputes them
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    val fresh = java.nio.file.Files.createTempDirectory("graft_queries_stage").toString
+    Seq(Some(fresh), None).foreach { root =>
+      operators.DedupOps.withStagingRoot(root) {
+        SparkEntry.queries.foreach { case (name, fn) =>
+          val df = fn(spark, sf)
+          assert(df.count() > 0, s"$name returned no rows")
+          assert(awaitTrue(cache.isEmpty),
+            s"$name left a cached plan behind (staging root $root)")
+        }
+      }
     }
   }
 

@@ -185,33 +185,31 @@ class ReviewRegressionSpec extends SparkSpec {
       assert(plan.count() >= 0) // the plan itself still executes fine
     } finally {
       spark.sparkContext.removeSparkListener(listener)
-      graft.operators.DedupOps.releaseBandCache(spark): Unit
+      graft.operators.CacheRegistry.release(spark): Unit
     }
   }
 
   test("band persist lifecycle: library calls releasable, staged builds self-clean (r15)") {
-    import graft.operators.DedupOps
+    import graft.operators.{CacheRegistry, DedupOps}
     spark.catalog.clearCache()
+    CacheRegistry.release(spark): Unit
     def persisted = spark.sparkContext.getPersistentRDDs.keySet
-    // library call: the band persist (plus the signature persist per
-    // the documented contract) accumulates; releaseBandCache frees the
-    // band frame specifically and reports it
+    // library call: the signature frame, the band stream and the guard's
+    // suspect census are all query-scoped
     val docs = (1L to 80L).map(i => (i, s"common shared text body $i"))
       .toDF("doc_id", "text")
     val before = persisted
     val cand = DedupOps.lshCandidatesOf(docs)
-    assert(DedupOps.bandCacheRegistry.size(spark) == 1,
-      "the band frame must be registered before any action")
+    assert(CacheRegistry.size(spark) == 3,
+      "signature, band and census frames must be registered before any action")
     cand.count(): Unit
-    // r22: the registry is query-scoped — the consuming count's
-    // completion listener releases the band frame automatically; the
-    // signature persist (documented caller-owned contract, not
-    // registry-tracked) stays materialized
-    assert(awaitTrue(DedupOps.bandCacheRegistry.size(spark) == 0),
-      "band frame must auto-release when its consuming query completes")
-    assert((persisted -- before).nonEmpty,
-      "the caller-owned signature persist must survive the auto-release")
-    assert(DedupOps.releaseBandCache(spark) == 0,
+    // the consuming count's completion listener releases all three:
+    // nothing the library call persisted survives its query
+    assert(awaitTrue(CacheRegistry.size(spark) == 0),
+      "the frames must auto-release when their consuming query completes")
+    assert(awaitTrue((persisted -- before).isEmpty),
+      s"persisted RDDs survived the consuming query: ${persisted -- before}")
+    assert(CacheRegistry.release(spark) == 0,
       "explicit release after the auto-release is a no-op")
     spark.catalog.clearCache()
     // cold STAGED build (query-time read-through, not a stageAll chain):
@@ -226,8 +224,8 @@ class ReviewRegressionSpec extends SparkSpec {
       val leaked = persisted -- pre
       assert(leaked.isEmpty,
         s"staged cold build leaked persisted RDDs: $leaked")
-      assert(DedupOps.releaseBandCache(spark) == 0,
-        "staged-build band persist must not land in the library registry")
+      assert(CacheRegistry.size(spark) == 0,
+        "staged-build persists must not land in the query-scoped registry")
     }
     spark.catalog.clearCache()
   }

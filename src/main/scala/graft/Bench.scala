@@ -208,29 +208,27 @@ object Bench {
             while (it.hasNext) { val p = it.next(); if (java.nio.file.Files.isRegularFile(p)) buf += p }
             buf.sortBy(p => -java.nio.file.Files.size(p)).toVector
           } finally walk.close()
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-        try files.map { p =>
-          pool.submit(new Runnable {
-            def run(): Unit = {
-              if (readBytes.get() < capBytes) {
-                val buf = new Array[Byte](1 << 20)
-                val in = java.nio.file.Files.newInputStream(p)
-                try {
-                  var n = in.read(buf)
-                  while (n >= 0 && readBytes.addAndGet(math.max(n, 0)) < capBytes)
-                    n = in.read(buf)
-                } finally in.close()
-              }
-            }
-          })
-        }.foreach(_.get())
-        finally pool.shutdown()
+        import scala.jdk.CollectionConverters._
+        val queue = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path](files.asJava)
+        graft.operators.ConcurrentJobs.runAll((1 to 8).map(i => s"warm-$i" -> (() => {
+          val buf = new Array[Byte](1 << 20)
+          var p = queue.poll()
+          while (p != null && readBytes.get() < capBytes) {
+            val in = java.nio.file.Files.newInputStream(p)
+            try {
+              var n = in.read(buf)
+              while (n >= 0 && readBytes.addAndGet(math.max(n, 0)) < capBytes)
+                n = in.read(buf)
+            } finally in.close()
+            p = queue.poll()
+          }
+        }))): Unit
       }
     } catch {
       // warm is best-effort, never fatal — but only for NON-fatal
       // failures: an interrupt must reach the driver (flag restored;
-      // pool futures surface it via ExecutionException → NonFatal),
-      // and OOM/fatal errors must propagate, not read as "warmed"
+      // the runner rethrows a reader's own failure unwrapped), and
+      // OOM/fatal errors must propagate, not read as "warmed"
       // (ADVICE r19)
       case _: InterruptedException => Thread.currentThread().interrupt()
       case scala.util.control.NonFatal(_) => ()

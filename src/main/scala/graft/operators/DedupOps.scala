@@ -139,8 +139,6 @@ object DedupOps {
     stagingRoot match {
       case None => Map.empty
       case someRoot =>
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
         // Driver-memory guard (r13, VERDICT r12 #4): cap BOTH broadcast
         // thresholds for the staging window. The thresholds compare
         // against COMPRESSED shuffle bytes, and the dedup chains'
@@ -170,7 +168,6 @@ object DedupOps {
         val bcastKeys = Seq("spark.sql.autoBroadcastJoinThreshold",
           "spark.sql.adaptive.autoBroadcastJoinThreshold")
         val bcastSaved = bcastKeys.map(k => k -> spark.conf.getOption(k))
-        var pool: java.util.concurrent.ExecutorService = null
         try {
           bcastKeys.foreach(spark.conf.set(_, "1m"))
           // Chain inventory FIRST (as thunks), so the pool is sized to
@@ -222,85 +219,34 @@ object DedupOps {
             (if (ivf) Seq[(String, () => Unit)](
               "ivf" -> (() => EmbeddingOps.stageIvf(spark, sfDir): Unit))
              else Nil)
-          pool = java.util.concurrent.Executors.newFixedThreadPool(work.size)
-          implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-          val chainWalls =
-            new java.util.concurrent.ConcurrentHashMap[String, Double]()
           // Staging's root override is thread-local; re-pin it (and a
-          // distinguishable job group) inside each worker thread
-          def chain(tag: String)(body: => Unit): Future[Unit] = Future {
-            Staging.withRoot(someRoot) { Staging.withinStagingChain {
-              spark.sparkContext.setJobGroup(s"graft-stage-$tag", tag, false)
-              // One FAIR pool PER CHAIN (local property, thread-scoped):
-              // under spark.scheduler.mode=FAIR the root pool round-
-              // robins slot offers across pools, so the critical-path
-              // chain's next stage gets slots even while an earlier
-              // chain's wide stage is still draining — the by-design
-              // mechanism behind the §36 wall win (a single default
-              // pool schedules its jobs FIFO internally). Pools spring
-              // into existence on first use with default weight/
-              // minShare; under FIFO mode the property is inert.
-              spark.sparkContext.setLocalProperty(
-                "spark.scheduler.pool", s"graft-stage-$tag")
-              val t0 = System.nanoTime()
-              try body finally {
-                spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
-                spark.sparkContext.clearJobGroup()
-                // per-chain wall seconds, to stderr AND the returned
-                // map (Bench's `stage_chains` artifact field): chains
-                // run as concurrent jobs, so the bench's stage_dedup
-                // total says nothing about WHICH chain dominates
-                val wall = (System.nanoTime() - t0) / 1e9
-                chainWalls.put(tag, wall): Unit
-                System.err.println(f"[stage] $tag $wall%.2f s")
-              }
-            } }
-          }
-          val chains = work.map { case (tag, body) => chain(tag)(body()) }
-          try {
-            Await.result(Future.sequence(chains), Duration.Inf): Unit
-            import scala.jdk.CollectionConverters._
-            chainWalls.asScala.toMap
-          } catch {
-            case t: Throwable =>
-              // Future.sequence fails FAST: the other chains are still
-              // running when the first failure surfaces. The enclosing
-              // finally restores the broadcast thresholds and clears
-              // the stagingSessions marker — doing that while chains
-              // still run would hand the surviving chains uncapped
-              // broadcast plans (the exact OOM class the cap exists
-              // for) and admit a second stageAll on top of them.
-              // So: cancel every chain's job group, then WAIT for the
-              // pool to drain before the finally runs. The wait is
-              // bounded: a chain blocked on a dir lock whose builder
-              // died may start its own (uncancelled) rebuild — after
-              // the timeout we proceed and accept the smaller risk.
-              // Everything below must not REPLACE t as the surfaced
-              // failure: an interrupt or cancellation hiccup during
-              // the drain is recorded as suppressed, and the original
-              // chain failure always propagates.
-              try {
-                work.foreach { case (tag, _) =>
-                  spark.sparkContext.cancelJobGroup(s"graft-stage-$tag") }
-                pool.shutdown()
-                if (!pool.awaitTermination(
-                      10, java.util.concurrent.TimeUnit.MINUTES)) {
-                  // A chain blocked on a dead builder's dir lock may
-                  // have started its own uncancelled rebuild. Second
-                  // cancel sweep + thread interrupts before giving up
-                  // the wait, so the finally's threshold restore can't
-                  // hand a still-running chain uncapped plans.
-                  work.foreach { case (tag, _) =>
-                    spark.sparkContext.cancelJobGroup(s"graft-stage-$tag") }
-                  pool.shutdownNow(): Unit
-                  pool.awaitTermination(
-                    1, java.util.concurrent.TimeUnit.MINUTES): Unit
+          // distinguishable job group, which perfbench's staging rows
+          // filter on) inside each worker thread. The runner gives each
+          // chain its own FAIR pool `graft-stage-<tag>` and, on a chain
+          // failure, cancels and drains the others before rethrowing —
+          // so the finally below never restores the broadcast
+          // thresholds or clears the staging marker under a surviving
+          // chain (uncapped broadcast plans are the exact OOM class the
+          // cap exists for).
+          val walls = ConcurrentJobs.runAll(spark, "graft-stage", work.map {
+            case (tag, body) => tag -> (() =>
+              Staging.withRoot(someRoot) { Staging.withinStagingChain {
+                spark.sparkContext.setJobGroup(s"graft-stage-$tag", tag, false)
+                // per-chain wall seconds, to stderr (a failed chain's
+                // too) AND the returned map (Bench's `stage_chains`
+                // artifact field): chains run as concurrent jobs, so the
+                // bench's stage_dedup total says nothing about WHICH
+                // chain dominates
+                val t0 = System.nanoTime()
+                def wall = (System.nanoTime() - t0) / 1e9
+                try { body(); wall } finally {
+                  spark.sparkContext.clearJobGroup()
+                  System.err.println(f"[stage] $tag $wall%.2f s")
                 }
-              } catch { case drain: Throwable => t.addSuppressed(drain) }
-              throw t
-          }
+              } })
+          })
+          work.map(_._1).zip(walls).toMap
         } finally {
-          if (pool != null) pool.shutdown()
           bcastSaved.foreach {
             case (k, Some(v)) => spark.conf.set(k, v)
             case (k, None)    => spark.conf.unset(k)

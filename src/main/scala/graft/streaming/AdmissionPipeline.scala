@@ -3,8 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{StringType, StructType}
 
-import graft.operators.{DedupOps, EmbeddingOps, MinHashParams}
+import graft.operators.{ConcurrentJobs, DedupOps, EmbeddingOps, MinHashParams}
 
 /** The three corpus-side posting tables one composed admission
   * pipeline owns: minhash band postings ([[StreamingDedup]]), span
@@ -17,8 +18,15 @@ final case class AdmissionTables(bands: String, spans: String, vectors: String)
 final case class AdmissionDials(bands: CompactionDial, spans: CompactionDial,
                                 vectors: CompactionDial) {
   def all: Seq[CompactionDial] = Seq(bands, spans, vectors)
-  /** Fire whichever dials are over threshold; returns how many ran. */
-  def maybeCompactAll(spark: SparkSession): Int = all.count(_.maybeCompact(spark))
+  /** Check the three dials side by side and fire whichever are over
+    * threshold; returns how many ran. Each dial touches only its own
+    * table, and concurrent rewrites share one bucketed-scan pin
+    * (`PostingCompaction.rewrite`). */
+  def maybeCompactAll(spark: SparkSession): Int =
+    ConcurrentJobs.runAll(spark, AdmissionPipeline.Pools,
+      Seq("bands" -> bands, "spans" -> spans, "vectors" -> vectors).map {
+        case (gate, dial) => gate -> (() => dial.maybeCompact(spark))
+      }).count(identity)
 }
 
 /** Knobs for the three gates, bundled so stage and probe CANNOT
@@ -60,6 +68,14 @@ final case class AdmissionConfig(
   * shuffles (into each table's bucketing); the three corpus tables
   * are read in place, forever. The verdict assembly joins three
   * batch-sized flag frames back to the batch — broadcast-class work.
+  * The per-table writes — the three stage writes, the three absorbs
+  * and the three dial checks/rewrites — each touch only their own
+  * table, so no order exists between them: each triple runs side by
+  * side through [[graft.operators.ConcurrentJobs]], one FAIR pool per
+  * gate. At batch scale the loop is bound by fixed cost per Spark job,
+  * not by compute, and three overlapped writes cost about one (PERF
+  * §77). The verdict store is read back with the schema its writer
+  * knows, so neither read starts a schema-inference job.
   *
   * EXACTLY-ONCE contract (the [[processBatch]] ledger): Spark's
   * foreachBatch is at-least-once — after a crash the last uncommitted
@@ -79,6 +95,18 @@ final case class AdmissionConfig(
   *      the admitted docs into all three tables, fire the dials, and
   *      commit the ledger entry last.
   *
+  * The three absorbs run concurrently, but the order across phases is
+  * unchanged: the store is written before any absorb starts, the dials
+  * fire only after all three absorbs returned, and the ledger entry is
+  * written last. If one absorb fails, the runner cancels the other two
+  * and waits for them to drain before processBatch rethrows — no job
+  * of the batch outlives the failure, and no ledger entry is written.
+  * What such a failure can leave — some gates absorbed, others not —
+  * is no new crash state: the sequential loop could already crash
+  * after its first or second absorb, and the store-hit replay below
+  * covers every subset, since each gate's absorb is replay-tolerant on
+  * its own.
+  *
   * Absorb replay (a crash between store-write and ledger-commit
   * re-runs step 3's absorb): the span absorb is a no-op by anti-join;
   * the band/vector absorbs append duplicate postings for the same
@@ -93,6 +121,9 @@ object AdmissionPipeline {
   val DupSpan = "dup_span"
   val DupSemantic = "dup_semantic"
 
+  /** FAIR pool prefix of the per-gate writes: `graft-admit-<gate>`. */
+  private[streaming] val Pools = "graft-admit"
+
   /** ONE-TIME staging of all three corpus tables from the settled
     * corpus; returns the shared dial set, each dial floor-keyed off
     * its table's staged file count.
@@ -103,13 +134,14 @@ object AdmissionPipeline {
   def stageCorpus(spark: SparkSession, corpusDocs: DataFrame,
                   corpusVecs: DataFrame, t: AdmissionTables,
                   cfg: AdmissionConfig = AdmissionConfig()): AdmissionDials = {
-    val bBands = StreamingDedup.stageCorpusBands(spark,
-      DedupOps.minhashSignaturesOf(corpusDocs, cfg.p), t.bands, cfg.buckets, cfg.p)
-    val bSpans = StreamingSpanGate.stageCorpusSpans(spark, corpusDocs,
-      t.spans, cfg.buckets, cfg.spanLen)
-    val bVecs = StreamingSemanticGate.stageCorpusVectors(spark, corpusVecs,
-      t.vectors, cfg.buckets, idCol = "doc_id", vecCol = "embedding",
-      planes = cfg.planes, planeSets = cfg.planeSets)
+    val Seq(bBands, bSpans, bVecs) = ConcurrentJobs.runAll(spark, Pools, Seq(
+      "bands" -> (() => StreamingDedup.stageCorpusBands(spark,
+        DedupOps.minhashSignaturesOf(corpusDocs, cfg.p), t.bands, cfg.buckets, cfg.p)),
+      "spans" -> (() => StreamingSpanGate.stageCorpusSpans(spark, corpusDocs,
+        t.spans, cfg.buckets, cfg.spanLen)),
+      "vectors" -> (() => StreamingSemanticGate.stageCorpusVectors(spark, corpusVecs,
+        t.vectors, cfg.buckets, idCol = "doc_id", vecCol = "embedding",
+        planes = cfg.planes, planeSets = cfg.planeSets))))
     AdmissionDials(
       new CompactionDial(t.bands, StreamingDedup.postingKey, bBands,
         cfg.filesFactor, cfg.buckets),
@@ -154,19 +186,21 @@ object AdmissionPipeline {
   }
 
   /** Absorb `admitted` (`doc_id`, `text`, `embedding`) into all three
-    * posting tables: one write per table, no other action. */
+    * posting tables: one write per table, side by side, no other
+    * action. If one write fails, the others are cancelled and drained
+    * before the failure is rethrown ([[ConcurrentJobs]]). */
   def absorbAdmitted(spark: SparkSession, admitted: DataFrame,
                      t: AdmissionTables,
-                     cfg: AdmissionConfig = AdmissionConfig()): Unit = {
-    StreamingDedup.absorbPostings(spark, admitted.select("doc_id", "text"),
-      t.bands, cfg.buckets, cfg.p)
-    StreamingSpanGate.absorbSpans(spark, admitted.select("doc_id", "text"),
-      t.spans, cfg.buckets, cfg.spanLen)
-    StreamingSemanticGate.absorb(spark,
-      admitted.select(col("doc_id"), col("embedding")), t.vectors,
-      cfg.buckets, idCol = "doc_id", vecCol = "embedding",
-      planes = cfg.planes, planeSets = cfg.planeSets)
-  }
+                     cfg: AdmissionConfig = AdmissionConfig()): Unit =
+    ConcurrentJobs.runAll(spark, Pools, Seq(
+      "bands" -> (() => StreamingDedup.absorbPostings(spark,
+        admitted.select("doc_id", "text"), t.bands, cfg.buckets, cfg.p)),
+      "spans" -> (() => StreamingSpanGate.absorbSpans(spark,
+        admitted.select("doc_id", "text"), t.spans, cfg.buckets, cfg.spanLen)),
+      "vectors" -> (() => StreamingSemanticGate.absorb(spark,
+        admitted.select(col("doc_id"), col("embedding")), t.vectors,
+        cfg.buckets, idCol = "doc_id", vecCol = "embedding",
+        planes = cfg.planes, planeSets = cfg.planeSets)))): Unit
 
   private def verdictDir(stateDir: String, batchId: Long): String =
     s"$stateDir/verdicts/batch=$batchId"
@@ -174,6 +208,15 @@ object AdmissionPipeline {
     java.nio.file.Paths.get(stateDir, "ledger", s"batch-$batchId")
   private def storedOk(dir: String): Boolean =
     java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_SUCCESS"))
+
+  /** The verdict store read back with the schema its writer knows —
+    * `(doc_id` of the batch's type`, verdict string)` — so the read
+    * plans without a schema-inference job. */
+  private def stored(spark: SparkSession, store: String, batch: DataFrame): DataFrame =
+    spark.read.schema(new StructType()
+        .add(batch.schema("doc_id"))
+        .add("verdict", StringType))
+      .parquet(store)
 
   /** The full per-batch loop (the foreachBatch body): verdict →
     * store → absorb → compact → ledger, checkpointed per `batchId`
@@ -186,7 +229,7 @@ object AdmissionPipeline {
                    cfg: AdmissionConfig = AdmissionConfig()): DataFrame = {
     val store = verdictDir(stateDir, batchId)
     if (java.nio.file.Files.exists(ledgerPath(stateDir, batchId)))
-      return spark.read.parquet(store) // fully committed earlier
+      return stored(spark, store, batch) // fully committed earlier
     if (!storedOk(store)) {
       // pin the batch before the store write: the three probes and
       // the absorb would otherwise re-evaluate the source frame
@@ -207,13 +250,13 @@ object AdmissionPipeline {
     java.nio.file.Files.createDirectories(ledger.getParent)
     try java.nio.file.Files.createFile(ledger): Unit
     catch { case _: java.nio.file.FileAlreadyExistsException => () }
-    spark.read.parquet(store)
+    stored(spark, store, batch)
   }
 
   private def absorbFor(spark: SparkSession, pinned: DataFrame, store: String,
                         t: AdmissionTables, cfg: AdmissionConfig): Unit = {
     val admitted = pinned.join(
-      spark.read.parquet(store).where(col("verdict") === Admit).select("doc_id"),
+      stored(spark, store, pinned).where(col("verdict") === Admit).select("doc_id"),
       Seq("doc_id"))
     absorbAdmitted(spark, admitted, t, cfg)
   }

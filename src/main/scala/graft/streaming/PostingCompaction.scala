@@ -94,6 +94,43 @@ private[graft] object PostingCompaction {
     } else false
   }
 
+  private val autoBucketedScanKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+
+  /** Sessions with a pinned bucketed scan → (rewrites in flight, the
+    * session's value before the first of them). */
+  private val pins = scala.collection.mutable.Map[SparkSession, (Int, Option[String])]()
+
+  /** Run `body` with `autoBucketedScan` off on `spark` (see [[rewrite]]).
+    * The key is session-global and AQE re-plans under it while the write
+    * runs, so concurrent rewrites on one session (the admission loop's
+    * three dials, or two loops) share ONE pin: the first in saves the
+    * session's value and sets false, the last out restores it. A
+    * per-rewrite save/restore would let one rewrite capture another's
+    * `false` as its saved value and leave the session pinned, or unpin
+    * a rewrite still being planned (which then lands tasks × buckets
+    * files, PERF §49). Other queries planned on the session inside the
+    * window keep their bucketed scans, which is a plan choice, not a
+    * result change. */
+  private def withBucketedScanPinned[A](spark: SparkSession)(body: => A): A = {
+    pins.synchronized {
+      val (n, saved) = pins.getOrElse(spark, (0, spark.conf.getOption(autoBucketedScanKey)))
+      if (n == 0) spark.conf.set(autoBucketedScanKey, "false")
+      pins(spark) = (n + 1, saved)
+    }
+    try body
+    finally pins.synchronized {
+      val (n, saved) = pins(spark)
+      if (n > 1) pins(spark) = (n - 1, saved)
+      else {
+        pins.remove(spark): Unit
+        saved match {
+          case Some(v) => spark.conf.set(autoBucketedScanKey, v)
+          case None    => spark.conf.unset(autoBucketedScanKey)
+        }
+      }
+    }
+  }
+
   /** The compaction rewrite itself, unconditionally: one bucketed
     * pass over `table`, landing at ≤ `buckets` files, swapped in via
     * a rename-out/rename-in sequence whose every crash window leaves
@@ -146,11 +183,9 @@ private[graft] object PostingCompaction {
     // crash's undropped __old) and safe to clear.
     spark.sql(s"DROP TABLE IF EXISTS $side"): Unit
     spark.sql(s"DROP TABLE IF EXISTS $old"): Unit
-    val autoKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val prevAuto = spark.conf.get(autoKey)
-    spark.conf.set(autoKey, "false")
-    try write(spark.table(table), side, bucketCol, buckets, "overwrite")
-    finally spark.conf.set(autoKey, prevAuto)
+    withBucketedScanPinned(spark) {
+      write(spark.table(table), side, bucketCol, buckets, "overwrite")
+    }
     spark.sql(s"ALTER TABLE $table RENAME TO $old"): Unit
     spark.sql(s"ALTER TABLE $side RENAME TO $table"): Unit
     spark.sql(s"DROP TABLE $old"): Unit

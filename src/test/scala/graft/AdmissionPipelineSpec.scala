@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.JobExecutionStatus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -169,5 +172,78 @@ class AdmissionPipelineSpec extends SparkSpec {
           s"$n at $files files after compaction — layout defect")
       }
     } finally dropAll()
+  }
+
+  test("a failing absorb: processBatch rethrows once the batch's jobs have ended, commits no ledger, and the rerun delivers the planted verdicts") {
+    val (batch, expected) = fixtureBatch(9500000L)
+    val ledger = (dir: String) => java.nio.file.Paths.get(dir, "ledger", "batch-0")
+    // the span posting count a clean run of the batch leaves
+    dropAll()
+    val cleanDials = AdmissionPipeline.stageCorpus(spark, corpusDocs, corpusVecs, t, cfg)
+    AdmissionPipeline.processBatch(spark, batch, 0L, t, cleanDials,
+      java.nio.file.Files.createTempDirectory("ap_clean").toString, cfg).collect(): Unit
+    val cleanSpans = spark.table(t.spans).count()
+    dropAll()
+
+    val dials = AdmissionPipeline.stageCorpus(spark, corpusDocs, corpusVecs, t, cfg)
+    val stateDir = java.nio.file.Files.createTempDirectory("ap_fail").toString
+    // a plain file where the span append's committer makes its
+    // _temporary directory: the probes still read the table, and the
+    // span absorb alone fails, mid-batch, with the band and vector
+    // absorbs running beside it
+    val spanDir = spark.sessionState.catalog
+      .getTableMetadata(TableIdentifier(t.spans)).location.getPath
+    val blocker = java.nio.file.Paths.get(spanDir, "_temporary")
+    java.nio.file.Files.write(blocker, Array.emptyByteArray): Unit
+    val group = s"ap-fail-${java.util.UUID.randomUUID()}"
+    val started = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val pools = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val endedAt = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          started.add(e.jobId): Unit
+          Option(e.properties.getProperty("spark.scheduler.pool")).foreach(pools.add)
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = endedAt.put(e.jobId, e.time): Unit
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // the caller's job group, as foreachBatch runs under the stream's:
+      // the runner's threads inherit it, so every job of the batch is in it
+      spark.sparkContext.setJobGroup(group, "failing admission batch", false)
+      val err =
+        try intercept[Exception](
+          AdmissionPipeline.processBatch(spark, batch, 0L, t, dials, stateDir, cfg))
+        finally spark.sparkContext.clearJobGroup()
+      val thrownAt = System.currentTimeMillis()
+      // the span absorb's own failure, not a sibling's cancellation
+      assert(err.getMessage.contains(s"${t.spans}/_temporary"), s"unexpected failure: $err")
+      import scala.jdk.CollectionConverters._
+      assert(awaitTrue(started.asScala.forall(endedAt.containsKey)),
+        "every job of the failed batch must end")
+      assert(Set("graft-admit-bands", "graft-admit-vectors").subsetOf(pools.asScala),
+        s"the band and vector absorbs must run in their own pools, in the caller's group: $pools")
+      val late = started.asScala.filter(id => endedAt.get(id) > thrownAt)
+      assert(late.isEmpty, s"jobs ${late.mkString(",")} ended after processBatch threw")
+      val tracker = spark.sparkContext.statusTracker
+      val running = tracker.getJobIdsForGroup(group).filter(id =>
+        tracker.getJobInfo(id).exists(_.status == JobExecutionStatus.RUNNING))
+      assert(running.isEmpty, s"jobs still running after the throw: ${running.mkString(",")}")
+      assert(!java.nio.file.Files.exists(ledger(stateDir)),
+        "a failed batch must not commit its ledger entry")
+
+      java.nio.file.Files.delete(blocker)
+      val rerun = AdmissionPipeline.processBatch(spark, batch, 0L, t, dials, stateDir, cfg)
+        .as[(Long, String)].collect().toMap
+      assert(rerun == expected, s"rerun verdicts diverge: got $rerun expected $expected")
+      assert(java.nio.file.Files.exists(ledger(stateDir)))
+      assert(spark.table(t.spans).count() == cleanSpans,
+        "the rerun's span absorb must leave a clean run's span postings")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      java.nio.file.Files.deleteIfExists(blocker): Unit
+      dropAll()
+    }
   }
 }

@@ -146,6 +146,18 @@ class ApiSurfaceSpec extends SparkSpec {
       s"bucketBy( under graft/streaming, expected once in PostingCompaction: $writes")
   }
 
+  test("concurrent work is launched by one runner, ConcurrentJobs") {
+    // stageAll's chains, the admission loop's per-table writes and
+    // Bench's page-cache warm share its pool sizing, FAIR pools and
+    // cancel-drain-rethrow failure path; a second thread pool is a
+    // second launcher that can drift from it
+    val launchers = mainSources.flatMap { case (file, text) =>
+      "Executors\\.new|ExecutionContext\\.fromExecutor".r.findAllIn(text).map(_ => file)
+    }
+    assert(launchers.nonEmpty && launchers.forall(_ == "ConcurrentJobs.scala"),
+      s"thread pools under src/main, expected only in ConcurrentJobs: $launchers")
+  }
+
   test("the LSH band guard is written once, in SkewGuard") {
     // the minhash, simhash and embedding self-joins all take their
     // collapse and bucket cap from SkewGuard.guardedBands; a capBuckets(

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.DedupOps
+import graft.operators.{ConcurrentJobs, DedupOps}
 import graft.streaming.{CompactionDial, PostingCompaction, StreamingDedup,
   StreamingSemanticGate, StreamingSpanGate}
 
@@ -136,5 +136,50 @@ class PostingCompactionSpec extends SparkSpec {
       spark.conf.set(key, prev)
       tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
+  }
+  test("two concurrent rewrites each land at <= buckets files and leave the session's autoBucketedScan as it was") {
+    // 128 input files per table: 32 writer tasks x 4 buckets. Planned
+    // split-based (autoBucketedScan unpinned), a rewrite packs them into
+    // ~4 read partitions that each write one file per bucket they hold,
+    // ~16 files; pinned it lands one file per bucket. The admission
+    // loop's three dials rewrite side by side on one session, so the
+    // session-global pin must not be saved and restored per rewrite:
+    // the later rewrite would save the earlier one's `false` and leave
+    // the session pinned
+    val tables = Seq("pc_concurrent_a", "pc_concurrent_b")
+    val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+    val rows = (1L to 4000L).map(i => (i, i % 16)).toSet
+    tables.foreach(dropAll)
+    try (1 to 2).foreach { round =>
+      tables.foreach { t =>
+        rows.toSeq.toDF("id", "cbk").repartition(32)
+          .write.mode("overwrite").bucketBy(4, "cbk").sortBy("cbk")
+          .format("parquet").saveAsTable(t)
+      }
+      assert(tables.forall(PostingCompaction.fileCount(spark, _) > 4 * 4),
+        "fixture must start far above the landing bound")
+      val before = spark.conf.get(key)
+      // the second rewrite starts once the first one's write job runs,
+      // so it enters while the first holds the pin and leaves after it
+      val firstWriting = new java.util.concurrent.CountDownLatch(1)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(_.getProperty("spark.scheduler.pool") == s"pc-test-${tables(0)}"))
+            firstWriting.countDown()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try ConcurrentJobs.runAll(spark, "pc-test", tables.map(t => t -> (() => {
+          if (t != tables(0)) firstWriting.await(1, java.util.concurrent.TimeUnit.MINUTES): Unit
+          PostingCompaction.rewrite(spark, t, buckets = 4, bucketCol = "cbk")
+        })))
+      finally spark.sparkContext.removeSparkListener(listener)
+      tables.foreach { t =>
+        val files = PostingCompaction.fileCount(spark, t)
+        assert(files <= 4, s"round $round: $t landed $files files, over 4 buckets")
+        assert(contents(t) == rows, s"round $round: $t lost rows")
+      }
+      assert(spark.conf.get(key) == before,
+        s"round $round: session $key is ${spark.conf.get(key)}, was $before")
+    } finally tables.foreach(dropAll)
   }
 }

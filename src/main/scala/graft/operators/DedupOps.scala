@@ -749,6 +749,10 @@ object DedupOps {
       .select(col("keeper").as("src"), col("doc_id").as("dst"))
     val nearPairs = jaccardVerify(spark, sfDir)
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
+    // Eager gate: the label-propagation rounds run while this plan is
+    // built (9 jobs and about 1.0 s in traced perfbench dedup at seed
+    // 5101, 4 cores); ParquetFooterSpec names it as the staged queries'
+    // only one.
     val comps = GraphOps.connectedComponentsAuto(exactPairs.unionByName(nearPairs))
     // cluster_size from a pre-aggregate over the EDGE-INDUCED components
     // frame joined back, not a count window over the labeled corpus

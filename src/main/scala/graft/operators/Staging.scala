@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.Tables
+
 /** Read-through parquet staging shared by the dedup and ANN stacks:
   * the first caller computes and writes a staging table, everyone
   * after scans it (one materialization, column-pruned reads — the
@@ -180,7 +182,7 @@ private[graft] object Staging {
             promote(tmp, dst)
           }
         }
-        spark.read.parquet(dir)
+        Tables.parquet(spark, dir)
     }
 
   /** Read-through staging with a PHYSICAL CO-LOCATION contract: the
@@ -197,7 +199,8 @@ private[graft] object Staging {
     * Bucket metadata lives in the catalog, not the files, so a NEW
     * session that finds the files already staged re-registers them
     * with a `CREATE TABLE … CLUSTERED BY … LOCATION` DDL (schema read
-    * from the parquet footers — no recompute). The catalog name is
+    * from one parquet footer on the driver, [[graft.Tables.parquet]] —
+    * no recompute and no Spark job). The catalog name is
     * derived from the staging dir (root + version + corpus
     * fingerprint), so distinct corpora/roots never collide. */
   def bucketedReadThrough(spark: SparkSession, sfDir: String,
@@ -212,7 +215,7 @@ private[graft] object Staging {
           if (!spark.catalog.tableExists(name)) {
             val dst = java.nio.file.Paths.get(dir)
             if (java.nio.file.Files.exists(dst.resolve("_SUCCESS"))) {
-              val ddl = spark.read.parquet(dir).schema.toDDL
+              val ddl = Tables.parquet(spark, dir).schema.toDDL
               spark.sql(s"CREATE TABLE $name ($ddl) USING PARQUET " +
                 s"CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol) " +
                 s"INTO $buckets BUCKETS LOCATION '$dir'"): Unit

@@ -145,7 +145,7 @@ object MakeScaleData {
     * normalizes either representation identically). */
   def scaledEvents(spark: SparkSession, src: String, k: Int): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val ev = spark.read.parquet(s"$src/events.parquet")
+    val ev = Tables.parquet(spark, s"$src/events.parquet")
     (0 until k).map { r =>
       if (r == 0) ev
       else ev
@@ -184,7 +184,7 @@ object MakeScaleData {
         .write.mode("overwrite").parquet(s"$dst/events.parquet")
       // dimensions copy through unchanged
       Seq("part", "supplier", "customer", "nation", "region").foreach { t =>
-        spark.read.parquet(s"$src/$t.parquet")
+        Tables.parquet(spark, s"$src/$t.parquet")
           .write.mode("overwrite").parquet(s"$dst/$t.parquet")
       }
     }

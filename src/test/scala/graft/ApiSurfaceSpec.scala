@@ -218,6 +218,17 @@ class ApiSurfaceSpec extends SparkSpec {
     assert(retired.isEmpty, s"a second cache registry or release function under src/main: $retired")
   }
 
+  test("every parquet read under src/main goes through Tables.parquet") {
+    // a read without a schema starts a one-task Spark job to read one
+    // footer; Tables.parquet reads that footer on the driver instead.
+    // MakeScaleData reads through it too, so the list has no exceptions
+    val reads = mainSources.flatMap { case (file, text) =>
+      "read\\.parquet\\(".r.findAllIn(text).map(_ => file)
+    }
+    assert(reads.nonEmpty && reads.forall(_ == "Tables.scala"),
+      s"read.parquet( under src/main, expected only in Tables.parquet: $reads")
+  }
+
   test("perfbench's staged query list matches graft.Bench.stagedNames") {
     // perfbench keeps its own copy of the list; a query added to or
     // dropped from one of them silently misses the other

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions.col
 
 /** The bucketed posting-table layout and its file-count-triggered
@@ -33,24 +34,54 @@ private[graft] object PostingCompaction {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Write posting `rows` to `table` in the one posting layout: ONE
-    * WRITER PER BUCKET (`repartition(buckets, key)`), then bucketed and
-    * sorted on `keyCol`, parquet. `mode` is "overwrite" for a stage or
-    * a compaction and "append" for an absorb.
-    *
-    * Without the repartition the bucketed write runs at the source's
-    * task width and lands ~tasks × buckets files (PERF §57 measured
-    * 764 tiny files for a 20k-vector corpus, and per-file open cost
-    * dominated every probe batch); with it a write lands ≤ `buckets`
-    * files. Over a fresh computation EnsureRequirements keeps the
-    * exchange; over a pinned bucketed scan of the same layout it
-    * elides it (the [[rewrite]] case, PERF §49). */
+  /** Write posting `rows` to `table` in the one posting layout: at
+    * the writer width of [[atWriterWidth]], then bucketed and sorted on
+    * `keyCol`, parquet. `mode` is "overwrite" for a stage or a
+    * compaction and "append" for an absorb. Every write lands
+    * ≤ `buckets` files. */
   def write(rows: DataFrame, table: String, keyCol: String, buckets: Int,
             mode: String): Unit =
-    rows.repartition(buckets, col(keyCol))
+    atWriterWidth(rows, keyCol, buckets)
       .write.mode(mode)
       .bucketBy(buckets, keyCol).sortBy(keyCol)
       .format("parquet").saveAsTable(table)
+
+  /** `rows` at the posting writer's width. Input already in one
+    * partition stays there and is written by one task. Wider input is
+    * spread one writer per bucket (`repartition(buckets, key)`). Either
+    * way each bucket has one writer, so a write lands ≤ `buckets`
+    * files.
+    *
+    * Without one writer per bucket the bucketed write runs at the
+    * source's task width and lands ~tasks × buckets files (PERF §57
+    * measured 764 tiny files for a 20k-vector corpus, and per-file open
+    * cost dominated every probe batch). The one-partition case is a
+    * batch-sized absorb over the pinned verdict frame, which AQE's
+    * partition coalescing puts in one partition: its repartition cost a
+    * map-stage job and a `buckets`-task write per absorb for a few
+    * hundred rows (PERF §79). `coalesce(1)` moves no data there; it
+    * tells the planner the input is one partition, so a key
+    * aggregation or a broadcast join over it adds no exchange (the span
+    * absorb's distinct and anti-join). Over a fresh computation the
+    * repartition keeps its exchange; over a pinned bucketed scan of the
+    * same layout EnsureRequirements elides it (the [[rewrite]] case,
+    * PERF §49), as it does over input already hash-partitioned on the
+    * key into `buckets` (a distinct after this call). */
+  def atWriterWidth(rows: DataFrame, keyCol: String, buckets: Int): DataFrame =
+    if (inOnePartition(rows)) rows.coalesce(1)
+    else rows.repartition(buckets, col(keyCol))
+
+  /** Whether `rows` plans as one partition, read off its physical plan
+    * without running a job: a plan without an exchange is built into
+    * its RDD, which only counts the leaves' partitions (a pinned
+    * `localCheckpoint` reports no partitioning of its own); an adaptive
+    * plan reports the partitioning of its plan before any stage runs,
+    * so a shuffle's coalesced width is not seen and counts as wide. */
+  private def inOnePartition(rows: DataFrame): Boolean =
+    rows.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan.outputPartitioning.numPartitions == 1
+      case _ => rows.queryExecution.toRdd.getNumPartitions == 1
+    }
 
   private def location(spark: SparkSession, table: String): java.io.File = {
     val uri = spark.sessionState.catalog
@@ -152,7 +183,7 @@ private[graft] object PostingCompaction {
     * per bucket. Probe A/B at 8 buckets / 8,552 input files: old form
     * 2,106 files in 8.4 s; pinned scan 8 files in 3.9 s; a path-based
     * read that keeps the repartition also lands 8 but pays the
-    * shuffle (5.6 s). [[write]]'s repartition stays as a
+    * shuffle (5.6 s). [[atWriterWidth]]'s repartition stays as a
     * belt-and-braces bound (it self-elides against the pinned bucketed
     * scan).
     *

@@ -27,9 +27,12 @@ import graft.operators.{DedupOps, MinHashParams}
   * [[stageCorpusBands]]: the band posting list bucketed+sorted on the
   * band key once in the shared posting layout
   * ([[PostingCompaction.write]]; [[absorbPostings]] appends the same
-  * rows the same way), so every micro-batch probe
-  * ([[nearDupMatchesBucketed]]) shuffles only the batch side and the
-  * corpus joins in place off its buckets.
+  * rows the same way), so no micro-batch probe ([[probeHits]])
+  * exchanges the corpus. Its join form follows the sizes (executed
+  * plans, PERF §79): a batch under `autoBroadcastJoinThreshold`, every
+  * admission batch, is broadcast and joined against the posting table
+  * streamed in place; a larger one plans the bucket-aligned sort-merge
+  * join of [[stageCorpusBands]].
   */
 object StreamingDedup {
 
@@ -56,7 +59,8 @@ object StreamingDedup {
     */
   def nearDupMatches(stream: DataFrame, corpusSig: DataFrame,
                      p: MinHashParams = DedupOps.defaultParams): DataFrame =
-    matchesAgainst(stream, postingRows(corpusSig, p), p)
+    hitsAgainst(stream, postingRows(corpusSig, p), p)
+      .dropDuplicates("new_id", "corpus_id")
 
   /** The estimated-agreement count between the stream's `__sig` and
     * the corpus row's `__csig` — the native one-pass codegen form
@@ -69,9 +73,11 @@ object StreamingDedup {
       col("__sig"), col("__csig"), 0)
 
   /** Band-probe join against a prepared `(cbk, corpus_id, __csig)`
-    * posting frame. */
-  private def matchesAgainst(stream: DataFrame, posting: DataFrame,
-                             p: MinHashParams): DataFrame =
+    * posting frame: one `(new_id, corpus_id, est_jaccard)` row per
+    * shared band whose agreement clears the est threshold, so a pair
+    * sharing several bands repeats. */
+  private def hitsAgainst(stream: DataFrame, posting: DataFrame,
+                          p: MinHashParams): DataFrame =
     withSignature(stream, p)
       .select(col("doc_id").as("new_id"), col("__sig"))
       .withColumn("bk", explode(expr(DedupOps.bandArrayExpr(p))))
@@ -79,7 +85,6 @@ object StreamingDedup {
       .withColumn("est_jaccard", sigAgreement.cast("double") / p.numHashes)
       .where(col("est_jaccard") >= DedupOps.estThreshold)
       .select("new_id", "corpus_id", "est_jaccard")
-      .dropDuplicates("new_id", "corpus_id")
 
   /** The band posting table's key column. */
   val postingKey = "cbk"
@@ -94,12 +99,13 @@ object StreamingDedup {
   /** ONE-TIME corpus-side layout for continuous admission: the band
     * posting list `(cbk, corpus_id, __csig)` written in the
     * [[PostingCompaction.write]] layout, BUCKETED AND SORTED on the
-    * band key. Every subsequent micro-batch probe
-    * ([[nearDupMatchesBucketed]]) then plans a sort-merge join in which
-    * the corpus side is read bucket-aligned straight off its files —
-    * Spark shuffles and sorts ONLY the micro-batch side, into `buckets`
-    * partitions; the 100 TB corpus is never exchanged again, per batch
-    * or ever.
+    * band key. A micro-batch probe ([[probeHits]]) over the broadcast
+    * threshold then plans a sort-merge join in which the corpus side is
+    * read bucket-aligned straight off its files — Spark shuffles and
+    * sorts ONLY the micro-batch side, into `buckets` partitions; a
+    * smaller batch is broadcast instead and the corpus streamed in
+    * place (PERF §79). Either way the 100 TB corpus is never exchanged
+    * again, per batch or ever.
     *
     * The signature array is DENORMALIZED into the posting list
     * (numBands copies per doc) so a probe is a single join — no
@@ -121,13 +127,24 @@ object StreamingDedup {
     PostingCompaction.fileCount(spark, table)
   }
 
+  /** The band probe against the posting table from
+    * [[stageCorpusBands]], before any pair-level dedup: one
+    * `(new_id, corpus_id, est_jaccard)` row per shared band that clears
+    * the est threshold. The one probe of this gate:
+    * [[nearDupMatchesBucketed]] dedups it per pair, and
+    * [[AdmissionPipeline]] folds it into its per-doc verdict
+    * aggregation. */
+  def probeHits(stream: DataFrame, spark: SparkSession, table: String,
+                p: MinHashParams = DedupOps.defaultParams): DataFrame =
+    hitsAgainst(stream, spark.table(table), p)
+
   /** [[nearDupMatches]] against the pre-bucketed posting table from
-    * [[stageCorpusBands]] — identical output, but the static side
-    * joins in place (zero corpus shuffle per micro-batch). */
+    * [[stageCorpusBands]] — identical output, but the static side is
+    * read in place (zero corpus shuffle per micro-batch). */
   def nearDupMatchesBucketed(stream: DataFrame, spark: SparkSession,
                              table: String,
                              p: MinHashParams = DedupOps.defaultParams): DataFrame =
-    matchesAgainst(stream, spark.table(table), p)
+    probeHits(stream, spark, table, p).dropDuplicates("new_id", "corpus_id")
 
   /** ABSORB admitted documents into the bucketed band posting table:
     * `DedupOps.minhashSignaturesOf` (the frame [[stageCorpusBands]]

@@ -35,12 +35,15 @@ import graft.operators.EmbeddingOps
   *     quantizes, norms and buckets itself in one narrow codegen map
   *     (vec_q8 + dot_product + the plane sums — no lambda, no
   *     shuffle), then stream-static joins the staged table on the
-  *     bucket id: Spark shuffles and sorts ONLY the micro-batch side
-  *     into `buckets` partitions; the corpus reads bucket-aligned in
-  *     place, per batch and forever. Candidates clear `minCos` on the
-  *     QUANTIZED cosine — integer dots, scale factors cancelled, the
-  *     q82 arithmetic — so the probe never touches float corpus
-  *     vectors at all.
+  *     bucket id without exchanging the corpus, per batch and forever.
+  *     The join form follows the sizes (executed plans, PERF §79): a
+  *     batch under `autoBroadcastJoinThreshold`, every admission batch,
+  *     is broadcast and the staged table streamed in place; a larger
+  *     one is shuffled and sorted into `buckets` partitions against the
+  *     corpus read bucket-aligned in place. Candidates clear `minCos`
+  *     on the QUANTIZED cosine — integer dots, scale factors
+  *     cancelled, the q82 arithmetic — so the probe never touches
+  *     float corpus vectors at all.
   *
   * RECALL DIAL (`planeSets`, VERDICT r19 #6): with one plane set the
   * probe searches only the query's own sign bucket (nprobe=1) — a
@@ -143,6 +146,20 @@ object StreamingSemanticGate {
                       idCol: String = "vec_id", vecCol: String = "embedding",
                       planes: Int = EmbeddingOps.numPlanes,
                       planeSets: Int = 1): DataFrame =
+    probeHits(stream, spark, table, minCos, idCol, vecCol, planes, planeSets)
+      .dropDuplicates("new_id", "corpus_id")
+
+  /** The probe behind [[semanticMatches]], before its pair-level
+    * dedup: one `(new_id, corpus_id, cos_q8)` row per shared plane-set
+    * bucket whose quantized cosine reaches `minCos`. The one probe of
+    * this gate: [[semanticMatches]] dedups it per pair, and
+    * [[AdmissionPipeline]] folds it into its per-doc verdict
+    * aggregation. */
+  def probeHits(stream: DataFrame, spark: SparkSession, table: String,
+                minCos: Double = EmbeddingOps.nearDupCos,
+                idCol: String = "vec_id", vecCol: String = "embedding",
+                planes: Int = EmbeddingOps.numPlanes,
+                planeSets: Int = 1): DataFrame =
     withQuantized(stream.select(col(idCol), col(vecCol)), vecCol, planes, planeSets)
       .select(col(idCol).as("new_id"), col("__qd"), col("__qn"),
         explode(col("__bkts")).as("__bkt"))
@@ -152,7 +169,6 @@ object StreamingSemanticGate {
           (col("__qn") * col("__cqn")))
       .where(col("cos_q8") >= minCos)
       .select("new_id", "corpus_id", "cos_q8")
-      .dropDuplicates("new_id", "corpus_id")
 
   /** ABSORB admitted vectors into the staged corpus (the
     * [[StreamingDedup]] absorbing-gate pattern at the embedding

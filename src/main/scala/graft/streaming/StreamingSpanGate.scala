@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.SpanHashes
@@ -22,8 +22,14 @@ import graft.functions.SpanHashes
   * the same layout); each micro-batch emits
   * its own span hashes NARROWLY (the native one-pass
   * [[graft.functions.SpanHashes]] expression — no shuffle, no window
-  * state, legal in any streaming projection), shuffles only itself
-  * into the corpus bucketing, and the corpus joins in place. Per-doc
+  * state, legal in any streaming projection) and joins the corpus
+  * table without exchanging it. The join form follows the sizes
+  * (executed plans, PERF §79): the probe is a left-outer join, which
+  * can only broadcast its right side, so while the corpus span table
+  * is under `autoBroadcastJoinThreshold` every batch broadcasts the
+  * whole table and streams itself past it; past the threshold the
+  * batch shuffles itself into the corpus bucketing and the corpus is
+  * read in place, bucket-aligned. Per-doc
   * aggregation happens on the BATCH side only (micro-batch-sized
   * state, no watermark needed beyond the update-mode sink's own).
   *
@@ -50,22 +56,28 @@ object StreamingSpanGate {
   val postingKey = "csh"
 
   /** DISTINCT span hashes of `docs` as posting rows `(csh)` — what
-    * [[stageCorpusSpans]] and [[absorbSpans]] both write. */
-  private def postingRows(docs: DataFrame, k: Int): DataFrame =
-    docs.select(explode(SpanHashes.span_hashes(col("text"), k)).as(postingKey))
-      .distinct()
+    * [[stageCorpusSpans]] and [[absorbSpans]] both write. The rows are
+    * put at the writer's width BEFORE the distinct, so the distinct
+    * reuses the writer's partitioning: one exchange for a wide input
+    * (none for the distinct itself), none at all for an input already
+    * in one partition. */
+  private def postingRows(docs: DataFrame, k: Int, buckets: Int): DataFrame =
+    PostingCompaction.atWriterWidth(
+      docs.select(explode(SpanHashes.span_hashes(col("text"), k)).as(postingKey)),
+      postingKey, buckets).distinct()
 
   /** ONE-TIME corpus layout: DISTINCT span hashes of the corpus (or of
     * an eval suite, for decontamination) in the
     * [[PostingCompaction.write]] layout, bucketed+sorted on the hash.
     * The posting row is 8 bytes — at 10^11 corpus spans the table is
-    * sub-TB and every probe joins it in place, bucket-aligned, with
-    * zero corpus-side exchange per micro-batch. Returns the staged
-    * data-file count, the table's [[CompactionDial]] baseline. */
+    * sub-TB and every probe past the broadcast threshold joins it in
+    * place, bucket-aligned, with zero corpus-side exchange per
+    * micro-batch. Returns the staged data-file count, the table's
+    * [[CompactionDial]] baseline. */
   def stageCorpusSpans(spark: SparkSession, corpus: DataFrame,
                        table: String, buckets: Int = 64,
                        k: Int = defaultSpanLen): Int = {
-    PostingCompaction.write(postingRows(corpus, k), table, postingKey,
+    PostingCompaction.write(postingRows(corpus, k, buckets), table, postingKey,
       buckets, "overwrite")
     PostingCompaction.fileCount(spark, table)
   }
@@ -77,14 +89,15 @@ object StreamingSpanGate {
     * would double-count every window that hits it) and makes the
     * absorb REPLAY-IDEMPOTENT: re-absorbing an already-absorbed batch
     * appends zero rows, so an at-least-once restart cannot corrupt
-    * the table. The anti-join is bucket-aligned (batch side shuffles
-    * into the corpus bucketing, corpus reads in place — the probe's
-    * own geometry), and the append writes one file per touched
-    * bucket. */
+    * the table. The anti-join takes the probe's geometry (the corpus
+    * table broadcast under the threshold, bucket-aligned past it), and
+    * the append writes one file per touched bucket: a one-partition
+    * input is written by one task with no exchange at all, the
+    * distinct included ([[postingRows]]). */
   def absorbSpans(spark: SparkSession, admitted: DataFrame, table: String,
                   buckets: Int = 64, k: Int = defaultSpanLen): Unit =
     PostingCompaction.write(
-      postingRows(admitted, k).join(spark.table(table), Seq(postingKey), "left_anti"),
+      postingRows(admitted, k, buckets).join(spark.table(table), Seq(postingKey), "left_anti"),
       table, postingKey, buckets, "append")
 
   /** Span gate: for each document, count how many of its `n_spans`
@@ -99,22 +112,37 @@ object StreamingSpanGate {
     * running it as a global stream aggregation instead would pin one
     * state row per doc_id FOREVER (unbounded keys, no watermark can
     * expire them). Inside foreachBatch each batch plans the identical
-    * batch join below: batch side shuffles into the corpus bucketing,
-    * corpus joins in place. */
+    * batch join of [[probeHits]]: the corpus table broadcast while it
+    * is under the broadcast threshold, a bucket-aligned join with only
+    * the batch side shuffled past it. */
   def spanMatches(stream: DataFrame, spark: SparkSession, table: String,
-                  k: Int = defaultSpanLen): DataFrame = {
-    val probes = withSpans(stream, k)
-      .select(col("doc_id"), col("n_spans"),
-        explode_outer(array_distinct(col("__shs"))).as("sh"))
-    probes
-      .join(spark.table(table), col("sh") === col("csh"), "left")
+                  k: Int = defaultSpanLen): DataFrame =
+    probeHits(stream, spark, table, k)
       .groupBy("doc_id", "n_spans")
       .agg(count(col("csh")).as("matched_spans"))
-      .withColumn("matched_pm",
-        when(col("n_spans") === 0, lit(0L))
-          .otherwise(expr("matched_spans * 1000 div n_spans")))
+      .withColumn("matched_pm", matchedPm("matched_spans", "n_spans"))
       .select("doc_id", "n_spans", "matched_spans", "matched_pm")
-  }
+
+  /** The probe behind [[spanMatches]], before its per-doc count: one
+    * `(doc_id, n_spans, csh)` row per DISTINCT k-token window of each
+    * doc, `csh` the matching corpus span or NULL (a doc under k tokens
+    * keeps one all-NULL window row, so every doc appears). The one probe
+    * of this gate: [[spanMatches]] counts it per doc, and
+    * [[AdmissionPipeline]] folds it into its per-doc verdict
+    * aggregation. */
+  def probeHits(stream: DataFrame, spark: SparkSession, table: String,
+                k: Int = defaultSpanLen): DataFrame =
+    withSpans(stream, k)
+      .select(col("doc_id"), col("n_spans"),
+        explode_outer(array_distinct(col("__shs"))).as("sh"))
+      .join(spark.table(table), col("sh") === col("csh"), "left")
+      .select("doc_id", "n_spans", "csh")
+
+  /** Per-mille share of a doc's windows (column `nSpans`) that matched
+    * a corpus span (column `matched`), rounded down; 0 for a doc with
+    * no window. */
+  def matchedPm(matched: String, nSpans: String): Column =
+    when(col(nSpans) === 0, lit(0L)).otherwise(expr(s"$matched * 1000 div $nSpans"))
 
   /** Removal RANGES per document — the actionable form of the gate
     * (batch analogue: `CorpusOps.dedupSpanRanges`/q81): for each doc,

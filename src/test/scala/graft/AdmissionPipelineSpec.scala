@@ -174,6 +174,106 @@ class AdmissionPipelineSpec extends SparkSpec {
     } finally dropAll()
   }
 
+  /** Jobs started under a fresh job group while `body` runs — the
+    * runner's threads inherit the group, so the concurrent absorbs
+    * count too. The bus delivers in posting order: once a marker job's
+    * start arrives, every job of `body` has been counted. */
+  private def jobsOf(body: => Unit): Int = {
+    val group = s"ap-jobs-${java.util.UUID.randomUUID()}"
+    val marker = s"$group-marker"
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some(`group`) => jobs.incrementAndGet(): Unit
+          case Some(`marker`) => markerSeen.countDown()
+          case _ => ()
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, "admission job count", false)
+      try body finally spark.sparkContext.clearJobGroup()
+      spark.sparkContext.setJobGroup(marker, "listener drain marker", false)
+      try spark.range(1).count(): Unit finally spark.sparkContext.clearJobGroup()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus never delivered the marker job")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get
+  }
+
+  test("one non-compacting processBatch, the collect of its verdicts included, runs at most 15 Spark jobs") {
+    // pin, verdicts, store, three absorbs and the caller's collect: the
+    // batch is bound by fixed cost per job (PERF §79)
+    dropAll()
+    val dials = AdmissionPipeline.stageCorpus(spark, corpusDocs, corpusVecs, t, cfg)
+    val stateDir = java.nio.file.Files.createTempDirectory("ap_jobs").toString
+    try {
+      val (batch, expected) = fixtureBatch(9600000L)
+      val files = () => dials.all.map(d => graft.streaming.StreamingDedup.postingFileCount(spark, d.table))
+      val before = files()
+      var got = Map.empty[Long, String]
+      val jobs = jobsOf {
+        got = AdmissionPipeline.processBatch(spark, batch, 0L, t, dials, stateDir, cfg)
+          .as[(Long, String)].collect().toMap
+      }
+      assert(got == expected, s"verdicts diverge: got $got expected $expected")
+      // each table grew by its absorb and sits under its threshold: no dial fired
+      val after = files()
+      assert(before.zip(after).forall { case (b, a) => a > b }, s"posting files $before -> $after")
+      assert(dials.all.zip(after).forall { case (d, n) => n <= d.threshold },
+        s"a dial was over its threshold: $after")
+      assert(jobs <= 15, s"$jobs Spark jobs for one admission batch, budget 15")
+    } finally dropAll()
+  }
+
+  test("a repeated doc_id: every row takes the doc's verdict and every admitted row's postings are absorbed") {
+    dropAll()
+    val dials = AdmissionPipeline.stageCorpus(spark, corpusDocs, corpusVecs, t, cfg)
+    val stateDir = java.nio.file.Files.createTempDirectory("ap_repeat").toString
+    try {
+      val (planted, _) = fixtureBatch(9700000L)
+      val lexTwin = planted.where(col("doc_id") === 9700001L)
+        .select("text", "embedding").as[(String, Seq[Double])].collect().head
+      def novel(tag: String): String = (1 to 50).map(i => s"$tag~$i").mkString(" ")
+      // the fixture's span-copy shape: 15 tokens of a text, 85 fresh
+      def spanCopy(tag: String): String =
+        (novel(tag).split(" ").take(15) ++ (1 to 85).map(i => s"copy$tag~$i")).mkString(" ")
+      // random sign patterns: pairwise cosines near 0, far under 0.8
+      def vec(seed: Int): Seq[Double] = {
+        val r = new scala.util.Random(seed)
+        Seq.fill(64)(if (r.nextBoolean()) 1.0 else -1.0)
+      }
+      val batch = Seq(
+        (1L, novel("alpha"), vec(11)), // doc 1 twice, both rows novel
+        (1L, novel("beta"), vec(13)),
+        (2L, lexTwin._1, lexTwin._2),  // doc 2 twice, one row a lexical twin
+        (2L, novel("gamma"), vec(17)))
+        .toDF("doc_id", "text", "embedding")
+      val rows = AdmissionPipeline.processBatch(spark, batch, 0L, t, dials, stateDir, cfg)
+        .as[(Long, String)].collect().toSeq
+      assert(rows.sorted == Seq(1L -> "admit", 1L -> "admit", 2L -> "dup_lexical", 2L -> "dup_lexical"),
+        s"verdict rows: $rows")
+      // both admitted rows of doc 1 are corpus now, text and vector;
+      // neither row of the rejected doc 2 is
+      val probe = Seq(
+        (11L, novel("alpha"), vec(19)),
+        (12L, novel("beta"), vec(23)),
+        (13L, novel("fresh"), vec(11)),
+        (14L, novel("other"), vec(13)),
+        (15L, novel("gamma"), vec(29)),
+        (16L, novel("novel"), vec(17)),
+        (17L, spanCopy("beta"), vec(31)),
+        (18L, spanCopy("gamma"), vec(37)))
+        .toDF("doc_id", "text", "embedding")
+      val later = AdmissionPipeline.verdicts(spark, probe, t, cfg).as[(Long, String)].collect().toMap
+      assert(later == Map(11L -> "dup_lexical", 12L -> "dup_lexical", 13L -> "dup_semantic",
+        14L -> "dup_semantic", 15L -> "admit", 16L -> "admit", 17L -> "dup_span", 18L -> "admit"),
+        s"later verdicts: $later")
+    } finally dropAll()
+  }
+
   test("a failing absorb: processBatch rethrows once the batch's jobs have ended, commits no ledger, and the rerun delivers the planted verdicts") {
     val (batch, expected) = fixtureBatch(9500000L)
     val ledger = (dir: String) => java.nio.file.Paths.get(dir, "ledger", "batch-0")

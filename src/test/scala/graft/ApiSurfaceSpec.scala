@@ -146,6 +146,25 @@ class ApiSurfaceSpec extends SparkSpec {
       s"bucketBy( under graft/streaming, expected once in PostingCompaction: $writes")
   }
 
+  test("each admission gate's probe is defined once and the pipeline only composes them") {
+    // AdmissionPipeline's verdict aggregation takes each gate's raw hit
+    // rows from its probeHits; a second band-agreement, cosine or
+    // bucket expression, or a posting-table read in the pipeline, is a
+    // fork of a gate's probe that can drift from the gate
+    val streaming = sourcesUnder("src/main/scala/graft/streaming")
+    Seq("band_match_count(", "dot_product(", "signBucket(").foreach { probe =>
+      val defs = streaming.flatMap { case (file, text) =>
+        java.util.regex.Pattern.quote(probe).r.findAllIn(text).map(_ => file)
+      }
+      assert(defs.size == 1, s"$probe under graft/streaming, expected once: $defs")
+    }
+    val pipeline = streaming.collect { case ("AdmissionPipeline.scala", text) => text }
+    assert(pipeline.size == 1, "AdmissionPipeline.scala not found under graft/streaming")
+    val forks = Seq("band_match_count", "span_hashes", "dot_product", "spark.table(")
+      .filter(pipeline.head.contains)
+    assert(forks.isEmpty, s"probe code in AdmissionPipeline.scala: $forks")
+  }
+
   test("concurrent work is launched by one runner, ConcurrentJobs") {
     // stageAll's chains, the admission loop's per-table writes and
     // Bench's page-cache warm share its pool sizing, FAIR pools and

@@ -137,6 +137,65 @@ class PostingCompactionSpec extends SparkSpec {
       tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
   }
+  test("a one-partition absorb is written by one task with no shuffle stage and lands <= buckets files") {
+    // the admission loop absorbs from its pinned verdict frame, which
+    // AQE's coalescing leaves in one partition and localCheckpoint
+    // reports without a partitioning; a repartition to the buckets
+    // would add a map-stage job and a buckets-task write per absorb
+    val buckets = 4
+    val docs = Tables.documents(spark, sf).select("doc_id", "text")
+    val vecs = Tables.embeddings(spark, sf)
+    val corpus = docs.where($"doc_id" >= 40)
+    val tables = Seq("pc_one_bands", "pc_one_spans", "pc_one_vectors")
+    StreamingDedup.stageCorpusBands(spark, DedupOps.minhashSignaturesOf(corpus), tables(0), buckets): Unit
+    StreamingSpanGate.stageCorpusSpans(spark, corpus, tables(1), buckets): Unit
+    StreamingSemanticGate.stageCorpusVectors(spark, vecs.where($"vec_id" >= 40), tables(2), buckets): Unit
+    val admitted = docs.where($"doc_id" < 40).coalesce(1).localCheckpoint(true)
+    val admittedVecs = vecs.where($"vec_id" < 40).coalesce(1).localCheckpoint(true)
+    assert(admitted.rdd.getNumPartitions == 1 && admittedVecs.rdd.getNumPartitions == 1)
+    val absorbs = Seq[() => Unit](
+      () => StreamingDedup.absorbPostings(spark, admitted, tables(0), buckets),
+      () => StreamingSpanGate.absorbSpans(spark, admitted, tables(1), buckets),
+      () => StreamingSemanticGate.absorb(spark, admittedVecs, tables(2), buckets))
+    try tables.zip(absorbs).foreach { case (table, absorb) =>
+      val group = s"pc-one-$table"
+      // the stage ids of each job in the group, in job order, and the
+      // task count and shuffle records (written + read) of each stage
+      val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Int]]()
+      val stages = new java.util.concurrent.ConcurrentHashMap[Int, (Int, Long)]()
+      val marker = new java.util.concurrent.CountDownLatch(1)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+            case Some(`group`) => jobs.add(e.stageIds): Unit
+            case Some(g) if g == s"$group-marker" => marker.countDown()
+            case _ => ()
+          }
+        override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+          val m = e.stageInfo.taskMetrics
+          stages.put(e.stageInfo.stageId, (e.stageInfo.numTasks,
+            m.shuffleWriteMetrics.recordsWritten + m.shuffleReadMetrics.recordsRead)): Unit
+        }
+      }
+      val before = PostingCompaction.fileCount(spark, table)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        spark.sparkContext.setJobGroup(group, "one-partition absorb", false)
+        try absorb() finally spark.sparkContext.clearJobGroup()
+        spark.sparkContext.setJobGroup(s"$group-marker", "listener drain marker", false)
+        try spark.range(1).count(): Unit finally spark.sparkContext.clearJobGroup()
+        assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus never delivered the marker job")
+      } finally spark.sparkContext.removeSparkListener(listener)
+      import scala.jdk.CollectionConverters._
+      val seen = jobs.asScala.toSeq.map(_.flatMap(id => Option(stages.get(id))))
+      assert(seen.nonEmpty && seen.flatten.forall(_._2 == 0L), s"$table: a shuffle in the absorb: $seen")
+      // the span absorb's anti-join may broadcast the corpus table first
+      assert(seen.last == Seq((1, 0L)), s"$table: the write ran ${seen.last}, expected one one-task stage")
+      val added = PostingCompaction.fileCount(spark, table) - before
+      assert(added > 0 && added <= buckets, s"$table: the absorb added $added files, over $buckets buckets")
+    } finally tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
   test("two concurrent rewrites each land at <= buckets files and leave the session's autoBucketedScan as it was") {
     // 128 input files per table: 32 writer tasks x 4 buckets. Planned
     // split-based (autoBucketedScan unpinned), a rewrite packs them into

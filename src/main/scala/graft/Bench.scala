@@ -12,8 +12,8 @@ package graft
   * only (-1 when all three fail).
   *
   * Staging accounting (round-2): the dedup pair/verify queries share
-  * shingle/signature subtrees through parquet staging tables
-  * (DedupOps.stageSignatures). The bench materializes them into a
+  * shingle/signature subtrees through parquet staging tables. The
+  * bench materializes every one of them (DedupOps.stageAll) into a
   * FRESH directory inside the run, timed as the `stage_dedup` entry —
   * so the headline total pays the full cost honestly. The staging
   * root is scoped through DedupOps.withStagingRoot (thread-local), not
@@ -35,7 +35,7 @@ object Bench {
     * errors map is empty. Per-query failures already raise n_failed,
     * but a STAGE failure or a schema-tripwire hit leaves every query
     * "green" while silently shifting what was measured (staged queries
-    * degrade to unstaged paths, +73 s at 100×; off-baseline inputs
+    * build missing tables inside their first timed rep; off-baseline inputs
     * aren't the baseline's workload) — those must invalidate the whole
     * run, loudly (VERDICT r13 #2). */
   private[graft] def artifactValid(
@@ -400,8 +400,8 @@ object Bench {
     val nFailed = results.count(_._2 < 0)
     // ANY recorded error — not just per-query failures — invalidates
     // the artifact (VERDICT r13 #2): a staging OOM leaves n_failed at 0
-    // while every staged query silently degrades to its unstaged path
-    // (+73 s at 100×), and a tripwire hit means the inputs aren't the
+    // while a staged query silently builds a missing table inside its
+    // first timed rep, and a tripwire hit means the inputs aren't the
     // baseline's. Same loud-failure doctrine as the r12 events.ts gate.
     val valid = artifactValid(nFailed, errors)
     // full-precision artifact on disk; the round artifact captures only

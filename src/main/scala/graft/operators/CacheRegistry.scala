@@ -58,8 +58,10 @@ import org.apache.spark.storage.StorageLevel
 private[graft] object CacheRegistry {
 
   /** LRU backstop per session. The most query-scoped frames one plan
-    * registers is 4 (unstaged q44, q47, q62 and q63: shingles,
-    * signatures, band stream, suspect census); twice that lets a second
+    * registers is 3 (the library `DedupOps.lshCandidatesOf`:
+    * signatures, band stream, suspect census); a staged dedup query
+    * registers none, because it reads parquet and a cold read-through
+    * build hands its persists to the staged write. 8 lets a second such
     * plan be built before the first one runs without evicting the
     * first one's frames. */
   private[graft] val maxEntries = 8
@@ -164,8 +166,8 @@ private[graft] object CacheRegistry {
     * fires this listener with an analyzed plan that can CONTAIN a
     * tracked frame the caller is still composing over — releasing
     * there would defeat the persist before its real consumer runs
-    * (unstaged q47's seed `localCheckpoint` sits on top of the
-    * registered band frame). */
+    * (`GraphOps`' seed `localCheckpoint` over a pair frame built on a
+    * registered band stream, such as `lshCandidatesOf`'s). */
   private val nonTerminalActions = Set("checkpoint", "localCheckpoint")
 
   /** Release on a completed execution: every tracked frame its plan

@@ -49,7 +49,7 @@ object CorpusOps {
     * stage is the per-doc overlap count, keyed by doc_id. Reuses the
     * staged shingle table from the dedup stack. */
   def decontaminate(spark: SparkSession, sfDir: String): DataFrame = {
-    val bg = DedupOps.sharedShingles(spark, sfDir)
+    val bg = DedupOps.shingleTable(spark, sfDir)
     val bench = bg.where(expr(benchPred)).select("s").distinct()
     val train = bg.where(expr(s"NOT ($benchPred)"))
     val sizes = train.groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
@@ -416,8 +416,7 @@ object CorpusOps {
     * and one for the affected-doc list — so paying it per query per
     * consumer recomputed the corpus's dominant scan twice per caller.
     * Outputs are the rare tail (repeated spans / docs holding one), so
-    * the staged tables are small; staging off ⇒ inline compute, shape
-    * unchanged. */
+    * the staged tables are small. */
   private def spanHashed(spark: SparkSession, sfDir: String): DataFrame =
     Tables.documents(spark, sfDir).select("doc_id", "text")
       .select(col("doc_id"),
@@ -857,11 +856,10 @@ object CorpusOps {
   }
 
   def curationFunnel(spark: SparkSession, sfDir: String): DataFrame = {
-    // One pass: per-doc stage-membership flags (staged — recomputed
-    // inline only when staging is off), ONE aggregate produces every
-    // stage count, and `stack` unpivots to the report rows — a funnel
-    // over any corpus size costs one scan-and-count job, not one
-    // operator-subtree job per stage.
+    // One pass: per-doc stage-membership flags (staged), ONE aggregate
+    // produces every stage count, and `stack` unpivots to the report
+    // rows — a funnel over any corpus size costs one scan-and-count
+    // job, not one operator-subtree job per stage.
     stageFlagsTable(spark, sfDir).agg(
         count(lit(1)).as("c_raw"),
         sum(when(col("f_exact"), 1L).otherwise(0L)).as("c_exact"),

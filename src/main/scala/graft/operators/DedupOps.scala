@@ -33,13 +33,14 @@ final case class MinHashParams(numHashes: Int = 8, numBands: Int = 4) {
   * unchanged.
   *
   * Shared-subtree staging: the pair/verify operators reference the
-  * shingle and signature subtrees several times. They route through a
-  * read-through parquet staging table (one materialization, then a
-  * plain scan with column pruning — exactly what a 100 TB pipeline
-  * does between dedup stages). Controlled by system property
-  * `graft.stage.dir`: unset → `$java.io.tmpdir/graft-stage`; a path →
-  * that root; `off` → no staging, falling back to a query-scoped
-  * persist ([[CacheRegistry.scoped]]) for within-query sharing.
+  * shingle and signature subtrees several times. Every testdata-keyed
+  * entry routes through a read-through parquet staging table
+  * ([[Staging]]: one materialization, then a plain scan with column
+  * pruning — exactly what a 100 TB pipeline does between dedup
+  * stages); there is no unstaged mode. The root is system property
+  * `graft.stage.dir` (unset → `$java.io.tmpdir/graft-stage`) or a
+  * thread-scoped [[withStagingRoot]]. The `*Of(docs)` library entries
+  * take an arbitrary frame and compute inline.
   */
 object DedupOps {
   // minhash parameters: defaults 8 hashes, 4 bands x 2 rows
@@ -75,39 +76,14 @@ object DedupOps {
   // flagged-window frame recompute per reference instead: their
   // persists measured a wash (PERF §68, §70).
 
-  /** Run `body` with an explicit staging root (`Some(dir)`) or staging
-    * disabled (`None`), scoped to the current thread — concurrent
-    * library consumers must not race on the global sys-prop. */
+  /** Run `body` with an explicit staging root (`Some(dir)`), scoped to
+    * the current thread — concurrent library consumers must not race
+    * on the global sys-prop. Staging cannot be turned off: `None`
+    * throws. */
   def withStagingRoot[T](root: Option[String])(body: => T): T =
-    Staging.withRoot(root)(body)
-
-  private def stagingRoot: Option[String] = Staging.root
-
-  private def tableDir(root: String, sfDir: String, table: String): String =
-    Staging.tableDir(root, sfDir, table)
-
-  private def staged(spark: SparkSession, sfDir: String, table: String)
-                    (compute: => DataFrame): DataFrame =
-    Staging.readThrough(spark, sfDir, table)(compute)
-
-  /** Force-materialize the staged dedup tables (shingles + minhash
-    * signatures + simhash) for `sfDir`; returns the staging paths (or
-    * Nil when staging is off). Bench calls this up front so staging
-    * cost is attributed separately from query cost. */
-  def stageSignatures(spark: SparkSession, sfDir: String,
-                      p: MinHashParams = defaultParams): Seq[String] =
-    stagingRoot match {
-      case None => Nil
-      case Some(root) =>
-        // each table call writes its parquet if absent (read-through)
-        shingleTable(spark, sfDir)
-        sigTable(spark, sfDir, p)
-        simhashTable(spark, sfDir)
-        candTable(spark, sfDir, p)
-        Seq("shingles", s"sig_h${p.numHashes}", "simhash",
-            s"cand_h${p.numHashes}_b${p.numBands}")
-          .map(tableDir(root, sfDir, _))
-    }
+    Staging.withRoot(root.getOrElse(throw new IllegalArgumentException(
+      "withStagingRoot(None): staging cannot be turned off; pass Some(dir) " +
+        "or leave graft.stage.dir to choose the root")))(body)
 
   /** Materialize EVERY staged dedup/ANN table for `sfDir`, exploiting
     * the dependency DAG: every chain — the shared shingle and doc_sets
@@ -120,12 +96,11 @@ object DedupOps {
     * free executors; at staging time the work is write-bound, so
     * overlapping the chains hides per-job fixed cost (scheduling,
     * codegen, parquet commit) behind each other (wall A/B: PERF §34).
-    * Exceptions from any chain propagate (no partial-success silence);
-    * staging off ⇒ no-op.
+    * Exceptions from any chain propagate (no partial-success silence).
     *
-    * Returns the per-chain wall seconds (empty when staging is off) —
-    * the chains run as CONCURRENT jobs, so the caller's total says
-    * nothing about which chain dominates; Bench lands this map in the
+    * Returns the per-chain wall seconds — the chains run as
+    * CONCURRENT jobs, so the caller's total says nothing about which
+    * chain dominates; Bench lands this map in the
     * artifact as `stage_chains` so a stage_dedup drift attributes to
     * a chain in minutes instead of a day of probe runs (VERDICT r19
     * #4: the r16→r19 53→66 s elevation was attributed on the evidence
@@ -135,125 +110,122 @@ object DedupOps {
     * have). */
   def stageAll(spark: SparkSession, sfDir: String,
                presets: Seq[MinHashParams] = Seq(defaultParams, scaleParams),
-               ivf: Boolean = true): Map[String, Double] =
-    stagingRoot match {
-      case None => Map.empty
-      case someRoot =>
-        // Driver-memory guard (r13, VERDICT r12 #4): cap BOTH broadcast
-        // thresholds for the staging window. The thresholds compare
-        // against COMPRESSED shuffle bytes, and the dedup chains'
-        // intermediates (sorted monotone id-pair frames) compress so
-        // well that a sub-10 MB stage can explode ~100× into an
-        // in-heap hash relation — an 8 GiB driver died materializing a
-        // ~1 GiB broadcast allocation with nine chains' sort/agg
-        // buffers alive (bench 100× at SPARK_DRIVER_MEM=8g: the exact
-        // r12 STAGE_MATERIALIZATION failure, reproduced). 1 MiB caps
-        // the worst-case expansion near ~100 MB per build; the staging
-        // chains are scan/agg-bound, so the lost broadcasts cost
-        // little (A/B in PERF §28). Query-time joins outside stageAll
-        // keep the session defaults (q79's verify-broadcast win at
-        // 16 GiB is a QUERY-time plan).
-        //
-        // The cap mutates SESSION-global conf, so two invariants hold
-        // (ADVICE r13): (a) one stageAll per session at a time — a
-        // concurrent/reentrant call would snapshot the already-capped
-        // value and restore it permanently; (b) EVERYTHING that runs
-        // under the cap (incl. the shared shingle root, whose failure
-        // class this guard targets) sits inside the try whose finally
-        // restores the snapshot, so a staging failure can't leak
-        // 1 MiB thresholds into every later query-time plan.
-        require(beginStaging(spark),
-          "stageAll is already running on this SparkSession; " +
-            "concurrent staging would corrupt the broadcast-threshold snapshot")
-        val bcastKeys = Seq("spark.sql.autoBroadcastJoinThreshold",
-          "spark.sql.adaptive.autoBroadcastJoinThreshold")
-        val bcastSaved = bcastKeys.map(k => k -> spark.conf.getOption(k))
-        try {
-          bcastKeys.foreach(spark.conf.set(_, "1m"))
-          // Chain inventory FIRST (as thunks), so the pool is sized to
-          // run every chain concurrently: the r13 pool of
-          // presets.size + 2 threads queued flags/keeper/ivf behind
-          // the first four chains, and the serial up-front shingle
-          // build delayed even the chains that never touch shingles
-          // (signatures, simhash, keeper, ivf). Now shingles and
-          // doc_sets are ordinary EARLY chains — dependents block on
-          // their dir locks, independents overlap their builds — and
-          // the lock graph follows the staging DAG (acyclic), so
-          // all-at-once submission cannot deadlock. Measured: PERF §34.
-          val work: Seq[(String, () => Unit)] =
-            Seq[(String, () => Unit)](
-              // shared roots of the DAG, submitted first
-              "shingles" -> (() => shingleTable(spark, sfDir): Unit),
-              // doc_sets gates BOTH presets' verifies; as its own early
-              // chain it lands as soon as shingles do, instead of
-              // behind prefixTable inside the prefix chain
-              "docsets" -> (() => docSetsTable(spark, sfDir): Unit)) ++
-            // candTable builds its sigTable dependency read-through; NOT
-            // stageSignatures, which would also rebuild simhash in every
-            // preset chain and serialize them on its table lock.
-            // defaultParams first: its verified table gates the flags
-            // chain (dedupKeepList), making it the critical path
-            presets.map(p => s"minhash-h${p.numHashes}" -> (() =>
-              verifiedTable(spark, sfDir, p): Unit)) ++
-            Seq[(String, () => Unit)](
-              "simhash" -> (() => simhashTable(spark, sfDir): Unit),
-              // prefix DEPENDS on the docsets chain since r16: its
-              // staged build joins doc_sets' `sk` column instead of
-              // re-aggregating the sketch (PERF §45) — the dir-lock
-              // wait IS billed to prefix's [stage] line, trading idle
-              // time for the removed duplicate aggregate
-              "prefix" -> (() =>
-                prefixTable(spark, sfDir, prefixThreshold): Unit),
-              "contain" -> (() => containCandTable(spark, sfDir): Unit),
-              // corpus span census (q80/q81 + the streaming gate's batch
-              // confirm path): cand hashes then the affected-doc list
-              "spans" -> (() => {
-                CorpusOps.spanCandTable(spark, sfDir): Unit
-                CorpusOps.spanDocsTable(spark, sfDir): Unit
-              }),
-              "keeper" -> (() => keeperTable(spark, sfDir): Unit),
-              // per-doc funnel stage-flags (q63): consumes the keeper and
-              // verified tables read-through (the dir locks serialize it
-              // behind the chains building them) plus the q51/q48 subtrees
-              "flags" -> (() => CorpusOps.stageFlagsTable(spark, sfDir): Unit)) ++
-            (if (ivf) Seq[(String, () => Unit)](
-              "ivf" -> (() => EmbeddingOps.stageIvf(spark, sfDir): Unit))
-             else Nil)
-          // Staging's root override is thread-local; re-pin it (and a
-          // distinguishable job group, which perfbench's staging rows
-          // filter on) inside each worker thread. The runner gives each
-          // chain its own FAIR pool `graft-stage-<tag>` and, on a chain
-          // failure, cancels and drains the others before rethrowing —
-          // so the finally below never restores the broadcast
-          // thresholds or clears the staging marker under a surviving
-          // chain (uncapped broadcast plans are the exact OOM class the
-          // cap exists for).
-          val walls = ConcurrentJobs.runAll(spark, "graft-stage", work.map {
-            case (tag, body) => tag -> (() =>
-              Staging.withRoot(someRoot) { Staging.withinStagingChain {
-                spark.sparkContext.setJobGroup(s"graft-stage-$tag", tag, false)
-                // per-chain wall seconds, to stderr (a failed chain's
-                // too) AND the returned map (Bench's `stage_chains`
-                // artifact field): chains run as concurrent jobs, so the
-                // bench's stage_dedup total says nothing about WHICH
-                // chain dominates
-                val t0 = System.nanoTime()
-                def wall = (System.nanoTime() - t0) / 1e9
-                try { body(); wall } finally {
-                  spark.sparkContext.clearJobGroup()
-                  System.err.println(f"[stage] $tag $wall%.2f s")
-                }
-              } })
-          })
-          work.map(_._1).zip(walls).toMap
-        } finally {
-          bcastSaved.foreach {
-            case (k, Some(v)) => spark.conf.set(k, v)
-            case (k, None)    => spark.conf.unset(k)
-          }
-          endStaging(spark)
-        }
+               ivf: Boolean = true): Map[String, Double] = {
+    val root = Staging.root
+    // Driver-memory guard (r13, VERDICT r12 #4): cap BOTH broadcast
+    // thresholds for the staging window. The thresholds compare
+    // against COMPRESSED shuffle bytes, and the dedup chains'
+    // intermediates (sorted monotone id-pair frames) compress so
+    // well that a sub-10 MB stage can explode ~100× into an
+    // in-heap hash relation — an 8 GiB driver died materializing a
+    // ~1 GiB broadcast allocation with nine chains' sort/agg
+    // buffers alive (bench 100× at SPARK_DRIVER_MEM=8g: the exact
+    // r12 STAGE_MATERIALIZATION failure, reproduced). 1 MiB caps
+    // the worst-case expansion near ~100 MB per build; the staging
+    // chains are scan/agg-bound, so the lost broadcasts cost
+    // little (A/B in PERF §28). Query-time joins outside stageAll
+    // keep the session defaults (q79's verify-broadcast win at
+    // 16 GiB is a QUERY-time plan).
+    //
+    // The cap mutates SESSION-global conf, so two invariants hold
+    // (ADVICE r13): (a) one stageAll per session at a time — a
+    // concurrent/reentrant call would snapshot the already-capped
+    // value and restore it permanently; (b) EVERYTHING that runs
+    // under the cap (incl. the shared shingle root, whose failure
+    // class this guard targets) sits inside the try whose finally
+    // restores the snapshot, so a staging failure can't leak
+    // 1 MiB thresholds into every later query-time plan.
+    require(beginStaging(spark),
+      "stageAll is already running on this SparkSession; " +
+        "concurrent staging would corrupt the broadcast-threshold snapshot")
+    val bcastKeys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val bcastSaved = bcastKeys.map(k => k -> spark.conf.getOption(k))
+    try {
+      bcastKeys.foreach(spark.conf.set(_, "1m"))
+      // Chain inventory FIRST (as thunks), so the pool is sized to
+      // run every chain concurrently: the r13 pool of
+      // presets.size + 2 threads queued flags/keeper/ivf behind
+      // the first four chains, and the serial up-front shingle
+      // build delayed even the chains that never touch shingles
+      // (signatures, simhash, keeper, ivf). Now shingles and
+      // doc_sets are ordinary EARLY chains — dependents block on
+      // their dir locks, independents overlap their builds — and
+      // the lock graph follows the staging DAG (acyclic), so
+      // all-at-once submission cannot deadlock. Measured: PERF §34.
+      val work: Seq[(String, () => Unit)] =
+        Seq[(String, () => Unit)](
+          // shared roots of the DAG, submitted first
+          "shingles" -> (() => shingleTable(spark, sfDir): Unit),
+          // doc_sets gates BOTH presets' verifies; as its own early
+          // chain it lands as soon as shingles do, instead of
+          // behind prefixTable inside the prefix chain
+          "docsets" -> (() => docSetsTable(spark, sfDir): Unit)) ++
+        // candTable builds its sigTable dependency read-through;
+        // simhash is its own chain, not part of the preset chains.
+        // defaultParams first: its verified table gates the flags
+        // chain (dedupKeepList), making it the critical path
+        presets.map(p => s"minhash-h${p.numHashes}" -> (() =>
+          verifiedTable(spark, sfDir, p): Unit)) ++
+        Seq[(String, () => Unit)](
+          "simhash" -> (() => simhashTable(spark, sfDir): Unit),
+          // prefix DEPENDS on the docsets chain since r16: its
+          // staged build joins doc_sets' `sk` column instead of
+          // re-aggregating the sketch (PERF §45) — the dir-lock
+          // wait IS billed to prefix's [stage] line, trading idle
+          // time for the removed duplicate aggregate
+          "prefix" -> (() =>
+            prefixTable(spark, sfDir, prefixThreshold): Unit),
+          "contain" -> (() => containCandTable(spark, sfDir): Unit),
+          // corpus span census (q80/q81 + the streaming gate's batch
+          // confirm path): cand hashes then the affected-doc list
+          "spans" -> (() => {
+            CorpusOps.spanCandTable(spark, sfDir): Unit
+            CorpusOps.spanDocsTable(spark, sfDir): Unit
+          }),
+          "keeper" -> (() => keeperTable(spark, sfDir): Unit),
+          // per-doc funnel stage-flags (q63): consumes the keeper and
+          // verified tables read-through (the dir locks serialize it
+          // behind the chains building them) plus the q51/q48 subtrees
+          "flags" -> (() => CorpusOps.stageFlagsTable(spark, sfDir): Unit)) ++
+        (if (ivf) Seq[(String, () => Unit)](
+          "ivf" -> (() => EmbeddingOps.stageIvf(spark, sfDir): Unit))
+         else Nil)
+      // Staging's root override is thread-local; re-pin it (and a
+      // distinguishable job group, which perfbench's staging rows
+      // filter on) inside each worker thread. The runner gives each
+      // chain its own FAIR pool `graft-stage-<tag>` and, on a chain
+      // failure, cancels and drains the others before rethrowing —
+      // so the finally below never restores the broadcast
+      // thresholds or clears the staging marker under a surviving
+      // chain (uncapped broadcast plans are the exact OOM class the
+      // cap exists for).
+      val walls = ConcurrentJobs.runAll(spark, "graft-stage", work.map {
+        case (tag, body) => tag -> (() =>
+          Staging.withRoot(root) { Staging.withinStagingChain {
+            spark.sparkContext.setJobGroup(s"graft-stage-$tag", tag, false)
+            // per-chain wall seconds, to stderr (a failed chain's
+            // too) AND the returned map (Bench's `stage_chains`
+            // artifact field): chains run as concurrent jobs, so the
+            // bench's stage_dedup total says nothing about WHICH
+            // chain dominates
+            val t0 = System.nanoTime()
+            def wall = (System.nanoTime() - t0) / 1e9
+            try { body(); wall } finally {
+              spark.sparkContext.clearJobGroup()
+              System.err.println(f"[stage] $tag $wall%.2f s")
+            }
+          } })
+      })
+      work.map(_._1).zip(walls).toMap
+    } finally {
+      bcastSaved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None)    => spark.conf.unset(k)
+      }
+      endStaging(spark)
     }
+  }
 
   /** Sessions with a stageAll in flight — guards the session-global
     * broadcast-threshold save/cap/restore against concurrent or
@@ -297,11 +269,12 @@ object DedupOps {
       .select(col("doc_id"), col("sh.s").as("s"),
         col("sh.h").as("h"), col("sh.h60").as("h60"))
 
-  private def computeShingles(spark: SparkSession, sfDir: String): DataFrame =
-    shinglesOf(Tables.documents(spark, sfDir))
-
-  private def shingleTable(spark: SparkSession, sfDir: String): DataFrame =
-    staged(spark, sfDir, "shingles")(computeShingles(spark, sfDir))
+  /** The staged shingle table: the shared root of the dedup DAG, and
+    * the entry point for other corpus operators (decontamination) that
+    * reuse the same shingles. */
+  private[graft] def shingleTable(spark: SparkSession, sfDir: String): DataFrame =
+    Staging.readThrough(spark, sfDir, "shingles")(
+      shinglesOf(Tables.documents(spark, sfDir)))
 
   // ------------------------------------------------------------ signatures
 
@@ -339,20 +312,15 @@ object DedupOps {
   def minhashSignaturesOf(docs: DataFrame, p: MinHashParams = defaultParams): DataFrame =
     withSignatureAll(docs.where(signable), p).select("doc_id", "__sig")
 
-  /** `(doc_id, __sig)` signature table, staged (or a query-scoped
-    * persist when staging is off). (Tried doc_id-bucketed staging like
+  /** `(doc_id, __sig)` signature table, staged. (Tried doc_id-bucketed staging like
     * `doc_sets` for the est-attach joins in r12: isolated stage times
     * held but the CONCURRENT stageAll wall went 86 → 97 s — the per-chain
     * saveAsTable catalog commands and extra repartition serialize
     * against the other seven chains. Plain parquet staging wins at
     * full concurrency.) */
   private def sigTable(spark: SparkSession, sfDir: String, p: MinHashParams): DataFrame =
-    stagingRoot match {
-      case None => CacheRegistry.scoped(minhashSignaturesOf(Tables.documents(spark, sfDir), p))
-      case _ =>
-        staged(spark, sfDir, s"sig_h${p.numHashes}")(
-          minhashSignaturesOf(Tables.documents(spark, sfDir), p))
-    }
+    Staging.readThrough(spark, sfDir, s"sig_h${p.numHashes}")(
+      minhashSignaturesOf(Tables.documents(spark, sfDir), p))
 
   /** MinHash signatures: mh_i = min over shingles of (a_i*h + b_i) % P.
     * One narrow pass over the documents scan — zero exchange. The one
@@ -406,23 +374,19 @@ object DedupOps {
     * query and the keep-list re-derive from it — at scale that is a
     * materialized intermediate, not a recomputed subtree (measured at
     * 10x sf0.1: jaccard verify 47 s recomputing vs ~14 s reading the
-    * staged pairs). Unstaged fallback recomputes, as before. */
+    * staged pairs). */
   private def candTable(spark: SparkSession, sfDir: String, p: MinHashParams): DataFrame =
-    stagingRoot match {
-      case None => lshCandidatesFrom(sigTable(spark, sfDir, p), p, BandGuard.default)
-      case _ =>
-        // sort = false: the read below re-applies the ordering, so an
-        // in-plan global sort at write time is pure waste — and not a
-        // small one: the range exchange's boundary SAMPLING re-executes
-        // the whole post-shuffle segment (distinct + est join-backs), a
-        // second full pass of the most expensive stage on the h8
-        // staging chain (sorted write 154 s vs unsorted 15 s on the
-        // same warmed 100× corpus; PERF §47).
-        staged(spark, sfDir, s"cand_h${p.numHashes}_b${p.numBands}")(
-            lshCandidatesFrom(sigTable(spark, sfDir, p), p, BandGuard.default,
-              sort = false))
-          .orderBy("doc_a", "doc_b")
-    }
+    // sort = false: the read below re-applies the ordering, so an
+    // in-plan global sort at write time is pure waste — and not a
+    // small one: the range exchange's boundary SAMPLING re-executes
+    // the whole post-shuffle segment (distinct + est join-backs), a
+    // second full pass of the most expensive stage on the h8
+    // staging chain (sorted write 154 s vs unsorted 15 s on the
+    // same warmed 100× corpus; PERF §47).
+    Staging.readThrough(spark, sfDir, s"cand_h${p.numHashes}_b${p.numBands}")(
+        lshCandidatesFrom(sigTable(spark, sfDir, p), p, BandGuard.default,
+          sort = false))
+      .orderBy("doc_a", "doc_b")
 
   /** LSH candidates over an arbitrary `(doc_id, text)` frame — the
     * library entry for corpora not staged under a testdata dir; no
@@ -598,16 +562,6 @@ object DedupOps {
   def jaccardVerify(spark: SparkSession, sfDir: String): DataFrame =
     jaccardVerify(spark, sfDir, defaultParams)
 
-  /** Shingle frame shared across several scans in one query: the
-    * staged table when staging is on, a query-scoped persist otherwise.
-    * Also the entry point for other corpus operators (decontamination)
-    * that reuse the same staged shingles. */
-  private[graft] def sharedShingles(spark: SparkSession, sfDir: String): DataFrame =
-    stagingRoot match {
-      case None => CacheRegistry.scoped(computeShingles(spark, sfDir))
-      case _ => shingleTable(spark, sfDir)
-    }
-
   /** Exact Jaccard from overlap statistics, rounded for the oracle.
     * (Every verification operator — Jaccard, containment, incremental
     * admission — now routes through the two-stage set-table verify,
@@ -633,7 +587,7 @@ object DedupOps {
     * slack bound. */
   private def verifiedTable(spark: SparkSession, sfDir: String,
                             p: MinHashParams): DataFrame =
-    staged(spark, sfDir, s"verified_h${p.numHashes}_b${p.numBands}")(
+    Staging.readThrough(spark, sfDir, s"verified_h${p.numHashes}_b${p.numBands}")(
       verifyPrefixPairs(lshCandidates(spark, sfDir, p).select("doc_a", "doc_b"),
         docSetsTable(spark, sfDir), jaccardThreshold))
 
@@ -690,7 +644,7 @@ object DedupOps {
       .withColumn("keeper", min(col("doc_id")).over(
         org.apache.spark.sql.expressions.Window.partitionBy(md5(col("text")))))
       .select("doc_id", "keeper")
-    staged(spark, sfDir, "keeper")(compute)
+    Staging.readThrough(spark, sfDir, "keeper")(compute)
   }
 
   /** Exact-duplicate edges `(doc_id, keeper)`: every doc that is not
@@ -704,9 +658,7 @@ object DedupOps {
     * of a training-data dedup pipeline: the output is the surviving
     * corpus. Anti-joins keep it linear — no O(n²) anywhere. */
   def dedupKeepList(spark: SparkSession, sfDir: String): DataFrame = {
-    // base doc list from the raw table (a pruned one-column scan), so
-    // the keeper window is referenced exactly once even with staging
-    // off (where keeperTable recomputes per reference)
+    // base doc list from the raw table (a pruned one-column scan)
     val docs = Tables.documents(spark, sfDir).select("doc_id")
     val exactDrop = exactDupEdges(spark, sfDir).select("doc_id")
     val nearDrop = jaccardVerify(spark, sfDir).select(col("doc_b").as("doc_id"))
@@ -899,8 +851,8 @@ object DedupOps {
     * window is computed once per corpus, and the census query reads a
     * bounded pair list. */
   private[graft] def containCandTable(spark: SparkSession, sfDir: String): DataFrame =
-    staged(spark, sfDir, "contain_cand")(
-      containmentCandidates(sharedShingles(spark, sfDir)))
+    Staging.readThrough(spark, sfDir, "contain_cand")(
+      containmentCandidates(shingleTable(spark, sfDir)))
 
   private def containmentCandidates(bg: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1095,9 +1047,10 @@ object DedupOps {
     * is its OWN doc_id exchange (the window's exchange is not reused
     * — its input carries the dfs join), but a narrow one: (doc_id, int32)
     * per shingle row, ~15–20% of the window exchange's width, linear
-    * in corpus bytes — and since r16 paid ONLY on the unstaged path:
-    * the staged build joins the prefix rows to the doc_sets table's
-    * identical `sk` column instead (see [[prefixTable]]). */
+    * in corpus bytes — and since r16 paid ONLY by the library entry
+    * [[prefixJaccardPairsOf]]: the staged build joins the prefix rows
+    * to the doc_sets table's identical `sk` column instead (see
+    * [[prefixTable]]). */
   private def prefixFrom(bg: DataFrame, t: Double): DataFrame =
     prefixBare(bg, t).join(skFrom(bg), "doc_id")
 
@@ -1144,18 +1097,11 @@ object DedupOps {
     * Table content is unchanged (same rows, same sk values) — no
     * stage-version bump, no restage. */
   private[graft] def prefixTable(spark: SparkSession, sfDir: String,
-                          t: Double): DataFrame = {
-    stagingRoot match {
-      case None => CacheRegistry.scoped(prefixFrom(
-          sharedShingles(spark, sfDir).select("doc_id", "s", "h", "h60"), t))
-      case _ =>
-        staged(spark, sfDir, s"prefix_t${math.round(t * 1000)}") {
-          prefixBare(
-            sharedShingles(spark, sfDir).select("doc_id", "s", "h60"), t)
-            .join(docSetsTable(spark, sfDir).select("doc_id", "sk"), "doc_id")
-        }
+                                 t: Double): DataFrame =
+    Staging.readThrough(spark, sfDir, s"prefix_t${math.round(t * 1000)}") {
+      prefixBare(shingleTable(spark, sfDir).select("doc_id", "s", "h60"), t)
+        .join(docSetsTable(spark, sfDir).select("doc_id", "sk"), "doc_id")
     }
-  }
 
   /** Doc-level shingle-set table (`doc_sets`): one row per doc with
     * the sorted distinct-shingle array + its size. The verify stage
@@ -1177,7 +1123,7 @@ object DedupOps {
     // verify's only sketch bound, and q79's broadcast prefilter and
     // staged prefix table read the same column.
     val compute =
-      setsFrom(sharedShingles(spark, sfDir).select("doc_id", "s", "h"))
+      setsFrom(shingleTable(spark, sfDir).select("doc_id", "s", "h"))
         .withColumn("sk",
           graft.functions.BucketSketch.bucket_count_sketch(col("hs")))
     Staging.bucketedReadThrough(spark, sfDir, "doc_sets",
@@ -1194,7 +1140,7 @@ object DedupOps {
     * term of the verify bound), sorted shingle-string array (`ss`,
     * the exact confirm input — column-pruned away unless a pair
     * survives the hash stage), and the set size. */
-  private def setsFrom(bg: DataFrame): DataFrame =
+  private[graft] def setsFrom(bg: DataFrame): DataFrame =
     bg.withColumn("__h32", (col("h") - lit(2147483648L)).cast("int"))
       .groupBy("doc_id")
       .agg(sort_array(collect_list("__h32")).as("hs"),
@@ -1340,7 +1286,7 @@ object DedupOps {
 
   /** Candidate stage dispatch shared by [[prefixJaccardPairs]] and
     * [[prefixJaccardPairsOf]]: the broadcast prefilter while the
-    * corpus fits [[sketchDocCeiling]], the carried enumeration-grain
+    * corpus fits [[sketchMaxDocs]], the carried enumeration-grain
     * path past it (the quiet-box A/B at 100× measured broadcast
     * 7.9–9.2 s vs carried 9.6–10.1 s under the ceiling, and carried
     * 9.6–10.1 s vs pair-grain 29–36 s past it — PERF §44). The
@@ -1348,9 +1294,8 @@ object DedupOps {
     * behind the natural past-ceiling run (VERDICT r15 #4). */
   private def candidatesDispatch(prefix: DataFrame, sets: DataFrame,
       t: Double, nDocs: Long): DataFrame = {
-    val ceiling = sketchDocCeiling
-    val carried = nDocs > ceiling
-    System.err.println(s"[graft] q79 sketch auto: nDocs=$nDocs ceiling=$ceiling -> " +
+    val carried = sketchCarried(nDocs)
+    System.err.println(s"[graft] q79 sketch auto: nDocs=$nDocs ceiling=$sketchMaxDocs -> " +
       (if (carried) "carried (past ceiling, no broadcast)" else "broadcast prefilter"))
     if (carried) candidatesSketchCarried(prefix, t)
     else candidatesSketchFiltered(prefix, sets, t)
@@ -1363,15 +1308,11 @@ object DedupOps {
     * enumeration-grain path instead, which has no ceiling, and the
     * verify's in-SMJ bound ([[verifyHashPass]]) applies at any size.
     * The ceiling is the same inside and outside a `stageAll` window:
-    * no staging chain builds a broadcast sketch relation.
-    *
-    * The `graft.sketch.maxdocs` system property overrides it, so
-    * in-JVM specs reach the past-ceiling path on a small corpus (`0`
-    * takes it at any size). */
+    * no staging chain builds a broadcast sketch relation. */
   private[graft] val sketchMaxDocs = 2000000L
-  private[graft] def sketchDocCeiling: Long =
-    sys.props.get("graft.sketch.maxdocs")
-      .flatMap(_.toLongOption).getOrElse(sketchMaxDocs)
+
+  /** The dispatch decision: the carried path exactly past the ceiling. */
+  private[graft] def sketchCarried(nDocs: Long): Boolean = nDocs > sketchMaxDocs
 
   /** Stage 1 of the verify alone (the hash upper bound);
     * [[verifyPrefixPairs]] runs the exact confirm over its survivors.
@@ -1598,9 +1539,9 @@ object DedupOps {
         graft.functions.SimHashDoc.simhash_doc(col("text")).as("simhash"))
       .where(col("simhash") >= 0)
 
-  /** Simhash table, staged (or recomputed when staging is off). */
+  /** Simhash table, staged. */
   private def simhashTable(spark: SparkSession, sfDir: String): DataFrame =
-    staged(spark, sfDir, "simhash")(simhashOf(Tables.documents(spark, sfDir)))
+    Staging.readThrough(spark, sfDir, "simhash")(simhashOf(Tables.documents(spark, sfDir)))
 
   def simhash(spark: SparkSession, sfDir: String): DataFrame =
     simhashTable(spark, sfDir).orderBy("doc_id")
@@ -1629,17 +1570,8 @@ object DedupOps {
   /** SimHash near-dup pairs: 4 bands of 15 bits block the join;
     * pairs in the same band bucket are checked by Hamming distance.
     * Same LSH-style scale bound: no O(n²) comparison. */
-  def simhashPairs(spark: SparkSession, sfDir: String): DataFrame = {
-    val sh = stagingRoot match {
-      // unstaged: the same native one-pass SimHashDoc the staged table
-      // uses (VERDICT r13 #3 — the aggregate form is a spec-parity
-      // reference only); persisted because the band/star split below
-      // consumes the signature frame more than once
-      case None => CacheRegistry.scoped(simhashOf(Tables.documents(spark, sfDir)))
-      case _ => simhashTable(spark, sfDir)
-    }
-    simhashPairsFrom(sh, BandGuard.default)
-  }
+  def simhashPairs(spark: SparkSession, sfDir: String): DataFrame =
+    simhashPairsFrom(simhashTable(spark, sfDir), BandGuard.default)
 
   /** SimHash pairs over an arbitrary `(doc_id, text)` frame with an
     * explicit skew guard; no read-through staging. */

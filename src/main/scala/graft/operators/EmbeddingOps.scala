@@ -318,22 +318,18 @@ object EmbeddingOps {
     * model, serve many queries): centroids as a k-row parquet table,
     * the inverted-list assignment as a corpus-sized one. Read-through
     * via [[Staging]] — the first query trains and writes, every later
-    * query pays only centroid load (k×dim values) + probe. Staging
-    * off → the pre-round-3 behavior (train per call). */
+    * query pays only centroid load (k×dim values) + probe. */
   private def stagedCentroids(spark: SparkSession, sfDir: String,
-                              k: Int, iters: Int): Seq[(Int, Array[Double])] =
-    Staging.root match {
-      case None => kmeansCentroids(spark, sfDir, k, iters)
-      case _ =>
-        import spark.implicits._
-        val df = Staging.readThrough(spark, sfDir, s"ivf_cent_k${k}_i$iters") {
-          kmeansCentroids(spark, sfDir, k, iters)
-            .map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cent_id", "cv")
-        }
-        df.collect()
-          .map(r => (r.getAs[Int]("cent_id"), r.getAs[Seq[Double]]("cv").toArray))
-          .toSeq.sortBy(_._1)
+                              k: Int, iters: Int): Seq[(Int, Array[Double])] = {
+    import spark.implicits._
+    val df = Staging.readThrough(spark, sfDir, s"ivf_cent_k${k}_i$iters") {
+      kmeansCentroids(spark, sfDir, k, iters)
+        .map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cent_id", "cv")
     }
+    df.collect()
+      .map(r => (r.getAs[Int]("cent_id"), r.getAs[Seq[Double]]("cv").toArray))
+      .toSeq.sortBy(_._1)
+  }
 
   private def stagedAssignment(spark: SparkSession, sfDir: String,
                                cents: Seq[(Int, Array[Double])],
@@ -342,21 +338,17 @@ object EmbeddingOps {
       ivfAssign(spark, sfDir, cents))
 
   /** Force-materialize the IVF model tables AND the quantized corpus
-    * for `sfDir`; returns the staged paths (Nil when staging is off).
-    * Bench calls this up front so one-time training cost is
-    * attributed separately from query cost, mirroring
-    * DedupOps.stageSignatures. */
+    * for `sfDir`; returns the staged paths. `DedupOps.stageAll` runs
+    * it as its `ivf` chain, so one-time training cost is attributed
+    * separately from query cost. */
   def stageIvf(spark: SparkSession, sfDir: String,
-               k: Int = numCentroids, iters: Int = kmeansIters): Seq[String] =
-    Staging.root match {
-      case None => Nil
-      case Some(root) =>
-        val cents = stagedCentroids(spark, sfDir, k, iters)
-        stagedAssignment(spark, sfDir, cents, k, iters)
-        quantizedVectors(spark, sfDir)
-        Seq(s"ivf_cent_k${k}_i$iters", s"ivf_assign_k${k}_i$iters", "emb_q8")
-          .map(Staging.tableDir(root, sfDir, _))
-    }
+               k: Int = numCentroids, iters: Int = kmeansIters): Seq[String] = {
+    val cents = stagedCentroids(spark, sfDir, k, iters)
+    stagedAssignment(spark, sfDir, cents, k, iters)
+    quantizedVectors(spark, sfDir)
+    Seq(s"ivf_cent_k${k}_i$iters", s"ivf_assign_k${k}_i$iters", "emb_q8")
+      .map(Staging.tableDir(Staging.root, sfDir, _))
+  }
 
   // --------------------------------------- quantized corpus (batch ANN)
 
@@ -390,8 +382,7 @@ object EmbeddingOps {
     * trained float model folded in as codegen literals) — so the
     * float vector column is dropped at the door and never travels
     * again. Zero-norm vectors are excluded at stage time.
-    * Read-through via [[Staging]]; staging off → recomputed per call
-    * (the oracle path). */
+    * Read-through via [[Staging]]. */
   private def quantizedVectorsFresh(spark: SparkSession, sfDir: String,
                                     cents: Seq[(Int, Array[Double])]): DataFrame =
     quantized(vectors(spark, sfDir).withColumn("cent_id", nearestCentroid(cents)), col("v"))

@@ -9,10 +9,12 @@ import graft.Tables
   * after scans it (one materialization, column-pruned reads — the
   * multi-job topology a 100 TB pipeline uses between stages).
   *
-  * Root resolution: a thread-local override
+  * There is one mode: every testdata-keyed dedup/ANN table is read
+  * through a staging root. Root resolution: a thread-local override
   * ([[Staging.withRoot]] — lets concurrent consumers use different
   * roots without racing on globals), else the `graft.stage.dir`
-  * sys-prop (`off`/empty disables), else `$tmpdir/graft-stage`.
+  * sys-prop (a directory; `off` or empty is rejected), else
+  * `$tmpdir/graft-stage`.
   *
   * Staleness: the staging key is
   * `md5(canonical sfDir path + content fingerprint)`, where the
@@ -28,12 +30,11 @@ private[graft] object Staging {
   // (doc_id, mh0..mhN) — a v5 root must never be read as the new form
   private val stageVersion = "v6"
 
-  private val overrideRoot =
-    new scala.util.DynamicVariable[Option[Option[String]]](None)
+  private val overrideRoot = new scala.util.DynamicVariable[Option[String]](None)
 
-  /** Run `body` with an explicit staging root (`Some(dir)`) or staging
-    * disabled (`None`), scoped to the current thread. */
-  def withRoot[T](root: Option[String])(body: => T): T =
+  /** Run `body` with an explicit staging root, scoped to the current
+    * thread. */
+  def withRoot[T](root: String)(body: => T): T =
     overrideRoot.withValue(Some(root))(body)
 
   /** True exactly on the worker threads of a `stageAll` chain (set by
@@ -60,12 +61,15 @@ private[graft] object Staging {
   }
   def inStagingChain: Boolean = inChain.get()
 
-  def root: Option[String] =
+  def root: String =
     overrideRoot.value.getOrElse(
       sys.props.get("graft.stage.dir") match {
-        case Some("off") | Some("") => None
-        case Some(dir)              => Some(dir)
-        case None => Some(System.getProperty("java.io.tmpdir") + "/graft-stage")
+        case Some(dir) =>
+          require(dir.nonEmpty && dir != "off",
+            s"graft.stage.dir='$dir': staging cannot be turned off; " +
+              "set it to a directory or leave it unset")
+          dir
+        case None => System.getProperty("java.io.tmpdir") + "/graft-stage"
       })
 
   private def md5Hex(s: String): String =
@@ -165,25 +169,22 @@ private[graft] object Staging {
   }
 
   def readThrough(spark: SparkSession, sfDir: String, table: String)
-                 (compute: => DataFrame): DataFrame =
-    root match {
-      case None => compute
-      case Some(r) =>
-        val dir = tableDir(r, sfDir, table)
-        val dst = java.nio.file.Paths.get(dir)
-        withDirLock(dir) {
-          if (!java.nio.file.Files.exists(dst.resolve("_SUCCESS"))) {
-            val tmp = java.nio.file.Paths.get(
-              dir + ".tmp-" + ProcessHandle.current().pid() + "-" +
-                java.util.UUID.randomUUID().toString.take(8))
-            withComputeCleanups {
-              compute.write.mode("overwrite").parquet(tmp.toString)
-            }
-            promote(tmp, dst)
-          }
+                 (compute: => DataFrame): DataFrame = {
+    val dir = tableDir(root, sfDir, table)
+    val dst = java.nio.file.Paths.get(dir)
+    withDirLock(dir) {
+      if (!java.nio.file.Files.exists(dst.resolve("_SUCCESS"))) {
+        val tmp = java.nio.file.Paths.get(
+          dir + ".tmp-" + ProcessHandle.current().pid() + "-" +
+            java.util.UUID.randomUUID().toString.take(8))
+        withComputeCleanups {
+          compute.write.mode("overwrite").parquet(tmp.toString)
         }
-        Tables.parquet(spark, dir)
+        promote(tmp, dst)
+      }
     }
+    Tables.parquet(spark, dir)
+  }
 
   /** Read-through staging with a PHYSICAL CO-LOCATION contract: the
     * table is written as parquet BUCKETED (and intra-bucket sorted) on
@@ -205,29 +206,26 @@ private[graft] object Staging {
     * fingerprint), so distinct corpora/roots never collide. */
   def bucketedReadThrough(spark: SparkSession, sfDir: String,
                           table: String, buckets: Int, bucketCol: String)
-                         (compute: => DataFrame): DataFrame =
-    root match {
-      case None => compute
-      case Some(r) =>
-        val dir = tableDir(r, sfDir, table)
-        val name = "graft_" + table + "_" + md5Hex(dir).take(12)
-        withDirLock(dir) {
-          if (!spark.catalog.tableExists(name)) {
-            val dst = java.nio.file.Paths.get(dir)
-            if (java.nio.file.Files.exists(dst.resolve("_SUCCESS"))) {
-              val ddl = Tables.parquet(spark, dir).schema.toDDL
-              spark.sql(s"CREATE TABLE $name ($ddl) USING PARQUET " +
-                s"CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol) " +
-                s"INTO $buckets BUCKETS LOCATION '$dir'"): Unit
-            } else withComputeCleanups {
-              compute.write.mode("overwrite")
-                .bucketBy(buckets, bucketCol).sortBy(bucketCol)
-                .option("path", dir).format("parquet").saveAsTable(name)
-            }
-          }
+                         (compute: => DataFrame): DataFrame = {
+    val dir = tableDir(root, sfDir, table)
+    val name = "graft_" + table + "_" + md5Hex(dir).take(12)
+    withDirLock(dir) {
+      if (!spark.catalog.tableExists(name)) {
+        val dst = java.nio.file.Paths.get(dir)
+        if (java.nio.file.Files.exists(dst.resolve("_SUCCESS"))) {
+          val ddl = Tables.parquet(spark, dir).schema.toDDL
+          spark.sql(s"CREATE TABLE $name ($ddl) USING PARQUET " +
+            s"CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol) " +
+            s"INTO $buckets BUCKETS LOCATION '$dir'"): Unit
+        } else withComputeCleanups {
+          compute.write.mode("overwrite")
+            .bucketBy(buckets, bucketCol).sortBy(bucketCol)
+            .option("path", dir).format("parquet").saveAsTable(name)
         }
-        spark.table(name)
+      }
     }
+    spark.table(name)
+  }
 
   /** Atomically promote a fully-written temp table to its final name.
     * If a concurrent writer (same or another process) promoted a

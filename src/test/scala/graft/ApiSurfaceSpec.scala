@@ -120,8 +120,7 @@ class ApiSurfaceSpec extends SparkSpec {
   test("every graft.* system property read under src/main is an allowlisted knob") {
     // same rule as the env dials: one line per kept property and why
     val allowed = Map(
-      "graft.stage.dir" -> "staging root (or off): where stageAll writes and staged queries read",
-      "graft.sketch.maxdocs" -> "q79 broadcast-sketch ceiling override so specs reach the carried path")
+      "graft.stage.dir" -> "staging root: where stageAll writes and staged queries read")
     // every read spelling: sys.props(k), sys.props.get/getOrElse/
     // contains(k), System.getProperty(k[, default])
     val read =

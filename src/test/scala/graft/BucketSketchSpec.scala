@@ -68,7 +68,9 @@ class BucketSketchSpec extends SparkSpec {
     // sf0.01: the decade where q79 has verified pairs (25 at t=0.8)
     val dir = "/root/testdata/sf0.01"
     val t = DedupOps.prefixThreshold
-    DedupOps.withStagingRoot(None) {
+    val stageDir =
+      java.nio.file.Files.createTempDirectory("graft_sketch_parity").toString
+    try DedupOps.withStagingRoot(Some(stageDir)) {
       val prefix = DedupOps.prefixTable(spark, dir, t)
       val sets = DedupOps.docSetsTable(spark, dir)
       def candSet(c: org.apache.spark.sql.DataFrame) =
@@ -88,50 +90,46 @@ class BucketSketchSpec extends SparkSpec {
       assert(plain.nonEmpty, "expected verified pairs at sf0.01")
       assert(pairs(filtered) == plain,
         "prefilter must not change the verified pair set")
-    }
-    spark.catalog.clearCache()
+    } finally spark.catalog.clearCache()
+  }
+
+  test("q79 dispatch takes the carried path exactly past sketchMaxDocs") {
+    assert(!DedupOps.sketchCarried(0L))
+    assert(!DedupOps.sketchCarried(DedupOps.sketchMaxDocs))
+    assert(DedupOps.sketchCarried(DedupOps.sketchMaxDocs + 1))
   }
 
   test("bucketed sketch path (past the broadcast ceiling) is output-invariant") {
     // VERDICT r14 #2: past sketchMaxDocs the broadcast prefilter is
     // skipped and the bound must still hold pairs back inside the
     // verify's bucket-aligned SMJ via the staged doc_sets `sk`
-    // column. Forcing the ceiling to 0 (sys-prop override) exercises
-    // exactly the past-ceiling plan; the pair set must be identical
-    // to the default (broadcast-prefiltered) plan, staged and
-    // unstaged.
+    // column. The past-ceiling plan is the carried candidate stage
+    // into that verify; its pair set must be identical to the default
+    // (broadcast-prefiltered) plan.
     val dir = "/root/testdata/sf0.01"
-    def q79pairs() =
-      graft.operators.DedupOps.prefixJaccardPairs(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    def q22pairs() =
-      graft.operators.DedupOps.jaccardVerify(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val t = DedupOps.prefixThreshold
+    def pairSet(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val stageDir =
       java.nio.file.Files.createTempDirectory("graft_sketch_bucketed").toString
-    try DedupOps.withStagingRoot(Some(stageDir)) {
+    val defaultQ79 = try DedupOps.withStagingRoot(Some(stageDir)) {
       // staged doc_sets must physically carry the sketch column
       val sets = DedupOps.docSetsTable(spark, dir)
       assert(sets.columns.contains("sk"),
         "staged doc_sets must carry the sketch column")
-      val defaultQ79 = q79pairs()
-      val defaultQ22 = q22pairs()
-      assert(defaultQ79.nonEmpty && defaultQ22.nonEmpty)
-      sys.props("graft.sketch.maxdocs") = "0"
-      try {
-        assert(q79pairs() == defaultQ79,
-          "bucketed-path q79 pair set must match the broadcast path")
-        assert(q22pairs() == defaultQ22,
-          "bucketed-path LSH-verified pair set must match")
-      } finally sys.props.remove("graft.sketch.maxdocs"): Unit
+      val defaultQ79 = pairSet(DedupOps.prefixJaccardPairs(spark, dir))
+      assert(defaultQ79.nonEmpty && pairSet(DedupOps.jaccardVerify(spark, dir)).nonEmpty)
+      val prefix = DedupOps.prefixTable(spark, dir, t)
+      assert(pairSet(DedupOps.verifyPrefixPairs(
+          DedupOps.candidatesSketchCarried(prefix, t), sets, t)) == defaultQ79,
+        "bucketed-path q79 pair set must match the broadcast path")
+      defaultQ79
     } finally spark.catalog.clearCache()
-    // unstaged: no staged sk column — verifyHashPass computes the
-    // sketch in the scan stage; same invariance
-    DedupOps.withStagingRoot(None) {
-      sys.props("graft.sketch.maxdocs") = "0"
-      try assert(q79pairs().nonEmpty)
-      finally sys.props.remove("graft.sketch.maxdocs"): Unit
-    }
+    // no sk column on a library set frame: verifyHashPass computes the
+    // sketch in the scan stage (the other setSketch branch); same pairs
+    val viaLib = pairSet(DedupOps.prefixJaccardPairsOf(graft.Tables.documents(spark, dir), t))
+    assert(viaLib == defaultQ79,
+      "library (sketch computed from hs) pair set must match the staged path")
     spark.catalog.clearCache()
   }
 
@@ -167,22 +165,18 @@ class BucketSketchSpec extends SparkSpec {
         DedupOps.candidatesFrom(prefix, t), sets, t))
       assert(plain.nonEmpty)
       assert(q79() == plain, "default (broadcast) path pair set must match")
-      // ceiling 0: the dispatch takes the carried branch
-      sys.props("graft.sketch.maxdocs") = "0"
-      try assert(q79() == plain, "past-ceiling (carried) path pair set must match")
-      finally sys.props.remove("graft.sketch.maxdocs"): Unit
+      // the past-ceiling dispatch: carried candidates into the verify
+      assert(pairSet(DedupOps.verifyPrefixPairs(
+          DedupOps.candidatesSketchCarried(prefix, t), sets, t)) == plain,
+        "past-ceiling (carried) path pair set must match")
       plain
     } finally spark.catalog.clearCache()
-    // unstaged: the persisted prefix frame carries sk too — with the
-    // ceiling forced to 0 the dispatch takes the carried path (no
-    // broadcast anywhere in the plan)
-    sys.props("graft.sketch.maxdocs") = "0"
-    try DedupOps.withStagingRoot(None) {
-      val docs = graft.Tables.documents(spark, dir)
-      val viaLib = pairSet(DedupOps.prefixJaccardPairsOf(docs, t))
-      assert(viaLib.nonEmpty && viaLib == plain,
-        "unstaged carried path must match the unfiltered pair set")
-    } finally sys.props.remove("graft.sketch.maxdocs"): Unit
+    // the library entry over the documents frame (its own prefix and
+    // set frames, no staged table) verifies to the same pairs
+    val docs = graft.Tables.documents(spark, dir)
+    val viaLib = pairSet(DedupOps.prefixJaccardPairsOf(docs, t))
+    assert(viaLib.nonEmpty && viaLib == plain,
+      "library path must match the unfiltered pair set")
     spark.catalog.clearCache()
   }
 

@@ -362,15 +362,24 @@ class CorpusOpsSpec extends SparkSpec {
     // the corpus-wide heavy phase must hash through the native
     // one-pass expression (4.7x over concat_ws assembly at 100x,
     // PERF.md §17) — span STRINGS are only ever assembled for docs
-    // that already hold a candidate hash. With staging ON that phase
-    // lives inside the staged span_cand/span_docs build, so pin the
-    // UNSTAGED shape (the one a non-staging library consumer gets).
-    operators.DedupOps.withStagingRoot(None) {
-      val plan = CorpusOps.repeatedSpans(spark, sf)
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("span_hashes"),
-        s"phase 1 must use the native window-hash expression:\n$plan")
+    // that already hold a candidate hash. That phase lives inside the
+    // staged span_cand build, so pin it on the plan of that write (cold,
+    // into a fresh root).
+    val root = java.nio.file.Files.createTempDirectory("graft_span_cand").toString
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        writes.add(qe.executedPlan.toString): Unit
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
     }
+    spark.listenerManager.register(listener)
+    try {
+      DedupOps.withStagingRoot(Some(root)) { CorpusOps.spanCandTable(spark, sf) }
+      assert(awaitTrue(writes.toArray.exists(_.toString.contains("span_hashes"))),
+        s"phase 1 must use the native window-hash expression:\n${writes.toArray.mkString("\n")}")
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("q81: dedup span ranges match a driver-side brute force") {
@@ -429,7 +438,8 @@ class CorpusOpsSpec extends SparkSpec {
     (1L to nDocs).map(i => (i, (1 to 9).map(t => s"tok$t").mkString(" ")))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(dir.resolve("documents.parquet").toString)
-    DedupOps.withStagingRoot(None) {
+    val root = java.nio.file.Files.createTempDirectory("graft_q81_skew_stage").toString
+    DedupOps.withStagingRoot(Some(root)) {
       val out = CorpusOps.dedupSpanRanges(spark, dir.toString)
       val rows = out.collect()
       assert(rows.length == nDocs, "every document must be affected and reported")

@@ -652,7 +652,7 @@ class CurationOpsSpec extends SparkSpec {
 
   // ------------------------------------- staged verified near-dup pairs
 
-  test("verified pair table stages once; staged == unstaged bit-for-bit") {
+  test("verified pair table stages once; staged == the library composition bit-for-bit") {
     val root = Files.createTempDirectory("graft_verified_stage").toString
     val staged = DedupOps.withStagingRoot(Some(root)) {
       DedupOps.jaccardVerify(spark, sf).collect().toSeq
@@ -668,11 +668,14 @@ class CurationOpsSpec extends SparkSpec {
     }
     assert(Files.getLastModifiedTime(Paths.get(dir, "_SUCCESS")) == before,
       "second read rebuilt the staged verified table")
-    val unstaged = DedupOps.withStagingRoot(None) {
-      DedupOps.jaccardVerify(spark, sf).collect().toSeq
-    }
-    spark.catalog.clearCache() // drop the unstaged persist()
-    assert(staged == again && staged == unstaged)
+    // the in-JVM reference: the same two stages composed from the
+    // library entries over the documents frame, with no staged table
+    val docs = graft.Tables.documents(spark, sf)
+    val inline = DedupOps.verifyPrefixPairs(
+        DedupOps.lshCandidatesOf(docs).select("doc_a", "doc_b"),
+        DedupOps.setsFrom(DedupOps.shinglesOf(docs)), DedupOps.jaccardThreshold)
+      .orderBy("doc_a", "doc_b").collect().toSeq
+    assert(staged.nonEmpty && staged == again && staged == inline)
   }
 
   test("staged verified read plan is a pure scan — no join, no shingle recompute") {

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.Row
 
-import graft.operators.{DedupOps, EmbeddingOps, MinHashParams}
+import graft.operators.{DedupOps, EmbeddingOps, MinHashParams, Staging}
 
 /** Round-2 production shaping of the dedup/ANN stack: parameterized
   * minhash, staged signature tables, k-means IVF with zero-shuffle
@@ -122,8 +122,13 @@ class DedupAnnSpec extends SparkSpec {
   }
 
   test("staging materializes shared dedup tables once and reuses them") {
-    val dirs = DedupOps.stageSignatures(spark, sf)
-    assert(dirs.size == 4, "staging should be on by default in tests")
+    // each read-through call writes its table under the default root
+    // when absent: candidates build their signature table first
+    DedupOps.shingleTable(spark, sf)
+    DedupOps.simhash(spark, sf)
+    DedupOps.lshCandidates(spark, sf)
+    val dirs = Seq("shingles", "sig_h8", "simhash", "cand_h8_b4")
+      .map(Staging.tableDir(Staging.root, sf, _))
     dirs.foreach(d => assert(Files.exists(Paths.get(d, "_SUCCESS")), s"missing $d"))
     val before = dirs.map(d => Files.getLastModifiedTime(Paths.get(d, "_SUCCESS")))
     // a query routed through staging must not rewrite the tables
@@ -132,16 +137,15 @@ class DedupAnnSpec extends SparkSpec {
     assert(before == after, "staged tables were rewritten")
   }
 
-  test("staged and unstaged paths produce identical candidates") {
+  test("staged candidates equal the library lshCandidatesOf over the same documents") {
     val stagedRows = DedupOps.lshCandidates(spark, sf).collect().toSeq
-    // thread-local override, not the global sys-prop: concurrent
-    // consumers with different staging roots must not race
-    val unstaged = DedupOps.withStagingRoot(None) {
-      DedupOps.lshCandidates(spark, sf).collect().toSeq
-    }
-    assert(stagedRows == unstaged)
-    spark.catalog.clearCache() // drop the unstaged persist()
-    // and an explicit alternate root is honored
+    // the in-JVM reference: the same operator over the documents frame,
+    // computed inline with no staging table anywhere in its plan
+    val inline = DedupOps.lshCandidatesOf(Tables.documents(spark, sf)).collect().toSeq
+    assert(stagedRows.nonEmpty && stagedRows == inline)
+    // and an explicit alternate root is honored (a thread-local
+    // override, not the global sys-prop: concurrent consumers with
+    // different staging roots must not race)
     val altRoot = java.nio.file.Files.createTempDirectory("graft_alt_stage").toString
     val alt = DedupOps.withStagingRoot(Some(altRoot)) {
       DedupOps.lshCandidates(spark, sf).collect().toSeq
@@ -204,12 +208,17 @@ class DedupAnnSpec extends SparkSpec {
     assert(base.nonEmpty && wide.nonEmpty)
     val after = dirs.map(d => Files.getLastModifiedTime(Paths.get(d, "_SUCCESS")))
     assert(before == after, "staged IVF model was rewritten by a query")
-    // and the staged model answers identically to a fresh in-memory train
-    val unstaged = graft.operators.DedupOps.withStagingRoot(None) {
-      EmbeddingOps.ivfAnn(spark, sf).collect()
+    // and the staged centroids are a fresh in-memory train (to float
+    // summation order: the Lloyd means are aggregates)
+    val staged = spark.read.parquet(dirs.head).collect()
+      .map(r => r.getAs[Int]("cent_id") -> r.getSeq[Double](r.fieldIndex("cv"))).toMap
+    val fresh = EmbeddingOps.kmeansCentroids(spark, sf).toMap
+    assert(staged.nonEmpty && staged.keySet == fresh.keySet)
+    staged.foreach { case (cid, cv) =>
+      assert(cv.length == fresh(cid).length &&
+        cv.zip(fresh(cid)).forall { case (a, b) => math.abs(a - b) <= 1e-9 },
+        s"centroid $cid differs from a fresh train")
     }
-    assert(base.toSeq == unstaged.toSeq)
-    spark.catalog.clearCache()
   }
 
   test("quantized batch ANN (q83/q84) reads the staged int8 table and keeps float-path recall (VERDICT r19 #5)") {
@@ -305,19 +314,19 @@ class DedupAnnSpec extends SparkSpec {
       java.nio.file.Files.copy(Paths.get(s"$sf/$t.parquet"),
         work.resolve(s"$t.parquet"), StandardCopyOption.REPLACE_EXISTING)
     val stageRoot = Files.createTempDirectory("graft_fp_stage").toString
-    val (key1, sig1) = DedupOps.withStagingRoot(Some(stageRoot)) {
-      val dirs = DedupOps.stageSignatures(spark, work.toString)
-      (dirs.head, DedupOps.minhashSignatures(spark, work.toString).collect().length)
+    def stageSig(): (String, Int) = DedupOps.withStagingRoot(Some(stageRoot)) {
+      val n = DedupOps.minhashSignatures(spark, work.toString).collect().length
+      (Staging.tableDir(stageRoot, work.toString, "sig_h8"), n)
     }
+    val (key1, sig1) = stageSig()
     assert(sig1 > 0 && Files.exists(Paths.get(key1, "_SUCCESS")))
     // "regenerate" the source in place: same path, new bytes/mtime
     Files.setLastModifiedTime(work.resolve("documents.parquet"),
       java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + 60000))
-    val key2 = DedupOps.withStagingRoot(Some(stageRoot)) {
-      DedupOps.stageSignatures(spark, work.toString).head
-    }
+    val (key2, sig2) = stageSig()
     assert(key2 != key1,
       s"staging key must change when source content changes: $key1 vs $key2")
+    assert(sig2 == sig1 && Files.exists(Paths.get(key2, "_SUCCESS")))
   }
 
   // ------------------------------------------------------- round-3 skew guard
@@ -486,7 +495,7 @@ class DedupAnnSpec extends SparkSpec {
   }
 
   test("staged candidate read plan is a pure scan — no join, no window") {
-    DedupOps.stageSignatures(spark, sf)
+    // the read-through call writes the table when absent, then scans it
     val plan = DedupOps.lshCandidates(spark, sf).queryExecution.executedPlan.toString
     assert(!plan.contains("Join"), s"staged candidates must not recompute the band join:\n$plan")
     assert(!plan.contains("Window"), s"staged candidates must not recompute the guard:\n$plan")

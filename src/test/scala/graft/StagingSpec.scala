@@ -57,7 +57,7 @@ class StagingSpec extends SparkSpec {
   test("readThrough never leaves temp dirs and serves a complete table") {
     import org.apache.spark.sql.functions._
     val root = Files.createTempDirectory("graft_stage_spec").toString
-    val out = Staging.withRoot(Some(root)) {
+    val out = Staging.withRoot(root) {
       Staging.readThrough(spark, sf, "spec_probe") {
         spark.range(100).select(col("id"), (col("id") * 2).as("d"))
       }.count()
@@ -75,12 +75,13 @@ class StagingSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft_stage_bucketed").toString
     DedupOps.withStagingRoot(Some(root)) {
       val sets = DedupOps.docSetsTable(spark, sf)
-      // bucketing changes layout, never content
+      // bucketing changes layout, never content: the catalog read equals
+      // a plain parquet read of the same directory
       val staged = sets.orderBy("doc_id").collect()
-      val unstaged = DedupOps.withStagingRoot(None) {
-        DedupOps.docSetsTable(spark, sf).orderBy("doc_id").collect()
-      }
-      assert(staged.sameElements(unstaged), "bucketed != unstaged content")
+      val plain = Tables.parquet(spark, Staging.tableDir(root, sf, "doc_sets"))
+        .orderBy("doc_id").collect()
+      assert(staged.nonEmpty && staged.sameElements(plain),
+        "bucketed read != plain parquet read of its files")
       // a verify-shaped equi-join on doc_id must shuffle ONLY the
       // candidate/probe side; the set arrays read bucket-aligned
       val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -145,10 +146,10 @@ class StagingSpec extends SparkSpec {
     val ivfDirs = Paths.get(Staging.tableDir(rootA, sf, "x")).getParent
       .toFile.listFiles().map(_.getName).filter(_.startsWith("ivf_"))
     assert(ivfDirs.length == 2, s"expected ivf_cent + ivf_assign, saw ${ivfDirs.toSeq}")
-    // serial staging into another root yields the identical candidate table
+    // serial read-through staging into another root (signatures, then
+    // candidates, on this thread) yields the identical candidate table
     val rootB = Files.createTempDirectory("graft_stage_all").toString
     val candB = DedupOps.withStagingRoot(Some(rootB)) {
-      DedupOps.stageSignatures(spark, sf)
       DedupOps.lshCandidates(spark, sf).collect().toSeq
     }
     assert(candA == candB, "concurrent and serial staging must agree")
@@ -178,6 +179,23 @@ class StagingSpec extends SparkSpec {
           s"$q must equal the aggregate reference")
       }
     }
+  }
+
+  test("staging cannot be turned off: graft.stage.dir=off or empty and withStagingRoot(None) fail naming the setting") {
+    import graft.operators.DedupOps
+    val key = "graft.stage.dir"
+    for (v <- Seq("off", "")) {
+      val saved = sys.props.get(key)
+      sys.props(key) = v
+      val e = try intercept[IllegalArgumentException](DedupOps.lshCandidates(spark, sf))
+        finally saved.fold(sys.props.remove(key))(sys.props.put(key, _)): Unit
+      assert(e.getMessage.contains(key), s"message must name $key: ${e.getMessage}")
+    }
+    val e = intercept[IllegalArgumentException] {
+      DedupOps.withStagingRoot(None) { DedupOps.lshCandidates(spark, sf) }
+    }
+    assert(e.getMessage.contains("withStagingRoot(None)"),
+      s"message must name the setting: ${e.getMessage}")
   }
 
   test("stageAll restores broadcast thresholds when staging FAILS (ADVICE r13)") {

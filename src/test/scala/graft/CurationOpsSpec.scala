@@ -652,7 +652,7 @@ class CurationOpsSpec extends SparkSpec {
 
   // ------------------------------------- staged verified near-dup pairs
 
-  test("verified pair table stages once; staged == the library composition bit-for-bit") {
+  test("verified pair table stages once; staged == unstaged bit-for-bit") {
     val root = Files.createTempDirectory("graft_verified_stage").toString
     val staged = DedupOps.withStagingRoot(Some(root)) {
       DedupOps.jaccardVerify(spark, sf).collect().toSeq
@@ -668,7 +668,7 @@ class CurationOpsSpec extends SparkSpec {
     }
     assert(Files.getLastModifiedTime(Paths.get(dir, "_SUCCESS")) == before,
       "second read rebuilt the staged verified table")
-    // the in-JVM reference: the same two stages composed from the
+    // the unstaged reference: the same two stages composed from the
     // library entries over the documents frame, with no staged table
     val docs = graft.Tables.documents(spark, sf)
     val inline = DedupOps.verifyPrefixPairs(

@@ -103,10 +103,12 @@ private[graft] object CacheRegistry {
   }
 
   /** [[scoped]] for a frame a caller reads EAGERLY before its query
-    * runs: persist it and fill it with one `count()`, which cannot
-    * release it because the frame is registered only once the count is
-    * done; the first query over the returned handle does. Returns the
-    * frame and its row count. */
+    * runs: persist it and fill it with one `count()`. Inside a staged
+    * write (the banding suspect census, [[SkewGuard]]) the write's
+    * cleanup releases it. Elsewhere the count cannot release it,
+    * because the frame is registered only once the count is done; the
+    * first query over the returned handle does. Returns the frame and
+    * its row count. */
   def filled(df: DataFrame): (DataFrame, Long) = {
     val e = track(df)
     df.persist(StorageLevel.MEMORY_AND_DISK)

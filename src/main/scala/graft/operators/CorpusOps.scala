@@ -813,33 +813,25 @@ object CorpusOps {
       // gating dependency is the verified table behind dedupKeepList —
       // the LONGEST chain's dir lock. The q51 quality and q48 decontam
       // subtrees depend on nothing the dedup chains build (documents +
-      // shingles only), so under a staging root they are materialized
-      // EAGERLY first (~doc_count rows of flags each) and their
-      // execution overlaps the verify build instead of serializing
-      // behind it; the final write is then three cheap joins. persist,
-      // not localCheckpoint: the frames are small but their lineage is
-      // the two subtrees — keep them recomputable on block loss (a
-      // truncated checkpoint lost while this chain waits ~the longest
-      // chain's wall on the verified lock would kill the whole
-      // stageAll at its very end). ONE union-count fills both caches
-      // in a single job, so the two subtrees run as concurrent stages
-      // rather than back-to-back actions. Gated on stageAll CHAIN
-      // membership (thread-local): a query-time cold call — staging
-      // root set but stage_flags not yet built — has no concurrent
-      // verify build to overlap, so it keeps the original single-job
-      // lazy shape (no extra blocking job, no pinned caches).
-      val staging = Staging.inStagingChain
-      // the chain-thread persists are consumed only by the stage_flags
-      // write, so they die with it
-      def eager(df: DataFrame): DataFrame =
-        if (staging) CacheRegistry.scoped(df) else df
-      val q = eager(qualityFilter(spark, sfDir).where(col("pass") === 1)
+      // shingles only), so they are materialized EAGERLY first
+      // (~doc_count rows of flags each) and their execution overlaps
+      // the verify build instead of serializing behind it; the final
+      // write is then three cheap joins. persist, not localCheckpoint:
+      // the frames are small but their lineage is the two subtrees —
+      // keep them recomputable on block loss (a truncated checkpoint
+      // lost while this chain waits ~the longest chain's wall on the
+      // verified lock would kill the whole stageAll at its very end).
+      // ONE union-count fills both caches in a single job, so the two
+      // subtrees run as concurrent stages rather than back-to-back
+      // actions. This compute only runs inside its own staged write,
+      // so a cold query-time build takes the same plan, and the
+      // persists are consumed by the stage_flags write and die with it.
+      val q = CacheRegistry.scoped(qualityFilter(spark, sfDir).where(col("pass") === 1)
         .select("doc_id").withColumn("f_q", lit(true)))
-      val dc = eager(decontaminate(spark, sfDir).where(col("contaminated") === 0)
+      val dc = CacheRegistry.scoped(decontaminate(spark, sfDir).where(col("contaminated") === 0)
         .select("doc_id").withColumn("f_dc", lit(true)))
-      if (staging)
-        q.select(lit(1L).as("one")).unionAll(dc.select(lit(1L).as("one")))
-          .count(): Unit
+      q.select(lit(1L).as("one")).unionAll(dc.select(lit(1L).as("one")))
+        .count(): Unit
       val keeper = DedupOps.keeperTable(spark, sfDir)
       keeper
         .join(DedupOps.dedupKeepList(spark, sfDir).select("doc_id")

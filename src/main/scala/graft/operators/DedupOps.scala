@@ -43,6 +43,8 @@ final case class MinHashParams(numHashes: Int = 8, numBands: Int = 4) {
   * take an arbitrary frame and compute inline.
   */
 object DedupOps {
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   // minhash parameters: defaults 8 hashes, 4 bands x 2 rows
   private[graft] val P = 4294967311L // prime > 2^32
   private[graft] val A = Seq(3L, 5L, 7L, 11L, 13L, 17L, 19L, 23L)
@@ -106,7 +108,7 @@ object DedupOps {
     * #4: the r16→r19 53→66 s elevation was attributed on the evidence
     * of ONE chain's probe because the others had no recorded walls).
     * A chain's wall includes dir-lock waits on its dependencies (the
-    * DAG bills waiting to the waiter, as the stderr lines always
+    * DAG bills waiting to the waiter, as the [stage] log lines always
     * have). */
   def stageAll(spark: SparkSession, sfDir: String,
                presets: Seq[MinHashParams] = Seq(defaultParams, scaleParams),
@@ -202,9 +204,9 @@ object DedupOps {
       // cap exists for).
       val walls = ConcurrentJobs.runAll(spark, "graft-stage", work.map {
         case (tag, body) => tag -> (() =>
-          Staging.withRoot(root) { Staging.withinStagingChain {
+          Staging.withRoot(root) {
             spark.sparkContext.setJobGroup(s"graft-stage-$tag", tag, false)
-            // per-chain wall seconds, to stderr (a failed chain's
+            // per-chain wall seconds, to the log (a failed chain's
             // too) AND the returned map (Bench's `stage_chains`
             // artifact field): chains run as concurrent jobs, so the
             // bench's stage_dedup total says nothing about WHICH
@@ -213,9 +215,9 @@ object DedupOps {
             def wall = (System.nanoTime() - t0) / 1e9
             try { body(); wall } finally {
               spark.sparkContext.clearJobGroup()
-              System.err.println(f"[stage] $tag $wall%.2f s")
+              log.info(f"[stage] $tag $wall%.2f s")
             }
-          } })
+          })
       })
       work.map(_._1).zip(walls).toMap
     } finally {
@@ -460,26 +462,27 @@ object DedupOps {
     // The band stream carries (doc_id, bk) only: `__sig` never rides
     // through the cap window or the persist; the est stage re-attaches it.
     val (capped, star) = SkewGuard.guardedBands(
-      arr, "doc_id", "__sig", expr(bandHashExpr), Nil, g, "lshCandidates")
+      arr, "doc_id", "__sig", expr(bandHashExpr), Nil, g)
     // The capped band stream feeds BOTH sides of the self-join, and
     // stage reuse does not fire across a self-join's sides (the PERF
     // §30 observation) — so without materialization the collapse, the
-    // explode and the bucket-cap window execute twice. Materialize it
-    // once while a guard cap is finite (a partial guard still runs the
-    // cap window per side); the plain explode is cheaper to recompute
-    // than to cache. 16 B/row × numBands rows/doc ≈ 130 MB at h128/100×;
-    // persist — NOT localCheckpoint — so lineage survives block loss.
+    // explode and the bucket-cap window execute twice. The library
+    // call materializes it once while a guard cap is finite (a partial
+    // guard still runs the cap window per side); the plain explode is
+    // cheaper to recompute than to cache. 16 B/row × numBands rows/doc
+    // ≈ 130 MB at h128/100×; persist — NOT localCheckpoint — so
+    // lineage survives block loss.
     //
-    // NOT on a stageAll chain thread (PERF §35): the measured win is
-    // the un-contended library call (h8 banding 25 → 15 s, h128
-    // 9.5 → 4 s at 100×); under the staging DAG's all-at-once
-    // concurrency the same persist measured level-to-worse (the fill
-    // job serializes a chain segment other chains' work no longer
-    // hides). Gated on CHAIN membership (thread-local), so a concurrent
-    // library caller's plan keeps the persist.
+    // NOT inside a staged write (PERF §35): the measured win is the
+    // un-contended library call (h8 banding 25 → 15 s, h128 9.5 → 4 s
+    // at 100×); under the staging DAG's all-at-once concurrency the
+    // same persist measured level-to-worse (the fill job serializes a
+    // chain segment other chains' work no longer hides). A staged
+    // `cand_h*` table is therefore built without it, by a stageAll
+    // chain and by a cold read-through alike.
     val finiteCap = g.maxBucket != Int.MaxValue || g.maxGroupAllPairs != Int.MaxValue
     val bands =
-      if (Staging.inStagingChain || !finiteCap) capped
+      if (Staging.inStagedWrite || !finiteCap) capped
       else CacheRegistry.scoped(capped)
     val cand = bands.as("x").join(bands.as("y"),
         col("x.bk") === col("y.bk") && col("x.doc_id") < col("y.doc_id"))
@@ -1290,12 +1293,12 @@ object DedupOps {
     * path past it (the quiet-box A/B at 100× measured broadcast
     * 7.9–9.2 s vs carried 9.6–10.1 s under the ceiling, and carried
     * 9.6–10.1 s vs pair-grain 29–36 s past it — PERF §44). The
-    * dispatch prints its choice once per call — the observability
+    * dispatch logs its choice once per call — the observability
     * behind the natural past-ceiling run (VERDICT r15 #4). */
   private def candidatesDispatch(prefix: DataFrame, sets: DataFrame,
       t: Double, nDocs: Long): DataFrame = {
     val carried = sketchCarried(nDocs)
-    System.err.println(s"[graft] q79 sketch auto: nDocs=$nDocs ceiling=$sketchMaxDocs -> " +
+    log.info(s"q79 sketch auto: nDocs=$nDocs ceiling=$sketchMaxDocs -> " +
       (if (carried) "carried (past ceiling, no broadcast)" else "broadcast prefilter"))
     if (carried) candidatesSketchCarried(prefix, t)
     else candidatesSketchFiltered(prefix, sets, t)
@@ -1586,7 +1589,7 @@ object DedupOps {
     // the band stream is not persisted: a wash at 100×, slower on
     // perfbench dedup (PERF §68, §70)
     val (bands, star) = SkewGuard.guardedBands(
-      sh, "doc_id", "simhash", bandKeys, Seq("simhash"), g, "simhashPairs")
+      sh, "doc_id", "simhash", bandKeys, Seq("simhash"), g)
     bands.as("x").join(bands.as("y"),
         col("x.bk") === col("y.bk") && col("x.doc_id") < col("y.doc_id"))
       .select(

@@ -730,7 +730,7 @@ object EmbeddingOps {
     // identical vectors collapse to a cosine-1.0 star; the bucket is the
     // inline per-row [[signBucket]] (same arithmetic as lshBucketsFrom)
     val (capped, star) = SkewGuard.guardedBands(
-      vs, "vec_id", "v", array(signBucket(col("v"))), Seq("v", "nrm"), g, "nearDupPairs")
+      vs, "vec_id", "v", array(signBucket(col("v"))), Seq("v", "nrm"), g)
     // the capped stream (every vector + its bucket) feeds both join sides
     val vb = CacheRegistry.scoped(capped)
     val a = vb.select(col("vec_id").as("vec_a"), col("v").as("va"),

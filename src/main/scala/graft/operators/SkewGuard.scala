@@ -25,9 +25,9 @@ import org.apache.spark.sql.functions._
   *      untouched (bit-identical output to the unguarded operator).
   *   2. `maxBucket` — per-bucket membership cap after banding: buckets
   *      keep their `maxBucket` lowest-id members; the rest are dropped
-  *      from that bucket (and logged). A capped doc usually still
-  *      pairs through its other b−1 bands, so recall degrades
-  *      gracefully instead of the job dying.
+  *      from that bucket ([[SkewGuard.overflowStats]] reports them).
+  *      A capped doc usually still pairs through its other b−1 bands,
+  *      so recall degrades gracefully instead of the job dying.
   *
   * With the defaults, any corpus whose groups and buckets stay under
   * the thresholds produces byte-identical results to the unguarded
@@ -35,8 +35,7 @@ import org.apache.spark.sql.functions._
   */
 final case class BandGuard(
     maxBucket: Int = 256,
-    maxGroupAllPairs: Int = 64,
-    logOverflow: Boolean = false) {
+    maxGroupAllPairs: Int = 64) {
   require(maxBucket > 1, s"maxBucket must be > 1, got $maxBucket")
   require(maxGroupAllPairs >= 1, s"maxGroupAllPairs must be >= 1, got $maxGroupAllPairs")
 }
@@ -50,8 +49,6 @@ object BandGuard {
 /** The one implementation of the [[BandGuard]] contract, shared by the
   * three band self-joins named there. */
 object SkewGuard {
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
   /** Both guard stages for one banded self-join over `rows` (one row
     * per `idCol`, `sigCol` the signature whose equality means "exact
     * duplicate"). Returns `(bands, star)`:
@@ -71,13 +68,12 @@ object SkewGuard {
     * its own pair score, threshold and star literal, and decides
     * whether the returned band frame is worth a persist. */
   def guardedBands(rows: DataFrame, idCol: String, sigCol: String, bandKeys: Column,
-                   carry: Seq[String], g: BandGuard, what: String): (DataFrame, DataFrame) = {
+                   carry: Seq[String], g: BandGuard): (DataFrame, DataFrame) = {
     val (banded, star) =
       if (g.maxGroupAllPairs == Int.MaxValue)
         (rows, rows.limit(0).select(col(idCol).as("rep"), col(idCol).as("member")))
       else collapse(rows, idCol, sigCol, g.maxGroupAllPairs)
     val bands = banded.select((col(idCol) +: carry.map(col)) :+ explode(bandKeys).as("bk"): _*)
-    maybeLogOverflow(bands, "bk", g.maxBucket, g.logOverflow, what)
     (capBuckets(bands, "bk", idCol, g.maxBucket), star)
   }
 
@@ -93,17 +89,19 @@ object SkewGuard {
     // stage reuse does not fire across those references: without
     // materialization the corpus-wide census runs once PER reference.
     // The output is tiny (only members of oversized groups, usually
-    // none), so this is safe inside a stageAll window where a full
+    // none), so this is safe inside a staging window where a full
     // band-stream persist is not (PERF §35). persist, not
     // localCheckpoint: keep the census lineage on block loss. Inside a
-    // staged write the census dies with the write; outside one, with
-    // the first query that consumes the returned plan. Filled eagerly
-    // ONLY on a stageAll chain thread, which is about to materialize
-    // everything anyway; library callers keep the lazy contract. The
-    // fill registers after its count, and the registry's exact
-    // stale-event guard keeps that count from releasing the census.
+    // staged write the census is filled eagerly — the write is about
+    // to materialize everything anyway — and dies with the write; a
+    // stageAll chain and a cold read-through build take that one plan.
+    // Everywhere else (q24 and q28 at query time, the `*Of` library
+    // entries) it stays lazy, dying with the first query that consumes
+    // the returned plan. The fill registers after its count, and the
+    // registry's exact stale-event guard keeps that count from
+    // releasing the census.
     val suspectIds =
-      if (Staging.inStagingChain) CacheRegistry.filled(census)._1
+      if (Staging.inStagedWrite) CacheRegistry.filled(census)._1
       else CacheRegistry.scoped(census)
     // The suspect id list is joined hint-free: AQE broadcasts it while
     // small; an all-duplicates corpus degrades to a shuffle join and
@@ -141,18 +139,4 @@ object SkewGuard {
     bands.groupBy(bucketCol).agg(count(lit(1)).as("size"))
       .where(col("size") > cap)
       .withColumn("dropped", col("size") - cap)
-
-  /** When enabled, count and log the candidates dropped by the bucket
-    * cap (one small aggregate job over the band keys). */
-  def maybeLogOverflow(bands: DataFrame, bucketCol: String, cap: Int,
-                       enabled: Boolean, what: String): Unit =
-    if (enabled && cap != Int.MaxValue) {
-      val row = overflowStats(bands, bucketCol, cap)
-        .agg(count(lit(1)).as("b"), coalesce(sum("dropped"), lit(0L)).as("d"))
-        .first()
-      val (b, d) = (row.getLong(0), row.getLong(1))
-      if (b > 0)
-        log.warn(s"$what: capped $b bucket(s) at $cap members, dropped $d " +
-          "band membership(s); capped docs can still pair via their other bands")
-    }
 }

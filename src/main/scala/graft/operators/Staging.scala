@@ -37,30 +37,6 @@ private[graft] object Staging {
   def withRoot[T](root: String)(body: => T): T =
     overrideRoot.withValue(Some(root))(body)
 
-  /** True exactly on the worker threads of a `stageAll` chain (set by
-    * stageAll around each chain body). Distinguishes "this call IS
-    * part of the staging DAG" from "a stageAll happens to be in
-    * flight on this session" — the latter must not change the plan
-    * shape of concurrent library callers on other threads.
-    *
-    * Backed by a PLAIN ThreadLocal, deliberately not an inheritable
-    * one (ADVICE r14): a DynamicVariable is
-    * InheritableThreadLocal-backed, so any Spark-internal thread
-    * spawned from a chain thread (AQE stage materialization,
-    * broadcast exchanges, commit pools) would inherit `true` for its
-    * cached lifetime — a latent trap if a gating check ever moves
-    * into execution-time code. stageAll re-pins the flag explicitly
-    * per worker thread, so nothing needs inheritance. */
-  private val inChain = new ThreadLocal[Boolean] {
-    override def initialValue(): Boolean = false
-  }
-  def withinStagingChain[T](body: => T): T = {
-    val prev = inChain.get()
-    inChain.set(true)
-    try body finally inChain.set(prev)
-  }
-  def inStagingChain: Boolean = inChain.get()
-
   def root: String =
     overrideRoot.value.getOrElse(
       sys.props.get("graft.stage.dir") match {
@@ -138,14 +114,20 @@ private[graft] object Staging {
     * (plan construction + execution happen inside the write call on
     * this thread) — run once the write finishes, success or failure.
     * The consumers are the persists a staged build takes for its own
-    * write: the LSH band stream and the banding suspect census
-    * (DedupOps), and stage_flags' q51/q48 flag frames (CorpusOps). A
-    * cold query-time read-through build takes the persist, the
-    * parquet write consumes it exactly once, and without this hook the
-    * blocks stayed pinned for the session with zero future readers
-    * (ADVICE r14). A stack, not a single slot: staged computes nest (a
-    * verified-table build reads sig/cand tables through), and an
-    * inner write must not fire an outer registration. */
+    * write: the banding suspect census (SkewGuard) and stage_flags'
+    * q51/q48 flag frames (CorpusOps). The parquet write consumes each
+    * exactly once; without this hook the blocks stayed pinned for the
+    * session with zero future readers (ADVICE r14). A stack, not a
+    * single slot: staged computes nest (a verified-table build reads
+    * sig/cand tables through), and an inner write must not fire an
+    * outer registration.
+    *
+    * Per thread, not per session (PERF §35): a library call on another
+    * thread, concurrent with a stageAll, is not inside this write and
+    * keeps its own plan. A plain ThreadLocal, not an inheritable one
+    * (ADVICE r14): Spark-internal threads spawned during the write (AQE
+    * stage materialization, broadcast exchanges) outlive it and must
+    * not carry its scope. */
   private val computeCleanups =
     new ThreadLocal[scala.collection.mutable.ArrayBuffer[() => Unit]]()
 
@@ -156,6 +138,12 @@ private[graft] object Staging {
     val buf = computeCleanups.get()
     if (buf == null) false else { buf += f; true }
   }
+
+  /** True while a staged write's `compute` runs on this thread: the
+    * one condition a staged table's build plan branches on, so the
+    * table is built by the same plan whether a stageAll chain or a
+    * cold query-time read-through builds it. */
+  def inStagedWrite: Boolean = computeCleanups.get() != null
 
   private def withComputeCleanups[T](body: => T): T = {
     val prev = computeCleanups.get()

@@ -17,6 +17,7 @@ import java.time.format.DateTimeFormatter
   * default transport uses java.net.http.
   */
 object OrderApiIngest {
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** status code + body */
   type Transport = HttpReq => HttpResp
@@ -100,9 +101,8 @@ object OrderApiIngest {
       } else {
         if (totalCount > limit) {
           // the 1-minute floor: can't split further — surface the loss
-          System.err.println(
-            s"[ingest] WARNING window $f..$t has $totalCount orders > page limit $limit; " +
-              s"only the first page was returned")
+          log.warn(s"window $f..$t has $totalCount orders > page limit $limit; " +
+            "only the first page was returned")
         }
         orders
       }

@@ -236,6 +236,28 @@ class ApiSurfaceSpec extends SparkSpec {
     assert(retired.isEmpty, s"a second cache registry or release function under src/main: $retired")
   }
 
+  test("one build plan per staged table: the chain flag and overflow log stay retired") {
+    // a staged build branches only on Staging.inStagedWrite, so a cold
+    // read-through build plans like a stageAll chain; a chain-thread
+    // flag is a second plan per table, and the overflow log ran an
+    // aggregate job during plan construction
+    val retired = mainSources.flatMap { case (file, text) =>
+      "inStagingChain|withinStagingChain|\\binChain\\b|logOverflow".r
+        .findAllIn(text).map(m => s"$file: $m")
+    }
+    assert(retired.isEmpty, s"retired staging-chain or overflow-log names under src/main: $retired")
+  }
+
+  test("library code logs through slf4j; only the Verify main prints to stderr") {
+    // sbt tags every stderr line [error] and mixes it into Spark's INFO
+    // log; Verify's per-query failure lines are its CLI output
+    val prints = mainSources.flatMap { case (file, text) =>
+      "System\\.err\\.println".r.findAllIn(text).map(_ => file)
+    }
+    assert(prints.forall(_ == "Verify.scala"),
+      s"System.err.println under src/main outside Verify.scala: ${prints.filterNot(_ == "Verify.scala")}")
+  }
+
   test("every parquet read under src/main goes through Tables.parquet") {
     // a read without a schema starts a one-task Spark job to read one
     // footer; Tables.parquet reads that footer on the driver instead.

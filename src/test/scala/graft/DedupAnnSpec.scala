@@ -360,7 +360,7 @@ class DedupAnnSpec extends SparkSpec {
     val rows = (0L until 1200L).map(i => (i, boiler)) ++
       Seq((2000L, "completely different text one alpha beta gamma"),
           (2001L, "another unrelated document delta epsilon zeta eta"))
-    val g = BandGuard(maxBucket = 256, maxGroupAllPairs = 64, logOverflow = true)
+    val g = BandGuard(maxBucket = 256, maxGroupAllPairs = 64)
     guardedOps.foreach { case (name, pairsOf, exact) =>
       val pairs = pairsOf(rows, g)
       // unguarded would be ~1200*1199/2 = 719,400 pairs; the star is 1,199
@@ -405,7 +405,7 @@ class DedupAnnSpec extends SparkSpec {
     val emb = (0L until 1000L)
       .map(i => (i, Array.fill(EmbeddingOps.dim)(1.0 + i * 1e-6)))
       .toDF("vec_id", "embedding")
-    val g = BandGuard(maxBucket = 64, maxGroupAllPairs = 64, logOverflow = true)
+    val g = BandGuard(maxBucket = 64, maxGroupAllPairs = 64)
     val pairs = EmbeddingOps.nearDupPairsOf(emb, g).collect()
     // bucket keeps its 64 lowest ids -> exactly 64*63/2 parallel pairs
     assert(pairs.length == 64 * 63 / 2, s"cap not applied: ${pairs.length}")

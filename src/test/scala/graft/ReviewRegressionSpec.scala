@@ -147,8 +147,8 @@ class ReviewRegressionSpec extends SparkSpec {
   }
 
   test("lshCandidatesOf plan construction runs zero Spark jobs (r14 review: lazy library contract)") {
-    // The banding suspect census is persisted and (inside a stageAll
-    // chain only) eagerly counted; a library caller constructing a
+    // The banding suspect census is persisted and (inside a staged
+    // write only) eagerly counted; a library caller constructing a
     // plan must not trigger ANY job — merely calling lshCandidatesOf
     // or explaining its plan used to run the corpus census.
     // Deterministic listener-bus drain (ADVICE r14): a fixed sleep can
@@ -212,10 +212,11 @@ class ReviewRegressionSpec extends SparkSpec {
     assert(CacheRegistry.release(spark) == 0,
       "explicit release after the auto-release is a no-op")
     spark.catalog.clearCache()
-    // cold STAGED build (query-time read-through, not a stageAll chain):
-    // the band + suspect-census persists are consumed by the parquet
-    // write and must be auto-released by the write-completion hook —
-    // no persisted frames survive the build
+    // cold STAGED build (query-time read-through): it plans like a
+    // stageAll chain — no band-stream persist, an eagerly filled
+    // suspect census — and the census is consumed by the parquet write
+    // and must be auto-released by the write-completion hook: no
+    // persisted frames survive the build
     val root = java.nio.file.Files
       .createTempDirectory("graft_band_lifecycle").toString
     DedupOps.withStagingRoot(Some(root)) {

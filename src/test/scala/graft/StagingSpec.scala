@@ -233,4 +233,80 @@ class StagingSpec extends SparkSpec {
     assert(DedupOps.beginStaging(spark))
     DedupOps.endStaging(spark)
   }
+
+  test("a cold read-through build plans like a stageAll chain") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import scala.jdk.CollectionConverters._
+    import graft.operators.{CacheRegistry, CorpusOps, DedupOps}
+    spark.catalog.clearCache()
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    // every execution, in completion order, as (action, execution)
+    val execs = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        execs.add(f -> qe): Unit
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def writeOf(table: String)(qe: QueryExecution): Boolean =
+      qe.analyzed.collectFirst { case w: InsertIntoHadoopFsRelationCommand =>
+        w.outputPath.getName.startsWith(table + ".tmp-")
+      }.contains(true)
+    def names(qe: QueryExecution): Seq[String] =
+      qe.analyzed.flatMap(_.output).map(_.name)
+    /** The executions completed up to and including `table`'s write. */
+    def upToWrite(table: String): Seq[(String, QueryExecution)] = {
+      def all = execs.asScala.toSeq
+      assert(awaitTrue(all.exists(e => writeOf(table)(e._2))),
+        s"no write of $table reached the listener")
+      all.take(all.indexWhere(e => writeOf(table)(e._2)) + 1)
+    }
+    val root = Files.createTempDirectory("graft_cold_plan").toString
+    DedupOps.withStagingRoot(Some(root)) {
+      // sig_h8 staged first, so the listener sees only the cand build
+      DedupOps.minhashSignatures(spark, sf).count(): Unit
+      val pre = persisted
+      spark.listenerManager.register(listener)
+      try {
+        execs.clear()
+        DedupOps.lshCandidates(spark, sf)
+        val cand = upToWrite("cand_h8_b4")
+        val write = cand.last._2
+        // the write's executed plan reads no cached band stream
+        // (doc_id, bk): the band self-join recomputes each side, as on a
+        // stageAll chain (PERF §35)
+        val helper = new AdaptiveSparkPlanHelper {}
+        val cached = helper.collectWithSubqueries(write.executedPlan) {
+          case s: InMemoryTableScanExec => s.relation.output.map(_.name)
+        }
+        assert(!cached.exists(_.contains("bk")),
+          s"cold cand_h8_b4 write cached a band stream: $cached\n${write.executedPlan}")
+        // the suspect census is filled by its own count before the write
+        val censusFills = cand.init.filter { case (f, qe) =>
+          f == "count" && names(qe).contains("__fp")
+        }
+        assert(censusFills.size == 1,
+          s"expected one census fill before the cand write, saw ${cand.map(_._1)}")
+        // a cold stage_flags build fills the q51/q48 flag frames with
+        // one union count before its write
+        execs.clear()
+        CorpusOps.stageFlagsTable(spark, sf)
+        val flags = upToWrite("stage_flags")
+        val unionCounts = flags.init.filter { case (f, qe) =>
+          val n = names(qe)
+          f == "count" && n.contains("f_q") && n.contains("f_dc") && n.contains("one")
+        }
+        assert(unionCounts.size == 1,
+          s"expected one flag union count before the stage_flags write, saw ${flags.map(_._1)}")
+      } finally spark.listenerManager.unregister(listener)
+      // every persist the two builds took died with its write
+      assert(awaitTrue((persisted -- pre).isEmpty),
+        s"cold builds leaked persisted RDDs: ${persisted -- pre}")
+      assert(CacheRegistry.size(spark) == 0,
+        "staged-build persists must not land in the query-scoped registry")
+    }
+    spark.catalog.clearCache()
+  }
 }
